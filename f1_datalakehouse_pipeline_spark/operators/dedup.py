@@ -265,6 +265,9 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH, verified with exact
     Jaccard. Output: (doc_a, doc_b, jaccard) for candidates ≥ threshold.
+    Runs eagerly: the pairs (∝ near-duplicates, small) come back as a local
+    checkpoint, so the shingle cache they consume is released before the
+    call returns instead of staying pinned for the session.
 
     rows_per_band = n_hashes // bands; two docs become candidates iff some
     band's full signature slice matches. Bucket join is on (band, band_sig)
@@ -309,7 +312,7 @@ def minhash_lsh_pairs(
     )
     na = sizes.select(F.col("doc").alias("doc_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col("doc").alias("doc_b"), F.col("n").alias("n_b"))
-    return (
+    pairs = (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
         .select(
@@ -321,7 +324,10 @@ def minhash_lsh_pairs(
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
+        .localCheckpoint(eager=True)
     )
+    sh.unpersist()
+    return pairs
 
 
 def _reclaim_shuffles(spark) -> None:
@@ -641,21 +647,19 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
         # convergence decision (labels hold one row per doc, so "any row
         # where keeper != _prev" is exactly the old joined predicate).
         obs = Observation()
-        new_labels = (
-            updated.observe(
-                obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
-            )
-            .drop("_prev")
-            .localCheckpoint(eager=True)  # truncate lineage per round
-        )
-        labels = new_labels
+        checkpoint = updated.observe(
+            obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
+        ).localCheckpoint(eager=True)  # truncate lineage per round
+        labels = checkpoint.drop("_prev")
         try:
-            # max over zero rows is NULL == converged; a round the optimizer
-            # folded to an EMPTY relation runs zero tasks and records an
-            # inconvertible empty metrics row — also zero rows, converged.
+            # max over zero rows is NULL == converged
             chg = obs.get.get("chg") or 0
         except Exception:
-            chg = 0
+            # No usable metric (e.g. a round the optimizer folded to an
+            # EMPTY relation records an inconvertible empty metrics row):
+            # recount on the checkpointed round instead of assuming
+            # convergence, as plans/corpus.py resolve_counts does.
+            chg = checkpoint.filter(F.col("keeper") != F.col("_prev")).count()
         if chg == 0:
             converged = True
             break
@@ -852,7 +856,10 @@ def novelty_pairs(
     batch_sh = _shingle_table(batch, id_col, content_col, k)
     if max_doc_frequency is not None:
         batch_sh = _drop_hot_shingles(batch_sh, max_doc_frequency)
-    batch_sh = batch_sh.cache()
+    # The returned hits stay lazy, so no call here can tell when their last
+    # consumer ran: the batch shingles are a local checkpoint, freed with the
+    # hits once they are unreachable, not a cache() pinned for the session.
+    batch_sh = batch_sh.localCheckpoint(eager=True)
     batch_bands = _band_signatures(batch_sh, n_hashes, bands)
     nb, hb = batch_bands.alias("nb"), hist_bands.alias("hb")
     candidates = (

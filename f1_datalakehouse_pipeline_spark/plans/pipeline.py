@@ -98,8 +98,18 @@ def run_bronze_to_silver(
     report = RunReport(mode=mode, year=year, grand_prix=grand_prix)
     gp = grand_prix if mode == INCREMENTAL else None
 
+    # Each bronze scope is read once per call: the sessions transform and the
+    # qualifying/race transforms share one session_result read per session
+    # type, and every read_bronze costs a mergeSchema footer job.
+    bronze: dict[tuple[str, str | None], DataFrame] = {}
+
     def src(endpoint: str, session_type: str | None = None) -> DataFrame:
-        return read_bronze(spark, bronze_root, endpoint, year=year, grand_prix=gp, session_type=session_type)
+        key = (endpoint, session_type)
+        if key not in bronze:
+            bronze[key] = read_bronze(
+                spark, bronze_root, endpoint, year=year, grand_prix=gp, session_type=session_type
+            )
+        return bronze[key]
 
     # -- critical: sessions ------------------------------------------------
     sessions_df = silver.transform_sessions(
@@ -242,21 +252,35 @@ def _incremental_drivers_merge(
 
 def validate_silver(store: TableStore) -> list:
     """Collected quality gate (SURVEY §5.2.5): invariants + reconciliations
-    over the silver layer, one action per check, violations surfaced (not
-    just logged like the reference's count-and-log approach)."""
+    over the silver layer, violations surfaced (not just logged like the
+    reference's count-and-log approach). Every check is a row predicate, so
+    each source table is scanned once for all its counts; samples are
+    collected only for failing checks."""
     from f1_datalakehouse_pipeline_spark import quality
+    from f1_datalakehouse_pipeline_spark.quality import RowCheck
 
     rr = store.read("race_results_silver")
     qr = store.read("qualifying_results_silver")
     dim = store.read("drivers_silver")
+    dim_w = quality.scd2_windowed(dim, "driver_number")
     return quality.run_checks(
         {
-            "race_position_range": quality.check_position_range(rr),
-            "race_points_range": quality.check_points_range(rr),
-            "quali_gap_non_negative": quality.check_non_negative(qr, "gap_to_pole_millis"),
-            "points_reconciliation": quality.reconcile_points(rr),
-            "scd2_single_current": quality.check_scd2_single_current(dim, "driver_number"),
-            "scd2_contiguous": quality.check_scd2_contiguous(dim, "driver_number"),
+            "race_position_range": RowCheck(rr, quality.position_out_of_range()),
+            "race_points_range": RowCheck(rr, quality.points_out_of_range()),
+            "quali_gap_non_negative": RowCheck(qr, quality.negative("gap_to_pole_millis")),
+            "points_reconciliation": RowCheck(
+                rr, quality.points_mismatch(), quality.reconcile_points(rr)
+            ),
+            "scd2_single_current": RowCheck(
+                dim_w,
+                quality.scd2_multi_current(),
+                quality.check_scd2_single_current(dim, "driver_number"),
+            ),
+            "scd2_contiguous": RowCheck(
+                dim_w,
+                quality.scd2_gap(),
+                quality.check_scd2_contiguous(dim, "driver_number"),
+            ),
         }
     )
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -23,43 +23,98 @@ class CheckResult:
     sample: list
 
 
-def run_checks(checks: dict[str, DataFrame], sample_n: int = 5) -> list[CheckResult]:
-    """Materialize each violations DataFrame once; keep a small sample."""
+@dataclass
+class RowCheck:
+    """A check that is a row predicate over ``source``: ``violation`` flags
+    a violating row. :func:`run_checks` counts every RowCheck over the same
+    source frame in ONE conditional-count aggregate. The sample comes from
+    ``rows`` (default: the flagged rows of ``source``)."""
+
+    source: DataFrame
+    violation: Column
+    rows: DataFrame | None = None
+
+
+def run_checks(checks: dict[str, "DataFrame | RowCheck"], sample_n: int = 5) -> list[CheckResult]:
+    """Count each check's violations; keep a small sample of each.
+
+    A DataFrame check is its violations frame, materialized once (a count
+    runs only past ``sample_n`` rows). RowChecks sharing a source frame
+    share one scan (the :func:`expectations_for_table` aggregate), and a
+    sample is collected only for a check whose count is above 0."""
+    batteries: dict[int, tuple[DataFrame, dict[str, Column]]] = {}
+    for name, c in checks.items():
+        if isinstance(c, RowCheck):
+            batteries.setdefault(id(c.source), (c.source, {}))[1][name] = c.violation
+    counts = {
+        r["check_name"]: r["violations"]
+        for src, preds in batteries.values()
+        for r in expectations_for_table(src, "", preds).collect()
+    }
     out = []
-    for name, df in checks.items():
-        rows = df.limit(sample_n + 1).collect()
-        n = df.count() if len(rows) > sample_n else len(rows)
+    for name, c in checks.items():
+        if isinstance(c, RowCheck):
+            n = counts[name]
+            frame = c.source.filter(c.violation) if c.rows is None else c.rows
+            rows = frame.limit(sample_n).collect() if n else []
+        else:
+            rows = c.limit(sample_n + 1).collect()
+            n = c.count() if len(rows) > sample_n else len(rows)
         out.append(CheckResult(name, n, [r.asDict() for r in rows[:sample_n]]))
     return out
 
 
 # --- range/invariant checks (business_logic.py:670-743 semantics) ----------
+# Each check is a violation predicate plus the filter over it; run_checks
+# counts the predicates of one table in a single pass.
+
+
+def out_of_range(col: str, lo: int, hi: int) -> Column:
+    c = F.col(col)
+    return c.isNotNull() & ((c < lo) | (c > hi))
+
+
+def position_out_of_range(col: str = "position", lo: int = 1, hi: int = 20) -> Column:
+    return out_of_range(col, lo, hi)
+
+
+def points_out_of_range(col: str = "validated_points", lo: int = 0, hi: int = 26) -> Column:
+    return out_of_range(col, lo, hi)
+
+
+def negative(col: str) -> Column:
+    return F.col(col).isNotNull() & (F.col(col) < 0)
 
 
 def check_position_range(df: DataFrame, col: str = "position", lo: int = 1, hi: int = 20) -> DataFrame:
-    c = F.col(col)
-    return df.filter(c.isNotNull() & ((c < lo) | (c > hi)))
+    return df.filter(position_out_of_range(col, lo, hi))
 
 
 def check_points_range(df: DataFrame, col: str = "validated_points", lo: int = 0, hi: int = 26) -> DataFrame:
-    c = F.col(col)
-    return df.filter(c.isNotNull() & ((c < lo) | (c > hi)))
+    return df.filter(points_out_of_range(col, lo, hi))
 
 
 def check_non_negative(df: DataFrame, col: str) -> DataFrame:
-    return df.filter(F.col(col).isNotNull() & (F.col(col) < 0))
+    return df.filter(negative(col))
 
 
 # --- reconciliation (race_results_transform.py:133-191 semantics) ----------
 
 
-def reconcile_points(race_results_silver: DataFrame) -> DataFrame:
-    """Rows where API-reported points disagree with position-derived points."""
-    return race_results_silver.filter(
+def points_mismatch() -> Column:
+    """API-reported points disagree with position-derived points."""
+    return (
         F.col("points").isNotNull()
         & F.col("validated_points").isNotNull()
         & (F.col("points") != F.col("validated_points"))
-    ).select("session_key", "driver_number", "position", "points", "validated_points")
+    )
+
+
+def reconcile_points(race_results_silver: DataFrame) -> DataFrame:
+    """Rows where API-reported points disagree with position-derived points."""
+    return race_results_silver.filter(points_mismatch()).select(
+        "session_key", "driver_number", "position", "points", "validated_points"
+    )
 
 
 # --- SCD2 structural invariants (FIXTURES.md §5) ---------------------------
@@ -78,14 +133,40 @@ def check_scd2_single_current(dim: DataFrame, entity_col: str) -> DataFrame:
 def check_scd2_contiguous(dim: DataFrame, entity_col: str) -> DataFrame:
     """Stints whose valid_to ≠ the next stint's valid_from (gap or overlap)."""
     w = Window.partitionBy(entity_col).orderBy("valid_from")
-    nxt = F.lead("valid_from").over(w)
     return (
-        dim.withColumn("__next_from", nxt)
-        .filter(
-            F.col("__next_from").isNotNull()
-            & ~F.col("valid_to").eqNullSafe(F.col("__next_from"))
-        )
+        dim.withColumn("__next_from", F.lead("valid_from").over(w))
+        .filter(scd2_gap())
         .select(entity_col, "valid_from", "valid_to", "__next_from")
+    )
+
+
+def scd2_windowed(dim: DataFrame, entity_col: str) -> DataFrame:
+    """``dim`` plus the per-entity columns the SCD2 row predicates read:
+    ``__next_from`` (the next stint's valid_from), ``__n_open`` (the
+    entity's open-row count) and ``__first`` (true on exactly one row per
+    entity)."""
+    w = Window.partitionBy(entity_col).orderBy("valid_from")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return dim.select(
+        "*",
+        F.lead("valid_from").over(w).alias("__next_from"),
+        F.count(F.when(F.col("is_current"), 1)).over(whole).alias("__n_open"),
+        (F.row_number().over(w) == 1).alias("__first"),
+    )
+
+
+def scd2_multi_current() -> Column:
+    """Over :func:`scd2_windowed`: one row per entity that has more than one
+    open row — the entities :func:`check_scd2_single_current` returns (an
+    entity it sees has at least one open row, so ≠1 means >1)."""
+    return F.col("__first") & (F.col("__n_open") > 1)
+
+
+def scd2_gap() -> Column:
+    """A stint whose valid_to ≠ the next stint's valid_from (needs
+    ``__next_from``, as :func:`scd2_windowed` adds)."""
+    return F.col("__next_from").isNotNull() & ~F.col("valid_to").eqNullSafe(
+        F.col("__next_from")
     )
 
 
@@ -417,7 +498,7 @@ def psi_summary(detail: DataFrame) -> DataFrame:
 
 
 def expectations_for_table(
-    df: DataFrame, tbl: str, checks: dict[str, "F.Column"]
+    df: DataFrame, tbl: str, checks: dict[str, Column]
 ) -> DataFrame:
     """Declarative data-quality battery over ONE table in ONE scan.
 

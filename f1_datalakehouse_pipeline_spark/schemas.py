@@ -270,20 +270,23 @@ def conform(df, table: str, allow_missing: bool = False):
     schema-evolution read path: after a column is added to the registry,
     old files read through ``mergeSchema`` + this projection without a
     rewrite (parquet-native equivalent of Iceberg add-column evolution).
-    """
-    from pyspark.sql import functions as F
 
+    The projection is built as SQL strings and sent in ONE ``selectExpr``
+    call: the same CAST/alias plan as per-field Column objects, without
+    three py4j round trips per field.
+    """
     schema = ALL_SCHEMAS[table]
-    cols = []
+    exprs = []
     present = set(df.columns)
     for f in schema.fields:
         if f.name in present:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            src = f"`{f.name}`"
         elif allow_missing:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            src = "NULL"
         else:
             raise ValueError(
                 f"column {f.name!r} missing for table {table!r}; "
                 "pass allow_missing=True for schema-evolution reads"
             )
-    return df.select(*cols)
+        exprs.append(f"CAST({src} AS {f.dataType.simpleString()}) AS `{f.name}`")
+    return df.selectExpr(*exprs)

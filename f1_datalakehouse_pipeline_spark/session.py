@@ -27,6 +27,14 @@ Design notes for 100 TB scale:
   scale — local testdata sits below them, so the injection path is proven
   by ``tests/test_plan_shapes.test_runtime_bloom_filter_semi_join_reduction``
   with the thresholds lowered, not by the bench.
+- PySpark's DataFrame call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled``) is OFF. When on, every
+  Column call also ships the Python call site to the JVM: on PySpark 4.1
+  ``F.col`` costs 13 py4j round trips instead of 3, and ``.cast().alias()``
+  22 instead of 2. One warm INCREMENTAL Grand Prix landing (perfbench
+  ``gp_incremental``) made 24,430 round trips with it on; with it off, and
+  ``schemas.conform`` sending one ``selectExpr``, 6,731. Failures stay
+  loud; only the Python call-site text in Spark's error messages is lost.
 """
 
 from __future__ import annotations
@@ -63,6 +71,8 @@ DEFAULT_CONFS: dict[str, str] = {
     # are identical to DuckDB's naive interpretation, and strict functions
     # (unix_micros et al.) keep working.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # No Python call-site capture per Column call (see module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -31,6 +31,9 @@ CHECKSUM_ALGO = "sum-hash48-mod-2p31m1"
 # directories still audit clean instead of being flagged wholesale (migration
 # note: rewriting such manifests is optional, not required).
 LEGACY_ALGO = "unversioned"
+# Most manifest rows (one per shard) an append collects to the driver; a
+# larger manifest fails loudly instead of flooding the driver.
+MAX_SHARDS = 100_000
 
 
 def write_training_shards(
@@ -126,9 +129,15 @@ def append_training_shards(
     # a scheduled job. The collected rows also back the offset join and
     # manifest merge below via a driver-local DataFrame, so the append never
     # re-scans the manifest dir it is about to swap out.
-    old_rows = old.collect()
+    old_rows = old.limit(MAX_SHARDS + 1).collect()
     if not old_rows:
         raise ValueError(f"no existing shard manifest under {out_path!r}")
+    if len(old_rows) > MAX_SHARDS:
+        raise ValueError(
+            f"shard manifest under {out_path!r} has more than {MAX_SHARDS} "
+            f"rows ({len(old_rows)} collected); appends support at most "
+            f"MAX_SHARDS={MAX_SHARDS} shards"
+        )
     if "checksum_algo" in old.columns:
         algos = {r["checksum_algo"] for r in old_rows}
     else:

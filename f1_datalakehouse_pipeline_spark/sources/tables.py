@@ -493,12 +493,16 @@ class TableStore:
         target = self._current_target(table)
         if target is None or not os.path.isdir(target):
             return self.spark.createDataFrame([], ALL_SCHEMAS[table]), target
-        return self.spark.read.parquet(target), target
+        return self.spark.read.schema(ALL_SCHEMAS[table]).parquet(target), target
 
     def read(self, table: str, conformed: bool = False) -> DataFrame:
         """Read a managed table; ``conformed=True`` merges file schemas and
         projects to the current registry schema with NULL backfill for
-        columns added since the files were written (schema evolution)."""
+        columns added since the files were written (schema evolution).
+
+        The plain read passes the declared schema, so no schema-inference
+        job runs: the file index still lists the files, but no footer is
+        read until the scan."""
         if not self.exists(table):
             # empty-table fallback, reference declares per-transform empty
             # schemas for this (qualifying_transform.py:287-309)
@@ -506,7 +510,7 @@ class TableStore:
         if conformed:
             df = self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
             return conform(df, table, allow_missing=True)
-        return self.spark.read.parquet(self.path(table))
+        return self.spark.read.schema(ALL_SCHEMAS[table]).parquet(self.path(table))
 
     def _writer(self, df: DataFrame, table: str, sort_by: list[str] | None = None):
         out = conform(df, table)

@@ -448,3 +448,82 @@ def test_incremental_scope_accepts_unnormalized_slug(lakehouse, spark):
     # and the bronze-side partition filter actually selected the GP's rows
     # (not a silent empty batch): the batch re-wrote real race results
     assert report.row_counts.get("race_results_silver", 0) > 0
+
+
+def test_incremental_reads_each_bronze_scope_once(lakehouse, spark, monkeypatch):
+    """After detection, an INCREMENTAL run reads each (endpoint,
+    session_type) bronze scope once: the sessions transform and the
+    qualifying/race transforms share one session_result read each."""
+    from collections import Counter
+
+    from f1_datalakehouse_pipeline_spark.plans import pipeline
+
+    calls = Counter()
+    real = pipeline.read_bronze
+
+    def counting(spark_, root, endpoint, **kw):
+        calls[(endpoint, kw.get("session_type"), kw.get("grand_prix"))] += 1
+        return real(spark_, root, endpoint, **kw)
+
+    monkeypatch.setattr(pipeline, "read_bronze", counting)
+    rep = run_bronze_to_silver(spark, lakehouse["bronze"], lakehouse["store"],
+                               mode=INCREMENTAL, year=fx.YEAR)
+    assert all(v == "ok" for v in rep.results.values()), rep.results
+    scoped = {k: n for k, n in calls.items() if k[2] is not None}
+    assert scoped and all(n == 1 for n in scoped.values()), calls
+    assert sum(calls.values()) == 6, calls  # detect + 5 scopes
+
+
+def _old_run_checks(checks: dict, sample_n: int = 5) -> list:
+    """The one-action-per-check gate validate_silver replaced."""
+    out = []
+    for name, df in checks.items():
+        rows = df.limit(sample_n + 1).collect()
+        n = df.count() if len(rows) > sample_n else len(rows)
+        out.append((name, n, [r.asDict() for r in rows[:sample_n]]))
+    return out
+
+
+def test_validate_silver_matches_per_check_actions(lakehouse, spark, tmp_path):
+    """The one-pass-per-table gate reports the same names, counts and
+    samples as one action per check, on a copy of the fixture warehouse
+    with violations planted in five of the six checks."""
+    from f1_datalakehouse_pipeline_spark import quality
+    from f1_datalakehouse_pipeline_spark.plans.pipeline import validate_silver
+
+    src = lakehouse["store"]
+    store = TableStore(spark, str(tmp_path / "planted"))
+    rr = src.read("race_results_silver").withColumn(
+        "position",
+        F.when(F.col("driver_number") <= 7, F.lit(25)).otherwise(F.col("position")),
+    )
+    qr = src.read("qualifying_results_silver").withColumn(
+        "gap_to_pole_millis",
+        F.when(F.col("driver_number") == 4, F.lit(-1)).otherwise(F.col("gap_to_pole_millis")),
+    )
+    dim = src.read("drivers_silver")
+    reopened = dim.filter(F.col("is_current") & (F.col("driver_number") == 3)).withColumn(
+        "valid_from", F.col("valid_from") + F.expr("INTERVAL 1 DAY")
+    )
+    store.overwrite(rr, "race_results_silver")
+    store.overwrite(qr, "qualifying_results_silver")
+    store.overwrite(dim.unionByName(reopened), "drivers_silver")
+
+    rr, qr, dim = (store.read(t) for t in
+                   ("race_results_silver", "qualifying_results_silver", "drivers_silver"))
+    want = _old_run_checks({
+        "race_position_range": quality.check_position_range(rr),
+        "race_points_range": quality.check_points_range(rr),
+        "quali_gap_non_negative": quality.check_non_negative(qr, "gap_to_pole_millis"),
+        "points_reconciliation": quality.reconcile_points(rr),
+        "scd2_single_current": quality.check_scd2_single_current(dim, "driver_number"),
+        "scd2_contiguous": quality.check_scd2_contiguous(dim, "driver_number"),
+    })
+    got = [(c.name, c.violations, c.sample) for c in validate_silver(store)]
+    assert got == want
+    counts = {name: n for name, n, _ in got}
+    assert counts["race_position_range"] > 5  # past the sample: counted
+    assert counts["points_reconciliation"] > 0  # the fixture's own mismatches
+    assert counts["quali_gap_non_negative"] > 0
+    assert counts["scd2_single_current"] == 1 and counts["scd2_contiguous"] == 1
+    assert counts["race_points_range"] == 0

@@ -133,6 +133,71 @@ def test_schema_evolution_read(spark, tmp_path):
         conform(df, "pitstops_silver")
 
 
+def test_get_spark_disables_dataframe_call_site_capture(spark):
+    """Call-site capture adds py4j round trips to every Column call (F.col:
+    14 instead of 3); the engine's sessions run with it off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def _column_api_conform(df, table, allow_missing=False):
+    """The per-field Column projection ``schemas.conform`` replaced."""
+    from f1_datalakehouse_pipeline_spark.schemas import ALL_SCHEMAS
+
+    cols = []
+    for f in ALL_SCHEMAS[table].fields:
+        if f.name in df.columns:
+            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        elif allow_missing:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    return df.select(*cols)
+
+
+def test_conform_matches_column_api_projection(spark):
+    """For every registry table the string-built projection gives the same
+    schema (names, types, nullability) and the same values as per-field
+    Column casts — from string inputs (cast may fail: nullable) and from
+    non-null typed literals, with and without allow_missing."""
+    from pyspark.sql.types import (
+        BooleanType, DateType, DecimalType, DoubleType, IntegerType, LongType,
+        TimestampType,
+    )
+
+    from f1_datalakehouse_pipeline_spark.schemas import ALL_SCHEMAS, conform
+
+    def text(t):
+        if isinstance(t, TimestampType):
+            return "2025-03-01 14:00:00"
+        if isinstance(t, DateType):
+            return "2025-03-01"
+        if isinstance(t, BooleanType):
+            return "true"
+        if isinstance(t, (DecimalType, DoubleType)):
+            return "1.25"
+        if isinstance(t, (IntegerType, LongType)):
+            return "7"
+        return "x"
+
+    for table, schema in ALL_SCHEMAS.items():
+        as_text = spark.range(2).select(
+            *[F.when(F.col("id") == 0, F.lit(text(f.dataType))).alias(f.name)
+              for f in schema.fields]
+        )
+        typed = spark.range(1).select(
+            *[F.lit(text(f.dataType)).cast(f.dataType).alias(f.name)
+              for f in schema.fields]
+        )
+        for src in (as_text, typed):
+            old, new = _column_api_conform(src, table), conform(src, table)
+            assert new.schema == old.schema, table
+            assert new.collect() == old.collect(), table
+            # schema evolution: every other column absent → typed NULLs
+            part = src.select(*[f.name for f in schema.fields][::2])
+            old = _column_api_conform(part, table, allow_missing=True)
+            new = conform(part, table, allow_missing=True)
+            assert new.schema == old.schema, table
+            assert new.collect() == old.collect(), table
+
+
 def test_tablestore_append(spark, tmp_path):
     from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
 

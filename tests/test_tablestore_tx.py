@@ -43,6 +43,25 @@ def test_overwrite_publishes_via_symlink_and_gcs_versions(spark, tmp_path):
     assert len(os.listdir(vroot)) <= 2
 
 
+def test_read_of_declared_table_starts_no_spark_job(spark, tmp_path):
+    """A plain read passes the registry schema: no schema-inference job runs
+    until the scan itself, and the schema is the declared one."""
+    from f1_datalakehouse_pipeline_spark.schemas import ALL_SCHEMAS
+
+    store = TableStore(spark, str(tmp_path / "wh"))
+    store.overwrite(_sessions(spark, 5), "sessions_silver")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    df = store.read("sessions_silver")
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert {f.name: f.dataType for f in df.schema.fields} == {
+        f.name: f.dataType for f in ALL_SCHEMAS["sessions_silver"].fields
+    }
+    # the tracker does see this session's jobs: the scan itself starts one
+    assert df.count() == 5
+    assert set(tracker.getJobIdsForGroup()) - before
+
+
 def test_failed_overwrite_leaves_old_table_readable(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "wh"))
     store.overwrite(_sessions(spark, 10, gp="monaco"), "sessions_silver")
