@@ -9,6 +9,8 @@ fold accents, lowercase, non-alphanumerics → underscore). Re-expressed with
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from pyspark.sql import functions as F
 # São Paulo, Imola, México, Zandvoort, ...).
 _ACCENTED = "àáâãäåçèéêëìíîïñòóôõöùúûüýÿÀÁÂÃÄÅÇÈÉÊËÌÍÎÏÑÒÓÔÕÖÙÚÛÜÝšŠžŽ"
 _FOLDED = "aaaaaaceeeeiiiinooooouuuuyyAAAAAACEEEEIIIINOOOOOUUUUYsSzZ"
+_FOLD_TABLE = str.maketrans(_ACCENTED, _FOLDED)
 
 
 def fold_accents(col: Column) -> Column:
@@ -39,3 +42,22 @@ def normalize_name(col: Column, strip_suffix: str | None = None) -> Column:
 def normalize_grand_prix_name(col: Column) -> Column:
     """'São Paulo Grand Prix' → 'sao_paulo' (common.py:24-55 semantics)."""
     return normalize_name(col, strip_suffix="grand prix")
+
+
+# Java regex semantics for the suffix strip in the Column version: ``\s`` and
+# ``(?i)`` are ASCII-only (``re.ASCII``), and ``$`` also matches before one
+# final line terminator (``\r\n``, ``\n``, ``\r``, ``\u0085``, ``\u2028``,
+# ``\u2029``), where Python's ``$`` knows only ``\n``.
+_GP_SUFFIX = re.compile(
+    r"\s*grand prix\s*(?=(?:\r\n|[\n\r\u0085\u2028\u2029])?\Z)", re.I | re.A
+)
+_NON_ALNUM = re.compile(r"[^a-z0-9]+")
+
+
+def normalize_grand_prix_name_py(name: str) -> str:
+    """Pure-Python twin of :func:`normalize_grand_prix_name` for a single
+    value on the driver, so canonicalizing a GP argument starts no Spark
+    job. Spark's ``trim`` strips spaces only, hence ``strip(" ")``."""
+    c = _GP_SUFFIX.sub("", name.strip(" "))
+    c = _NON_ALNUM.sub("_", c.translate(_FOLD_TABLE).lower())
+    return c.strip("_")

@@ -586,7 +586,14 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     is two keyed shuffles on doc id; no driver-side graph state beyond the
     loop counter. If the loop still exits unconverged (pathological graph), a
     warning is logged: apply_dedup would then under-drop duplicates.
+
+    Each round's local checkpoint is released once the next one is built,
+    and the edges once the last one is; the returned labels read only the
+    last round's checkpoint, which its consumer's caller may release
+    (``util.release_local_checkpoints``) or leave to Spark's ContextCleaner.
     """
+    from f1_datalakehouse_pipeline_spark.operators.util import release_local_checkpoints
+
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -606,6 +613,7 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     from pyspark.sql import Observation
 
     converged = False
+    checkpoint = None
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels.withColumnRenamed("doc", "dst2"), edges.dst == F.col("dst2"))
@@ -647,9 +655,12 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
         # convergence decision (labels hold one row per doc, so "any row
         # where keeper != _prev" is exactly the old joined predicate).
         obs = Observation()
+        previous = checkpoint
         checkpoint = updated.observe(
             obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
         ).localCheckpoint(eager=True)  # truncate lineage per round
+        if previous is not None:
+            release_local_checkpoints(previous)
         labels = checkpoint.drop("_prev")
         try:
             # max over zero rows is NULL == converged
@@ -670,6 +681,8 @@ def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
             max_iterations,
             max_iterations,
         )
+    if checkpoint is not None:
+        release_local_checkpoints(edges)
     return labels
 
 

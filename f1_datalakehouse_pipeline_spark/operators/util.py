@@ -2,8 +2,42 @@
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def persisted(*dfs: DataFrame) -> Iterator[None]:
+    """Persist each plan for the block and unpersist it on exit, raise or
+    not. A plan the caller had already cached is left alone: Spark's cache
+    manager keys by logical plan, so an unconditional unpersist would
+    silently evict the caller's entry."""
+    owned = [df for df in dfs if not (df.storageLevel.useMemory or df.storageLevel.useDisk)]
+    for df in owned:
+        df.persist()
+    try:
+        yield
+    finally:
+        for df in owned:
+            df.unpersist()
+
+
+def release_local_checkpoints(df: DataFrame, since_rdd_id: int = 0) -> None:
+    """Drop the blocks of every local checkpoint ``df``'s plan reads that was
+    made at or after RDD id ``since_rdd_id`` (ids only grow), once every
+    consumer of them has run. Left alone, a local checkpoint is freed only
+    when the driver JVM garbage-collects its RDD (Spark's ContextCleaner),
+    at no predictable time; reading it after this call fails loudly."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            rdd = leaf.rdd()
+            if rdd.id() >= since_rdd_id and rdd.isLocallyCheckpointed():
+                rdd.unpersist(False)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

@@ -51,6 +51,7 @@ from f1_datalakehouse_pipeline_spark.functions.pii import scrub_pii
 from f1_datalakehouse_pipeline_spark.functions.text import portable_hash48, quality_score
 from f1_datalakehouse_pipeline_spark.operators import dedup
 from f1_datalakehouse_pipeline_spark.operators.textstats import chunk_documents
+from f1_datalakehouse_pipeline_spark.operators.util import release_local_checkpoints
 from f1_datalakehouse_pipeline_spark.sources.shards import (
     append_training_shards,
     verify_training_shards,
@@ -312,6 +313,12 @@ def run_corpus_pipeline(
     pending: dict[str, tuple[Observation, DataFrame]] = {}
 
     def checkpoint_stage(df: DataFrame, count_key: str | None = None) -> DataFrame:
+        # Invariant: every stage's FIRST action is a full scan. A PySpark
+        # Observation records only the first action over the observed plan,
+        # so a partial action (limit, take, head, isEmpty) on a stage before
+        # resolve_counts would record a partial count and raise nothing.
+        # Today the first action is always full: an eager localCheckpoint
+        # inside a dedup operator, or the final chunks.count().
         obs = None
         if count_key is not None:
             obs = Observation()
@@ -343,6 +350,12 @@ def run_corpus_pipeline(
     raw_obs = Observation()
     docs = docs.observe(raw_obs, F.count(F.lit(1)).alias("n"))
     pending["raw"] = (raw_obs, docs)
+    # The local checkpoints this build makes and its stages read (the LSH
+    # pairs, the last connected_keepers round) are released with the stage
+    # caches, not left for the ContextCleaner to free after some later
+    # driver GC. RDD ids only grow, so the caller's own inputs are not
+    # touched.
+    first_rdd_id = spark.sparkContext._jsc.sc().newRddId()
 
     try:
         kept = checkpoint_stage(
@@ -362,6 +375,7 @@ def run_corpus_pipeline(
             kept, id_col, content_col,
             threshold=near_threshold, max_doc_frequency=max_doc_frequency,
         )
+        cached.append(pairs)
         kept = checkpoint_stage(
             dedup.apply_dedup(kept, id_col, pairs), "after_near_dedup"
         )
@@ -463,6 +477,7 @@ def run_corpus_pipeline(
     finally:
         for df in cached:
             df.unpersist()
+            release_local_checkpoints(df, first_rdd_id)
     _manifest_and_audit(spark, out_root, rep)
     return rep
 
@@ -701,6 +716,10 @@ def run_corpus_pipeline_incremental(
     pending: dict[str, tuple[Observation, DataFrame]] = {}
 
     def checkpoint_stage(df: DataFrame, count_key: str | None = None) -> DataFrame:
+        # Same invariant as the batch form: every stage's FIRST action is a
+        # full scan, because an Observation records only the first action
+        # over its plan; a partial action (limit, take, head, isEmpty)
+        # before resolve_counts would record a partial count silently.
         obs = None
         if count_key is not None:
             obs = Observation()

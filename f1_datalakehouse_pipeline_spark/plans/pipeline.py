@@ -23,8 +23,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from f1_datalakehouse_pipeline_spark.functions.names import normalize_grand_prix_name
+from f1_datalakehouse_pipeline_spark.functions.names import (
+    normalize_grand_prix_name,
+    normalize_grand_prix_name_py,
+)
 from f1_datalakehouse_pipeline_spark.operators.scd2 import scd2_merge_incremental
+from f1_datalakehouse_pipeline_spark.operators.util import persisted
 from f1_datalakehouse_pipeline_spark.plans import gold, silver
 from f1_datalakehouse_pipeline_spark.sources.bronze import read_bronze
 from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
@@ -64,14 +68,11 @@ def _write_observed(store: TableStore, df: DataFrame, table: str, mode: str, rep
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if mode == HISTORICAL and table == "drivers_silver":
         store.overwrite(df, table)
-    elif mode == HISTORICAL:
-        # full-year rebuild still scopes to the partitions in the batch
-        store.overwrite_partitions(df, table)
-    elif table == "championship_tracker":
-        # always fully recomputed: running totals are season-cumulative
-        # (f1_silver_to_gold_transform.py:209-217)
-        store.overwrite_partitions(df, table)
     else:
+        # every other write replaces only the partitions in its batch. A
+        # full-year rebuild batches the season, and so does
+        # championship_tracker: always fully recomputed, running totals are
+        # season-cumulative (f1_silver_to_gold_transform.py:209-217)
         store.overwrite_partitions(df, table)
     report.row_counts[table] = obs.get["rows"]
 
@@ -87,14 +88,13 @@ def run_bronze_to_silver(
     if mode == INCREMENTAL and grand_prix is None:
         grand_prix = detect_latest_grand_prix(spark, bronze_root, year)
     if grand_prix is not None:
-        # Canonicalize ONCE with the same normalizer that produced the bronze
-        # partition slugs and silver names ('Sao-Paulo' → 'sao_paulo'): both
-        # the bronze partition filter and the silver scope below then compare
-        # canonical-to-canonical. One 1-row local job; idempotent for
-        # already-canonical slugs (detect_latest_grand_prix returns one).
-        grand_prix = spark.range(1).select(
-            normalize_grand_prix_name(F.lit(grand_prix)).alias("g")
-        ).head()[0]
+        # Canonicalize ONCE with the same normalization that produced the
+        # bronze partition slugs and silver names ('Sao-Paulo' → 'sao_paulo'):
+        # both the bronze partition filter and the silver scope below then
+        # compare canonical-to-canonical. The pure-Python twin starts no
+        # Spark job; idempotent for already-canonical slugs
+        # (detect_latest_grand_prix returns one).
+        grand_prix = normalize_grand_prix_name_py(grand_prix)
     report = RunReport(mode=mode, year=year, grand_prix=grand_prix)
     gp = grand_prix if mode == INCREMENTAL else None
 
@@ -246,7 +246,13 @@ def _incremental_drivers_merge(
     # re-scanning the just-written dimension.
     obs_rows = Observation("rows_drivers_silver_merge")
     merged = merged.observe(obs_rows, F.count(F.lit(1)).alias("rows"))
-    store.overwrite(merged, "drivers_silver", expected=expected)
+    # The merge reads `updates` in three union branches. Materialize it once,
+    # eagerly: a lazy cache() lets the branches run as concurrent stages that
+    # all wait on the same blocks, and without any cache the written plan
+    # re-scans and re-joins the bronze batch per branch.
+    with persisted(updates):
+        updates.count()
+        store.overwrite(merged, "drivers_silver", expected=expected)
     report.row_counts["drivers_silver"] = obs_rows.get["rows"]
 
 
@@ -307,22 +313,25 @@ def run_silver_to_gold(
         else None
     )
 
-    batch: list[tuple[str, DataFrame, bool]] = [
-        # championship is ALWAYS season-wide (cumulative totals)
-        ("championship_tracker", gold.transform_championship_tracker(race_results, sessions, drivers), True),
-        ("driver_performance_summary_race", gold.transform_driver_performance_race(race_results, quali_results, sessions, drivers), False),
-        ("driver_performance_summary_qualifying", gold.transform_driver_performance_qualifying(quali_results, sessions, drivers), False),
-        ("race_weekend_insights", gold.transform_race_weekend_insights(race_results, quali_results, sessions, drivers), True),
-    ]
-    for table, df, season_wide in batch:
-        try:
-            if gp_scope is not None and not season_wide:
-                df = df.filter(gp_scope)
-            _write_observed(store, df, table, mode if not season_wide else HISTORICAL, report)
-            report.results[table] = "ok"
-        except Exception as e:  # noqa: BLE001
-            log.exception("gold transform %s failed", table)
-            report.results[table] = f"failed: {e}"
-            if table == "championship_tracker":
-                raise  # critical (dependency-ordered first, :352-380)
+    # the four gold writes share one scan of each input instead of listing
+    # and decoding every input once per table
+    with persisted(sessions, drivers, race_results, quali_results):
+        batch: list[tuple[str, DataFrame, bool]] = [
+            # championship is ALWAYS season-wide (cumulative totals)
+            ("championship_tracker", gold.transform_championship_tracker(race_results, sessions, drivers), True),
+            ("driver_performance_summary_race", gold.transform_driver_performance_race(race_results, quali_results, sessions, drivers), False),
+            ("driver_performance_summary_qualifying", gold.transform_driver_performance_qualifying(quali_results, sessions, drivers), False),
+            ("race_weekend_insights", gold.transform_race_weekend_insights(race_results, quali_results, sessions, drivers), True),
+        ]
+        for table, df, season_wide in batch:
+            try:
+                if gp_scope is not None and not season_wide:
+                    df = df.filter(gp_scope)
+                _write_observed(store, df, table, mode if not season_wide else HISTORICAL, report)
+                report.results[table] = "ok"
+            except Exception as e:  # noqa: BLE001
+                log.exception("gold transform %s failed", table)
+                report.results[table] = f"failed: {e}"
+                if table == "championship_tracker":
+                    raise  # critical (dependency-ordered first, :352-380)
     return report

@@ -54,6 +54,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from f1_datalakehouse_pipeline_spark.operators.util import persisted
 from f1_datalakehouse_pipeline_spark.schemas import ALL_SCHEMAS, PARTITION_SPECS, conform
 
 # versions kept per table after a transactional overwrite: the current one
@@ -914,18 +915,10 @@ class TableStore:
         # expensive, uncached input pipeline. Persist once at entry; every
         # consumer below (including the data + change-file writes inside
         # overwrite()) materializes before this method returns, so the
-        # cache is dropped on exit either way (ADVICE r9). If the CALLER
-        # already persisted the plan, leave their cache alone — Spark's
-        # cache manager keys by logical plan, so an unconditional unpersist
-        # here would silently evict the caller's entry (r10 review finding).
-        caller_cached = updates.storageLevel.useMemory or updates.storageLevel.useDisk
-        if not caller_cached:
-            updates = updates.persist()
-        try:
+        # cache is dropped on exit either way (ADVICE r9). A caller's own
+        # cache of the plan is left alone (r10 review finding).
+        with persisted(updates):
             self._merge_upsert_body(updates, table, keys, delete_col)
-        finally:
-            if not caller_cached:
-                updates.unpersist()
 
     def _merge_upsert_body(
         self,

@@ -16,6 +16,7 @@ from f1_datalakehouse_pipeline_spark.plans.pipeline import (
     INCREMENTAL,
     run_bronze_to_silver,
     run_silver_to_gold,
+    validate_silver,
 )
 from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
 
@@ -527,3 +528,101 @@ def test_validate_silver_matches_per_check_actions(lakehouse, spark, tmp_path):
     assert counts["quali_gap_non_negative"] > 0
     assert counts["scd2_single_current"] == 1 and counts["scd2_contiguous"] == 1
     assert counts["race_points_range"] == 0
+
+
+def test_python_gp_normalizer_matches_column_version(spark):
+    """The pure-Python twin that canonicalizes a GP argument without a
+    Spark job returns what the Column expression returns, Java regex and
+    Spark ``trim`` semantics included."""
+    import random
+
+    from f1_datalakehouse_pipeline_spark.functions.names import (
+        normalize_grand_prix_name,
+        normalize_grand_prix_name_py,
+    )
+
+    names = [
+        "São Paulo Grand Prix", "Emilia-Romagna GRAND PRIX", "Mexico City grand prix",
+        "Gran Premio de México", "ŠKODA Žilina gRaNd PrIx", "Grand Prix", "grand prix grand prix",
+        "Monaco Grand Prix  ", "  Monaco Grand Prix", "\tMonaco Grand Prix\n",
+        "Monaco Grand\tPrix", "Monaco Grand Prix\r\n", "Monaco Grand Prix\u2028",
+        "Monaco Grand Prix\u0085", "Monaco Grand Prix\u00a0", "Monaco\u00a0Grand Prix",
+        "Monaco Grand Prix.", "Grand Prix of Europe", "70th Anniversary Grand Prix",
+        "Magny-Cours", "Sao-Paulo", "--Miami--", "__x__", " _ ", "", "sao_paulo", "abu_dhabi",
+    ]
+    alphabet = ["Grand Prix", "grand", " prix", " ", "\t", "\n", "\r", "\u0085", "\u2028",
+                "\u00a0", "é", "Ö", "ß", "-", "_", ".", "A", "z", "9"]
+    rng = random.Random(0)
+    names += ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 8))) for _ in range(300)]
+
+    got = [normalize_grand_prix_name_py(n) for n in names]
+    rows = (
+        spark.createDataFrame([(i, n) for i, n in enumerate(names)], "i int, n string")
+        .select("i", normalize_grand_prix_name(F.col("n")).alias("g"))
+        .collect()
+    )
+    want = [g for _, g in sorted(rows)]
+    assert got == want
+    assert normalize_grand_prix_name_py("São Paulo Grand Prix") == "sao_paulo"
+
+
+def test_warm_incremental_landing_reuses_generated_code(lakehouse, spark):
+    """Repeating one INCREMENTAL landing (bronze->silver, quality gate,
+    silver->gold) compiles few classes once the codegen cache holds a whole
+    landing; with Spark's default 100 entries every landing recompiled
+    about 278."""
+    store, bronze = lakehouse["store"], lakehouse["bronze"]
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(3):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        rep = run_bronze_to_silver(spark, bronze, store, mode=INCREMENTAL, year=fx.YEAR)
+        validate_silver(store)
+        run_silver_to_gold(spark, store, mode=INCREMENTAL, year=fx.YEAR, grand_prix=rep.grand_prix)
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[2] < 60, compiles
+
+
+def _cache_state(spark):
+    """Cached plans, and the ids of persistent RDDs: ids, not a count, so the
+    ContextCleaner freeing an earlier test's RDDs meanwhile cannot mask one
+    this call left behind."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return cache_manager.numCachedEntries(), set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("call", ["gold", "gold_raises", "incremental_silver"])
+def test_landing_releases_its_caches(lakehouse, spark, monkeypatch, call):
+    """The inputs a landing persists are released on return and on raise,
+    and a plan the caller had already cached stays cached."""
+    from f1_datalakehouse_pipeline_spark.plans import gold
+
+    store, bronze = lakehouse["store"], lakehouse["bronze"]
+    # the plans silver->gold persists: cached by nobody before or after, so
+    # a leak from an earlier landing (the fixture's) fails here too
+    gold_inputs = [store.read(t).filter(F.col("year") == fx.YEAR)
+                   for t in ("sessions_silver", "race_results_silver", "qualifying_results_silver")]
+    assert not any(df.storageLevel.useMemory for df in gold_inputs)
+    mine = store.read("drivers_silver").cache()
+    mine.count()
+    try:
+        entries, rdds = _cache_state(spark)
+        if call == "gold":
+            rep = run_silver_to_gold(spark, store, mode=INCREMENTAL, year=fx.YEAR, grand_prix="italian")
+            assert all(v == "ok" for v in rep.results.values()), rep.results
+        elif call == "gold_raises":
+            def boom(*args, **kwargs):
+                raise RuntimeError("planted championship failure")
+
+            monkeypatch.setattr(gold, "transform_championship_tracker", boom)
+            with pytest.raises(RuntimeError, match="planted"):
+                run_silver_to_gold(spark, store, mode=INCREMENTAL, year=fx.YEAR, grand_prix="italian")
+        else:
+            rep = run_bronze_to_silver(spark, bronze, store, mode=INCREMENTAL, year=fx.YEAR)
+            assert all(v == "ok" for v in rep.results.values()), rep.results
+        entries_after, rdds_after = _cache_state(spark)
+        assert entries_after == entries and rdds_after <= rdds, (entries_after, rdds_after - rdds)
+        assert not any(df.storageLevel.useMemory for df in gold_inputs)
+        assert mine.storageLevel.useMemory
+    finally:
+        mine.unpersist()

@@ -139,6 +139,15 @@ def test_get_spark_disables_dataframe_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_get_spark_sizes_codegen_cache_for_a_landing(spark):
+    """One Grand Prix landing generates about 278 classes; Spark's default
+    generated-code cache (100) would evict them all between landings."""
+    from f1_datalakehouse_pipeline_spark.session import DEFAULT_CONFS
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == DEFAULT_CONFS[key] == "1000"
+
+
 def _column_api_conform(df, table, allow_missing=False):
     """The per-field Column projection ``schemas.conform`` replaced."""
     from f1_datalakehouse_pipeline_spark.schemas import ALL_SCHEMAS
