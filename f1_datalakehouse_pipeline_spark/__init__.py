@@ -8,7 +8,7 @@ native-expression transforms (zero per-row Python UDFs in hot paths),
 window-function analytics, SCD Type 2 dimension handling, and idempotent
 partition-overwrite incremental processing — extended with large-scale
 training-data-pipeline operators (dedup, similarity search, text analysis,
-multimodal column plumbing), all designed partition-parallel for 100 TB.
+binary-payload MIME sniffing), all designed partition-parallel for 100 TB.
 """
 
 from f1_datalakehouse_pipeline_spark.session import get_spark

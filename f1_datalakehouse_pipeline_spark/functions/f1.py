@@ -126,11 +126,6 @@ def seconds_to_millis(col: Column) -> Column:
     return F.round(col * 1000).cast("long")
 
 
-def millis_to_seconds_decimal(col: Column, precision: int = 6, scale: int = 3) -> Column:
-    """millis → DECIMAL seconds (pitstops_transform.py:156-163)."""
-    return F.round(col / 1000.0, scale).cast(f"decimal({precision},{scale})")
-
-
 def format_millis(ms: Column) -> Column:
     """millis → 'H:MM:SS.mmm' (race_results_transform.py:210-234) using only
     integer arithmetic + lpad/concat (stays in codegen)."""

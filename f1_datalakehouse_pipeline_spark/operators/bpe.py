@@ -374,11 +374,6 @@ def bpe_encode_with_table(
     ).select(id_col, "word_idx", "piece_idx", "piece", "oov")
 
 
-def bpe_decode_pieces(pieces: Column) -> Column:
-    """Pieces -> the original word (BPE merges are concatenative)."""
-    return F.array_join(pieces, "")
-
-
 # --------------------------------------------------------------------------
 # single-process reference (tests only — NOT a Spark path)
 # --------------------------------------------------------------------------

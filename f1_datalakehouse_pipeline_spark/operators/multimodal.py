@@ -1,84 +1,20 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Magic-byte MIME sniffing on an opaque binary payload column.
 
-The 100 TB pattern for image/audio/video in a lakehouse:
-
-- payload stays an opaque ``binary`` column next to typed metadata columns
-  (modality, n_bytes, content hash) — never parsed by Catalyst, prunable,
-  and cheap to shuffle-avoid (metadata-only queries never touch bytes);
-- decode / feature-extraction runs in Arrow-batched ``mapInPandas`` so the
-  Python boundary is paid per-batch, not per-row;
-- the DEFAULT decoder (``header_decoder``) is a real pure-Python container
-  header parser — PNG IHDR, GIF logical screen, JPEG SOFn, WAV fmt/data
-  chunks — returning true dimensions / sample counts with no media
-  libraries needed; PNG (zlib, r6), GIF (pure-Python LZW, r7) and baseline
-  JPEG (Huffman + exact numpy IDCT/FDCT, r8) get full PIXEL codecs
-  (decode / re-encode / resize) wired into the default resizer; r9 adds
-  PROGRESSIVE (SOF2) JPEG decode, ImageIO-verified on real files. The
-  remaining codec seam: arithmetic-coded/12-bit JPEG and the video/audio
-  formats raise loudly until a PIL/librosa/ffmpeg codec injects via
-  ``decoder=`` / ``resizer=``.
+``sniff_mime`` classifies a payload by its leading container magic (PNG,
+JPEG, GIF, WAV, FLAC, PDF, MP4) without decoding it. It is built from native
+expressions only (``hex`` of the first bytes), so it stays in whole-stage
+codegen and never crosses into Python. The ``mm_magic_sniff`` registry query
+runs it against its DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
-from collections.abc import Callable, Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("content_md5", StringType(), True),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_frames", IntegerType(), True),
-        StructField("feature_hash", StringType(), True),
-    ]
-)
-
-
-def attach_metadata(df: DataFrame, id_col: str, payload_col: str, modality: str) -> DataFrame:
-    """Wrap raw binary rows into the canonical media schema (native exprs)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.lit(modality).alias("modality"),
-        F.col(payload_col).alias("payload"),
-        F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        F.md5(F.col(payload_col)).alias("content_md5"),
-    )
 
 
 def sniff_mime(payload) -> "F.Column":
-    """Magic-byte MIME sniffing on a binary column — pure native expressions
-    (hex of the first bytes), NO decode and NO Python: this is the metadata
-    pass a 100 TB media pipeline runs over every payload before routing to
-    per-modality decoders, so it must stay in codegen.
-
-    Covers the common container magics; unknown prefixes → 'application/
-    octet-stream'."""
+    """MIME type of a binary column from its first 8 bytes; unknown prefixes
+    map to 'application/octet-stream'."""
     hx = F.hex(F.substring(payload, 1, 8))
     return (
         F.when(hx.startswith("89504E47"), "image/png")
@@ -90,1549 +26,3 @@ def sniff_mime(payload) -> "F.Column":
         .when(F.substring(hx, 9, 8) == "66747970", "video/mp4")  # ....ftyp
         .otherwise("application/octet-stream")
     )
-
-
-def fake_decoder(payload: bytes, modality: str) -> dict:
-    """Deterministic stand-in for a real codec (PIL/librosa/ffmpeg).
-
-    Derives pseudo width/height/frames from the payload hash so tests are
-    stable; replace with a real decoder where media libs exist.
-    """
-    if payload is None:
-        return {"width": None, "height": None, "n_frames": None, "feature_hash": None}
-    h = hashlib.md5(payload).hexdigest()
-    seed = int(h[:8], 16)
-    return {
-        "width": 16 + seed % 2048 if modality in ("image", "video") else None,
-        "height": 16 + (seed >> 11) % 2048 if modality in ("image", "video") else None,
-        "n_frames": 1 + (seed >> 22) % 1000 if modality in ("video", "audio") else 1,
-        "feature_hash": h,
-    }
-
-
-def _png_dims(b: bytes) -> tuple[int, int] | None:
-    # \x89PNG\r\n\x1a\n + IHDR: length(4) 'IHDR'(4) width(4 BE) height(4 BE)
-    if len(b) >= 24 and b[:8] == b"\x89PNG\r\n\x1a\n" and b[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", b[16:24])
-        return w, h
-    return None
-
-
-def _gif_dims(b: bytes) -> tuple[int, int] | None:
-    # GIF87a/GIF89a + logical screen width/height (2B LE each)
-    if len(b) >= 10 and b[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack("<HH", b[6:10])
-        return w, h
-    return None
-
-
-def _gif_frames(b: bytes) -> int | None:
-    """Count a GIF's image descriptors (frames) by walking the block
-    stream — extensions are label + sub-blocks, images are descriptor +
-    optional local color table + LZW sub-blocks. Returns None on anything
-    that is not a well-formed GIF."""
-    if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-    pos = 13
-    if b[10] & 0x80:
-        pos += 3 * (2 << (b[10] & 0x07))
-    frames = 0
-    try:
-        while pos < len(b):
-            block = b[pos]
-            if block == 0x21:
-                pos += 2
-                while b[pos] != 0:
-                    pos += 1 + b[pos]
-                pos += 1
-            elif block == 0x2C:
-                frames += 1
-                ipacked = b[pos + 9]
-                pos += 10
-                if ipacked & 0x80:
-                    pos += 3 * (2 << (ipacked & 0x07))
-                pos += 1  # LZW min code size
-                while b[pos] != 0:
-                    pos += 1 + b[pos]
-                pos += 1
-            elif block == 0x3B:
-                break
-            else:
-                return frames or None
-    except IndexError:  # truncated stream: report what was walked
-        pass
-    return frames or None
-
-
-def _jpeg_dims(b: bytes) -> tuple[int, int] | None:
-    # scan marker segments for SOFn (C0-CF except C4/C8/CC):
-    # marker(2) length(2 BE) precision(1) height(2 BE) width(2 BE)
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            i += 1
-            continue
-        marker = b[i + 1]
-        if marker == 0xFF:
-            i += 1  # 0xFF fill byte before a marker (allowed by the spec)
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if i + 4 > len(b):
-            return None
-        seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if i + 9 <= len(b):
-                h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                return w, h
-            return None
-        i += 2 + seg_len
-    return None
-
-
-def _wav_frames(b: bytes) -> int | None:
-    # RIFF size WAVE, then chunks: id(4) size(4 LE) payload; frames =
-    # data-chunk size / block_align from the fmt chunk
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
-    block_align = data_size = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        size = struct.unpack("<I", b[i + 4 : i + 8])[0]
-        if cid == b"fmt " and i + 22 <= len(b):
-            block_align = struct.unpack("<H", b[i + 20 : i + 22])[0]
-        elif cid == b"data":
-            data_size = size
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if block_align and data_size is not None:
-        return data_size // block_align
-    return None
-
-
-def header_decoder(payload: bytes, modality: str) -> dict:
-    """Real (no-media-libs) decoder: parses container headers in pure Python
-    to produce true dimensions / sample counts.
-
-    - image: PNG IHDR, GIF logical screen, JPEG SOFn → (width, height);
-      n_frames = 1, except GIF where the image descriptors are counted
-      (animated GIFs report their true frame count, so ``sample_frames``
-      with this decoder picks real frame indices)
-    - audio: WAV fmt/data chunks → n_frames = sample-frame count
-    - video / unrecognized containers: metadata stays NULL (an ffmpeg-backed
-      decoder injects here where installed)
-
-    ``feature_hash`` is always the payload md5 (content fingerprint).
-    """
-    if payload is None:
-        return {"width": None, "height": None, "n_frames": None, "feature_hash": None}
-    b = bytes(payload)
-    width = height = n_frames = None
-    dims = _png_dims(b) or _gif_dims(b) or _jpeg_dims(b)
-    if dims:
-        width, height = dims
-        n_frames = _gif_frames(b) or 1
-    else:
-        frames = _wav_frames(b)
-        if frames is not None:
-            n_frames = frames
-    return {
-        "width": width,
-        "height": height,
-        "n_frames": n_frames,
-        "feature_hash": hashlib.md5(b).hexdigest(),
-    }
-
-
-def extract_features(
-    media: DataFrame,
-    decoder: Callable[[bytes, str], dict] = header_decoder,
-    batch_size_hint: int | None = None,
-) -> DataFrame:
-    """Decode payloads to typed features via Arrow-batched mapInPandas.
-
-    The UDF sees whole Arrow batches (pandas DataFrames); the decoder runs
-    per-row *inside* the batch loop, which is where a vectorized codec (e.g.
-    numpy frame sampling) would slot in. Partition-parallel: no shuffle.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decoder(p, m)
-                for p, m in zip(pdf["payload"], pdf["modality"])
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            out.insert(1, "modality", pdf["modality"].values)
-            yield out[[f.name for f in FEATURE_SCHEMA.fields]]
-
-    return media.mapInPandas(decode_batches, schema=FEATURE_SCHEMA)
-
-
-def transform_payloads(
-    media: DataFrame, codec: Callable[[bytes, str], bytes]
-) -> DataFrame:
-    """Payload-rewriting stage (resize / transcode / re-encode): ``codec(
-    payload, modality) -> bytes`` runs inside the Arrow batch loop, and
-    ``n_bytes`` / ``content_md5`` are recomputed from the codec's REAL
-    output — downstream metadata can never drift from the rewritten bytes.
-    Partition-parallel, no shuffle; the Python boundary is paid per Arrow
-    batch."""
-
-    def rewrite_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            new_payloads = [
-                None if p is None else codec(bytes(p), m)
-                for p, m in zip(out["payload"], out["modality"])
-            ]
-            out["payload"] = new_payloads
-            out["n_bytes"] = [None if p is None else len(p) for p in new_payloads]
-            out["content_md5"] = [
-                None if p is None else hashlib.md5(p).hexdigest()
-                for p in new_payloads
-            ]
-            yield out[[f.name for f in MEDIA_SCHEMA.fields]]
-
-    return media.mapInPandas(rewrite_batches, schema=MEDIA_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Pure-stdlib PNG pixel codec (VERDICT r5 item 6): true sample-level decode /
-# re-encode for 8-bit grayscale / gray+alpha / RGB / RGBA non-interlaced PNG
-# using only zlib + struct — no media libraries. Palette, 16-bit, and
-# interlaced PNGs (and every non-PNG container) still raise loudly; a real
-# codec (PIL/ffmpeg) injects through the same decoder/resizer seams.
-# --------------------------------------------------------------------------
-
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
-_PNG_COLOR_TYPE = {1: 0, 2: 4, 3: 2, 4: 6}  # samples/pixel -> color type
-
-
-def png_decode_pixels(payload: bytes) -> tuple[int, int, int, bytearray]:
-    """Decode a PNG to ``(width, height, channels, pixels)`` where pixels is
-    a row-major bytearray of length width*height*channels.
-
-    Pure stdlib: walks the chunk stream, zlib-inflates the concatenated IDAT
-    data, and UNFILTERS each scanline (the five PNG filter types: None, Sub,
-    Up, Average, Paeth) exactly per the spec. Supported: bit depth 8, color
-    types 0/2/4/6, interlace 0 — the overwhelmingly common training-image
-    case; anything else raises ``NotImplementedError`` loudly (inject PIL
-    through the codec seams for those)."""
-    import zlib
-
-    b = bytes(payload)
-    if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG payload")
-    pos, w = 8, None
-    h = depth = color = interlace = None
-    idat = bytearray()
-    while pos + 8 <= len(b):
-        (length,) = struct.unpack(">I", b[pos : pos + 4])
-        ctype = b[pos + 4 : pos + 8]
-        data = b[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            w, h, depth, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + data + crc
-    if w is None:
-        raise ValueError("PNG has no IHDR chunk")
-    if depth != 8 or color not in _PNG_CHANNELS or interlace != 0:
-        raise NotImplementedError(
-            f"stdlib PNG decoder handles 8-bit color types {sorted(_PNG_CHANNELS)} "
-            f"non-interlaced; got depth={depth} color={color} "
-            f"interlace={interlace} — inject a PIL-backed codec for this file"
-        )
-    ch = _PNG_CHANNELS[color]
-    raw = zlib.decompress(bytes(idat))
-    stride = w * ch
-    if len(raw) != h * (stride + 1):
-        raise ValueError(
-            f"PNG scanline stream is {len(raw)} bytes, expected {h * (stride + 1)}"
-        )
-    out = bytearray()
-    prev = bytearray(stride)
-    p = 0
-    for _y in range(h):
-        ft = raw[p]
-        line = bytearray(raw[p + 1 : p + 1 + stride])
-        p += 1 + stride
-        if ft == 1:  # Sub
-            for i in range(ch, stride):
-                line[i] = (line[i] + line[i - ch]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(stride):
-                a = line[i - ch] if i >= ch else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - ch] if i >= ch else 0
-                c = prev[i - ch] if i >= ch else 0
-                pb_ = prev[i]
-                pr = a + pb_ - c
-                pa, pb, pc = abs(pr - a), abs(pr - pb_), abs(pr - c)
-                pred = a if (pa <= pb and pa <= pc) else (pb_ if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif ft != 0:
-            raise ValueError(f"invalid PNG filter type {ft}")
-        out += line
-        prev = line
-    return w, h, ch, out
-
-
-def png_encode_pixels(width: int, height: int, channels: int, pixels) -> bytes:
-    """Encode row-major 8-bit samples back to a spec-valid PNG (filter 0 per
-    scanline, one zlib IDAT, CRC-correct chunks)."""
-    import zlib
-
-    if channels not in _PNG_COLOR_TYPE:
-        raise ValueError(f"channels must be one of {sorted(_PNG_COLOR_TYPE)}")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, expected "
-            f"{width * height * channels}"
-        )
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    stride = width * channels
-    raw = bytearray()
-    for y in range(height):
-        raw.append(0)  # filter type None
-        raw += bytes(pixels[y * stride : (y + 1) * stride])
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, 8, _PNG_COLOR_TYPE[channels], 0, 0, 0
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _resample_nearest(
-    px, sw: int, sh: int, ch: int, width: int, height: int
-) -> bytearray:
-    """Nearest-neighbor resample of a row-major sample buffer (shared by the
-    PNG and GIF pixel paths)."""
-    out = bytearray(width * height * ch)
-    for y in range(height):
-        sy = y * sh // height
-        src_row = sy * sw * ch
-        dst_row = y * width * ch
-        for x in range(width):
-            sx = x * sw // width
-            out[dst_row + x * ch : dst_row + (x + 1) * ch] = px[
-                src_row + sx * ch : src_row + (sx + 1) * ch
-            ]
-    return out
-
-
-def png_resize_pixels(payload: bytes, width: int, height: int) -> bytes:
-    """Decode → nearest-neighbor resample → re-encode, stdlib only."""
-    sw, sh, ch, px = png_decode_pixels(payload)
-    return png_encode_pixels(
-        width, height, ch, _resample_nearest(px, sw, sh, ch, width, height)
-    )
-
-
-# --------------------------------------------------------------------------
-# Pure-stdlib GIF pixel codec (VERDICT r6 item 6): LZW inflate/deflate in
-# plain Python the way the PNG path uses zlib — first-frame decode to
-# RGB/RGBA samples, palette re-encode, nearest-neighbor resize. (r8: the
-# baseline JPEG codec below closed the third container; r9: progressive
-# decode landed too; the remaining seam is arithmetic/12-bit JPEG and the
-# video/audio codecs, which still raise loudly through ``_default_resize``
-# — inject via ``resizer=``.)
-# --------------------------------------------------------------------------
-
-
-def _lzw_decode(min_code_size: int, data: bytes, max_out: int) -> bytearray:
-    """GIF-flavor LZW decode (variable code width 3..12 bits, LSB-first bit
-    packing, clear/EOI codes, NO early-change — the TIFF variant differs).
-
-    Width synchronization contract (mirrored by :func:`_lzw_encode`): the
-    decoder's table runs exactly one entry behind the encoder's at each
-    code boundary, so the decoder widens when ``len(table) == 1 << width``
-    while the encoder widens when ``next_code == (1 << width) + 1``."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    code_size = min_code_size + 1
-    literals = [bytes([i]) for i in range(clear)]
-    table: list[bytes] = literals + [b"", b""]  # clear/EOI placeholders
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos = 0
-    nbits = len(data) * 8
-    while bitpos + code_size <= nbits and len(out) < max_out:
-        byte_i = bitpos >> 3
-        window = int.from_bytes(data[byte_i : byte_i + 3], "little")
-        code = (window >> (bitpos & 7)) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            code_size = min_code_size + 1
-            del table[clear + 2 :]
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("corrupt LZW stream: first code is not a literal")
-            entry = table[code]
-        else:
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table):
-                entry = prev + prev[:1]  # the KwKwK case
-            else:
-                raise ValueError("corrupt LZW stream: code beyond table")
-            if len(table) < 4096:
-                table.append(prev + entry[:1])
-                if len(table) == (1 << code_size) and code_size < 12:
-                    code_size += 1
-        out += entry
-        prev = entry
-    return out
-
-
-def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    """GIF-flavor LZW encode (dictionary-based; see :func:`_lzw_decode` for
-    the width-synchronization contract). Emits a leading clear code, resets
-    the dictionary at the 4096-entry ceiling, and terminates with EOI."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    buf = nbuf = 0
-    code_size = min_code_size + 1
-
-    def put(code: int) -> None:
-        nonlocal buf, nbuf
-        buf |= code << nbuf
-        nbuf += code_size
-        while nbuf >= 8:
-            out.append(buf & 0xFF)
-            buf >>= 8
-            nbuf -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    put(clear)
-    w = b""
-    for c in bytes(indices):
-        wc = w + bytes([c])
-        if wc in table:
-            w = wc
-            continue
-        put(table[w])
-        if next_code < 4096:
-            table[wc] = next_code
-            next_code += 1
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-        else:
-            put(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            code_size = min_code_size + 1
-        w = bytes([c])
-    if w:
-        put(table[w])
-    put(eoi)
-    if nbuf:
-        out.append(buf & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def gif_decode_pixels(payload: bytes) -> tuple[int, int, int, bytearray]:
-    """Decode a GIF's FIRST image to ``(width, height, channels, pixels)``.
-
-    Pure stdlib: parses the logical screen descriptor and global/local color
-    tables, walks extension blocks (capturing the Graphic Control
-    Extension's transparent index), reassembles the image's data sub-blocks,
-    LZW-inflates them (:func:`_lzw_decode`), and de-interlaces when the
-    descriptor says so. Opaque images come back as 3-channel RGB; a
-    transparent index yields 4-channel RGBA with binary alpha (0 at
-    transparent pixels) — exactly what :func:`gif_encode_pixels` can write
-    back. Animated GIFs: the first frame (the training-thumbnail case);
-    later frames' disposal/composition needs a real codec through the seam.
-    """
-    b = bytes(payload)
-    if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    packed = b[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = b[pos : pos + 3 * n]
-        pos += 3 * n
-    transparent: int | None = None
-    while pos < len(b):
-        block = b[pos]
-        if block == 0x21:  # extension: label + sub-blocks
-            label = b[pos + 1]
-            pos += 2
-            subs = []
-            while pos < len(b) and b[pos] != 0:
-                sz = b[pos]
-                subs.append(b[pos + 1 : pos + 1 + sz])
-                pos += 1 + sz
-            pos += 1  # block terminator
-            if label == 0xF9 and subs and len(subs[0]) >= 4 and subs[0][0] & 1:
-                transparent = subs[0][3]
-        elif block == 0x2C:  # image descriptor
-            _left, _top, iw, ih = struct.unpack("<HHHH", b[pos + 1 : pos + 9])
-            ipacked = b[pos + 9]
-            pos += 10
-            ct = gct
-            if ipacked & 0x80:
-                n = 2 << (ipacked & 0x07)
-                ct = b[pos : pos + 3 * n]
-                pos += 3 * n
-            if ct is None:
-                raise ValueError("GIF image has no color table")
-            min_code = b[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                sz = b[pos]
-                data += b[pos + 1 : pos + 1 + sz]
-                pos += 1 + sz
-            idx = _lzw_decode(min_code, bytes(data), iw * ih)
-            if len(idx) < iw * ih:
-                raise ValueError(
-                    f"LZW stream yielded {len(idx)} of {iw * ih} pixels"
-                )
-            if ipacked & 0x40:  # interlaced: 4-pass row shuffle
-                rows: list[bytes | None] = [None] * ih
-                src = 0
-                for start, step in _GIF_INTERLACE_PASSES:
-                    for y in range(start, ih, step):
-                        rows[y] = idx[src * iw : (src + 1) * iw]
-                        src += 1
-                idx = bytearray(b"".join(rows))  # type: ignore[arg-type]
-            ch = 4 if transparent is not None else 3
-            n_colors = len(ct) // 3
-            out = bytearray(iw * ih * ch)
-            for i in range(iw * ih):
-                ci = idx[i]
-                if ci >= n_colors:
-                    raise ValueError(
-                        f"pixel index {ci} beyond the {n_colors}-entry color table"
-                    )
-                out[i * ch : i * ch + 3] = ct[3 * ci : 3 * ci + 3]
-                if ch == 4:
-                    out[i * ch + 3] = 0 if ci == transparent else 255
-            return iw, ih, ch, out
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("GIF has no image data")
-
-
-def gif_encode_pixels(width: int, height: int, channels: int, pixels) -> bytes:
-    """Encode row-major 8-bit samples to a spec-valid GIF89a (palette built
-    from the distinct colors, real LZW data stream, ≤255-byte sub-blocks).
-
-    Channels: 1 (grayscale → gray palette), 3 (RGB), 4 (RGBA with BINARY
-    alpha — a fully transparent index is reserved and declared through a
-    Graphic Control Extension; partial alpha has no GIF representation and
-    raises). More than 256 distinct colors raises ``NotImplementedError`` —
-    palette quantization is a real codec's job, inject one through the
-    seam."""
-    if channels not in (1, 3, 4):
-        raise ValueError("channels must be 1, 3 or 4")
-    if len(pixels) != width * height * channels:
-        raise ValueError(
-            f"pixel buffer is {len(pixels)} bytes, expected "
-            f"{width * height * channels}"
-        )
-    px = bytes(pixels)
-    index_of: dict[tuple[int, int, int], int] = {}
-    palette: list[tuple[int, int, int]] = []
-    indices = bytearray()
-    has_transparent = False
-    for i in range(width * height):
-        if channels == 1:
-            v = px[i]
-            rgb, alpha = (v, v, v), 255
-        elif channels == 3:
-            rgb, alpha = (px[3 * i], px[3 * i + 1], px[3 * i + 2]), 255
-        else:
-            rgb = (px[4 * i], px[4 * i + 1], px[4 * i + 2])
-            alpha = px[4 * i + 3]
-            if alpha not in (0, 255):
-                raise NotImplementedError(
-                    "GIF alpha is binary (0 or 255); partial alpha needs a "
-                    "real codec through the resizer seam"
-                )
-        if alpha == 0:
-            has_transparent = True
-            indices.append(255)  # patched to the reserved index below
-            continue
-        ci = index_of.get(rgb)
-        if ci is None:
-            ci = len(palette)
-            if ci >= 256:
-                raise NotImplementedError(
-                    "more than 256 distinct palette entries; palette "
-                    "quantization needs a real codec through the seam"
-                )
-            index_of[rgb] = ci
-            palette.append(rgb)
-        indices.append(ci)
-    n_needed = len(palette) + (1 if has_transparent else 0)
-    if n_needed > 256:
-        raise NotImplementedError(
-            f"{n_needed} distinct palette entries (including the reserved "
-            "transparent index) exceed GIF's 256; palette quantization "
-            "needs a real codec through the seam"
-        )
-    transparent_idx = len(palette) if has_transparent else None
-    if has_transparent:
-        for i, ci in enumerate(indices):
-            if ci == 255 and (
-                channels == 4 and px[4 * i + 3] == 0
-            ):
-                indices[i] = transparent_idx
-    # color-table size is a power of two ≥ 2 (spec: 2^(n+1) entries)
-    table_bits = 1
-    while (1 << table_bits) < max(n_needed, 2):
-        table_bits += 1
-    n_table = 1 << table_bits
-    ct = bytearray()
-    for rgb in palette:
-        ct += bytes(rgb)
-    ct += b"\x00" * 3 * (n_table - len(palette))
-    min_code_size = max(2, table_bits)
-    lzw = _lzw_encode(min_code_size, bytes(indices))
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out.append(0x80 | (table_bits - 1))  # GCT present, 2^table_bits entries
-    out += b"\x00\x00"  # background index, aspect ratio
-    out += ct
-    if transparent_idx is not None:
-        out += bytes([0x21, 0xF9, 0x04, 0x01, 0, 0, transparent_idx, 0x00])
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + b"\x00"
-    out.append(min_code_size)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"  # block terminator + trailer
-    return bytes(out)
-
-
-def gif_resize_pixels(payload: bytes, width: int, height: int) -> bytes:
-    """Decode → nearest-neighbor resample → re-encode, stdlib only. Binary
-    alpha survives (the resample picks whole source pixels)."""
-    sw, sh, ch, px = gif_decode_pixels(payload)
-    return gif_encode_pixels(
-        width, height, ch, _resample_nearest(px, sw, sh, ch, width, height)
-    )
-
-
-# --------------------------------------------------------------------------
-# Pure stdlib+numpy baseline JPEG codec (VERDICT r7 item 8 — the stretch
-# that closes the THIRD container): marker parse → Huffman entropy decode →
-# dequantize → de-zigzag → exact float IDCT (numpy 8×8 basis product) →
-# chroma upsample → YCbCr→RGB, and the full reverse for encode (FDCT,
-# Annex-K tables, canonical Huffman, byte stuffing). r9: PROGRESSIVE
-# (SOF2) decode — T.81 Annex G spectral selection + successive
-# approximation with EOB runs and AC refinement — shares the same
-# coefficient-store + IDCT epilogue and is verified against Java ImageIO
-# on real progressive files. Arithmetic coding, 12-bit precision and
-# hierarchical modes raise loudly — the remaining documented seam,
-# alongside the video/audio codecs. Encode stays baseline (progressive
-# ENCODE buys nothing for a data pipeline that re-encodes for training).
-# --------------------------------------------------------------------------
-
-_JPEG_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-# JPEG spec (ITU T.81) Annex K "typical" tables — the interchange defaults.
-_JPEG_QT_LUMA = [
-    16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
-]
-_JPEG_QT_CHROMA = [
-    17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-]
-_JPEG_DC_LUMA = (
-    [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-    list(range(12)),
-)
-_JPEG_DC_CHROMA = (
-    [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-    list(range(12)),
-)
-_JPEG_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-        0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-        0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-        0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-        0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-        0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-        0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-        0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-        0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-_JPEG_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-        0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-        0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-        0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-        0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-        0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-        0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-        0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-        0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-        0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-        0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-        0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-        0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-
-
-def _jpeg_idct_basis():
-    """8×8 DCT-III basis A with A[u, x] = c(u)/2 · cos((2x+1)uπ/16);
-    spatial = Aᵀ·F·A, frequency = A·s·Aᵀ — one matrix serves both ways."""
-    import math
-
-    import numpy as np
-
-    a = np.empty((8, 8), dtype=np.float64)
-    for u in range(8):
-        cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            a[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16.0)
-    return a
-
-
-def _jpeg_build_huff_decode(counts: list, symbols: list) -> dict:
-    """Canonical Huffman → {(bit_length, code): symbol} (T.81 C.2)."""
-    lut: dict = {}
-    code, k = 0, 0
-    for ln in range(1, 17):
-        for _ in range(counts[ln - 1]):
-            lut[(ln, code)] = symbols[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return lut
-
-
-def _jpeg_build_huff_encode(counts: list, symbols: list) -> dict:
-    """Canonical Huffman → {symbol: (code, bit_length)}."""
-    enc: dict = {}
-    code, k = 0, 0
-    for ln in range(1, 17):
-        for _ in range(counts[ln - 1]):
-            enc[symbols[k]] = (code, ln)
-            k += 1
-            code += 1
-        code <<= 1
-    return enc
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over an entropy segment (already unstuffed)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def bit(self) -> int:
-        byte_i = self.pos >> 3
-        if byte_i >= len(self.data):
-            raise NotImplementedError("JPEG entropy stream truncated")
-        b = (self.data[byte_i] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def decode(self, lut: dict) -> int:
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | self.bit()
-            ln += 1
-            sym = lut.get((ln, code))
-            if sym is not None:
-                return sym
-        raise NotImplementedError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """T.81 F.12: map a t-bit magnitude to its signed value."""
-    return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def _upsample2_triangular(p, axis: int):
-    """2× upsample along one axis with libjpeg's triangular filter: each
-    output sample = (3·nearer + 1·farther)/4, edges replicated (jdsample.c
-    h2v1/h2v2 'fancy upsampling', applied separably). Operates on the float
-    plane BEFORE color conversion, exactly where libjpeg runs it."""
-    import numpy as np
-
-    if axis == 1:
-        return _upsample2_triangular(p.T, axis=0).T
-    n = p.shape[0]
-    up = np.empty((2 * n,) + p.shape[1:], dtype=p.dtype)
-    prev = np.concatenate([p[:1], p[:-1]], axis=0)
-    nxt = np.concatenate([p[1:], p[-1:]], axis=0)
-    up[0::2] = (3.0 * p + prev) / 4.0
-    up[1::2] = (3.0 * p + nxt) / 4.0
-    return up
-
-
-def _jpeg_split_restarts(entropy: bytes) -> list:
-    """Split an entropy-coded segment on RSTn markers, unstuffing 0xFF00
-    within each piece (T.81 F.1.2.3)."""
-    segments = []
-    cur = bytearray()
-    i = 0
-    while i < len(entropy):
-        if entropy[i] == 0xFF and i + 1 < len(entropy):
-            nxt = entropy[i + 1]
-            if nxt == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-        cur.append(entropy[i])
-        i += 1
-    segments.append(bytes(cur))
-    return segments
-
-
-def jpeg_decode_pixels(payload: bytes) -> tuple[int, int, int, "bytearray"]:
-    """Decode a BASELINE (SOF0/SOF1) or PROGRESSIVE (SOF2) 8-bit Huffman
-    JPEG to ``(width, height, channels, row-major samples)`` — channels 1
-    (grayscale) or 3 (RGB from YCbCr, JFIF/BT.601 matrix). Handles 4:4:4 /
-    4:2:2 / 4:2:0 chroma sampling (triangular "fancy" upsample on 2x
-    axes — the libjpeg/ImageIO default filter), restart intervals,
-    byte stuffing, in-stream quant/Huffman tables (redefinable between
-    scans), and for progressive streams the full T.81 Annex G successive
-    refinement: interleaved/non-interleaved DC first+refine scans,
-    spectral-selection AC scans with EOB-run coding, and AC refinement
-    (correction bits). All scans accumulate into per-block coefficient
-    arrays; dequant + IDCT run once at the end, so the reconstruction path
-    is byte-identical with the baseline decoder's. Arithmetic coding
-    (SOF9+), 12-bit precision and hierarchical modes still raise
-    ``NotImplementedError`` loudly. Verified against Java ImageIO (Spark's
-    ``image`` data source) on real progressive files in
-    tests/test_training_data_ops.py."""
-    import numpy as np
-
-    b = bytes(payload)
-    if b[:2] != b"\xff\xd8":
-        raise NotImplementedError("not a JPEG payload (missing SOI)")
-    qt: dict = {}
-    huff_dc: dict = {}
-    huff_ac: dict = {}
-    comps: list = []
-    w = h = 0
-    dri = 0
-    progressive = False
-    scans: list = []  # each: dict(sel, ss, se, ah, al, segments, dri)
-    pos = 2
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            raise NotImplementedError("JPEG marker desync")
-        marker = b[pos + 1]
-        if marker == 0xFF:
-            # T.81 B.1.1.2: any number of 0xFF FILL bytes may precede a
-            # marker. Without this skip, a progressive stream padded
-            # between scans would misparse the real marker byte as the
-            # high byte of a segment length and silently drop every
-            # remaining refinement scan (review finding, r9).
-            pos += 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        seg_len = int.from_bytes(b[pos + 2 : pos + 4], "big")
-        seg = b[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if pq == 0:
-                    qt[tq] = list(seg[i : i + 64])
-                    i += 64
-                else:
-                    qt[tq] = [
-                        int.from_bytes(seg[i + 2 * j : i + 2 * j + 2], "big")
-                        for j in range(64)
-                    ]
-                    i += 128
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
-            if seg[0] != 8:
-                raise NotImplementedError("only 8-bit JPEG precision supported")
-            progressive = marker == 0xC2
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            n = seg[5]
-            comps = [
-                {
-                    "id": seg[6 + 3 * i],
-                    "h": seg[7 + 3 * i] >> 4,
-                    "v": seg[7 + 3 * i] & 0xF,
-                    "tq": seg[8 + 3 * i],
-                }
-                for i in range(n)
-            ]
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"non-baseline JPEG (SOF marker 0xFF{marker:02X}: lossless/"
-                "arithmetic/hierarchical) — the documented codec seam; inject "
-                "a full codec via resize_images(resizer=...)"
-            )
-        elif marker == 0xC4:  # DHT (possibly several tables, also mid-stream)
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                counts = list(seg[i + 1 : i + 17])
-                nsym = sum(counts)
-                symbols = list(seg[i + 17 : i + 17 + nsym])
-                (huff_dc if tc == 0 else huff_ac)[th] = _jpeg_build_huff_decode(
-                    counts, symbols
-                )
-                i += 17 + nsym
-        elif marker == 0xDD:  # DRI
-            dri = int.from_bytes(seg[:2], "big")
-        elif marker == 0xDA:  # SOS — entropy data follows
-            ns = seg[0]
-            sel = [
-                {"id": seg[1 + 2 * i], "td": seg[2 + 2 * i] >> 4,
-                 "ta": seg[2 + 2 * i] & 0xF}
-                for i in range(ns)
-            ]
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            data_start = pos + 2 + seg_len
-            j = data_start
-            while j + 1 < len(b):
-                if b[j] == 0xFF and b[j + 1] not in (0x00,) and not (
-                    0xD0 <= b[j + 1] <= 0xD7
-                ):
-                    break
-                j += 1
-            scans.append(
-                {
-                    "sel": sel,
-                    "ss": ss,
-                    "se": se,
-                    "ah": ahal >> 4,
-                    "al": ahal & 0xF,
-                    "segments": _jpeg_split_restarts(b[data_start:j]),
-                    "dri": dri,
-                    # tables are redefinable between scans: snapshot the ones
-                    # this scan actually references
-                    "dc": {s["td"]: huff_dc.get(s["td"]) for s in sel},
-                    "ac": {s["ta"]: huff_ac.get(s["ta"]) for s in sel},
-                }
-            )
-            pos = j
-            continue
-        pos += 2 + seg_len
-    if not comps or not scans:
-        raise NotImplementedError("JPEG missing SOF/SOS segments")
-
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c["id"]: c for c in comps}
-    # per-component coefficient store in ZIGZAG order, MCU-padded grid
-    coefs = {
-        c["id"]: np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64),
-                          dtype=np.int32)
-        for c in comps
-    }
-    # non-interleaved block dims (T.81 A.2.2: from the component's own size)
-    nblocks = {}
-    for c in comps:
-        cw = (w * c["h"] + hmax - 1) // hmax
-        ch_ = (h * c["v"] + vmax - 1) // vmax
-        nblocks[c["id"]] = ((ch_ + 7) // 8, (cw + 7) // 8)
-
-    for sc in scans:
-        _jpeg_decode_scan(sc, comps, by_id, coefs, nblocks,
-                          mcus_x, mcus_y, progressive)
-
-    # shared reconstruction: dequant (zigzag) → de-zigzag → IDCT per block
-    basis = _jpeg_idct_basis()
-    planes = {}
-    for c in comps:
-        cid = c["id"]
-        q = np.array(qt[c["tq"]], dtype=np.float64)
-        cz = coefs[cid].astype(np.float64) * q  # (by, bx, 64) zigzag
-        by_n, bx_n = cz.shape[:2]
-        deq = np.zeros((by_n, bx_n, 64), dtype=np.float64)
-        deq[:, :, _JPEG_ZIGZAG] = cz
-        blocks = deq.reshape(by_n, bx_n, 8, 8)
-        # IDCT all blocks in two tensordots: basis.T @ B @ basis
-        spatial = np.einsum("ij,abjk,kl->abil", basis.T, blocks, basis) + 128.0
-        plane = spatial.transpose(0, 2, 1, 3).reshape(by_n * 8, bx_n * 8)
-        planes[cid] = plane
-
-    # crop/upsample each component to full resolution. 2× axes get the
-    # triangular ("fancy") filter — libjpeg's and ImageIO's default, weights
-    # 3:1 toward the nearer chroma sample — which is what closes the decoded
-    # 4:2:0 gap vs production decoders (nearest left a mean |diff| ≈ 1.9 on
-    # real camera files; measured in tests). Non-2× ratios (rare) keep the
-    # nearest map.
-    full = []
-    for c in comps:
-        p = planes[c["id"]]
-        cw = (w * c["h"] + hmax - 1) // hmax
-        ch_ = (h * c["v"] + vmax - 1) // vmax
-        p = p[:ch_, :cw]
-        if c["v"] * 2 == vmax:
-            p = _upsample2_triangular(p, axis=0)
-        if c["h"] * 2 == hmax:
-            p = _upsample2_triangular(p, axis=1)
-        eff_v = c["v"] * 2 if c["v"] * 2 == vmax else c["v"]
-        eff_h = c["h"] * 2 if c["h"] * 2 == hmax else c["h"]
-        if eff_h != hmax or eff_v != vmax:
-            yi = (np.arange(h) * eff_v // vmax).clip(0, p.shape[0] - 1)
-            xi = (np.arange(w) * eff_h // hmax).clip(0, p.shape[1] - 1)
-            p = p[yi][:, xi]
-        else:
-            p = p[:h, :w]
-        full.append(p)
-
-    if len(full) == 1:
-        out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        return w, h, 1, bytearray(out.tobytes())
-    if len(full) != 3:
-        raise NotImplementedError(
-            f"JPEG with {len(full)} components unsupported (CMYK/Adobe)"
-        )
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    bch = y + 1.772 * (cb - 128.0)
-    rgb = np.stack(
-        [np.clip(np.round(x), 0, 255) for x in (r, g, bch)], axis=-1
-    ).astype(np.uint8)
-    return w, h, 3, bytearray(rgb.tobytes())
-
-
-def _jpeg_decode_scan(sc, comps, by_id, coefs, nblocks,
-                      mcus_x, mcus_y, progressive) -> None:
-    """Decode ONE scan's entropy data into the coefficient store.
-
-    Sequential (baseline) scans run the classic interleaved DC+AC block
-    loop. Progressive scans dispatch per T.81 Annex G on (Ss, Ah):
-    DC-first / DC-refine (interleaved or not), AC-first with EOB runs,
-    AC-refine with correction bits. Restart markers reset both the DC
-    predictors and the EOB run."""
-    sel = {s["id"]: s for s in sc["sel"]}
-    scan_comps = [by_id[s["id"]] for s in sc["sel"]]
-    ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
-    dri, segments = sc["dri"], sc["segments"]
-    seg_i = 0
-    reader = _JpegBitReader(segments[0])
-    pred = {c["id"]: 0 for c in comps}
-    eobrun = 0
-    mcu_count = 0
-
-    def restart():
-        nonlocal seg_i, reader, pred, eobrun
-        seg_i += 1
-        reader = _JpegBitReader(segments[seg_i])
-        pred = {c["id"]: 0 for c in comps}
-        eobrun = 0
-
-    interleaved = len(scan_comps) > 1
-    if interleaved:
-        units_total = mcus_x * mcus_y
-    else:
-        c = scan_comps[0]
-        nby, nbx = nblocks[c["id"]]
-        # a single-component scan of a single-component FRAME still uses the
-        # full (unsubsampled) block grid; nblocks already equals it then
-        units_total = nby * nbx
-
-    def ac_first(zz, ac_lut):
-        nonlocal eobrun
-        if eobrun > 0:
-            eobrun -= 1
-            return
-        k = ss
-        while k <= se:
-            rs = reader.decode(ac_lut)
-            r, sz = rs >> 4, rs & 0xF
-            if sz == 0:
-                if r < 15:
-                    eobrun = (1 << r) - 1
-                    if r:
-                        eobrun += reader.bits(r)
-                    return
-                k += 16  # ZRL
-                continue
-            k += r
-            if k > se:
-                raise NotImplementedError("JPEG AC coefficient overrun")
-            zz[k] = _jpeg_extend(reader.bits(sz), sz) << al
-            k += 1
-
-    def ac_refine(zz, ac_lut):
-        # T.81 G.2.2 / libjpeg jdphuff decode_mcu_AC_refine: newly
-        # significant coefficients arrive as ±1<<Al; every nonzero-history
-        # coefficient passed over receives a correction bit.
-        nonlocal eobrun
-        p1, m1 = 1 << al, -1 << al
-
-        def correct(k):
-            if reader.bit():
-                if zz[k] > 0 and not (zz[k] & p1):
-                    zz[k] += p1
-                elif zz[k] < 0 and not (zz[k] & p1):
-                    zz[k] += m1
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                rs = reader.decode(ac_lut)
-                r, sz = rs >> 4, rs & 0xF
-                if sz == 0:
-                    if r < 15:
-                        eobrun = 1 << r
-                        if r:
-                            eobrun += reader.bits(r)
-                        break  # rest of band handled by the EOB branch below
-                    # r == 15: skip 16 zero-history coefficients
-                    val = 0
-                else:
-                    if sz != 1:
-                        raise NotImplementedError(
-                            "invalid size in AC refinement scan"
-                        )
-                    val = p1 if reader.bit() else m1
-                while k <= se:
-                    if zz[k] != 0:
-                        correct(k)
-                    else:
-                        if r == 0:
-                            break
-                        r -= 1
-                    k += 1
-                if val and k <= se:
-                    zz[k] = val
-                k += 1
-        if eobrun > 0:
-            while k <= se:
-                if zz[k] != 0:
-                    correct(k)
-                k += 1
-            eobrun -= 1
-
-    def decode_block(c, zz, dc_lut, ac_lut):
-        cid = c["id"]
-        if not progressive:
-            t = reader.decode(dc_lut)
-            diff = _jpeg_extend(reader.bits(t), t) if t else 0
-            pred[cid] += diff
-            zz[0] = pred[cid]
-            k = 1
-            while k < 64:
-                rs = reader.decode(ac_lut)
-                r, sz = rs >> 4, rs & 0xF
-                if sz == 0:
-                    if r == 15:
-                        k += 16  # ZRL
-                        continue
-                    break  # EOB
-                k += r
-                if k > 63:
-                    raise NotImplementedError("JPEG AC coefficient overrun")
-                zz[k] = _jpeg_extend(reader.bits(sz), sz)
-                k += 1
-            return
-        if ss == 0:
-            if ah == 0:  # DC first
-                t = reader.decode(dc_lut)
-                diff = _jpeg_extend(reader.bits(t), t) if t else 0
-                pred[cid] += diff
-                zz[0] = pred[cid] << al
-            else:  # DC refinement: one raw bit per block
-                if reader.bit():
-                    zz[0] |= 1 << al
-        else:
-            if ah == 0:
-                ac_first(zz, ac_lut)
-            else:
-                ac_refine(zz, ac_lut)
-
-    for unit in range(units_total):
-        if dri and mcu_count and mcu_count % dri == 0:
-            restart()
-        if interleaved:
-            my, mx = divmod(unit, mcus_x)
-            for c in scan_comps:
-                cid = c["id"]
-                dc_lut = sc["dc"].get(sel[cid]["td"])
-                ac_lut = sc["ac"].get(sel[cid]["ta"])
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        zz = coefs[cid][my * c["v"] + by, mx * c["h"] + bx]
-                        decode_block(c, zz, dc_lut, ac_lut)
-        else:
-            c = scan_comps[0]
-            cid = c["id"]
-            nby, nbx = nblocks[cid]
-            by, bx = divmod(unit, nbx)
-            zz = coefs[cid][by, bx]
-            decode_block(
-                c, zz, sc["dc"].get(sel[cid]["td"]), sc["ac"].get(sel[cid]["ta"])
-            )
-        mcu_count += 1
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer with 0xFF byte stuffing (T.81 F.1.2.3)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, ln: int) -> None:
-        self.acc = (self.acc << ln) | (code & ((1 << ln) - 1))
-        self.nbits += ln
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s
-        return bytes(self.out)
-
-
-def _jpeg_scale_qt(base: list, quality: int) -> list:
-    """libjpeg's public quality→scale mapping (quality 50 = Annex K)."""
-    quality = max(1, min(100, quality))
-    s = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return [max(1, min(255, (v * s + 50) // 100)) for v in base]
-
-
-def jpeg_encode_pixels(
-    width: int, height: int, channels: int, pixels,
-    quality: int = 90, subsample: bool = False,
-) -> bytes:
-    """Encode row-major samples to a BASELINE JFIF JPEG — 8-bit, Huffman,
-    Annex-K tables scaled by ``quality`` via the public libjpeg mapping,
-    canonical Huffman codes, byte stuffing. ``subsample=False`` (default)
-    writes 4:4:4; ``subsample=True`` writes 4:2:0 (2×2 luma sampling, box-
-    mean chroma downsample) — the common wild-file layout, which also gives
-    the decoder's interleaved-MCU + upsample path a real roundtrip test.
-    ``channels`` 1 (grayscale) or 3 (RGB → YCbCr); alpha has no JPEG
-    representation, so 2/4-channel input raises (strip alpha or re-encode
-    as PNG)."""
-    import numpy as np
-
-    if channels not in (1, 3):
-        raise NotImplementedError(
-            f"JPEG cannot carry {channels}-channel pixels (no alpha); "
-            "strip alpha or use png_encode_pixels"
-        )
-    px = np.frombuffer(bytes(pixels), dtype=np.uint8).astype(np.float64)
-    px = px.reshape(height, width, channels)
-    if channels == 3:
-        r, g, bch = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * bch
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * bch + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * bch + 128.0
-        comps = [y, cb, cr]
-        qts = [0, 1, 1]
-        hts = [0, 1, 1]
-        samp = [(2, 2), (1, 1), (1, 1)] if subsample else [(1, 1)] * 3
-    else:
-        comps = [px[..., 0]]
-        qts = [0]
-        hts = [0]
-        samp = [(1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    if subsample and channels == 3:
-        # box-mean 2× downsample of the chroma planes (pad odd dims first)
-        for i in (1, 2):
-            p = comps[i]
-            ph = np.pad(p, ((0, p.shape[0] % 2), (0, p.shape[1] % 2)),
-                        mode="edge")
-            comps[i] = (
-                ph[0::2, 0::2] + ph[1::2, 0::2] + ph[0::2, 1::2] + ph[1::2, 1::2]
-            ) / 4.0
-
-    qt0 = _jpeg_scale_qt(_JPEG_QT_LUMA, quality)
-    qt1 = _jpeg_scale_qt(_JPEG_QT_CHROMA, quality)
-    qt_spatial = []
-    for t in (qt0, qt1):
-        m = np.zeros(64, dtype=np.float64)
-        m[_JPEG_ZIGZAG] = np.array(t, dtype=np.float64)
-        qt_spatial.append(m.reshape(8, 8))
-    basis = _jpeg_idct_basis()
-    enc_dc = [_jpeg_build_huff_encode(*_JPEG_DC_LUMA),
-              _jpeg_build_huff_encode(*_JPEG_DC_CHROMA)]
-    enc_ac = [_jpeg_build_huff_encode(*_JPEG_AC_LUMA),
-              _jpeg_build_huff_encode(*_JPEG_AC_CHROMA)]
-
-    bw = _JpegBitWriter()
-    pred = [0] * len(comps)
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    # pad each component plane to its MCU-grid multiple by edge replication
-    padded = []
-    for ci, p in enumerate(comps):
-        ph_, pw_ = mcus_y * samp[ci][1] * 8, mcus_x * samp[ci][0] * 8
-        padded.append(
-            np.pad(p, ((0, ph_ - p.shape[0]), (0, pw_ - p.shape[1])),
-                   mode="edge")
-        )
-    inv_zz = np.array(_JPEG_ZIGZAG)
-
-    def size_cat(v: int) -> int:
-        return 0 if v == 0 else int(abs(v)).bit_length()
-
-    def emit_block(block, ci: int) -> None:
-        f = basis @ (block - 128.0) @ basis.T
-        qz = np.round(f / qt_spatial[qts[ci]]).astype(np.int64)
-        zz = qz.reshape(64)[inv_zz]
-        dc_e, ac_e = enc_dc[hts[ci]], enc_ac[hts[ci]]
-        diff = int(zz[0]) - pred[ci]
-        pred[ci] = int(zz[0])
-        t = size_cat(diff)
-        code, ln = dc_e[t]
-        bw.write(code, ln)
-        if t:
-            mag = diff if diff >= 0 else diff + (1 << t) - 1
-            bw.write(mag, t)
-        run = 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_e[0xF0]
-                bw.write(code, ln)
-                run -= 16
-            sz = size_cat(v)
-            code, ln = ac_e[(run << 4) | sz]
-            bw.write(code, ln)
-            mag = v if v >= 0 else v + (1 << sz) - 1
-            bw.write(mag, sz)
-            run = 0
-        if run:
-            code, ln = ac_e[0x00]
-            bw.write(code, ln)
-
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci, p in enumerate(padded):
-                ch_, cw_ = samp[ci][1], samp[ci][0]
-                for by in range(ch_):
-                    for bx in range(cw_):
-                        py = (my * ch_ + by) * 8
-                        pxo = (mx * cw_ + bx) * 8
-                        emit_block(p[py : py + 8, pxo : pxo + 8], ci)
-    data = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(qt0))
-    if channels == 3:
-        out += seg(0xDB, bytes([0x01]) + bytes(qt1))
-    sof = bytes([8]) + height.to_bytes(2, "big") + width.to_bytes(2, "big")
-    sof += bytes([len(comps)])
-    for i in range(len(comps)):
-        sof += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], qts[i]])
-    out += seg(0xC0, sof)
-    for tc, th, (counts, symbols) in (
-        (0, 0, _JPEG_DC_LUMA), (1, 0, _JPEG_AC_LUMA),
-        (0, 1, _JPEG_DC_CHROMA), (1, 1, _JPEG_AC_CHROMA),
-    ):
-        if th == 1 and channels == 1:
-            continue
-        out += seg(0xC4, bytes([(tc << 4) | th]) + bytes(counts) + bytes(symbols))
-    sos = bytes([len(comps)])
-    for i in range(len(comps)):
-        sos += bytes([i + 1, (hts[i] << 4) | hts[i]])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += data
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def jpeg_resize_pixels(payload: bytes, width: int, height: int) -> bytes:
-    """Decode → nearest-neighbor resample → re-encode (lossy, like any JPEG
-    rewrite; quality 90, 4:4:4)."""
-    sw, sh, ch, px = jpeg_decode_pixels(payload)
-    return jpeg_encode_pixels(
-        width, height, ch, _resample_nearest(px, sw, sh, ch, width, height)
-    )
-
-
-def _default_resize(payload: bytes, modality: str, width: int, height: int) -> bytes:
-    """Default resizer: the stdlib PNG pixel path for PNG payloads, the
-    stdlib GIF/LZW path for GIF payloads, and the stdlib+numpy baseline
-    JPEG path for JPEG payloads (r8 — the third container); every other
-    container (progressive/arithmetic JPEG and the video/audio formats)
-    needs a real codec and raises loudly (PIL where installed — this
-    sandbox ships none; inject through ``resize_images(resizer=...)``,
-    proven end-to-end by the fake-codec seam test)."""
-    if bytes(payload[:8]) == b"\x89PNG\r\n\x1a\n":
-        return png_resize_pixels(payload, width, height)
-    if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
-        return gif_resize_pixels(payload, width, height)
-    if bytes(payload[:3]) == b"\xff\xd8\xff":
-        return jpeg_resize_pixels(payload, width, height)
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "pixel-level resize of non-PNG/GIF payloads needs PIL (not "
-            "installed in this environment); pass resize_images(..., "
-            "resizer=<codec>) to inject one"
-        ) from exc
-    import io
-
-    img = Image.open(io.BytesIO(payload))  # pragma: no cover - needs PIL
-    buf = io.BytesIO()
-    img.resize((width, height)).save(buf, format=img.format or "PNG")
-    return buf.getvalue()
-
-
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, str], bytes] | None = None,
-) -> DataFrame:
-    """Resize every image payload to ``width``×``height`` through the
-    payload-transform seam. ``resizer(payload, modality) -> bytes`` is the
-    injection point for a full codec; the default does REAL pixel-level
-    nearest-neighbor resampling for 8-bit non-interlaced PNGs with nothing
-    but the stdlib (decode → unfilter → resample → re-encode), and raises
-    ``NotImplementedError`` loudly for containers that need a media
-    library."""
-    codec = resizer or (lambda p, m: _default_resize(p, m, width, height))
-    return transform_payloads(media, codec)
-
-
-def sample_frames(
-    media: DataFrame,
-    every_nth: int = 10,
-    max_frames: int = 8,
-    decoder: Callable[[bytes, str], dict] = fake_decoder,
-) -> DataFrame:
-    """Frame sampling for video payloads: one output row per sampled frame,
-    exploded inside the Arrow batch loop. ``decoder`` supplies the frame
-    count and content fingerprint (an ffmpeg-backed demuxer injects through
-    the same argument and would also surface real frame bytes); the default
-    derives deterministic frame ids/hashes from the payload hash — the
-    no-media-libs fallback, clearly fake but schema- and shape-exact.
-
-    Partition-parallel fan-out: a 1000-frame video yields ≤ max_frames rows,
-    so output size is bounded per input row regardless of media length.
-    """
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_index", IntegerType(), False),
-            StructField("frame_hash", StringType(), True),
-        ]
-    )
-
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, modality in zip(
-                pdf["media_id"], pdf["payload"], pdf["modality"]
-            ):
-                feats = decoder(payload, modality)
-                n = feats["n_frames"] or 0
-                picked = list(range(0, n, every_nth))[:max_frames]
-                for idx in picked:
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_index": idx,
-                            "frame_hash": hashlib.md5(
-                                (feats["feature_hash"] or "").encode() + str(idx).encode()
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame_hash"])
-
-    return media.mapInPandas(sample_batches, schema=out_schema)

@@ -44,24 +44,6 @@ def _pct(col: str | Column, p: float, accuracy: int | None) -> Column:
     return F.percentile_approx(c, F.lit(p), F.lit(accuracy))
 
 
-def group_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ps: list[float],
-    accuracy: int | None = None,
-) -> DataFrame:
-    """(group, p_<xx> ...) — one grouped aggregate computing every requested
-    percentile in a single pass (exact or sketch per ``accuracy``)."""
-    v = F.col(value_col).cast("double")
-    return df.filter(v.isNotNull()).groupBy(group_col).agg(
-        *[
-            _pct(v, p, accuracy).alias(f"p_{str(p).replace('.', '_')}")
-            for p in ps
-        ]
-    )
-
-
 def mad_outliers(
     df: DataFrame,
     group_col: str,

@@ -1,7 +1,7 @@
 """Registry extension: large-scale training-data pipeline operators.
 
 Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), similarity search,
-text analysis, and multimodal binary plumbing — each wired to the same DuckDB
+text analysis, and binary-payload metadata — each wired to the same DuckDB
 oracle gate as the core operators. Cross-engine exactness rests on two
 verified facts: the md5-derived 48-bit portable hash is identical in Spark
 and DuckDB, and sequential-fold float math (zip_with+aggregate vs
@@ -727,9 +727,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary column handling: payload bytes + typed metadata columns.
 
-    The pattern for image/audio/video at scale: keep payload as ``binary``,
-    derive typed metadata server-side, and run decode in Arrow-batched
-    mapInPandas (operators/multimodal.py).
+    Keep the payload as ``binary`` and derive typed metadata from it with
+    native expressions only; nothing here decodes the payload (MIME
+    sniffing: ``mm_magic_sniff``).
     """
     docs = load_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import ast
+import importlib
 import json
+from pathlib import Path
 
 import fixtures_f1 as fx
 from f1_datalakehouse_pipeline_spark.cli import main
@@ -165,3 +168,67 @@ def test_cli_build_corpus_incremental(spark, tmp_path, capsys):
     with pytest.raises(SystemExit, match="incompatible"):
         main(["build-corpus", "--parquet", b2, "--domain-col", "src",
               "--domain-budgets", '{"a": 5}'] + args[1:])
+
+
+_REPO = Path(__file__).resolve().parent.parent
+_PKG = "f1_datalakehouse_pipeline_spark"
+
+
+def _top_level_names(path: Path) -> set[str]:
+    names = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def _resolves(module: str, name: str) -> bool:
+    if module == "tools" or module.startswith("tools."):
+        target = _REPO.joinpath(*module.split("."))
+        if (target / f"{name}.py").is_file():
+            return True
+        source = target.with_suffix(".py")
+        return source.is_file() and name in _top_level_names(source)
+    try:
+        if hasattr(importlib.import_module(module), name):
+            return True
+        importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        return False
+    return True
+
+
+def test_entry_point_from_imports_resolve():
+    """Every `from <package or tools> import name`, at module level or lazy
+    inside a function, names something that exists, so deleting code cannot
+    leave an import that fails only when its query or command runs. Tool
+    scripts are checked by their AST, never imported (some start Spark)."""
+    files = [
+        *sorted((_REPO / _PKG).rglob("*.py")),
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
+        *sorted((_REPO / "tools").glob("*.py")),
+        *sorted((_REPO / "perfbench").glob("*.py")),
+    ]
+    checked, unresolved = 0, []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ImportFrom) or node.level or not node.module:
+                continue
+            root = node.module.split(".")[0]
+            if root not in (_PKG, "tools"):
+                continue
+            for alias in node.names:
+                checked += 1
+                if not _resolves(node.module, alias.name):
+                    unresolved.append(
+                        f"{path.relative_to(_REPO)}:{node.lineno}: "
+                        f"from {node.module} import {alias.name}"
+                    )
+    assert checked > 100
+    assert not unresolved, "\n".join(unresolved)
