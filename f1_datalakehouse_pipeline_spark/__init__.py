@@ -2,7 +2,7 @@
 
 A from-scratch rebuild of the capabilities of the reference repo
 ``naveethzan/f1-datalakehouse-pipeline`` (a medallion bronze→silver→gold
-lakehouse ETL for Formula 1 data; see /root/repo/SURVEY.md) as idiomatic
+lakehouse ETL for Formula 1 data; see SURVEY.md at the repository root) as idiomatic
 Spark: DataFrame ETL over partitioned Parquet, declarative schema registry,
 native-expression transforms (zero per-row Python UDFs in hot paths),
 window-function analytics, SCD Type 2 dimension handling, and idempotent

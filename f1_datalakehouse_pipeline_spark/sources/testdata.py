@@ -1,6 +1,6 @@
 """Readers for the driver-provided TPC-H-ish parquet testdata.
 
-Tables (one parquet file each, see /root/repo/TESTDATA.md):
+Tables (one parquet file each, see TESTDATA.md at the repository root):
 region nation customer supplier part orders lineitem events documents embeddings.
 
 At 100 TB these would be partitioned parquet/Delta directories; the reader is

@@ -232,3 +232,26 @@ def test_entry_point_from_imports_resolve():
                     )
     assert checked > 100
     assert not unresolved, "\n".join(unresolved)
+
+
+def test_no_code_names_a_fixed_checkout_path():
+    """Scripts and tests resolve the checkout from their own ``__file__``:
+    one that names a fixed checkout path runs and reports that checkout's
+    code, not its own, whenever it is run from another clone."""
+    needle = "/".join(["", "root", "repo"])
+    files = [
+        *sorted((_REPO / _PKG).rglob("*.py")),
+        *sorted((_REPO / "tools").glob("*.py")),
+        *sorted((_REPO / "tests").glob("*.py")),
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
+    ]
+    hits = [
+        f"{path.relative_to(_REPO)}:{node.lineno}"
+        for path in files
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and needle in node.value
+    ]
+    assert len(files) > 50
+    assert not hits, hits

@@ -132,9 +132,10 @@ def test_driver_gate_rotation_invariants():
         "will silently miss driver verification"
     )
     greens: set[str] = set()
-    for f in sorted(os.listdir("/root/repo")):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for f in sorted(os.listdir(root)):
         if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            data = json.load(open(os.path.join("/root/repo", f)))
+            data = json.load(open(os.path.join(root, f)))
             greens |= {
                 k for k, v in data.items()
                 if v.get("rows_match") and v.get("hash_match")

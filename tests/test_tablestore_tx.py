@@ -655,7 +655,7 @@ def test_two_process_writer_race_overlapping_and_disjoint(spark, tmp_path):
         """
         import sys, time
         root, ready, go = sys.argv[1], sys.argv[2], sys.argv[3]
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, %(repo)r)
         from pyspark.sql import SparkSession
         from pyspark.sql import functions as F
         spark = (
@@ -704,7 +704,7 @@ def test_two_process_writer_race_overlapping_and_disjoint(spark, tmp_path):
                 raise SystemExit("child starved")
         print("CHILD-DONE")
         """
-        % {"rounds": rounds}
+        % {"rounds": rounds, "repo": os.path.dirname(os.path.dirname(os.path.abspath(__file__)))}
     )
     script = tmp_path / "child.py"
     script.write_text(child_code)

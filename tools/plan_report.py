@@ -7,11 +7,13 @@ schemas — the greppable form of the .explain review PERF_NOTES describes.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from f1_datalakehouse_pipeline_spark import get_spark, registry
@@ -132,7 +134,7 @@ def main() -> None:
         for rs in sorted(set(re.findall(r"ReadSchema: [^\n]+", plan)))[:4]:
             lines.append(f"- {rs[:160]}")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(HEADLINE) + len(extras)} queries)")
 

@@ -12,6 +12,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -20,7 +21,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from f1_datalakehouse_pipeline_spark import get_spark
 from f1_datalakehouse_pipeline_spark.sources.testdata import TESTDATA_TABLES
