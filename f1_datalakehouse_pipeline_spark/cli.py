@@ -179,9 +179,8 @@ def main(argv: list[str] | None = None) -> int:
             ):
                 raise SystemExit(
                     "--incremental-state is incompatible with the mixture/"
-                    "containment flags (cross-batch budgets belong to the "
-                    "streaming budget_admission; containment needs the "
-                    "superset corpus view)"
+                    "containment flags (cross-batch token budgets are not "
+                    "supported; containment needs the superset corpus view)"
                 )
             _reject_out_collision(args.parquet, args.incremental_state)
             from f1_datalakehouse_pipeline_spark.plans.corpus import (

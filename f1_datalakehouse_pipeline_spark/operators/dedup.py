@@ -732,9 +732,8 @@ def benchmark_shingle_index(
     """Precompute the held-out benchmark's shingle inverted index:
     ``(test_sh(test_id, h), test_sizes(test_id, test_ngrams))``. The
     benchmark side is static by definition during an ingestion window, so
-    callers that repeatedly check incoming corpus slices (the streaming
-    contamination monitor) compute — and cache — this once instead of
-    re-shingling the benchmark per micro-batch."""
+    callers that repeatedly check incoming corpus slices compute — and
+    cache — this once instead of re-shingling the benchmark per slice."""
     test_sh = _shingle_table(test, id_col, content_col, k).select(
         F.col("doc").alias("test_id"), "h"
     )

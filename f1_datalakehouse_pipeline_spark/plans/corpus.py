@@ -519,8 +519,8 @@ def run_corpus_pipeline_incremental(
     batch — the ``quality.expectations_for_table`` contract) turns on the
     write-audit-publish admission gate (VERDICT r8 item 4), implemented by
     the SAME ``streaming.quality_gate.audit_split`` battery as the
-    oracle-gated ``dq_expectations`` and the streaming gate, so corpus
-    admission can never drift from their counting semantics. Per batch:
+    oracle-gated ``dq_expectations``, so corpus admission can never drift
+    from its counting semantics. Per batch:
     rows violating any check are routed to ``<state_root>/quarantine/``
     (batch_token-partitioned, idempotent dynamic overwrite — replay-safe
     like every other state write here) with the names of the checks they
@@ -631,8 +631,7 @@ def run_corpus_pipeline_incremental(
     which is the cost this mode exists to avoid. The first call (no shard manifest yet) creates
     the shard set with ``n_shards``; later calls ignore ``n_shards`` and
     append. The mixture/containment stages are deliberately absent here:
-    token budgets across an unbounded stream are
-    ``streaming/stateful.budget_admission``'s job, and containment needs the
+    cross-batch token budgets are not supported, and containment needs the
     superset corpus view.
     """
     _require_integral_id(batch, id_col)
@@ -742,6 +741,10 @@ def run_corpus_pipeline_incremental(
             rep.counts[key] = int(n) if n is not None else df.count()
         pending.clear()
 
+    # same local-checkpoint release as the batch form: a long-lived ingest
+    # session runs one of these builds per micro-batch
+    first_rdd_id = spark.sparkContext._jsc.sc().newRddId()
+
     try:
         if wap_checks:
             from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
@@ -767,9 +770,7 @@ def run_corpus_pipeline_incremental(
 
             def _wap_sink(df: DataFrame, path: str) -> None:
                 # idempotent per-batch sink: replay overwrites its own
-                # batch_token partition — THE SAME writer as the streaming
-                # gate's sinks (one implementation of the overwrite
-                # semantics, so a future fix lands in both gates at once)
+                # batch_token partition
                 from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
                     _overwrite_batch,
                 )
@@ -835,6 +836,7 @@ def run_corpus_pipeline_incremental(
             kept, id_col, content_col,
             threshold=near_threshold, max_doc_frequency=max_doc_frequency,
         )
+        cached.append(pairs)
         kept = dedup.apply_dedup(kept, id_col, pairs)
         index = _read_index(spark, lsh_dir)
         if index is not None:
@@ -930,12 +932,12 @@ def run_corpus_pipeline_incremental(
                 )
             have_shards = True
 
-        # extend state LAST (same ordering rationale as streaming/novelty's
-        # admit_batch: a crash between the shard append and the state append
-        # re-runs a batch the state has not seen — the re-run recomputes the
-        # same verdicts, and the residue is duplicate delivery of that ONE
-        # batch; state-FIRST would instead make the re-run reject the whole
-        # batch against its own half-written state and silently lose it).
+        # extend state LAST: a crash between the shard append and the state
+        # append re-runs a batch the state has not seen — the re-run
+        # recomputes the same verdicts, and the residue is duplicate delivery
+        # of that ONE batch; state-FIRST would instead make the re-run reject
+        # the whole batch against its own half-written state and silently
+        # lose it.
         #
         # The admitted rows are STAGED to a lineage-free parquet first:
         # `kept`'s plan READS exact_dir and the LSH index dirs, and Spark
@@ -1026,6 +1028,7 @@ def run_corpus_pipeline_incremental(
     finally:
         for df in cached:
             df.unpersist()
+            release_local_checkpoints(df, first_rdd_id)
 
     if not have_shards or not audit:  # nothing delivered yet / caller audits out-of-band
         return rep

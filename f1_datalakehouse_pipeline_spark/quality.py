@@ -315,7 +315,7 @@ class PsiReference:
     scorer needs — :func:`psi_drift_from_reference` makes ONE pass over the
     new batch and never rescans the reference. Built by
     :func:`psi_reference`; pass ``materialize=True`` there when the same
-    reference scores many batches (the streaming monitor)."""
+    reference scores many batches."""
 
     numeric_cols: list[str]
     categorical_cols: list[str]
@@ -456,9 +456,9 @@ def psi_drift_from_reference(
     """Score a new batch against a precomputed :class:`PsiReference` — ONE
     pass over the batch, zero reference scans. Same output contract as
     :func:`psi_drift` (which is now this, composed with
-    :func:`psi_reference`). The streaming monitor builds the reference once
-    with ``materialize=True`` and calls this per micro-batch, so per-batch
-    cost is O(batch) regardless of reference size (ADVICE r5).
+    :func:`psi_reference`). A caller scoring many batches builds the
+    reference once with ``materialize=True`` and calls this per batch, so
+    per-batch cost is O(batch) regardless of reference size (ADVICE r5).
 
     Plan note: the ref↔new bucket alignment is a FULL OUTER join (a bucket
     may exist on either side alone), which Spark's BroadcastHashJoin does

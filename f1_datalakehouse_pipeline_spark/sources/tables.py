@@ -107,9 +107,9 @@ class TableStore:
         self.root = os.path.realpath(os.path.abspath(root))
         # retention depth: current + this many predecessors survive GC.
         # The default keeps one generation (lazy reads against the prior
-        # version stay valid across one overwrite); a CDC consumer replaying
-        # multi-commit feeds (table_changes_feed) raises it to its replay
-        # horizon — retention bounds how far back the feed can reach.
+        # version stay valid across one overwrite); a CDC reader that needs
+        # older single-step table_changes() reads raises it — retention
+        # bounds how far back a change read can reach.
         self.keep_versions = keep_versions
 
     def path(self, table: str) -> str:
@@ -266,11 +266,8 @@ class TableStore:
             fh.write(parent)
         self._gc_versions(table, keep_target=os.path.realpath(version_dir))
 
-    def _is_committed(self, version_dir: str) -> bool:
-        return self._is_committed_path(version_dir)
-
     @staticmethod
-    def _is_committed_path(version_dir: str) -> bool:
+    def _is_committed(version_dir: str) -> bool:
         return os.path.exists(os.path.join(version_dir, _COMMIT_SENTINEL))
 
     @staticmethod
@@ -278,9 +275,7 @@ class TableStore:
         """If ``newer_dir``'s parent stamp contradicts ``older_dir``
         (commits lost between two RETAINED versions), return the recorded
         parent as evidence; ``None`` = adjacent, or no chain info (pre-stamp
-        sentinel — assume adjacent for backward compatibility). ONE
-        implementation shared by the per-commit feed and the readStream
-        datasource planner, so the two can never drift on hole semantics."""
+        sentinel — assume adjacent for backward compatibility)."""
         p = TableStore._parent_of(newer_dir)
         if p is not None and p != os.path.basename(older_dir):
             return p
@@ -290,9 +285,7 @@ class TableStore:
     def readable_change_files(version_dir: str, key_cols: list[str] | None) -> list[str]:
         """Part-file paths of ``version_dir``'s write-time change feed IF
         servable under ``key_cols`` (``_keys.json`` sidecar match), else
-        ``[]``. Shared by the batch CDF read and the readStream datasource
-        planner — one definition of "this commit has readable change
-        files"."""
+        ``[]``."""
         cpath = os.path.join(version_dir, "_changes")
         if not os.path.isdir(cpath) or not TableStore._change_keys_match(
             cpath, key_cols
@@ -380,39 +373,30 @@ class TableStore:
             return
         # OLDEST first: a crash midway through the loop must leave the
         # retained set contiguous from the head — newest-first removal would
-        # leave a HOLE in the version chain, and a per-commit CDC read
+        # leave a HOLE in the version chain, and a single-step CDC read
         # across a hole would serve the newer commit's write-time change
         # files against the wrong predecessor (r10 crash-injection finding;
-        # the parent-stamp check in table_changes_feed is the backstop).
+        # the parent-stamp check, chain_hole, is the backstop).
         for stale in committed[self.keep_versions:][::-1] + stale_orphans:
             shutil.rmtree(stale, ignore_errors=True)
 
     def versions(self, table: str) -> list[str]:
         """Committed version directories for ``table``, newest first (current
         included). Plain-parquet time travel: the transactional overwrite
-        keeps the current version plus ``_KEEP_VERSIONS`` predecessors
+        keeps the current version plus ``keep_versions`` predecessors
         (≙ Iceberg snapshots, iceberg_manager.py history; bounded retention
         instead of unbounded snapshot log). In-flight or crashed (unmarked)
-        dirs are never listed."""
-        return self.list_versions(self.root, table)
-
-    @staticmethod
-    def list_versions(root: str, table: str) -> list[str]:
-        """The :func:`versions` listing as a SparkSession-free static —
-        shared with the CDC streaming datasource's offset planner
-        (streaming/cdc_datasource.py), which runs where no TableStore
-        instance exists. ONE implementation so the two can never disagree
-        about what counts as a committed version."""
-        root = os.path.abspath(root)
-        live = os.path.join(root, table)
-        vroot = os.path.join(root, ".versions", table)
+        dirs are never listed, except the current version in the
+        millisecond swap-to-sentinel window."""
+        live = self.path(table)
+        vroot = self._version_root(table)
         if not os.path.isdir(vroot):
             return [live] if os.path.isdir(live) else []
         current = os.path.realpath(live)
         dirs = [
             os.path.join(vroot, d)
             for d in os.listdir(vroot)
-            if TableStore._is_committed_path(os.path.join(vroot, d))
+            if self._is_committed(os.path.join(vroot, d))
             or os.path.realpath(os.path.join(vroot, d)) == current
         ]
         # A still-PLAIN (append-created) live dir is the current version even
@@ -432,34 +416,6 @@ class TableStore:
                 continue
         keyed.sort(key=lambda kp: kp[0])
         return [p for _, p in keyed]
-
-    @staticmethod
-    def committed_versions(root: str, table: str) -> list[str]:
-        """:func:`list_versions` restricted to versions safe to serve as
-        STREAM OFFSETS: sentinel-committed ``.versions/`` dirs only. Two
-        classes listed by list_versions are excluded, for different reasons:
-
-        - a current-but-UNCOMMITTED ``.versions/`` dir (the millisecond
-          swap-to-sentinel window, or a publish_many member a rollback
-          later de-commits) — an offset naming it can be WAL-logged by a
-          consumer and then vanish, permanently poisoning the checkpoint
-          (ADVICE r10);
-        - the PLAIN (append-created) live dir — readable as a snapshot but
-          NOT a stable offset identity: its "commit id" is the table name,
-          and the first overwrite renames the dir to ``legacy-<hex>``, so
-          a checkpoint holding the old id could never resolve again (r11
-          review finding). Streams start after the first real commit.
-
-        Defined HERE next to list_versions (not in the reader) so the
-        store and the CDC datasource can never disagree about what counts
-        as an offset-servable version."""
-        vroot = os.path.join(os.path.abspath(root), ".versions", table)
-        return [
-            v
-            for v in TableStore.list_versions(root, table)
-            if v.startswith(vroot + os.sep)
-            and TableStore._is_committed_path(v)
-        ]
 
     def read_version(self, table: str, n_back: int = 0, conformed: bool = False) -> DataFrame:
         """Read the table as of ``n_back`` overwrites ago (0 = current).
@@ -531,18 +487,13 @@ class TableStore:
         (hardlink-graft of the current version's data files + the appended
         rows) published under the usual CAS — appending through the live
         symlink would mutate a published snapshot in place, invisible to
-        pinned readers, time travel, and EVERY CDC tier (the rows would
+        pinned readers, time travel, and table_changes (the rows would
         belong to no commit; r10 review finding). No write-time change
         files are emitted: append can duplicate merge keys, so keyed
-        labeling is undefined — the BATCH and PULL-LOOP CDC tiers fall
-        back to the snapshot diff, correct under both keyed and multiset
-        semantics. The ``table_changes`` READSTREAM source has no
-        snapshot-diff tier (executor-side file readers only): an append
-        commit in a live stream's span makes its planner raise on every
-        restart until the checkpoint is recreated — feed stream-backed
-        tables through overwrite(..., changes=...)/merge_upsert instead
-        (ADVICE r10). A plain (append-created, pre-transactional) table
-        keeps the cheap in-place append."""
+        labeling is undefined — ``table_changes`` falls back to the
+        snapshot diff, correct under both keyed and multiset semantics.
+        A plain (append-created, pre-transactional) table keeps the cheap
+        in-place append."""
         live = self.path(table)
         if not os.path.islink(live):
             self._writer(df, table).mode("append").save(live)
@@ -1371,217 +1322,6 @@ class TableStore:
         )
         return ins.unionByName(dels).unionByName(pre).unionByName(post)
 
-    def table_changes_feed(
-        self,
-        table: str,
-        n_back_from: int,
-        n_back_to: int = 0,
-        key_cols: list[str] | None = None,
-        _versions: list[str] | None = None,
-    ) -> DataFrame:
-        """PER-COMMIT change feed across a version range (≙ Delta's actual
-        ``table_changes(from, to)`` shape: rows are NOT collapsed to a net
-        diff — every commit's changes appear, stamped). Each step between
-        consecutive retained versions contributes its change rows (served
-        from that commit's write-time ``_changes/`` files when present,
-        else the single-step snapshot diff), stamped with:
-
-        - ``_commit_id``      the stable version-directory name the step
-                              committed (survives later commits shifting
-                              relative n_back positions);
-        - ``_commit_ordinal`` 1-based position of the step within the
-                              requested range, oldest commit = 1 (a RANGE
-                              attribute for replay ordering, not a global
-                              version number — the store's retention is
-                              bounded, so absolute version counters would
-                              lie after a vacuum).
-
-        A consumer replaying the feed applies commits in ascending
-        ``_commit_ordinal``; inside one commit the usual CDF application
-        rules hold (delete/pre-image keys removed, insert/post-image rows
-        upserted). Net-diff semantics across the same range remain
-        available via :func:`table_changes` (which pays a snapshot diff for
-        multi-step spans — composing is exactly what this feed avoids).
-
-        Every step resolves against ONE versions() snapshot taken up front
-        (``_versions`` lets ChangeFeedConsumer pin its own snapshot), so a
-        commit landing mid-read can never shift the steps or their stamps;
-        steps union with NULL backfill so a schema-widening commit inside
-        the range doesn't break the read (review findings, r9)."""
-        from pyspark.sql import functions as F
-
-        self._check_span(n_back_from, n_back_to)
-        vs = _versions if _versions is not None else self.versions(table)
-        if n_back_from >= len(vs):
-            raise IndexError(
-                f"{table}: only {len(vs)} retained versions, asked for "
-                f"n_back_from={n_back_from}"
-            )
-        out: DataFrame | None = None
-        for ordinal, newer in enumerate(
-            range(n_back_from - 1, n_back_to - 1, -1), start=1
-        ):
-            # Per-commit replay is only sound if consecutive RETAINED
-            # versions are consecutive COMMITS. Each commit's sentinel
-            # records its parent (r10); a mismatch means commits were lost
-            # from retention (crashed GC under pre-r10 removal order,
-            # manual deletion) — raise instead of silently collapsing the
-            # gap into one mislabeled step. None = pre-stamp commit, no
-            # chain info, keep the pre-r10 trust.
-            p = self.chain_hole(vs[newer], vs[newer + 1])
-            if p is not None:
-                raise ValueError(
-                    f"{table}: retained version chain has a hole — "
-                    f"{os.path.basename(vs[newer])} records parent {p!r} "
-                    f"but the next retained version is "
-                    f"{os.path.basename(vs[newer + 1])}; commits between "
-                    "them were lost, so per-commit replay across the gap "
-                    "is impossible. Resync the consumer from a snapshot, "
-                    "or read the NET delta via table_changes()."
-                )
-            step = self._changes_between(
-                vs[newer + 1], vs[newer], key_cols, allow_files=True
-            ).select(
-                "*",
-                F.lit(os.path.basename(vs[newer])).alias("_commit_id"),
-                F.lit(ordinal).alias("_commit_ordinal"),
-            )
-            out = (
-                step
-                if out is None
-                else out.unionByName(step, allowMissingColumns=True)
-            )
-        if out is None:
-            # empty range (from == to): zero rows, full feed schema
-            base = self.spark.read.option("mergeSchema", "true").parquet(
-                vs[n_back_to]
-            )
-            return (
-                base.select(
-                    "*",
-                    F.lit("insert").alias("_change_type"),
-                    F.lit("").alias("_commit_id"),
-                    F.lit(0).alias("_commit_ordinal"),
-                )
-                .filter(F.lit(False))
-            )
-        return out
-
-
-class ChangeFeedConsumer:
-    """Incremental CDC consumer over :func:`TableStore.table_changes_feed`
-    (≙ a Delta streaming CDF reader's cursor semantics, pull-based):
-    ``poll()`` returns every commit landed since the persisted cursor —
-    per-commit rows stamped with ``_commit_id``/``_commit_ordinal`` —
-    and ``commit()`` advances the cursor to the head observed by the last
-    poll. At-least-once by construction: re-polling without committing
-    re-delivers the same commits, and a crash between poll and commit
-    replays them; consumers dedupe on ``_commit_id`` if they need
-    effectively-once.
-
-    A consumer with no cursor starts at the OLDEST retained version (the
-    full available history — bounded by the store's ``keep_versions``).
-    A cursor pointing at a vacuumed version raises loudly: the replay
-    horizon was exceeded and silently serving a partial feed would corrupt
-    any downstream state built on it (resync from a snapshot instead).
-
-    The cursor is one tiny JSON file per (consumer, table) under
-    ``cursor_dir`` — the consumer's own durable state, deliberately NOT
-    inside the store (many consumers, one table)."""
-
-    def __init__(self, store: TableStore, table: str, cursor_dir: str):
-        self.store = store
-        self.table = table
-        self.cursor_path = os.path.join(cursor_dir, f"{table}.cursor.json")
-        os.makedirs(cursor_dir, exist_ok=True)
-        self._pending_head: str | None = None
-        self._pending_commits: list[str] = []
-
-    def _cursor(self) -> str | None:
-        try:
-            with open(self.cursor_path) as f:
-                return json.load(f)["commit_id"]
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def poll(self, key_cols: list[str] | None = None) -> DataFrame:
-        """Change rows of every commit since the cursor (empty feed-schema
-        DataFrame if none). Remembers the head for :func:`commit`.
-
-        The versions() snapshot taken HERE is passed through to the feed —
-        resolving it twice would let a commit landing between the two
-        listings shift the relative indices, silently dropping a commit
-        from this consumer forever (the at-least-once guarantee is exactly
-        what that would break; review finding, r9)."""
-        vs = self.store.versions(self.table)
-        if not vs:
-            raise ValueError(
-                f"{self.table}: no committed versions yet — poll after the "
-                "producer's first commit"
-            )
-        names = [os.path.basename(v) for v in vs]
-        cur = self._cursor()
-        if cur == self.table and cur not in names:
-            # cursor taken while the table was still a PLAIN (append-created)
-            # directory, whose basename is the table name; the first
-            # transactional overwrite renamed it to legacy-<hex> — follow it
-            # instead of forcing a resync on a fully-retained history
-            # (review finding, r9)
-            legacy = [n for n in names if n.startswith("legacy-")]
-            if len(legacy) == 1:
-                cur = legacy[0]
-        if cur is None:
-            n_back_from = len(vs) - 1
-        elif cur in names:
-            n_back_from = names.index(cur)
-        else:
-            raise ValueError(
-                f"{self.table}: cursor commit {cur!r} is no longer retained "
-                f"(vacuumed past the replay horizon; retained: {names}) — "
-                "resync the consumer from a snapshot"
-            )
-        self._pending_head = names[0]
-        # commits since the cursor (exclusive), OLDEST FIRST — the replay
-        # order; pending_commits()/commit_through() expose per-commit
-        # micro-batching over one poll (streaming/cdc_source.py)
-        self._pending_commits = names[:n_back_from][::-1]
-        return self.store.table_changes_feed(
-            self.table, n_back_from, 0, key_cols=key_cols, _versions=vs
-        )
-
-    def pending_commits(self) -> list[str]:
-        """Commit ids delivered by the LAST poll, oldest first (the order a
-        replaying consumer applies them; equals the ``_commit_ordinal``
-        stamping of the polled feed)."""
-        return list(self._pending_commits)
-
-    def _persist(self, commit_id: str) -> None:
-        tmp = self.cursor_path + f".{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"commit_id": commit_id}, f)
-        os.replace(tmp, self.cursor_path)
-
-    def commit(self) -> None:
-        """Persist the head observed by the LAST poll (atomic replace)."""
-        if self._pending_head is None:
-            raise RuntimeError("commit() before any poll()")
-        self._persist(self._pending_head)
-
-    def commit_through(self, commit_id: str) -> None:
-        """Persist the cursor AT ``commit_id`` — per-commit advancement for
-        micro-batch consumers that apply one commit at a time and must not
-        re-deliver applied commits after a crash mid-poll. The id must be
-        one delivered by the LAST poll; advancing through the last pending
-        commit is equivalent to :func:`commit`."""
-        if self._pending_head is None:
-            raise RuntimeError("commit_through() before any poll()")
-        if commit_id not in self._pending_commits:
-            raise ValueError(
-                f"{self.table}: {commit_id!r} was not delivered by the last "
-                f"poll (pending, oldest first: {self._pending_commits})"
-            )
-        self._persist(commit_id)
-
 
 def compact(
     store: TableStore,
@@ -1611,10 +1351,9 @@ def compact(
     there would be row-dropping, so it raises instead.
 
     A compaction changes NO logical rows, so its commit writes an EMPTY
-    key-agnostic change feed: a CDC consumer's ``table_changes_feed`` over
-    a range containing compactions stays file-served end to end (zero rows
-    for the compaction ordinal) instead of paying a full snapshot diff
-    just to learn nothing changed.
+    key-agnostic change feed: a single-step ``table_changes`` read of the
+    compaction is file-served (zero rows) instead of paying a full
+    snapshot diff just to learn nothing changed.
     """
     from pyspark.sql import functions as F
 

@@ -4,17 +4,14 @@ dedup vs hash history → within-batch LSH + novelty-index probe →
 decontamination → chunk → shard APPEND) via
 ``plans/corpus.run_corpus_pipeline_incremental`` inside ``foreachBatch``.
 
-This composes the two existing streaming admission surfaces into the
-delivery path: ``streaming/novelty`` gates near-dups but appends raw docs,
-and ``streaming/stateful.budget_admission`` caps domains but delivers
-nothing — here the batch-mode incremental pipeline IS the upsert, so the
-streaming and batch ingestion paths cannot drift (same code, same state
-layout, same manifest arithmetic). State (content-hash history + band
-index) lives under ``state_root`` exactly as in batch mode; a corpus
-bootstrapped by batch calls can be continued by a stream and vice versa.
+The batch-mode incremental pipeline IS the upsert, so the streaming and
+batch ingestion paths cannot drift (same code, same state layout, same
+manifest arithmetic). State (content-hash history + band index) lives
+under ``state_root`` exactly as in batch mode; a corpus bootstrapped by
+batch calls can be continued by a stream and vice versa.
 
-Crash consistency is the documented at-most-one-batch weakening shared by
-``streaming/novelty`` and the TableStore ledger: the upsert is wrapped with
+Crash consistency is the documented at-most-one-batch weakening of the
+incremental corpus build: the upsert is wrapped with
 ``incremental.exactly_once_batch_writer`` so REPLAYED completed batches are
 skipped; a crash inside one upsert re-runs that batch against state that
 has not seen it (state extension is the LAST write), re-deriving identical

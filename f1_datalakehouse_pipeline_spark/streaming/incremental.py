@@ -1,59 +1,17 @@
-"""Structured Streaming ingestion — the streaming evolution of the
-reference's weekly INCREMENTAL batch mode (SURVEY §2.9: the reference has no
-streaming; this is the natural extension, not a parity requirement).
+"""Exactly-once wrapper for ``foreachBatch`` upserts.
 
-Pattern: file-source ``readStream`` over the bronze landing directory →
-``foreachBatch`` running the SAME silver transforms and idempotent
-partition-overwrite/SCD-merge writes the batch pipeline uses. Because each
-micro-batch reuses the batch write semantics, replays are idempotent and the
-batch/streaming code paths cannot drift.
-
-Also provides a windowed+watermarked event aggregation, the canonical
-late-data-tolerant streaming operator shape.
+Spark's ``foreachBatch`` is at-least-once: a restart from a checkpoint can
+re-deliver the last micro-batch. :func:`exactly_once_batch_writer` turns
+that into "re-runs at most one idempotent batch" with a batch-id ledger.
+``streaming/corpus_ingest.py`` wraps its per-batch corpus build with it.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
-
-
-def stream_file_source(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
-
-
-def foreach_batch_upsert(
-    stream_df: DataFrame,
-    upsert: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Run ``upsert(batch_df, batch_id)`` per micro-batch with checkpointing.
-
-    ``available_now=True`` drains everything currently in the source then
-    stops — the streaming equivalent of one INCREMENTAL batch run, and what
-    tests use. Long-running deployments pass False and a processing trigger.
-    """
-    writer = stream_df.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from pyspark.sql import DataFrame
 
 
 def exactly_once_batch_writer(
@@ -109,47 +67,3 @@ def exactly_once_batch_writer(
                         pass
 
     return wrapped
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exactly-once-per-key dedup with BOUNDED state: Spark's
-    dropDuplicatesWithinWatermark keeps a key only until the watermark passes
-    it, so state size tracks the watermark window, not the stream's lifetime
-    (a plain dropDuplicates on a stream grows state forever — the 100 TB
-    anti-pattern). Duplicates arriving within the watermark window dedup
-    exactly; duplicates later than the watermark are the accepted loss, same
-    contract as any watermarked operator."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts — late rows beyond the watermark are
-    dropped instead of growing state forever (the 100 TB state-bound rule)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n_events",
-            "total_value",
-        )
-    )

@@ -1,44 +1,26 @@
-"""Streaming corpus ingestion with cross-batch near-duplicate rejection
-(SURVEY §2.9 extension; the reference has no streaming at all).
+"""On-disk near-duplicate history index for incremental corpus builds.
 
-The incremental-dedup operator (``operators/dedup.minhash_band_index`` /
-``novelty_pairs`` — oracle-verified as ``dedup_incremental_novelty``) run as
-a CONTINUOUS admission gate: every micro-batch of incoming documents is
+``plans/corpus.run_corpus_pipeline_incremental`` probes each new batch
+against the signatures of every document admitted so far (the bipartite
+banded-LSH probe of ``operators/dedup.novelty_pairs``, oracle-verified as
+``dedup_incremental_novelty``) and then appends the admitted batch's own
+index rows, so batch N+1 sees them. Admission is therefore order-dependent
+by design (first arrival wins). The gate matches on k-token shingles, so
+documents SHORTER than k tokens have no signature and always pass.
 
-1. deduplicated WITHIN the batch (banded-LSH self-join — two copies landing
-   together must not both be admitted),
-2. probed against the accumulated history index on disk (bipartite banded
-   LSH — a copy of anything admitted in ANY earlier batch is rejected),
-3. and the survivors are appended to the corpus sink WHILE their own
-   signature rows are appended to the index — so batch N+1 sees them.
-
-Admission is therefore order-dependent by design (first arrival wins),
-exactly the semantics an append-only training-corpus intake wants. Scope:
-the gate matches on k-token shingles, so documents SHORTER than k tokens
-have no signature and always pass — compose with ``dedup.exact_dedup`` on
-the content hash if tiny-doc exact replays matter for the corpus.
-
-State lives in the on-disk index (three parquet dirs: ``bands/`` partitioned
-by band, ``shingles/``, ``sizes/``), not in Spark streaming state — the
-index is the product, readable by any batch job, and survives restarts with
-the checkpoint. Per-batch cost: shingling/banding the batch itself, a bucket
+The index is three parquet dirs (``bands/`` partitioned by band,
+``shingles/``, ``sizes/``): the index is the product, readable by any batch
+job. Per-batch probe cost: shingling/banding the batch itself, a bucket
 join against the bands index, and an exact-Jaccard verify that scans index
-shingles only for candidate pairs (AQE broadcasts the usually-tiny candidate
-set). For 100 TB indexes pass ``shingle_buckets``: ``shingles/`` then lives
-as a catalog table bucketed+sorted by doc, and the verify join reads the
-index side pre-partitioned — zero Exchange on the (corpus-sized) index,
-shuffle only on the (batch-sized) probe side.
+shingles only for candidate pairs. For 100 TB indexes pass
+``shingle_buckets``: ``shingles/`` then lives as a catalog table
+bucketed+sorted by doc, and the verify join reads the index side
+pre-partitioned — zero Exchange on the (corpus-sized) index, shuffle only
+on the (batch-sized) probe side.
 
-Crash consistency: the data append and the index append are two writes; a
-crash between them re-delivers the batch (foreachBatch is at-least-once),
-which would double-append. Wrap the returned upsert with
-``incremental.exactly_once_batch_writer`` — as :func:`novelty_ingest_stream`
-does by default — so completed batches are skipped on replay; a crash inside
-the two-write window re-runs a batch whose rejects are recomputed
-identically (the probe is deterministic), so the only residue is duplicate
-index/data rows for that single batch, which the admission semantics
-tolerate (extra copies of the same signature change no verdict) — documented
-at-most-one-batch weakening, same contract as the TableStore ledger notes.
+Each admitted batch appends one small file per component;
+:func:`compact_novelty_index` folds them back (recoverably, see
+:func:`_recover_compaction`) and :func:`should_compact` decides when.
 """
 
 from __future__ import annotations
@@ -48,13 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from f1_datalakehouse_pipeline_spark.operators import dedup
 from f1_datalakehouse_pipeline_spark.sources.bucketed import save_bucketed
-from f1_datalakehouse_pipeline_spark.streaming.incremental import (
-    exactly_once_batch_writer,
-)
 
 
 def _shingles_table_name(index_path: str) -> str:
@@ -363,153 +340,3 @@ def _append_index(
         )
     finally:
         sh.unpersist()
-
-
-def admit_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    batch_id: int,
-    id_col: str,
-    content_col: str,
-    index_path: str,
-    out_path: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    max_doc_frequency: int | None = None,
-    shingle_buckets: int | None = None,
-) -> None:
-    """One micro-batch through the admission gate (see module docstring).
-    ``max_doc_frequency`` is the shared hot-shingle cap (boilerplate guard)
-    applied to the within-batch self-join, the index probe, and the index
-    rows this batch contributes. ``shingle_buckets`` selects the bucketed
-    shingles layout (see :func:`_append_index`); use the same value on every
-    batch of an index's life."""
-    # 1. within-batch dedup: keep one representative per near-dup cluster
-    batch_df = batch_df.cache()
-    intra = dedup.minhash_lsh_pairs(
-        batch_df, id_col, content_col, k=k, n_hashes=n_hashes, bands=bands,
-        threshold=threshold, max_doc_frequency=max_doc_frequency,
-    )
-    survivors = dedup.apply_dedup(batch_df, id_col, intra)
-    # 2. probe the accumulated history
-    index = _read_index(spark, index_path)
-    if index is not None:
-        hits = dedup.novelty_pairs(
-            survivors, index, id_col, content_col,
-            k=k, n_hashes=n_hashes, bands=bands, threshold=threshold,
-            max_doc_frequency=max_doc_frequency,
-        )
-        survivors = dedup.filter_novel(survivors, hits, id_col)
-    # 3. admit: corpus append, THEN index append. The index goes last so a
-    # crash inside the two-write window leaves a batch the index has not
-    # seen: the replay recomputes identical verdicts and the residue is
-    # duplicate rows for that ONE batch (module docstring contract).
-    # Index-FIRST would invert the failure: the replayed batch would find
-    # its own signatures in the index and silently drop itself.
-    #
-    # Survivors are STAGED to a lineage-free parquet before any state
-    # append: their plan READS the index dirs, and Spark re-materializes
-    # path-dependent caches on append (CacheManager.recacheByPath) — each
-    # index append would otherwise re-run the probe against an index
-    # containing this batch's own partially-written rows, making the later
-    # appends' contents depend on the bands→shingles→sizes write order
-    # instead of on the admission verdicts (regression-tested with a
-    # three-batch chain; two-batch tests cannot observe it).
-    survivors = survivors.cache()
-    if not survivors.isEmpty():
-        import shutil
-
-        staging = os.path.join(index_path, "_staging")
-        survivors.write.mode("overwrite").parquet(staging)
-        sv = spark.read.parquet(staging)
-        sv.withColumn("ingest_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
-        _append_index(
-            index_path,
-            dedup.minhash_band_index(
-                sv, id_col, content_col, k=k, n_hashes=n_hashes, bands=bands,
-                max_doc_frequency=max_doc_frequency,
-            ),
-            shingle_buckets=shingle_buckets,
-        )
-        shutil.rmtree(staging, ignore_errors=True)
-    survivors.unpersist()
-    batch_df.unpersist()
-
-
-def novelty_ingest_stream(
-    stream_docs: DataFrame,
-    id_col: str,
-    content_col: str,
-    index_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    max_doc_frequency: int | None = None,
-    available_now: bool = True,
-    shingle_buckets: int | None = None,
-    compact_every_batches: int | None = None,
-    compact_max_files: int | None = None,
-    compact_max_bytes_per_file: int | None = None,
-) -> StreamingQuery:
-    """Start the admission gate over a streaming DataFrame of documents.
-
-    Admitted (first-arrival) rows land under ``out_path`` with an
-    ``ingest_batch_id`` column; the growing LSH index lives under
-    ``index_path``. The batch-id ledger sits beside the checkpoint so
-    checkpoint and ledger survive together (ADVICE r3 contract).
-
-    ``compact_every_batches=N`` runs :func:`compact_novelty_index` inside
-    ``foreachBatch`` after every Nth admission — the one place compaction is
-    guaranteed not to race the ingest (micro-batches are sequential), so a
-    long-lived stream's per-batch probe cost does not degrade with one
-    small parquet file per component per admitted batch. A crash during the
-    maintenance step is covered by :func:`_recover_compaction` on the next
-    index read, and a ledger replay skips the whole batch (admission AND
-    maintenance) — compaction changes no probe verdict, so skipping it on
-    replay loses nothing but the maintenance itself.
-
-    ``compact_max_files=N`` (optionally with ``compact_max_bytes_per_file``)
-    is the self-tuning alternative (VERDICT r6 item 7): compact whenever
-    :func:`should_compact` says the index's data-file count crossed N — no
-    cadence to match to the stream's (possibly uneven) batch sizes. Both
-    triggers may be set; either firing runs the fold.
-    """
-    spark = stream_docs.sparkSession
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        admit_batch(
-            spark, batch_df, batch_id, id_col, content_col,
-            index_path, out_path,
-            k=k, n_hashes=n_hashes, bands=bands, threshold=threshold,
-            max_doc_frequency=max_doc_frequency, shingle_buckets=shingle_buckets,
-        )
-        if not os.path.isdir(os.path.join(index_path, "bands")):
-            return
-        cadence_due = bool(
-            compact_every_batches
-            and (batch_id + 1) % compact_every_batches == 0
-        )
-        threshold_due = should_compact(
-            index_path,
-            max_files=compact_max_files,
-            max_bytes_per_file=compact_max_bytes_per_file,
-        )
-        if cadence_due or threshold_due:
-            compact_novelty_index(spark, index_path)
-
-    wrapped = exactly_once_batch_writer(
-        upsert, os.path.join(checkpoint_dir, "_ingest_ledger")
-    )
-    writer = stream_docs.writeStream.foreachBatch(wrapped).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

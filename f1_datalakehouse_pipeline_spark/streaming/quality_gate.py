@@ -1,59 +1,36 @@
-"""Streaming write-audit-publish quality gate (SURVEY §2.9 extension; the
-reference has no streaming at all).
+"""Write-audit-publish (WAP) building blocks for the corpus admission gate.
 
-The batch expectation battery (``quality.expectations_for_table`` — the
-oracle-gated ``dq_expectations`` shape) as a CONTINUOUS ingest gate: every
-micro-batch is audited against declared checks BEFORE publication. Rows
-that violate any check are routed to a quarantine sink with the names of
-the checks they broke; clean rows publish to the delivery sink; per-check
-violation counts append to a metrics sink the pipeline owners watch. If a
-CRITICAL check fails anywhere in a batch, the whole batch is quarantined —
-audit failed, nothing publishes (the Delta Live Tables / WAP "fail the
-commit" semantics, expressed on plain parquet sinks).
-
-Why foreachBatch: the gate is a per-row projection plus one conditional-
-count aggregate per batch — no cross-batch state at all, so streaming
-aggregation state would be structurally unnecessary (same argument as
-contamination.py). Exactly-once comes from two halves: every sink write is
-an idempotent dynamic partition overwrite of the batch's own ``batch_id=``
-partition (a mid-batch crash re-runs and REPLACES its partial output), and
-the batch-id ledger (``incremental.exactly_once_batch_writer``) skips
-replayed COMPLETED batches whole, so the three sinks stay mutually
-consistent.
+``plans/corpus.run_corpus_pipeline_incremental`` audits each admitted batch
+against declared checks before publication: :func:`audit_split` splits the
+batch into clean rows, quarantined rows (with the names of the checks they
+broke) and per-check violation counts, and :func:`_overwrite_batch` writes
+each sink as an idempotent dynamic overwrite of the batch's own partition,
+so a re-run batch replaces its partial output instead of appending beside it.
 
 At 100 TB: the audit costs one pass over the batch (every check is a
-conditional count in ONE aggregate — the same shared implementation as the
-oracle-gated batch battery; the routing split re-reads the cached batch,
-not storage), sinks are batch-partitioned parquet, and the metrics sink
-grows one row per check per batch — the observability surface, not a data
-copy.
+conditional count in ONE aggregate, the same shared implementation as the
+oracle-gated batch battery), and the metrics sink grows one row per check
+per batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from f1_datalakehouse_pipeline_spark.quality import expectations_for_table
-from f1_datalakehouse_pipeline_spark.streaming.incremental import (
-    exactly_once_batch_writer,
-)
 
 
 def _overwrite_batch(
     df: DataFrame,
     batch_id,
     path: str,
-    stamped: bool = False,
     stamp_col: str = "batch_id",
 ) -> None:
     """Idempotent per-batch sink write: dynamic partition overwrite of the
     batch's own ``<stamp_col>=`` partition. A crash-and-re-run of the same
     batch REPLACES its partial output instead of appending a duplicate — the
     idempotence exactly_once_batch_writer requires of its upsert.
-    (``stamp_col`` lets the corpus WAP gate share this writer with its
-    batch_token identity — ONE implementation of the sink semantics.)
 
     The dynamic mode is pinned ON THE WRITER (not inherited from the
     session): under Spark's default static partitionOverwriteMode a
@@ -61,10 +38,9 @@ def _overwrite_batch(
     partitions, which here would silently destroy every previously
     published batch for any caller whose session doesn't set the conf —
     the same per-writer pattern as sources/bronze.py."""
-    if not stamped:
-        df = df.withColumn(stamp_col, F.lit(batch_id))
     (
-        df.write.option("partitionOverwriteMode", "dynamic")
+        df.withColumn(stamp_col, F.lit(batch_id))
+        .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .partitionBy(stamp_col)
         .parquet(path)
@@ -97,130 +73,9 @@ def audit_split(
     clean = flagged.filter(F.size("violated_checks") == 0).drop("violated_checks")
     quarantined = flagged.filter(F.size("violated_checks") > 0)
     # the metrics battery IS the batch expectation battery — one shared
-    # implementation so the streaming gate can never drift from the
+    # implementation so the corpus gate can never drift from the
     # oracle-gated dq_expectations counting semantics
     metrics = expectations_for_table(batch_df, "batch", checks).select(
         "check_name", "violations", "total"
     )
     return clean, quarantined, metrics
-
-
-def gate_batch(
-    batch_df: DataFrame,
-    batch_id,
-    checks: dict[str, Column],
-    critical: set[str],
-    delivery_path: str,
-    quarantine_path: str,
-    metrics_path: str,
-    stamp_col: str = "batch_id",
-    id_type: str = "long",
-) -> bool:
-    """Audit → route → publish ONE batch (the WAP gate body, shared by the
-    file-source stream below and the CDC-feed source in
-    streaming/cdc_source.py — one implementation so the two gates can never
-    drift). Returns whether a critical check quarantined the whole batch.
-    ``stamp_col``/``id_type`` name and type the partition stamp (the file
-    gate stamps ``batch_id`` longs, the CDC gate ``commit_id`` strings)."""
-    batch_df = batch_df.cache()
-    try:
-        clean, quarantined, metrics = audit_split(batch_df, checks)
-        mrows = metrics.collect()  # bounded: one row per declared check
-        crit_hit = any(
-            r["check_name"] in critical and r["violations"] > 0 for r in mrows
-        )
-        if crit_hit:
-            # audit failed: quarantine the WHOLE batch, publish nothing
-            flagged_all = quarantined.unionByName(
-                clean.withColumn(
-                    "violated_checks",
-                    F.array().cast("array<string>"),
-                )
-            )
-            _overwrite_batch(
-                flagged_all, batch_id, quarantine_path, stamp_col=stamp_col
-            )
-        else:
-            _overwrite_batch(
-                quarantined, batch_id, quarantine_path, stamp_col=stamp_col
-            )
-            _overwrite_batch(clean, batch_id, delivery_path, stamp_col=stamp_col)
-        spark = batch_df.sparkSession
-        _overwrite_batch(
-            spark.createDataFrame(
-                [
-                    (
-                        batch_id,
-                        r["check_name"],
-                        r["violations"],
-                        r["total"],
-                        crit_hit,
-                    )
-                    for r in mrows
-                ],
-                f"{stamp_col} {id_type}, check_name string, violations long, "
-                "total long, batch_quarantined boolean",
-            ),
-            batch_id,
-            metrics_path,
-            stamped=True,
-            stamp_col=stamp_col,
-        )
-        return crit_hit
-    finally:
-        batch_df.unpersist()
-
-
-def quality_gate_stream(
-    stream_df: DataFrame,
-    checks: dict[str, Column],
-    delivery_path: str,
-    quarantine_path: str,
-    metrics_path: str,
-    checkpoint_dir: str,
-    ledger_dir: str,
-    critical: set[str] | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Start the gate. Per micro-batch: audit → route → publish.
-
-    - rows violating any check land in ``quarantine_path`` with their
-      ``violated_checks``; clean rows land in ``delivery_path``;
-    - one (batch_id, check_name, violations, total, batch_quarantined) row
-      per check appends to ``metrics_path``;
-    - if any check named in ``critical`` has violations > 0, the ENTIRE
-      batch goes to quarantine (``violated_checks`` as audited, clean rows
-      with an empty array) and nothing publishes — the write-audit-publish
-      abort, so a bad upstream can never leak even its "clean" rows into
-      the delivery table before a human looks.
-
-    Exactly-once really holds: every sink write is a dynamic partition
-    OVERWRITE of the batch's own ``batch_id=`` partition (idempotent —
-    a crash mid-batch re-runs the batch and REPLACES its partial output
-    instead of appending beside it, satisfying exactly_once_batch_writer's
-    idempotent-upsert requirement), and replayed COMPLETED batches are
-    skipped whole via the batch ledger. Place ``ledger_dir`` beside
-    ``checkpoint_dir`` (same filesystem) — the two must survive together
-    (see exactly_once_batch_writer)."""
-    critical = critical or set()
-    unknown = critical - set(checks)
-    if unknown:
-        raise ValueError(f"critical names not in checks: {sorted(unknown)}")
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        gate_batch(
-            batch_df,
-            batch_id,
-            checks,
-            critical,
-            delivery_path,
-            quarantine_path,
-            metrics_path,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(
-        exactly_once_batch_writer(gate, ledger_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -372,51 +372,6 @@ def test_weekend_biggest_mover(lakehouse):
     assert rows["bahrain"].positions_gained == best["positions_gained"]
 
 
-def test_streaming_bronze_to_silver(lakehouse, spark, tmp_path):
-    """Structured Streaming ingest of bronze race results → race_results_silver
-    via foreachBatch reusing the SAME batch transform + idempotent partition
-    overwrite (streaming/incremental.py design: batch and streaming code
-    paths cannot drift)."""
-    from f1_datalakehouse_pipeline_spark.plans.silver import transform_race_results
-    from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
-    from f1_datalakehouse_pipeline_spark.streaming.incremental import (
-        foreach_batch_upsert,
-    )
-
-    bronze = lakehouse["bronze"]
-    sessions = lakehouse["store"].read("sessions_silver").filter(F.col("year") == fx.YEAR)
-    stream_store = TableStore(spark, str(tmp_path / "stream_wh"))
-
-    # schema from a static read of the same partition layout
-    static = (
-        spark.read.option("basePath", f"{bronze}/session_result")
-        .parquet(f"{bronze}/session_result/year=*/grand_prix=*/session_type=race")
-    )
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("basePath", f"{bronze}/session_result")
-        .parquet(f"{bronze}/session_result/year=*/grand_prix=*/session_type=race")
-    )
-
-    def upsert(batch_df, batch_id):
-        out = transform_race_results(batch_df, sessions)
-        stream_store.overwrite_partitions(out, "race_results_silver")
-
-    q = foreach_batch_upsert(stream, upsert, str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-
-    got = sorted(
-        map(tuple, stream_store.read("race_results_silver")
-            .drop("created_timestamp", "updated_timestamp").collect())
-    )
-    want = sorted(
-        map(tuple, lakehouse["store"].read("race_results_silver")
-            .filter(F.col("year") == fx.YEAR)
-            .drop("created_timestamp", "updated_timestamp").collect())
-    )
-    assert got == want
-
-
 def test_incremental_empty_scope_aborts_loudly(lakehouse, spark, tmp_path):
     """A GP slug matching no silver sessions must raise, not silently no-op
     (ADVICE r1: slug-normalization mismatch made incrementals vanish)."""

@@ -1,17 +1,15 @@
-"""Streaming write-audit-publish quality gate: per-batch expectation audit,
-quarantine routing, critical-check batch abort, replay idempotence."""
+"""Write-audit-publish building blocks of the corpus admission gate:
+per-batch expectation audit and quarantine routing (``audit_split``), and
+the idempotent per-batch sink write (``_overwrite_batch``)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
 from f1_datalakehouse_pipeline_spark.streaming.quality_gate import (
+    _overwrite_batch,
     audit_split,
-    quality_gate_stream,
 )
-
-from tests.conftest import SF_DIR
 
 CHECKS = lambda: {  # noqa: E731 - fresh Column objects per test
     "custkey_not_null": F.col("o_custkey").isNull(),
@@ -20,28 +18,21 @@ CHECKS = lambda: {  # noqa: E731 - fresh Column objects per test
 }
 
 
-def _stage_batches(spark, tmp_path):
-    """Two single-file batches: batch A has 3 planted null custkeys; batch B
-    has 2 planted bad statuses."""
-    o = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus"
+def _batch(spark, keys):
+    return spark.createDataFrame(
+        [(k, k * 10, "O") for k in keys],
+        "o_orderkey long, o_custkey long, o_orderstatus string",
     )
-    a = o.filter(F.col("o_orderkey") % 4 == 0).withColumn(
-        "o_custkey",
-        F.when(F.col("o_orderkey") % 400 == 0, F.lit(None)).otherwise(
-            F.col("o_custkey")
-        ),
-    )
-    b = o.filter(F.col("o_orderkey") % 4 == 1).withColumn(
-        "o_orderstatus",
-        F.when(F.col("o_orderkey") % 401 == 0, F.lit("X")).otherwise(
-            F.col("o_orderstatus")
-        ),
-    )
-    src = str(tmp_path / "landing")
-    a.coalesce(1).write.mode("append").parquet(src)
-    b.coalesce(1).write.mode("append").parquet(src)
-    return src, a, b
+
+
+def _by_batch(spark, path, stamp_col):
+    return {
+        r[stamp_col]: r["n"]
+        for r in spark.read.parquet(path)
+        .groupBy(stamp_col)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
 
 
 def test_audit_split_routes_and_counts(spark):
@@ -61,211 +52,45 @@ def test_audit_split_routes_and_counts(spark):
     assert m == {"custkey_not_null": (2, 4), "status_enum": (2, 4)}
 
 
-def test_gate_stream_splits_match_batch_semantics(spark, tmp_path):
-    src, a, b = _stage_batches(spark, tmp_path)
-    paths = {k: str(tmp_path / k) for k in ("delivery", "quarantine", "metrics")}
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_custkey long, o_orderstatus string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = quality_gate_stream(
-        stream,
-        CHECKS(),
-        delivery_path=paths["delivery"],
-        quarantine_path=paths["quarantine"],
-        metrics_path=paths["metrics"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        ledger_dir=str(tmp_path / "ledger"),
-    )
-    assert q.awaitTermination(180)
-
-    both = a.unionByName(b)
-    want_clean = {
-        r.o_orderkey
-        for r in both.filter(
-            F.col("o_custkey").isNotNull()
-            & F.col("o_orderstatus").isin("O", "F", "P")
-        ).collect()
-    }
-    got_clean = {r.o_orderkey for r in spark.read.parquet(paths["delivery"]).collect()}
-    assert got_clean == want_clean
-
-    quar = spark.read.parquet(paths["quarantine"]).collect()
-    assert {r.o_orderkey for r in quar} == (
-        {r.o_orderkey for r in both.collect()} - want_clean
-    )
-    # every quarantined row names at least one violated check
-    assert all(len(r.violated_checks) >= 1 for r in quar)
-
-    metrics = spark.read.parquet(paths["metrics"]).collect()
-    # one row per check per batch, none batch-quarantined
-    assert {(r.batch_id, r.check_name) for r in metrics} == {
-        (i, c) for i in (0, 1) for c in CHECKS()
-    }
-    assert not any(r.batch_quarantined for r in metrics)
-    # per-batch totals reconcile: clean + quarantined == total
-    by_batch = {}
-    for r in metrics:
-        by_batch[r.batch_id] = r.total
-    deliv = spark.read.parquet(paths["delivery"]).groupBy("batch_id").count().collect()
-    quarc = (
-        spark.read.parquet(paths["quarantine"]).groupBy("batch_id").count().collect()
-    )
-    got_tot = {r.batch_id: r["count"] for r in deliv}
-    for r in quarc:
-        got_tot[r.batch_id] = got_tot.get(r.batch_id, 0) + r["count"]
-    assert got_tot == by_batch
-
-
-def test_gate_critical_check_quarantines_whole_batch(spark, tmp_path):
-    src, a, b = _stage_batches(spark, tmp_path)
-    paths = {k: str(tmp_path / k) for k in ("delivery", "quarantine", "metrics")}
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_custkey long, o_orderstatus string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = quality_gate_stream(
-        stream,
-        CHECKS(),
-        delivery_path=paths["delivery"],
-        quarantine_path=paths["quarantine"],
-        metrics_path=paths["metrics"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        ledger_dir=str(tmp_path / "ledger"),
-        critical={"status_enum"},
-    )
-    assert q.awaitTermination(180)
-
-    metrics = spark.read.parquet(paths["metrics"]).collect()
-    aborted = {r.batch_id for r in metrics if r.batch_quarantined}
-    assert len(aborted) == 1  # only the bad-status batch fails the audit
-    (bad_batch,) = aborted
-
-    deliv = spark.read.parquet(paths["delivery"]).collect()
-    assert not any(r.batch_id == bad_batch for r in deliv)
-    # the aborted batch is quarantined IN FULL (clean rows included, with
-    # empty violated_checks), so nothing from it published
-    quar = spark.read.parquet(paths["quarantine"]).filter(
-        F.col("batch_id") == bad_batch
-    )
-    n_bad_batch = next(r.total for r in metrics if r.batch_id == bad_batch)
-    assert quar.count() == n_bad_batch
-    assert quar.filter(F.size("violated_checks") == 0).count() > 0
-
-
-def test_gate_replay_skips_committed_batches(spark, tmp_path):
-    src, a, b = _stage_batches(spark, tmp_path)
-    paths = {k: str(tmp_path / k) for k in ("delivery", "quarantine", "metrics")}
-
-    def run():
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_custkey long, o_orderstatus string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = quality_gate_stream(
-            stream,
-            CHECKS(),
-            delivery_path=paths["delivery"],
-            quarantine_path=paths["quarantine"],
-            metrics_path=paths["metrics"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            ledger_dir=str(tmp_path / "ledger"),
-        )
-        assert q.awaitTermination(180)
-
-    run()
-    first = spark.read.parquet(paths["delivery"]).count()
-    first_m = spark.read.parquet(paths["metrics"]).count()
-    # restart the drain with nothing new: the checkpoint frontier delivers
-    # zero batches, sinks unchanged (ledger-level replay of a REDELIVERED
-    # batch id is unit-covered by test_exactly_once_batch_writer_*)
-    run()
-    assert spark.read.parquet(paths["delivery"]).count() == first
-    assert spark.read.parquet(paths["metrics"]).count() == first_m
-    metrics = spark.read.parquet(paths["metrics"]).collect()
-    assert len({(r.batch_id, r.check_name) for r in metrics}) == len(metrics)
-
-
 def test_gate_sinks_survive_static_overwrite_mode(spark, tmp_path):
     """The per-batch sink overwrite pins partitionOverwriteMode=dynamic ON
     THE WRITER, so a caller whose session runs Spark's default STATIC mode
     still keeps every previously published batch — under static semantics
     batch 1's mode('overwrite') write would otherwise delete batch 0's
-    partition from all three sinks."""
-    src, a, b = _stage_batches(spark, tmp_path)
-    paths = {k: str(tmp_path / k) for k in ("delivery", "quarantine", "metrics")}
+    partition. Both stamp forms are covered: long batch ids and the corpus
+    gate's string ``batch_token``."""
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     try:
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_custkey long, o_orderstatus string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = quality_gate_stream(
-            stream,
-            CHECKS(),
-            delivery_path=paths["delivery"],
-            quarantine_path=paths["quarantine"],
-            metrics_path=paths["metrics"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            ledger_dir=str(tmp_path / "ledger"),
-        )
-        assert q.awaitTermination(180)
+        ids = str(tmp_path / "by_id")
+        _overwrite_batch(_batch(spark, [1, 2, 3]), 0, ids)
+        _overwrite_batch(_batch(spark, [4, 5]), 1, ids)
+        tokens = str(tmp_path / "by_token")
+        _overwrite_batch(_batch(spark, [1]), "aa", tokens, stamp_col="batch_token")
+        _overwrite_batch(_batch(spark, [2, 3]), "bb", tokens, stamp_col="batch_token")
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for p in paths.values():
-        got = {r.batch_id for r in spark.read.parquet(p).select("batch_id").distinct().collect()}
-        assert got == {0, 1}, (p, got)
+    assert _by_batch(spark, ids, "batch_id") == {0: 3, 1: 2}
+    assert _by_batch(spark, tokens, "batch_token") == {"aa": 1, "bb": 2}
 
 
 def test_gate_rerun_overwrites_instead_of_duplicating(spark, tmp_path):
-    """A batch re-processed with the same batch_id (lost ledger + lost
-    checkpoint — the worst-case replay) must REPLACE its partition in every
-    sink, not append beside it: the sinks are dynamic partition overwrites
-    keyed by batch_id, which is the idempotence exactly_once_batch_writer
-    requires of its upsert."""
-    import shutil
-
-    src, a, b = _stage_batches(spark, tmp_path)
-    paths = {k: str(tmp_path / k) for k in ("delivery", "quarantine", "metrics")}
-
-    def run():
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_custkey long, o_orderstatus string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = quality_gate_stream(
-            stream,
-            CHECKS(),
-            delivery_path=paths["delivery"],
-            quarantine_path=paths["quarantine"],
-            metrics_path=paths["metrics"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            ledger_dir=str(tmp_path / "ledger"),
-        )
-        assert q.awaitTermination(180)
-
-    run()
-    first = {k: spark.read.parquet(p).count() for k, p in paths.items()}
-    # lose BOTH the checkpoint and the ledger: the whole drain re-delivers
-    # with the same batch ids 0,1
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    shutil.rmtree(str(tmp_path / "ledger"))
-    run()
-    after = {k: spark.read.parquet(p).count() for k, p in paths.items()}
-    assert after == first
+    """A batch re-processed with the same id (the worst-case replay) must
+    REPLACE its partition, not append beside it, and leave every other
+    batch's partition alone: the sinks are dynamic partition overwrites
+    keyed by the batch id, which is the idempotence
+    exactly_once_batch_writer requires of its upsert."""
+    path = str(tmp_path / "sink")
+    _overwrite_batch(_batch(spark, [1, 2, 3]), 0, path)
+    _overwrite_batch(_batch(spark, [4, 5]), 1, path)
+    first = _by_batch(spark, path, "batch_id")
+    # the same batch again: identical sink
+    _overwrite_batch(_batch(spark, [1, 2, 3]), 0, path)
+    assert _by_batch(spark, path, "batch_id") == first == {0: 3, 1: 2}
+    # a re-run that produced different rows replaces exactly its partition
+    _overwrite_batch(_batch(spark, [7]), 0, path)
+    got = {
+        (r.batch_id, r.o_orderkey)
+        for r in spark.read.parquet(path).select("batch_id", "o_orderkey").collect()
+    }
+    assert got == {(0, 7), (1, 4), (1, 5)}

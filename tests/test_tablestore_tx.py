@@ -1012,79 +1012,6 @@ def test_cdf_multiset_mode_ignores_change_files(spark, tmp_path):
     assert got == {(2, "delete", "B"), (2, "insert", "B2")}
 
 
-def test_table_changes_feed_per_commit_stamped(spark, tmp_path):
-    """Multi-commit CDF feed (≙ Delta table_changes over a range): every
-    commit's rows appear stamped with a stable _commit_id and a replay
-    ordinal — NOT collapsed to a net diff — with per-step rows identical to
-    the single-step table_changes reads, file-served or not."""
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=3)
-    store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B"), (3, "C")]), "sessions_silver")
-    store.merge_upsert(
-        _sess_mut(spark, [(2, "B2"), (4, "D")]), "sessions_silver",
-        keys=["session_key"],
-    )
-    store.delete_where(F.col("session_key") <= 1, "sessions_silver")
-
-    feed = store.table_changes_feed("sessions_silver", 2, 0, key_cols=["session_key"])
-    rows = feed.collect()
-    assert {"_commit_id", "_commit_ordinal"} <= set(feed.columns)
-    by_ord = {}
-    for r in rows:
-        by_ord.setdefault(r._commit_ordinal, set()).add(
-            (r.session_key, r._change_type, r.meeting_name)
-        )
-    # ordinal 1 = oldest commit in range (the merge), 2 = the delete
-    assert by_ord[1] == {
-        (4, "insert", "D"),
-        (2, "update_preimage", "B"),
-        (2, "update_postimage", "B2"),
-    }
-    assert by_ord[2] == {(1, "delete", "A")}
-    # one stable commit id per ordinal, and they differ
-    ids = {r._commit_ordinal: r._commit_id for r in rows}
-    assert len(set(ids.values())) == 2
-    # per-step parity with the single-step reads
-    for ordinal, (f, t) in {1: (2, 1), 2: (1, 0)}.items():
-        step = {
-            (r.session_key, r._change_type, r.meeting_name)
-            for r in store.table_changes(
-                "sessions_silver", f, t, key_cols=["session_key"]
-            ).collect()
-        }
-        assert step == by_ord[ordinal]
-
-
-def test_table_changes_feed_mixed_cdf_and_snapshot_commits(spark, tmp_path):
-    """A plain overwrite in the middle of the range persists no change
-    files; the feed serves that step via the snapshot diff while the
-    file-backed steps stay file-served — one consumer view either way."""
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=3)
-    store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    # pre-CDF commit: arbitrary rewrite
-    store.overwrite(_sess_mut(spark, [(1, "A"), (3, "C")]), "sessions_silver")
-    store.merge_upsert(
-        _sess_mut(spark, [(3, "C2")]), "sessions_silver", keys=["session_key"]
-    )
-    feed = store.table_changes_feed("sessions_silver", 2, 0, key_cols=["session_key"])
-    by_ord = {}
-    for r in feed.collect():
-        by_ord.setdefault(r._commit_ordinal, set()).add(
-            (r.session_key, r._change_type)
-        )
-    assert by_ord[1] == {(2, "delete"), (3, "insert")}
-    assert by_ord[2] == {(3, "update_preimage"), (3, "update_postimage")}
-
-
-def test_table_changes_feed_guards(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=3)
-    store.overwrite(_sess_mut(spark, [(1, "A")]), "sessions_silver")
-    assert store.table_changes_feed("sessions_silver", 0, 0).count() == 0
-    with pytest.raises(ValueError, match="OLDER"):
-        store.table_changes_feed("sessions_silver", 0, 1)
-    with pytest.raises(IndexError):
-        store.table_changes_feed("sessions_silver", 7, 0)
-
-
 def test_cdf_key_mismatch_falls_back_to_snapshot_diff(spark, tmp_path):
     """Review r9: change files carry the WRITER's key semantics — a reader
     asking for different key_cols must get the snapshot diff computed under
@@ -1143,9 +1070,9 @@ def test_cdf_delete_feed_is_key_agnostic(spark, tmp_path):
 
 def test_compact_commit_writes_empty_change_feed(spark, tmp_path):
     """Compaction changes no logical rows, so its commit carries an EMPTY
-    key-agnostic change feed — a multi-commit table_changes_feed over a
-    range containing the compaction stays file-served (zero rows at that
-    ordinal) instead of paying a snapshot diff to learn nothing changed."""
+    key-agnostic change feed — a single-step table_changes read of the
+    compaction is file-served (zero rows) instead of paying a snapshot diff
+    to learn nothing changed, and the step before it is unaffected."""
     import json
     import os
 
@@ -1167,67 +1094,16 @@ def test_compact_commit_writes_empty_change_feed(spark, tmp_path):
         ).count()
         == 0
     )
-    feed = store.table_changes_feed(
-        "sessions_silver", 2, 0, key_cols=["session_key"]
-    )
-    by_ord = {}
-    for r in feed.collect():
-        by_ord.setdefault(r._commit_ordinal, set()).add(
-            (r.session_key, r._change_type)
-        )
-    assert by_ord == {1: {(2, "update_preimage"), (2, "update_postimage")}}
+    # the merge commit before it still reads its own delta
+    merge_step = {
+        (r.session_key, r._change_type)
+        for r in store.table_changes(
+            "sessions_silver", 2, 1, key_cols=["session_key"]
+        ).collect()
+    }
+    assert merge_step == {(2, "update_preimage"), (2, "update_postimage")}
     # data intact after compaction
     assert store.read("sessions_silver").count() == 2
-
-
-def test_change_feed_consumer_poll_commit_cycle(spark, tmp_path):
-    """CDC consumer semantics: each poll delivers exactly the commits since
-    the cursor; commit() advances; re-poll without commit re-delivers (the
-    at-least-once contract); a vacuumed-past cursor raises loudly."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=3)
-    cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
-    store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    # fresh consumer starts at the oldest retained version: only one
-    # version exists, so nothing to deliver yet
-    assert cons.poll(key_cols=["session_key"]).count() == 0
-    cons.commit()
-
-    store.merge_upsert(
-        _sess_mut(spark, [(2, "B2")]), "sessions_silver", keys=["session_key"]
-    )
-    got = {
-        (r.session_key, r._change_type)
-        for r in cons.poll(key_cols=["session_key"]).collect()
-    }
-    assert got == {(2, "update_preimage"), (2, "update_postimage")}
-    # at-least-once: re-poll WITHOUT commit re-delivers
-    assert cons.poll(key_cols=["session_key"]).count() == 2
-    cons.commit()
-    assert cons.poll(key_cols=["session_key"]).count() == 0
-
-    # two commits between polls arrive together, ordinally stamped
-    store.delete_where(F.col("session_key") == 1, "sessions_silver")
-    store.merge_upsert(
-        _sess_mut(spark, [(5, "E")]), "sessions_silver", keys=["session_key"]
-    )
-    rows = cons.poll(key_cols=["session_key"]).collect()
-    by_ord = {}
-    for r in rows:
-        by_ord.setdefault(r._commit_ordinal, set()).add(
-            (r.session_key, r._change_type)
-        )
-    assert by_ord == {1: {(1, "delete")}, 2: {(5, "insert")}}
-    cons.commit()
-
-    # churn past the retention horizon without polling → loud failure
-    for name in ("X", "Y", "Z", "W"):
-        store.merge_upsert(
-            _sess_mut(spark, [(9, name)]), "sessions_silver", keys=["session_key"]
-        )
-    with pytest.raises(ValueError, match="no longer retained"):
-        cons.poll(key_cols=["session_key"])
 
 
 def test_cdc_span_and_index_guards(spark, tmp_path):
@@ -1239,64 +1115,11 @@ def test_cdc_span_and_index_guards(spark, tmp_path):
     store.overwrite(_sess_mut(spark, [(1, "A2")]), "sessions_silver")
     with pytest.raises(ValueError, match="must be >= 0"):
         store.table_changes("sessions_silver", 1, -1, key_cols=["session_key"])
-    with pytest.raises(ValueError, match="must be >= 0"):
-        store.table_changes_feed("sessions_silver", 1, -1)
+    # swapped arguments would silently invert every change label
+    with pytest.raises(ValueError, match="OLDER"):
+        store.table_changes("sessions_silver", 0, 1, key_cols=["session_key"])
     with pytest.raises(IndexError):
         store.read_version("sessions_silver", -1)
-
-
-def test_feed_pinned_snapshot_survives_concurrent_commit(spark, tmp_path):
-    """The consumer's at-least-once contract rests on ONE versions()
-    snapshot resolving every step: a feed over a PINNED snapshot must
-    return that snapshot's commits even after a newer commit lands (a
-    re-listing mid-read would shift the indices and drop a commit from the
-    consumer forever)."""
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=4)
-    store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    store.merge_upsert(
-        _sess_mut(spark, [(2, "B2")]), "sessions_silver", keys=["session_key"]
-    )
-    pinned = store.versions("sessions_silver")
-    # a rival commit lands AFTER the snapshot, BEFORE the feed resolves
-    store.merge_upsert(
-        _sess_mut(spark, [(9, "Z")]), "sessions_silver", keys=["session_key"]
-    )
-    feed = store.table_changes_feed(
-        "sessions_silver", 1, 0, key_cols=["session_key"], _versions=pinned
-    )
-    got = {(r.session_key, r._change_type) for r in feed.collect()}
-    # exactly the pinned snapshot's one step (the B->B2 merge); the rival
-    # commit's insert of key 9 is NOT in this read — it arrives next poll
-    assert got == {(2, "update_preimage"), (2, "update_postimage")}
-
-
-def test_consumer_poll_before_first_commit_raises_clearly(spark, tmp_path):
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
-    with pytest.raises(ValueError, match="no committed versions"):
-        cons.poll(key_cols=["session_key"])
-
-
-def test_consumer_cursor_survives_legacy_dir_migration(spark, tmp_path):
-    """A cursor committed while the table was still a PLAIN (append-created)
-    directory must keep working after the first transactional overwrite
-    renames that directory to legacy-<hex>: the history is fully retained,
-    so forcing a resync would silently lose the commit (review r9)."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    store.append(_sessions(spark, 3), "sessions_silver")  # plain dir
-    cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
-    assert cons.poll(key_cols=["session_key"]).count() == 0
-    cons.commit()  # cursor = the plain dir's basename (the table name)
-    store.overwrite(_sessions(spark, 4), "sessions_silver")  # migrates
-    got = {
-        (r.session_key, r._change_type)
-        for r in cons.poll(key_cols=["session_key"]).collect()
-    }
-    assert (3, "insert") in got  # the overwrite's delta, not a resync error
 
 
 def test_merge_upsert_rejects_null_keys(spark, tmp_path):
@@ -1339,13 +1162,8 @@ def test_crash_between_changes_write_and_publish_is_invisible_then_reaped(
     publish swap: the live table and the change feed must be untouched, the
     half-commit must never be listed as a version, a retry must succeed
     with exactly ONE commit's changes, and GC must reap the orphan."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
     store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
-    cons.poll(key_cols=["session_key"])
-    cons.commit()
     vroot = store._version_root("sessions_silver")
     n_before = len(os.listdir(vroot))
 
@@ -1359,13 +1177,14 @@ def test_crash_between_changes_write_and_publish_is_invisible_then_reaped(
         )
     del store._publish
 
-    # live table untouched, half-commit invisible to versions() and feed
+    # live table untouched, half-commit invisible to versions() and to CDC
     assert {
         (r.session_key, r.meeting_name)
         for r in store.read("sessions_silver").collect()
     } == {(1, "A"), (2, "B")}
     assert len(store.versions("sessions_silver")) == 1
-    assert cons.poll(key_cols=["session_key"]).count() == 0
+    with pytest.raises(IndexError):
+        store.table_changes("sessions_silver", 1, 0, key_cols=["session_key"])
     # …but the staged orphan (data + _changes, no sentinel) is on disk
     orphans = [
         d
@@ -1379,13 +1198,15 @@ def test_crash_between_changes_write_and_publish_is_invisible_then_reaped(
     store.merge_upsert(
         _sess_mut(spark, [(2, "B2")]), "sessions_silver", keys=["session_key"]
     )
-    rows = cons.poll(key_cols=["session_key"]).collect()
+    assert len(store.versions("sessions_silver")) == 2
+    rows = store.table_changes(
+        "sessions_silver", 1, 0, key_cols=["session_key"]
+    ).collect()
+    assert len(rows) == 2
     assert {(r.session_key, r._change_type) for r in rows} == {
         (2, "update_preimage"),
         (2, "update_postimage"),
     }
-    assert {r._commit_ordinal for r in rows} == {1}
-    cons.commit()
 
     # GC reaps the orphan once past the TTL grace (forced to zero here)
     store.orphan_ttl_s = -1.0
@@ -1426,75 +1247,32 @@ def test_crash_between_swap_and_sentinel_self_heals_on_next_commit(
     assert store._is_committed(live_target)
     assert store.read_version("sessions_silver", 1).count() == 2
     assert store.read("sessions_silver").count() == 3
-    # the healed sentinel is empty (parent unknown) — the feed must still
-    # serve the healed commit's successor without a spurious hole error
-    ch = store.table_changes_feed("sessions_silver", 1, 0, key_cols=["session_key"])
+    # the healed sentinel is empty (parent unknown) — the healed commit's
+    # successor must read without a spurious hole
+    vs = store.versions("sessions_silver")
+    assert store.chain_hole(vs[0], vs[1]) is None
+    ch = store.table_changes("sessions_silver", 1, 0, key_cols=["session_key"])
     assert {(r.session_key, r._change_type) for r in ch.collect()} == {
         (3, "insert")
     }
 
 
-def test_consumer_crash_between_poll_and_commit_replays_from_disk_cursor(
-    spark, tmp_path
-):
-    """Kill the consumer after poll() but before commit(): a REPLACEMENT
-    consumer built from the same durable cursor dir must re-deliver the
-    same commits (at-least-once from disk, not from in-memory state)."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    cur_dir = str(tmp_path / "cur")
-    store.overwrite(_sess_mut(spark, [(1, "A")]), "sessions_silver")
-    c1 = ChangeFeedConsumer(store, "sessions_silver", cur_dir)
-    c1.poll(key_cols=["session_key"])
-    c1.commit()
-
-    store.merge_upsert(
-        _sess_mut(spark, [(2, "B")]), "sessions_silver", keys=["session_key"]
-    )
-    first = {
-        (r.session_key, r._change_type, r._commit_id)
-        for r in c1.poll(key_cols=["session_key"]).collect()
-    }
-    assert first  # delivered…
-    del c1  # …and the consumer dies before commit()
-
-    c2 = ChangeFeedConsumer(store, "sessions_silver", cur_dir)
-    replay = {
-        (r.session_key, r._change_type, r._commit_id)
-        for r in c2.poll(key_cols=["session_key"]).collect()
-    }
-    assert replay == first  # exact redelivery, same commit ids
-    c2.commit()
-    assert c2.poll(key_cols=["session_key"]).count() == 0
-    # a third consumer after the commit sees nothing (cursor durable)
-    c3 = ChangeFeedConsumer(store, "sessions_silver", cur_dir)
-    assert c3.poll(key_cols=["session_key"]).count() == 0
-
-
 def test_mid_vacuum_crash_leaves_contiguous_chain(spark, tmp_path):
     """Kill vacuum after its FIRST rmtree: with oldest-first removal the
     surviving retention window must be contiguous from the current version
-    (pre-r10 newest-first removal left a HOLE in the chain). A consumer
-    whose cursor was the reaped oldest version fails loudly (resync); a
-    consumer parked on a surviving version replays per-commit, unharmed."""
+    (pre-r10 newest-first removal left a HOLE in the chain). A step read
+    from the reaped oldest version fails loudly; every surviving step
+    still reads its own commit's delta."""
     import shutil as _shutil
 
     from f1_datalakehouse_pipeline_spark.sources import tables as tables_mod
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
 
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
     store.overwrite(_sess_mut(spark, [(1, "A")]), "sessions_silver")
-    lagging = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "lag"))
-    lagging.poll(key_cols=["session_key"])
-    lagging.commit()  # cursor = the oldest version
     for name in ("B", "C", "D"):
         store.merge_upsert(
             _sess_mut(spark, [(2, name)]), "sessions_silver", keys=["session_key"]
         )
-    mid = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "mid"))
-    mid.poll(key_cols=["session_key"])
-    mid.commit()  # cursor = current ("D" commit)
     store.merge_upsert(
         _sess_mut(spark, [(3, "E")]), "sessions_silver", keys=["session_key"]
     )
@@ -1520,19 +1298,36 @@ def test_mid_vacuum_crash_leaves_contiguous_chain(spark, tmp_path):
     vs_after = store.versions("sessions_silver")
     assert vs_after == vs_before[:-1]  # contiguous from the head — no hole
 
-    # lagging consumer (cursor = the reaped version) fails loudly
-    with pytest.raises(ValueError, match="no longer retained"):
-        lagging.poll(key_cols=["session_key"])
-    # the surviving consumer's per-commit feed is intact
-    rows = mid.poll(key_cols=["session_key"]).collect()
-    assert {(r.session_key, r._change_type) for r in rows} == {(3, "insert")}
+    assert all(
+        store.chain_hole(vs_after[k], vs_after[k + 1]) is None
+        for k in range(len(vs_after) - 1)
+    )
+
+    # the step out of the reaped version is gone, loudly
+    with pytest.raises(IndexError):
+        store.table_changes("sessions_silver", 4, 3, key_cols=["session_key"])
+    # every surviving step reads exactly its own commit, oldest first
+    steps = [
+        {
+            (r.session_key, r._change_type, r.meeting_name)
+            for r in store.table_changes(
+                "sessions_silver", k + 1, k, key_cols=["session_key"]
+            ).collect()
+        }
+        for k in (2, 1, 0)
+    ]
+    assert steps == [
+        {(2, "update_preimage", "B"), (2, "update_postimage", "C")},
+        {(2, "update_preimage", "C"), (2, "update_postimage", "D")},
+        {(3, "insert", "E")},
+    ]
 
 
 def test_feed_raises_on_chain_hole_and_net_diff_stays_correct(spark, tmp_path):
     """A HOLE in the retained chain (a middle version lost — crashed pre-r10
-    GC, manual deletion): the per-commit feed must refuse loudly instead of
-    serving the newer commit's write-time files against the wrong
-    predecessor, while table_changes() across the gap falls back to the
+    GC, manual deletion): the parent stamp must expose it, so a read never
+    serves the newer commit's write-time files against the wrong
+    predecessor; table_changes() across the gap falls back to the
     snapshot diff and returns the correct NET delta."""
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
     store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
@@ -1547,8 +1342,10 @@ def test_feed_raises_on_chain_hole_and_net_diff_stays_correct(spark, tmp_path):
 
     _shutil.rmtree(vs[1])  # lose the MIDDLE version
 
-    with pytest.raises(ValueError, match="chain has a hole"):
-        store.table_changes_feed("sessions_silver", 1, 0, key_cols=["session_key"])
+    vs_after = store.versions("sessions_silver")
+    assert vs_after == [vs[0], vs[2]]
+    # the head's sentinel names the lost version as its parent
+    assert store.chain_hole(vs_after[0], vs_after[1]) == os.path.basename(vs[1])
 
     # the net read refuses the newer commit's files (they'd claim key 3 is
     # the only change) and diffs the snapshots: both commits' net delta
@@ -1565,20 +1362,121 @@ def test_feed_raises_on_chain_hole_and_net_diff_stays_correct(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
+def test_cdc_random_mutation_walk_replay_reconstructs_the_model(spark, tmp_path):
+    """Model-based end-to-end CDC check: a seeded random walk of merges,
+    tombstone merges, predicate deletes and PLAIN OVERWRITES (the commit
+    kind with no change files — exercising the snapshot-diff fallback
+    between file-served steps) runs against both a TableStore and a dict
+    model. The table must equal the model after every walk, and replaying
+    the single-step table_changes reads oldest commit first with the
+    standard CDF application rules (delete/pre-image removes the key,
+    insert/post-image upserts) must reconstruct the model exactly — across
+    every commit kind interleaved. Every label is also checked against the
+    replayed state before its commit: a delete or pre-image carries the
+    key's current value, an insert names a key not yet present, and a
+    post-image follows its pre-image (upsert rules alone cannot tell an
+    insert from a post-image)."""
+    import random
+
+    n_steps = 12
+    for seed in (7, 13):
+        rng = random.Random(seed)
+        store = TableStore(spark, str(tmp_path / f"wh{seed}"), keep_versions=40)
+        model: dict[int, str] = {1: "s1", 2: "s2", 3: "s3"}
+        store.overwrite(_sess_mut(spark, list(model.items())), "sessions_silver")
+        replay = dict(model)  # the replay bootstraps from the initial snapshot
+
+        for step in range(n_steps):
+            op = rng.choice(["merge", "merge", "tombstone", "delete", "overwrite"])
+            if op == "merge":
+                ks = rng.sample(range(1, 9), rng.randint(1, 3))
+                rows = [(k, f"v{seed}.{step}.{k}") for k in ks]
+                store.merge_upsert(
+                    _sess_mut(spark, rows), "sessions_silver", keys=["session_key"]
+                )
+                model.update(dict(rows))
+            elif op == "tombstone":
+                ks = rng.sample(range(1, 9), 2)
+                rows = _sess_mut(spark, [(k, "x") for k in ks]).withColumn(
+                    "__del", F.lit(True)
+                )
+                store.merge_upsert(
+                    rows, "sessions_silver", keys=["session_key"], delete_col="__del"
+                )
+                for k in ks:
+                    model.pop(k, None)
+            elif op == "delete":
+                k = rng.randint(1, 8)
+                store.delete_where(
+                    F.col("session_key") == k, "sessions_silver"
+                )
+                model.pop(k, None)
+            else:  # plain overwrite: arbitrary rewrite, NO change files
+                model = {
+                    k: f"ow{seed}.{step}.{k}"
+                    for k in rng.sample(range(1, 9), rng.randint(2, 4))
+                }
+                store.overwrite(
+                    _sess_mut(spark, list(model.items())), "sessions_silver"
+                )
+
+        # the table equals the model…
+        got = {
+            r.session_key: r.meeting_name
+            for r in store.read("sessions_silver").collect()
+        }
+        assert got == model, f"seed {seed}: table diverged from model"
+        assert len(store.versions("sessions_silver")) == n_steps + 1, (
+            f"seed {seed}: expected one commit per mutation"
+        )
+
+        # …and the per-commit CDF replay reconstructs it from the seed
+        for k in range(n_steps - 1, -1, -1):
+            rows = store.table_changes(
+                "sessions_silver", k + 1, k, key_cols=["session_key"]
+            ).collect()
+            # standard CDF application within one commit: removals
+            # (delete/pre-image) first, then upserts (insert/post-image) —
+            # a key both removed and re-upserted in the same commit ends up
+            # at its post-image
+            removes = {
+                r.session_key
+                for r in rows
+                if r._change_type in ("delete", "update_preimage")
+            }
+            upserts = {
+                r.session_key: r.meeting_name
+                for r in rows
+                if r._change_type in ("insert", "update_postimage")
+            }
+            for r in rows:
+                if r._change_type in ("delete", "update_preimage"):
+                    assert replay.get(r.session_key) == r.meeting_name, (seed, k, r)
+                elif r._change_type == "insert":
+                    assert r.session_key not in replay, (seed, k, r)
+                else:
+                    assert r._change_type == "update_postimage", (seed, k, r)
+                    assert r.session_key in removes, (seed, k, r)
+            for key in removes - set(upserts):
+                replay.pop(key, None)
+            replay.update(upserts)
+        assert replay == model, f"seed {seed}: CDF replay diverged from model"
+
+
 def test_concurrent_writers_with_polling_consumer_no_commit_lost_or_doubled(
     spark, tmp_path
 ):
     """VERDICT r9 item 3b: two merge_upsert writers race on one table (CAS
-    retry loop) while a CDC consumer polls/commits concurrently. Every
-    commit that lands must be served EXACTLY once across the consumer's
-    committed polls (no loss, no double-serve), and the final table must
-    hold every writer's rows."""
+    retry loop) while a reader keeps reading the newest single-step change
+    set. Every concurrent read must see exactly one commit's insert, every
+    commit that lands must be replayable EXACTLY once from the retained
+    chain (no loss, no double commit), and the final table must hold every
+    writer's rows."""
     import threading
+    import time
 
-    from f1_datalakehouse_pipeline_spark.sources.tables import (
-        ChangeFeedConsumer,
-        ConcurrentWriteError,
-    )
+    from f1_datalakehouse_pipeline_spark.sources.tables import ConcurrentWriteError
 
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=40)
     store.overwrite(_sess_mut(spark, [(0, "seed")]), "sessions_silver")
@@ -1603,41 +1501,34 @@ def test_concurrent_writers_with_polling_consumer_no_commit_lost_or_doubled(
         except Exception as e:  # noqa: BLE001 — surfaced after join
             errors.append(e)
 
-    served: list[tuple[str, int]] = []  # (commit_id, session_key) per poll
+    observed: list[list[tuple[int, str]]] = []  # one entry per live read
 
-    def consumer():
-        cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
+    def reader():
         try:
-            while True:  # exits via the post-drain return below
-                rows = cons.poll(key_cols=["session_key"]).collect()
-                cons.commit()
-                served.extend(
-                    (r._commit_id, r.session_key)
-                    for r in rows
-                    if r._change_type == "insert"
+            while not done.is_set():
+                if len(store.versions("sessions_silver")) < 2:
+                    time.sleep(0.05)  # no commit on top of the seed yet
+                    continue
+                observed.append(
+                    [
+                        (r.session_key, r._change_type)
+                        for r in store.table_changes(
+                            "sessions_silver", 1, 0, key_cols=["session_key"]
+                        ).collect()
+                    ]
                 )
-                if done.is_set():
-                    # one final drain after the writers finished
-                    rows = cons.poll(key_cols=["session_key"]).collect()
-                    cons.commit()
-                    served.extend(
-                        (r._commit_id, r.session_key)
-                        for r in rows
-                        if r._change_type == "insert"
-                    )
-                    return
         except Exception as e:  # noqa: BLE001 — surfaced after join
             errors.append(e)
 
     threads = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
-    cons_t = threading.Thread(target=consumer)
+    reader_t = threading.Thread(target=reader)
     for t in threads:
         t.start()
-    cons_t.start()
+    reader_t.start()
     for t in threads:
         t.join(timeout=600)
     done.set()
-    cons_t.join(timeout=600)
+    reader_t.join(timeout=600)
     assert not errors, errors
 
     # every writer row landed exactly once in the table
@@ -1648,11 +1539,26 @@ def test_concurrent_writers_with_polling_consumer_no_commit_lost_or_doubled(
     }
     assert set(got) == want_keys | {0}
 
-    # no commit double-served: each (commit_id) appears in exactly one poll
-    commit_ids = [c for c, _ in served]
-    assert len(commit_ids) == len(set(commit_ids)), "a commit was served twice"
-    # no commit lost: every writer key was delivered as an insert
-    assert {k for _, k in served} == want_keys
+    # each live read saw one whole commit: a single writer insert
+    assert all(
+        len(rows) == 1 and rows[0][0] in want_keys and rows[0][1] == "insert"
+        for rows in observed
+    ), observed
+
+    # replaying the retained chain oldest first: one commit per writer row,
+    # none lost, none doubled, no hole between consecutive versions
+    vs = store.versions("sessions_silver")
+    assert len(vs) == 2 * n_per_writer + 1
+    served = []
+    for k in range(len(vs) - 2, -1, -1):
+        assert store.chain_hole(vs[k], vs[k + 1]) is None
+        step = store.table_changes(
+            "sessions_silver", k + 1, k, key_cols=["session_key"]
+        ).collect()
+        assert [r._change_type for r in step] == ["insert"], step
+        served.append(step[0].session_key)
+    assert len(served) == len(set(served)), "a commit was served twice"
+    assert set(served) == want_keys
 
 
 def test_publish_many_rollback_decommits_the_aborted_versions(spark, tmp_path):
@@ -1662,8 +1568,6 @@ def test_publish_many_rollback_decommits_the_aborted_versions(spark, tmp_path):
     travel AND poison the parent-stamped CDC chain (spurious hole, or the
     aborted commit's change rows served as real after the next commit).
     Rollback must de-commit them back to orphan status."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
     store.commit_many(
         [
@@ -1671,9 +1575,6 @@ def test_publish_many_rollback_decommits_the_aborted_versions(spark, tmp_path):
             (_results(spark, 7, gp="monaco"), "race_results_silver"),
         ]
     )
-    cons = ChangeFeedConsumer(store, "race_results_silver", str(tmp_path / "cur"))
-    cons.poll()
-    cons.commit()
 
     # crash INSIDE the swap loop: first table (sorted order:
     # race_results_silver) swaps fine, second (sessions_silver) dies
@@ -1701,20 +1602,25 @@ def test_publish_many_rollback_decommits_the_aborted_versions(spark, tmp_path):
     assert store.read("sessions_silver").count() == 5
     assert store.read("race_results_silver").count() == 7
     # the rolled-back version is an unmarked orphan again: not committed,
-    # never listed, and the feed serves NO aborted change rows
+    # never listed, and CDC serves NO aborted change rows
     for table, vdir, _ in staged:
         assert not store._is_committed(vdir), table
         assert os.path.realpath(vdir) not in [
             os.path.realpath(v) for v in store.versions(table)
         ], table
-    assert cons.poll().count() == 0
+    with pytest.raises(IndexError):
+        store.table_changes("race_results_silver", 1, 0)
 
     # the NEXT real commit proceeds with an intact chain (no spurious hole)
     store.merge_upsert(
         _results(spark, 2, gp="spa"), "race_results_silver",
         keys=["session_key"],
     )
-    rows = cons.poll(key_cols=["session_key"]).collect()
+    vs = store.versions("race_results_silver")
+    assert len(vs) == 2 and store.chain_hole(vs[0], vs[1]) is None
+    rows = store.table_changes(
+        "race_results_silver", 1, 0, key_cols=["session_key"]
+    ).collect()
     # exactly the real commit's delta: pre-images of the replaced monaco
     # rows + spa post-images — and nothing from the aborted miami batch
     assert {(r._change_type, r.grand_prix_name) for r in rows} == {
@@ -1803,15 +1709,10 @@ def test_append_on_versioned_table_is_a_commit(spark, tmp_path):
     into the committed current version — mutating a published snapshot in
     place, invisible to time travel and to every CDC tier. Append now
     commits a NEW version (hardlink graft + appended rows, CAS-published):
-    the prior version is untouched, and the feed serves the appended rows
-    as inserts via the snapshot-diff fallback."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ChangeFeedConsumer
-
+    the prior version is untouched, and table_changes serves the appended
+    rows as inserts via the snapshot-diff fallback."""
     store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
     store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    cons = ChangeFeedConsumer(store, "sessions_silver", str(tmp_path / "cur"))
-    cons.poll(key_cols=["session_key"])
-    cons.commit()
     v0 = store._current_target("sessions_silver")
 
     store.append(_sess_mut(spark, [(3, "C"), (4, "D")]), "sessions_silver")
@@ -1827,7 +1728,9 @@ def test_append_on_versioned_table_is_a_commit(spark, tmp_path):
     ))
     got = {
         (r.session_key, r._change_type)
-        for r in cons.poll(key_cols=["session_key"]).collect()
+        for r in store.table_changes(
+            "sessions_silver", 1, 0, key_cols=["session_key"]
+        ).collect()
     }
     assert got == {(3, "insert"), (4, "insert")}
     # append inherits the transactional contract: later commits proceed

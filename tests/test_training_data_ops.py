@@ -103,62 +103,6 @@ def test_lsh_bucketed_recall(spark):
         assert sorted(x.rnk for x in rs) == list(range(1, len(rs) + 1))
 
 
-def test_streaming_incremental_upsert(spark, tmp_path):
-    """availableNow file-stream → foreachBatch upsert == one INCREMENTAL run."""
-    from f1_datalakehouse_pipeline_spark.streaming.incremental import (
-        foreach_batch_upsert,
-        stream_file_source,
-    )
-
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 5).alias("k"), F.rand(42).alias("v")
-    )
-    df.write.parquet(src)
-
-    def upsert(batch_df, batch_id):
-        batch_df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(out)
-
-    q = stream_file_source(spark, src, df.schema).transform(lambda d: d)
-    foreach_batch_upsert(q, upsert, ckpt).awaitTermination(120)
-    got = {r.k: r.n for r in spark.read.parquet(out).collect()}
-    assert got == {i: 20 for i in range(5)}
-
-
-def test_streaming_windowed_counts(spark, tmp_path):
-    from f1_datalakehouse_pipeline_spark.streaming.incremental import (
-        windowed_event_counts,
-    )
-
-    src = str(tmp_path / "events")
-    ev = spark.createDataFrame(
-        [(1, "2024-01-01 00:10:00", "click", 1.0),
-         (2, "2024-01-01 00:50:00", "click", 2.0),
-         (3, "2024-01-01 01:10:00", "view", 3.0)],
-        ["event_id", "ts", "event_type", "value"],
-    ).withColumn("ts", F.to_timestamp("ts"))
-    ev.write.parquet(src)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode only emits CLOSED windows (watermark passed); with a static
-    # drain the final watermark closes the first window.
-    rows = spark.sql("select * from wincounts").collect()
-    assert all(r.n_events >= 1 for r in rows)
-
-
 def test_vectorized_topk_matches_native(spark, sf_dir):
     """Arrow/numpy scale path returns the same neighbors as the fold-based
     oracle implementation (float assoc. differences can only flip exact
@@ -174,58 +118,6 @@ def test_vectorized_topk_matches_native(spark, sf_dir):
         for r in similarity.brute_force_topk_vectorized(emb, queries, k=3).collect()
     }
     assert native == vec
-
-
-def test_stateful_running_aggregate(spark, tmp_path):
-    """applyInPandasWithState carries per-key totals across micro-batches."""
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import running_aggregate
-
-    src = str(tmp_path / "s1")
-    df = spark.range(60).select(
-        (F.col("id") % 3).alias("k"), F.lit(1).cast("long").alias("v")
-    )
-    df.coalesce(2).write.parquet(src)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = running_aggregate(stream, "k", "v")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("runagg")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "select key, max(running_n) n, max(running_total) t from runagg group by key"
-    ).collect()
-    got = {r.key: (r.n, r.t) for r in rows}
-    assert got == {0: (20, 20), 1: (20, 20), 2: (20, 20)}
-
-
-def test_stateful_running_dedup(spark, tmp_path):
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import running_dedup
-
-    src = str(tmp_path / "s2")
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c"), (2, "d"), (3, "e")], ["k", "payload"]
-    )
-    df.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = running_dedup(stream, "k", "k long, payload string")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rundedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from rundedup").collect()
-    assert sorted(r.k for r in rows) == [1, 2, 3]  # one row per key
 
 
 def test_connected_keepers_and_apply(spark):
@@ -360,89 +252,6 @@ def test_minhash_lsh_df_cap_survives_boilerplate(spark):
     assert all(a == 100 or b == 101 for a, b in got), got
 
 
-def test_dedup_within_watermark_bounded_state(spark, tmp_path):
-    """Built-in watermarked streaming dedup: duplicate event_ids inside the
-    watermark window collapse to one row, with state bounded by the window."""
-    from datetime import datetime
-
-    from f1_datalakehouse_pipeline_spark.streaming.incremental import dedup_within_watermark
-
-    src = str(tmp_path / "s3")
-    t = lambda m: datetime(2025, 1, 1, 10, m)
-    df = spark.createDataFrame(
-        [
-            (1, t(0), "a"),
-            (1, t(5), "a-dup"),   # duplicate key within watermark -> dropped
-            (2, t(10), "b"),
-            (3, t(20), "c"),
-            (2, t(25), "b-dup"),  # duplicate key within watermark -> dropped
-            (4, t(59), "d"),
-        ],
-        ["event_id", "ts", "payload"],
-    )
-    df.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = dedup_within_watermark(stream, ["event_id"], ts_col="ts", watermark="2 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wmdedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from wmdedup").collect()
-    assert sorted(r.event_id for r in rows) == [1, 2, 3, 4]
-    kept = {r.event_id: r.payload for r in rows}
-    assert kept[1] == "a" and kept[2] == "b"  # first occurrence wins
-
-
-def test_stateful_session_windows_batch_invariant(spark, tmp_path):
-    """Closed sessions from the stateful streaming sessionizer must not
-    depend on how the stream is chopped into micro-batches."""
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import session_windows
-
-    # key 1: sessions [100..130 (3 ev)], [200..210 (2 ev)], open [400]
-    # key 2: sessions [50 (1 ev)], open [500..510]
-    events = [
-        (1, 100), (1, 115), (1, 130),
-        (2, 50),
-        (1, 200), (1, 210),
-        (2, 500), (2, 510),
-        (1, 400),
-    ]
-    src = str(tmp_path / "sess")
-    df = spark.createDataFrame(events, ["k", "ts"])
-    # three files -> three time-ordered micro-batches with maxFilesPerTrigger=1
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(events[:4], ["k", "ts"]).coalesce(1).write.parquet(src + "/b0")
-    spark.createDataFrame(events[4:6], ["k", "ts"]).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(events[6:], ["k", "ts"]).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    out = session_windows(stream, "k", "ts", gap_s=50)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sesswin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = sorted(
-        (r.key, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("select * from sesswin").collect()
-    )
-    # closed sessions only; the trailing open session per key stays in state
-    assert rows == [(1, 100, 130, 3), (1, 200, 210, 2), (2, 50, 50, 1)]
-
-
 def test_sniff_mime_real_magics(spark):
     from f1_datalakehouse_pipeline_spark.operators.multimodal import sniff_mime
 
@@ -461,60 +270,6 @@ def test_sniff_mime_real_magics(spark):
     got = {r.media_id: r.mime for r in df.select("media_id", sniff_mime(F.col("payload")).alias("mime")).collect()}
     for i, _, want in payloads:
         assert got[i] == want, (i, got[i], want)
-
-
-def test_stream_static_enrichment(spark, tmp_path):
-    from f1_datalakehouse_pipeline_spark.streaming.joins import enrich_with_dim
-
-    src = str(tmp_path / "se")
-    ev = spark.createDataFrame([(1, 10), (2, 20), (3, 30)], ["k", "v"])
-    ev.coalesce(1).write.parquet(src)
-    dim = spark.createDataFrame([(1, "gold"), (2, "silver")], ["k", "tier"])
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = enrich_with_dim(stream, dim, "k")
-    q = (
-        out.writeStream.format("memory").queryName("enrich")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = {r.k: r.tier for r in spark.sql("select * from enrich").collect()}
-    assert rows == {1: "gold", 2: "silver", 3: None}
-
-
-def test_stream_stream_join_within_window(spark, tmp_path):
-    """Watermarked stream-stream join: purchases match views of the same user
-    at most 1h earlier; older views don't match."""
-    from datetime import datetime
-
-    from f1_datalakehouse_pipeline_spark.streaming.joins import stream_stream_within
-
-    t = lambda h, m=0: datetime(2025, 1, 1, h, m)
-    vsrc, psrc = str(tmp_path / "views"), str(tmp_path / "purch")
-    views = spark.createDataFrame(
-        [(1, t(9, 50), 100), (2, t(8, 0), 200), (3, t(10, 0), 300)],
-        ["user", "vts", "view_id"],
-    )
-    purchases = spark.createDataFrame(
-        [(1, t(10, 0), 1000),   # view 10 min earlier -> match
-         (2, t(10, 0), 2000),   # view 2h earlier -> NO match
-         (3, t(10, 30), 3000)], # view 30 min earlier -> match
-        ["user", "pts", "purchase_id"],
-    )
-    views.coalesce(1).write.parquet(vsrc)
-    purchases.coalesce(1).write.parquet(psrc)
-    vstream = spark.readStream.schema(views.schema).parquet(vsrc)
-    pstream = spark.readStream.schema(purchases.schema).parquet(psrc)
-    out = stream_stream_within(
-        pstream, vstream, key="user", left_ts="pts", right_ts="vts",
-        within="1 hour", right_cols=["view_id"],
-    )
-    q = (
-        out.writeStream.format("memory").queryName("ssj")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = {(r.user, r.purchase_id, r.r_view_id) for r in spark.sql("select * from ssj").collect()}
-    assert rows == {(1, 1000, 100), (3, 3000, 300)}
 
 
 class _FakeGroupState:
@@ -548,55 +303,6 @@ class _FakeGroupState:
 
     def setTimeoutDuration(self, ms):
         self.timeout_set = ms
-
-
-def test_session_step_timeout_emits_open_session_and_evicts():
-    """ProcessingTimeTimeout firing for an idle key must EMIT the trailing
-    open session and REMOVE the state — not re-arm it (which made idle keys
-    immortal and swallowed the last session)."""
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import _session_step
-
-    state = _FakeGroupState(value=(100, 160, 3), has_timed_out=True)
-    out = list(_session_step((7,), [], state, "ts", 50, idle_timeout_ms=1000))
-    assert state.removed and state.timeout_set is None  # evicted, NOT re-armed
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row["key"], row["session_start"], row["session_end"], row["n_events"]) == (
-        7, 100, 160, 3,
-    )
-
-    # timeout with (pathologically) no surviving state: no emission, no crash
-    state2 = _FakeGroupState(value=None, has_timed_out=True)
-    assert list(_session_step((7,), [], state2, "ts", 50, 1000)) == []
-    assert state2.removed
-
-
-def test_session_step_normal_batch_rearms_timeout():
-    import pandas as pd
-
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import _session_step
-
-    state = _FakeGroupState()
-    pdf = pd.DataFrame({"ts": [10, 20, 200]})
-    out = list(_session_step((1,), [pdf], state, "ts", 50, idle_timeout_ms=500))
-    assert len(out) == 1  # [10,20] closed by the 200 event
-    assert state.get == (200, 200, 1)  # open session survives in state
-    assert state.timeout_set == 500  # re-armed while the key is active
-
-
-def test_dedup_and_aggregate_step_timeout_evict():
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import (
-        _aggregate_step,
-        _dedup_step,
-    )
-
-    s1 = _FakeGroupState(value=(1,), has_timed_out=True)
-    assert list(_dedup_step((1,), [], s1, None, 1000)) == []
-    assert s1.removed and s1.timeout_set is None
-
-    s2 = _FakeGroupState(value=(5, 42), has_timed_out=True)
-    assert list(_aggregate_step((1,), [], s2, "v", 1000)) == []
-    assert s2.removed and s2.timeout_set is None
 
 
 def test_contamination_check_containment(spark):
@@ -897,60 +603,6 @@ def test_exactly_once_ledger_is_pruned_to_a_bounded_window(spark, tmp_path):
     assert calls == list(range(60))
 
 
-def test_streaming_contamination_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming contamination monitor (micro-batched foreachBatch over
-    a cached benchmark index) must produce EXACTLY the batch operator's
-    verdicts once the stream drains — regardless of how the corpus was
-    split into batches."""
-    from f1_datalakehouse_pipeline_spark.operators import dedup
-    from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-    from f1_datalakehouse_pipeline_spark.streaming.contamination import (
-        contamination_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    benchmark = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
-    train = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-
-    # land the train corpus as two separate files -> two micro-batches
-    src = str(tmp_path / "landing")
-    train.filter(F.col("doc_id") % 4 == 0).coalesce(1).write.mode("append").parquet(src)
-    train.filter(F.col("doc_id") % 4 == 2).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "hits")
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = contamination_stream(
-        stream,
-        benchmark,
-        "doc_id",
-        "text",
-        out_path=out,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        k=8,
-        min_containment=0.3,
-    )
-    q.awaitTermination(180)
-    spark.catalog.clearCache()
-
-    got = sorted(
-        (r.test_id, r.train_id, r.n_shared, r.test_ngrams, round(r.containment, 9))
-        for r in spark.read.parquet(out).collect()
-    )
-    want = sorted(
-        (r.test_id, r.train_id, r.n_shared, r.test_ngrams, round(r.containment, 9))
-        for r in dedup.contamination_pairs(
-            train, benchmark, "doc_id", "text", k=8, min_containment=0.3
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-    # the split actually exercised >1 micro-batch
-    assert spark.read.parquet(out).select("batch_id").distinct().count() >= 2
-
-
 def test_ivf_prebuilt_index_matches_oneshot(spark):
     """ivf_query over a prebuilt index (vectorized assignment) must return
     the same neighbors as the one-shot ivf_topk (native assignment) — the
@@ -1126,77 +778,6 @@ def test_pseudonymize_stable_and_salted(spark):
     assert len(tok[1][0]) == 12
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("shingle_buckets", [None, 4])
-def test_novelty_ingest_stream_cross_batch_admission(spark, tmp_path, shingle_buckets):
-    """E2E: the streaming admission gate rejects within-batch AND
-    cross-batch near-duplicates, admits first arrivals, and a later drain
-    keeps building on the same on-disk index — identically under the plain
-    and the bucketed (100 TB) shingles layout."""
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
-        _shingles_table_name,
-        novelty_ingest_stream,
-    )
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    a = "the quick brown fox jumps over the lazy dog again and again"
-    b = "completely different prose describing shuffle partitions in spark"
-    c = "a third unrelated text about parquet footers and column statistics"
-    d = "yet another novel document mentioning broadcast joins and skew"
-
-    def land_file(name, rows):
-        spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(
-            str(land / name)
-        )
-
-    land_file("f1", [(1, a), (2, a), (3, b)])      # 2 is a within-batch dup
-    land_file("f2", [(4, a), (5, c)])              # 4 duplicates batch-1's 1
-
-    schema = "doc_id BIGINT, text STRING"
-    from pyspark.sql.types import StructType
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(land / "*"))
-    )
-    idx, out, ckpt = str(tmp_path / "idx"), str(tmp_path / "out"), str(tmp_path / "ck")
-    try:
-        q = novelty_ingest_stream(
-            stream, "doc_id", "text", idx, out, ckpt, threshold=0.5,
-            shingle_buckets=shingle_buckets,
-        )
-        q.awaitTermination(120)
-        admitted = {r.doc_id for r in spark.read.parquet(out).collect()}
-        assert admitted == {1, 3, 5}
-
-        # second drain: another copy of a (reject) + novel doc (admit)
-        land_file("f3", [(6, a), (7, d)])
-        q2 = novelty_ingest_stream(
-            stream, "doc_id", "text", idx, out, ckpt, threshold=0.5,
-            shingle_buckets=shingle_buckets,
-        )
-        q2.awaitTermination(120)
-        admitted2 = {r.doc_id for r in spark.read.parquet(out).collect()}
-        assert admitted2 == {1, 3, 5, 7}
-
-        # replay drain with nothing new: no duplicate appends
-        q3 = novelty_ingest_stream(
-            stream, "doc_id", "text", idx, out, ckpt, threshold=0.5,
-            shingle_buckets=shingle_buckets,
-        )
-        q3.awaitTermination(120)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 4 and {r.doc_id for r in rows} == {1, 3, 5, 7}
-        if shingle_buckets:
-            # the index really is the catalog bucketed table
-            assert spark.catalog.tableExists(_shingles_table_name(idx))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {_shingles_table_name(idx)}")
-
-
 def test_chunk_documents_coverage_and_edges(spark):
     from f1_datalakehouse_pipeline_spark.operators.textstats import chunk_documents
 
@@ -1308,6 +889,34 @@ def test_training_shards_roundtrip_and_audit(spark, tmp_path):
     assert [r.shard_id for r in bad] == [shard]
 
 
+def _admit_to_index(spark, idx, rows, shingle_buckets=None):
+    """Probe ``rows`` against the history index at ``idx`` and append the
+    survivors' index rows (the admission step of the incremental corpus
+    build, without its other stages). Returns the admitted doc ids. The
+    survivors are collected into a fresh frame before the append: their
+    plan reads the index dirs being appended to."""
+    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
+        _append_index,
+        _read_index,
+    )
+
+    batch = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    index = _read_index(spark, idx)
+    if index is not None:
+        hits = dedup.novelty_pairs(batch, index, "doc_id", "text", threshold=0.5)
+        batch = dedup.filter_novel(batch, hits, "doc_id")
+    survivors = batch.collect()
+    if survivors:
+        _append_index(
+            idx,
+            dedup.minhash_band_index(
+                spark.createDataFrame(survivors, batch.schema), "doc_id", "text"
+            ),
+            shingle_buckets=shingle_buckets,
+        )
+    return {r.doc_id for r in survivors}
+
+
 @pytest.mark.parametrize("shingle_buckets", [None, 8])
 def test_novelty_index_accumulates_across_three_batches(spark, tmp_path, shingle_buckets):
     """REGRESSION (r5): every batch's index rows must survive into the
@@ -1318,25 +927,39 @@ def test_novelty_index_accumulates_across_three_batches(spark, tmp_path, shingle
     re-computation sees the batch's own freshly-written rows, evaluates
     empty, and appends NOTHING — silently truncating the index to batch 1
     and under-rejecting every later cross-batch near-dup. Two-batch tests
-    structurally cannot catch this; it takes three."""
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import admit_batch
+    structurally cannot catch this; it takes three. Runs the incremental
+    corpus build under both shingles layouts and reads the admitted set
+    back from the index itself."""
+    from f1_datalakehouse_pipeline_spark.plans.corpus import (
+        run_corpus_pipeline_incremental,
+    )
+    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
+        _read_index,
+        _shingles_table_name,
+    )
 
     a = "the quick brown fox jumps over the lazy dog again and again"
     b = "completely different prose describing shuffle partitions in spark"
     c = "a third unrelated text about parquet footers and column statistics"
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    idx = str(tmp_path / "state" / "lsh")
+    kw = dict(quality_min=0.0, near_threshold=0.5, chunk_tokens=8,
+              overlap_tokens=2, n_shards=4, seed="e0",
+              shingle_buckets=shingle_buckets)
     batches = [
         [(1, a)],
         [(10, b)],                       # batch 2's rows must reach the index
         [(20, a + " indeed"), (21, b + " indeed"), (22, c)],
     ]
-    for bi, rows in enumerate(batches):
-        admit_batch(
-            spark, spark.createDataFrame(rows, ["doc_id", "text"]), bi,
-            "doc_id", "text", idx, out, threshold=0.5,
-            shingle_buckets=shingle_buckets,
-        )
-    admitted = {r.doc_id for r in spark.read.parquet(out).collect()}
+    try:
+        for rows in batches:
+            run_corpus_pipeline_incremental(
+                spark, spark.createDataFrame(rows, ["doc_id", "text"]), out,
+                state, **kw,
+            )
+        admitted = {r.doc for r in _read_index(spark, idx)[2].collect()}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {_shingles_table_name(idx)}")
     # 20 dups batch-1's doc 1; 21 dups BATCH-2's doc 10 — the regression case
     assert admitted == {1, 10, 22}
 
@@ -1472,20 +1095,16 @@ def test_compact_novelty_index_preserves_probe(spark, tmp_path, shingle_buckets)
     from f1_datalakehouse_pipeline_spark.streaming.novelty import (
         _count_files,
         _read_index,
-        admit_batch,
         compact_novelty_index,
     )
 
     a = "the quick brown fox jumps over the lazy dog again and again"
     b = "completely different prose describing shuffle partitions in spark"
     c = "a third unrelated text about parquet footers and column statistics"
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    for bi, rows in enumerate([[(1, a)], [(10, b)], [(20, c)]]):
-        admit_batch(
-            spark, spark.createDataFrame(rows, ["doc_id", "text"]), bi,
-            "doc_id", "text", idx, out, threshold=0.5,
-            shingle_buckets=shingle_buckets,
-        )
+    idx = str(tmp_path / "idx")
+    admitted = set()
+    for rows in [[(1, a)], [(10, b)], [(20, c)]]:
+        admitted |= _admit_to_index(spark, idx, rows, shingle_buckets)
 
     probe = spark.createDataFrame(
         [(100, a + " indeed"), (101, b + " indeed"), (102, c + " indeed"),
@@ -1519,14 +1138,15 @@ def test_compact_novelty_index_preserves_probe(spark, tmp_path, shingle_buckets)
     assert stats["shingles"]["files_after"] <= stats["shingles"]["files_before"]
     assert stats["shingles"]["files_after"] <= (shingle_buckets or 1) * 3
 
-    # a fourth admission composes with the compacted index, and a SECOND
-    # compaction over mixed (compacted + fresh) files is still exact
-    admit_batch(
-        spark, spark.createDataFrame([(30, a + " yet again")], ["doc_id", "text"]),
-        3, "doc_id", "text", idx, out, threshold=0.5,
-        shingle_buckets=shingle_buckets,
-    )
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 10, 20}
+    # a fourth admission composes with the compacted index (its near-dup of
+    # doc 1 is rejected), a fifth appends fresh files beside the compacted
+    # ones, and a SECOND compaction over the mixed files is still exact
+    admitted |= _admit_to_index(spark, idx, [(30, a + " yet again")], shingle_buckets)
+    assert admitted == {1, 10, 20}
+    assert _admit_to_index(
+        spark, idx, [(40, "entirely novel content about adaptive query plans")],
+        shingle_buckets,
+    ) == {40}
     mixed_pairs = pairs()
     compact_novelty_index(spark, idx)
     assert pairs() == mixed_pairs
@@ -1539,17 +1159,11 @@ def test_compact_novelty_index_crash_recovery(spark, tmp_path):
     import os
     import shutil
 
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
-        _read_index,
-        admit_batch,
-    )
+    from f1_datalakehouse_pipeline_spark.streaming.novelty import _read_index
 
     a = "the quick brown fox jumps over the lazy dog again and again"
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    admit_batch(
-        spark, spark.createDataFrame([(1, a)], ["doc_id", "text"]), 0,
-        "doc_id", "text", idx, out, threshold=0.5,
-    )
+    idx = str(tmp_path / "idx")
+    _admit_to_index(spark, idx, [(1, a)])
     bands = os.path.join(idx, "bands")
     baseline = {
         tuple(r) for r in spark.read.parquet(bands).collect()
@@ -1689,53 +1303,6 @@ def test_compact_corpus_state_preserves_verdicts(spark, tmp_path):
     assert stats2["exact_hashes"]["folded_partitions"] == 2
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("shingle_buckets", [None, 8])
-def test_novelty_ingest_stream_with_inline_compaction(spark, tmp_path, shingle_buckets):
-    """compact_every_batches runs index maintenance INSIDE foreachBatch
-    (micro-batches are sequential, so it cannot race the ingest): a drain
-    with per-batch compaction must admit exactly what the uncompacted gate
-    admits — including cross-batch rejections probed against a
-    just-compacted index — and leave fewer index files behind."""
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
-        _count_files,
-        novelty_ingest_stream,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog again and again"
-    b = "completely different prose describing shuffle partitions in spark"
-    land = tmp_path / "landing"
-    land.mkdir()
-    batches = [
-        [(1, a)],
-        [(10, b)],
-        [(20, a + " indeed"), (21, b + " indeed"),
-         (22, "a third unrelated text about parquet footers and statistics")],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(
-            str(land / f"f{i}")
-        )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(land / "*"))
-    )
-    idx, out, ckpt = str(tmp_path / "idx"), str(tmp_path / "out"), str(tmp_path / "ck")
-    novelty_ingest_stream(
-        stream, "doc_id", "text", idx, out, ckpt, threshold=0.5,
-        shingle_buckets=shingle_buckets, compact_every_batches=1,
-    ).awaitTermination(180)
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 10, 22}
-    import os
-
-    # every component compacted after the last admission: bands hold at most
-    # one file per band dir, sizes exactly one
-    assert _count_files(os.path.join(idx, "sizes")) == 1
-    assert _count_files(os.path.join(idx, "bands")) <= 4
-
-
 def test_should_compact_policy(tmp_path):
     """should_compact keys on the observable that degrades the probe (data
     file count) with a mean-file-size floor so chunky indexes never churn
@@ -1766,84 +1333,24 @@ def test_should_compact_policy(tmp_path):
     assert not should_compact(str(idx), max_files=12, components=None)
 
 
-@pytest.mark.slow
-def test_novelty_ingest_threshold_triggered_compaction(spark, tmp_path):
-    """compact_max_files folds the index when its FILE COUNT crosses the
-    threshold — no cadence to hand-tune against uneven batch sizes
-    (VERDICT r6 item 7). Admission verdicts must be identical to the
-    untriggered gate, including cross-batch rejections probed against a
-    just-compacted index."""
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
-        _count_files,
-        novelty_ingest_stream,
-    )
-
-    a = "the quick brown fox jumps over the lazy dog again and again"
-    b = "completely different prose describing shuffle partitions in spark"
-    land = tmp_path / "landing"
-    land.mkdir()
-    # deliberately UNEVEN batch sizes: 1, 3, 1
-    batches = [
-        [(1, a)],
-        [(10, b), (11, b + " indeed"),
-         (12, "a third unrelated text about parquet footers and statistics")],
-        [(20, a + " truly")],  # near dup of 1 across a compacted index
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.parquet(
-            str(land / f"f{i}")
-        )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(land / "*"))
-    )
-    idx, out, ckpt = str(tmp_path / "idx"), str(tmp_path / "out"), str(tmp_path / "ck")
-    novelty_ingest_stream(
-        stream, "doc_id", "text", idx, out, ckpt, threshold=0.5,
-        compact_max_files=8,
-    ).awaitTermination(180)
-    # first-arrival-wins admissions unchanged: 11 is a within-batch near dup
-    # of 10, 20 a cross-batch near dup of 1
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 10, 12}
-    import os
-
-    # the threshold fired after the multi-batch pileup: components folded
-    assert _count_files(os.path.join(idx, "sizes")) <= 2
-    assert _count_files(os.path.join(idx, "bands")) <= 8
-
-
 def test_novelty_ingest_survives_shingle_less_first_batch(spark, tmp_path):
     """A first batch of sub-k-token docs appends an EMPTY index; the next
-    drain must treat that as 'no history yet' instead of failing parquet
+    read must treat that as 'no history yet' instead of failing parquet
     schema inference on data-less directories."""
-    from f1_datalakehouse_pipeline_spark.streaming.novelty import (
-        novelty_ingest_stream,
-    )
+    import os
 
-    land = tmp_path / "landing"
-    land.mkdir()
-    spark.createDataFrame([(1, "hi"), (2, "")], ["doc_id", "text"]).coalesce(
-        1
-    ).write.parquet(str(land / "f1"))
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(land / "*"))
-    )
-    idx, out, ckpt = str(tmp_path / "idx"), str(tmp_path / "out"), str(tmp_path / "ck")
-    novelty_ingest_stream(stream, "doc_id", "text", idx, out, ckpt).awaitTermination(120)
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
+    from f1_datalakehouse_pipeline_spark.streaming.novelty import _read_index
 
-    # second drain with real docs must not crash on the empty index dirs
-    spark.createDataFrame(
-        [(3, "a genuinely long document about spark shuffle behavior")],
-        ["doc_id", "text"],
-    ).coalesce(1).write.parquet(str(land / "f2"))
-    novelty_ingest_stream(stream, "doc_id", "text", idx, out, ckpt).awaitTermination(120)
-    assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2, 3}
+    idx = str(tmp_path / "idx")
+    assert _admit_to_index(spark, idx, [(1, "hi"), (2, "")]) == {1, 2}
+    assert os.path.isdir(os.path.join(idx, "bands"))
+    assert _read_index(spark, idx) is None
+
+    # the next batch with real docs must not crash on the empty index dirs
+    assert _admit_to_index(
+        spark, idx, [(3, "a genuinely long document about spark shuffle behavior")]
+    ) == {3}
+    assert {r.doc for r in _read_index(spark, idx)[2].collect()} == {3}
 
 
 def test_corpus_pipeline_end_to_end(spark, tmp_path):
@@ -1940,6 +1447,39 @@ def test_corpus_builds_do_not_accumulate_cached_rdds(spark, tmp_path):
         assert rep.counts["after_near_dedup"] < rep.counts["after_exact_dedup"]
         counts.append(_persistent_rdds_after_gc(spark, before))
     assert counts[2] <= counts[0], counts
+
+
+def test_incremental_corpus_builds_release_local_checkpoints(spark, tmp_path):
+    """Each incremental build releases the local checkpoints it made (the
+    LSH pairs, the novelty probe's batch shingles, the last
+    connected_keepers round) before it returns: with no driver GC in
+    between, three builds in one session never leave more persistent RDDs
+    than there were before each call."""
+    from f1_datalakehouse_pipeline_spark.plans.corpus import (
+        run_corpus_pipeline_incremental,
+    )
+
+    words = [f"w{i}" for i in range(300)]
+
+    def docs(seed):
+        rows = []
+        for i in range(40):
+            if i % 8 == 3:  # near duplicate of the previous doc
+                text = rows[-1][1] + " extra"
+            else:
+                text = "the " + " ".join(words[(seed * 7 + i * 13 + j * j) % 300] for j in range(30))
+            rows.append((seed * 100 + i, text))
+        return spark.createDataFrame(rows, ["doc_id", "text"])
+
+    jsc = spark.sparkContext._jsc
+    for b in range(3):
+        before = jsc.getPersistentRDDs().size()
+        rep = run_corpus_pipeline_incremental(
+            spark, docs(b), str(tmp_path / "out"), str(tmp_path / "state"),
+            near_threshold=0.7, n_shards=2,
+        )
+        assert rep.counts["after_near_dedup"] < rep.counts["after_exact_dedup"]
+        assert jsc.getPersistentRDDs().size() <= before, b
 
 
 def test_chunk_id_compose_guards(spark):
@@ -2118,64 +1658,6 @@ def test_corpus_pipeline_optional_containment_and_mixture_stages(spark, tmp_path
     # the surviving superset doc's content shipped (incl. the embedded inner
     # text); phrase-level checks would straddle chunk boundaries
     assert {"alpha", "kappa", "boilerplate", "sitemap"} <= words
-
-
-def test_stateful_budget_admission(spark, tmp_path):
-    """Per-domain token budgets hold across micro-batches: once a domain's
-    budget is spent in batch 1, batch 2's docs for it are rejected; a later
-    drain on the same checkpoint resumes from the persisted spend."""
-    from f1_datalakehouse_pipeline_spark.streaming.stateful import budget_admission
-
-    src = tmp_path / "budget_src"
-    src.mkdir()
-    schema = "doc_id BIGINT, source STRING, n_tokens BIGINT"
-    # batch 1: web docs 10+10 tokens, code doc 5
-    spark.createDataFrame(
-        [(1, "web", 10), (2, "web", 10), (3, "code", 5)], schema
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = budget_admission(
-        stream, "doc_id", "source", "n_tokens",
-        {"web": 25, "code": 100},
-        schema + ", cum_tokens BIGINT",
-    )
-    ckpt, sink = str(tmp_path / "ck"), str(tmp_path / "sink")
-
-    def drain():
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {r.doc_id: r.cum_tokens for r in spark.read.parquet(sink).collect()}
-
-    got = drain()
-    assert got == {1: 10, 2: 20, 3: 5}
-
-    # batch 2 (new drain, same checkpoint): web has 5 left -> doc 4 (10)
-    # overflows and permanently CLOSES the web domain (strict-prefix cut,
-    # same as the batch mixture) -- doc 6 (3 tokens) would fit but arrived
-    # behind the overflow, so it is rejected too; code continues normally
-    spark.createDataFrame(
-        [(4, "web", 10), (5, "code", 7), (6, "web", 3)], schema
-    ).coalesce(1).write.parquet(str(src / "b2"))
-    got = drain()
-    assert got == {1: 10, 2: 20, 3: 5, 5: 12}
-
-    # batch 3: web stays closed across batches; code keeps admitting
-    spark.createDataFrame(
-        [(7, "web", 1), (8, "code", 2)], schema
-    ).coalesce(1).write.parquet(str(src / "b3"))
-    got = drain()
-    assert got == {1: 10, 2: 20, 3: 5, 5: 12, 8: 14}
 
 
 def test_repeat_mixture_copy_semantics(spark):

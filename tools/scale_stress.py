@@ -508,11 +508,6 @@ def run_cdc_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
     - ``snapshot_diff_sec``: the same delta computed by the full-outer
       snapshot diff (the fallback tier; grows with the table — the cost
       the write-time files buy out of the read path);
-    - ``stream_drain_sec``: the pull-loop source applying the commit as a
-      micro-batch; ``readstream_drain_sec``: the native
-      ``format("table_changes")`` datasource doing the same through
-      Spark's offset log (both read the same files, so both should track
-      cdf_file_read, not snapshot_diff);
     - ``merge_sec``: the producing merge itself — plain-parquet MERGE
       rewrites the table, so this one legitimately grows with |table|
       (the storage-side trade the module docstrings disclose).
@@ -537,9 +532,6 @@ def _run_cdc_scale(spark: SparkSession, sf_dir: str, factor: int, wh: str) -> di
 
     from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
     from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-    from f1_datalakehouse_pipeline_spark.streaming.cdc_source import (
-        stream_table_changes,
-    )
 
     store = TableStore(spark, os.path.join(wh, "wh"), keep_versions=10)
     orders = load_table(spark, sf_dir, "orders")
@@ -583,41 +575,6 @@ def _run_cdc_scale(spark: SparkSession, sf_dir: str, factor: int, wh: str) -> di
     r["snapshot_diff_sec"] = round(time.perf_counter() - t0, 2)
     assert m == n, (m, n)  # the two tiers must agree on the delta
 
-    t0 = time.perf_counter()
-    served = stream_table_changes(
-        store, "orders_managed", os.path.join(wh, "cur"),
-        lambda df, cid: df.write.format("noop").mode("overwrite").save(),
-        key_cols=["o_orderkey"],
-    )
-    r["stream_drain_sec"] = round(time.perf_counter() - t0, 2)
-    r["stream_commits"] = served
-
-    from f1_datalakehouse_pipeline_spark.streaming.cdc_datasource import (
-        register_table_changes_source,
-    )
-
-    register_table_changes_source(spark)
-    stream = (
-        spark.readStream.format("table_changes")
-        .option("root", store.root)
-        .option("table", "orders_managed")
-        .option("keys", "o_orderkey")
-        .load()
-    )
-    t0 = time.perf_counter()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: df.write.format("noop").mode("overwrite").save()
-        )
-        .option("checkpointLocation", os.path.join(wh, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination returns False on timeout (it does not raise): a
-    # truncated drain must never be recorded as a flat reading, and the
-    # finally-block rmtree must never run under a live query
-    assert q.awaitTermination(600), "readStream drain did not finish in 600s"
-    r["readstream_drain_sec"] = round(time.perf_counter() - t0, 2)
     print(f"  {r}", flush=True)
     return r
 
@@ -2292,7 +2249,7 @@ def main() -> None:
     ap.add_argument("--ann", action="store_true", help="scale the embeddings table and measure ANN variants")
     ap.add_argument("--pq", action="store_true", help="IVFADC rung: PQ train/build walls, on-disk index compression vs raw vectors, full-scan ADC + probed recall@5 vs exact-L2 truth")
     ap.add_argument("--refine-recall", action="store_true", help="refined-serve recall ladder on the PLANTED (non-twin) corpus: probed vs refine=20/100/500 exact-id recall@5 against asserted planted truth (also runs as part of --pq)")
-    ap.add_argument("--cdc", action="store_true", help="CDC cost-shape rung: fixed 10K-row change batch vs growing table — file-served CDF read + both streaming drains should stay FLAT while the snapshot-diff fallback grows")
+    ap.add_argument("--cdc", action="store_true", help="CDC cost-shape rung: fixed 10K-row change batch vs growing table — the file-served CDF read should stay FLAT while the snapshot-diff fallback grows")
     ap.add_argument("--funnel", action="store_true", help="behavioral-analytics rung: r8 funnel/cohort/transition/MAD/chisq queries on factor-scaled events + the textbook self-join funnel baseline")
     ap.add_argument("--pipeline", action="store_true", help="run the full F1 pipeline at ~2.5M lap rows")
     ap.add_argument("--novelty", action="store_true", help="measure incremental-probe amortization vs full self-join")
