@@ -22,19 +22,21 @@ mandate — these are first-class engine operators, not demos):
   lowest-id keeper; optional within-cluster LSH banding for skewed
   clusters and a persisted-assignment production mode.
 
+Pair lists become clusters in connected_keepers / apply_dedup, the one
+driver-side step: the pairs (one row per near-duplicate, so they scale with
+the duplicates, not the corpus) are collected once under the
+MAX_NEAR_DUP_EDGES bound and resolved exactly with numpy.
+
 All hashes are the md5-derived portable hash (functions/text.py) so every
 stage is exactly reproducible in the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import logging
 import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-log = logging.getLogger(__name__)
 
 from f1_datalakehouse_pipeline_spark.functions.text import (
     MINHASH_A,
@@ -42,6 +44,10 @@ from f1_datalakehouse_pipeline_spark.functions.text import (
     portable_hash48,
     tokens,
 )
+
+# Most near-duplicate pairs connected_keepers collects to the driver (16 B a
+# pair in Arrow); a larger pair list fails loudly instead of flooding it.
+MAX_NEAR_DUP_EDGES = 4_000_000
 
 
 def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
@@ -574,116 +580,59 @@ __all__ = [
 ]
 
 
-def connected_keepers(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
+def connected_keepers(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup pairs into clusters: (doc, keeper) with keeper =
     min doc id reachable through the pair graph.
 
-    Iterative min-label propagation PLUS pointer jumping: each round (a)
-    takes the min label across edges, then (b) jumps every label to its
-    keeper's keeper. The jump halves the remaining chain depth per round, so
-    convergence needs O(log diameter) rounds — max_iterations=10 covers
-    chains ~2^10 hops deep, far beyond any real near-dup cluster. Each round
-    is two keyed shuffles on doc id; no driver-side graph state beyond the
-    loop counter. If the loop still exits unconverged (pathological graph), a
-    warning is logged: apply_dedup would then under-drop duplicates.
+    The edge list (one row per near-duplicate pair, so it scales with the
+    duplicates, not the corpus) comes to the driver in ONE bounded Arrow
+    collect and the components are resolved there exactly: doc ids are
+    densified with ``np.unique``, then min-label propagation across every
+    edge in both directions plus pointer jumping (``lab = lab[lab]``)
+    repeats until a fixed point — always reached, since labels only fall.
+    A label is always a node of its own component and the component's
+    minimum can never lose its own label, so the fixed point labels every
+    node with that minimum. One collect in all, where distributed
+    propagation cost two keyed shuffles and a checkpoint per round.
 
-    Each round's local checkpoint is released once the next one is built,
-    and the edges once the last one is; the returned labels read only the
-    last round's checkpoint, which its consumer's caller may release
-    (``util.release_local_checkpoints``) or leave to Spark's ContextCleaner.
+    More than ``MAX_NEAR_DUP_EDGES`` pairs raise ``ValueError`` instead of
+    being truncated: past that the collect no longer fits a small driver
+    budget. The labels are a driver-local DataFrame and read no checkpoint.
     """
-    from f1_datalakehouse_pipeline_spark.operators.util import release_local_checkpoints
+    import numpy as np
+    import pandas as pd
 
     edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        # materialize ONCE: every propagation round joins against edges, and
-        # without this the whole upstream pair-generation pipeline (LSH,
-        # shingling, ...) re-executes per iteration — measured 37s -> 4s on
-        # the sf0.1 dedup_docs_pipeline. Edge count ∝ near-dup pairs, so the
-        # checkpoint is small at any corpus size.
-        .localCheckpoint(eager=True)
+        pairs.select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"))
+        .limit(MAX_NEAR_DUP_EDGES + 1)
+        .toArrow()
     )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("keeper", F.col("doc"))
+    n = edges.num_rows
+    if n > MAX_NEAR_DUP_EDGES:
+        raise ValueError(
+            f"near-duplicate pair list has more than {MAX_NEAR_DUP_EDGES} rows "
+            f"({n} collected); cluster resolution supports at most "
+            f"MAX_NEAR_DUP_EDGES={MAX_NEAR_DUP_EDGES} pairs"
+        )
+    ends = np.concatenate(
+        [edges.column("doc_a").to_numpy(), edges.column("doc_b").to_numpy()]
     )
-    from pyspark.sql import Observation
-
-    converged = False
-    checkpoint = None
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("doc", "dst2"), edges.dst == F.col("dst2"))
-            .groupBy("src")
-            .agg(F.min("keeper").alias("n_keeper"))
-        )
-        propagated = (
-            labels.join(neighbor_min, labels.doc == neighbor_min.src, "left")
-            .select(
-                "doc",
-                # the round's INPUT keeper rides along so the convergence
-                # probe below is a per-row comparison, not a second join
-                F.col("keeper").alias("_prev"),
-                F.least(F.col("keeper"), F.coalesce(F.col("n_keeper"), F.col("keeper"))).alias("keeper"),
-            )
-        )
-        # pointer jumping: doc -> keeper(keeper(doc)); this is what turns the
-        # linear-diameter walk into a logarithmic one
-        parent = propagated.select(
-            F.col("doc").alias("p_doc"), F.col("keeper").alias("p_keeper")
-        )
-        updated = (
-            propagated.join(parent, propagated.keeper == parent.p_doc, "left")
-            .select(
-                "doc",
-                "_prev",
-                F.least(
-                    F.col("keeper"), F.coalesce(F.col("p_keeper"), F.col("keeper"))
-                ).alias("keeper"),
-            )
-        )
-        # Convergence probe FUSED into the round's materialization (r12; the
-        # r11 form checkpointed first, then ran a new-vs-old join + count as
-        # a second action per round): the same per-doc keeper comparison the
-        # probe join made is evaluated inline on the round's own rows via an
-        # observed metric, so the localCheckpoint that truncates lineage
-        # also answers convergence — one action per round instead of two,
-        # and no probe-side join/broadcast at all. Same labels, same
-        # convergence decision (labels hold one row per doc, so "any row
-        # where keeper != _prev" is exactly the old joined predicate).
-        obs = Observation()
-        previous = checkpoint
-        checkpoint = updated.observe(
-            obs, F.max((F.col("keeper") != F.col("_prev")).cast("int")).alias("chg")
-        ).localCheckpoint(eager=True)  # truncate lineage per round
-        if previous is not None:
-            release_local_checkpoints(previous)
-        labels = checkpoint.drop("_prev")
-        try:
-            # max over zero rows is NULL == converged
-            chg = obs.get.get("chg") or 0
-        except Exception:
-            # No usable metric (e.g. a round the optimizer folded to an
-            # EMPTY relation records an inconvertible empty metrics row):
-            # recount on the checkpointed round instead of assuming
-            # convergence, as plans/corpus.py resolve_counts does.
-            chg = checkpoint.filter(F.col("keeper") != F.col("_prev")).count()
-        if chg == 0:
-            converged = True
+    del edges
+    # docs ascend, so the smallest label index IS the smallest doc id
+    docs, idx = np.unique(ends, return_inverse=True)
+    del ends
+    src, dst = idx[:n], idx[n:]
+    lab = np.arange(len(docs))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, src, lab[dst])
+        np.minimum.at(lab, dst, lab[src])
+        lab = lab[lab]
+        if np.array_equal(lab, prev):
             break
-    if not converged:
-        log.warning(
-            "connected_keepers did not converge in %d rounds; clusters deeper "
-            "than ~2^%d hops may have multiple keepers (under-deduplication)",
-            max_iterations,
-            max_iterations,
-        )
-    if checkpoint is not None:
-        release_local_checkpoints(edges)
-    return labels
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"doc": docs, "keeper": docs[lab]}), "doc long, keeper long"
+    )
 
 
 def contamination_pairs(
@@ -713,48 +662,10 @@ def contamination_pairs(
     ``min_containment``). Scales like the dedup joins: cost ∝ co-occurring
     grams, one shuffle per side + one pair groupBy.
     """
-    test_sh, test_sizes = benchmark_shingle_index(test, id_col, content_col, k)
-    return contamination_pairs_against_index(
-        train,
-        test_sh,
-        test_sizes,
-        id_col,
-        content_col,
-        k=k,
-        min_containment=min_containment,
-        max_doc_frequency=max_doc_frequency,
-    )
-
-
-def benchmark_shingle_index(
-    test: DataFrame, id_col: str, content_col: str, k: int = 8
-) -> tuple[DataFrame, DataFrame]:
-    """Precompute the held-out benchmark's shingle inverted index:
-    ``(test_sh(test_id, h), test_sizes(test_id, test_ngrams))``. The
-    benchmark side is static by definition during an ingestion window, so
-    callers that repeatedly check incoming corpus slices compute — and
-    cache — this once instead of re-shingling the benchmark per slice."""
     test_sh = _shingle_table(test, id_col, content_col, k).select(
         F.col("doc").alias("test_id"), "h"
     )
     test_sizes = test_sh.groupBy("test_id").agg(F.count(F.lit(1)).alias("test_ngrams"))
-    return test_sh, test_sizes
-
-
-def contamination_pairs_against_index(
-    train: DataFrame,
-    test_sh: DataFrame,
-    test_sizes: DataFrame,
-    id_col: str,
-    content_col: str,
-    k: int = 8,
-    min_containment: float = 0.5,
-    max_doc_frequency: int | None = None,
-) -> DataFrame:
-    """:func:`contamination_pairs` core against a precomputed benchmark
-    index (see :func:`benchmark_shingle_index`): only the TRAIN side is
-    shingled here, so a micro-batch check costs O(batch grams), not
-    O(batch + benchmark)."""
     train_sh = _shingle_table(train, id_col, content_col, k).select(
         F.col("doc").alias("train_id"), "h"
     )
@@ -790,11 +701,11 @@ def contamination_report(pairs: DataFrame) -> DataFrame:
 
 def apply_dedup(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
     """Drop every non-keeper member of each near-dup cluster (keeps rows that
-    belong to no cluster untouched). The drop set scales with the duplicate
-    count, which on a duplicate-heavy corpus (exactly what dedup targets) can
-    exceed driver/broadcast limits — so no forced broadcast hint: AQE
-    converts the anti-join to a broadcast join at runtime when the drop set
-    is actually small, and falls back to a shuffle join when it isn't."""
+    belong to no cluster untouched). The clusters are resolved on the driver
+    (:func:`connected_keepers`, bounded by ``MAX_NEAR_DUP_EDGES``); the drop
+    set still scales with the duplicate count, so no forced broadcast hint:
+    AQE converts the anti-join to a broadcast join at runtime when the drop
+    set is actually small, and falls back to a shuffle join when it isn't."""
     drop = connected_keepers(pairs).filter(F.col("doc") != F.col("keeper"))
     return df.join(drop, df[id_col] == drop.doc, "left_anti")
 

@@ -51,7 +51,7 @@ from f1_datalakehouse_pipeline_spark.functions.pii import scrub_pii
 from f1_datalakehouse_pipeline_spark.functions.text import portable_hash48, quality_score
 from f1_datalakehouse_pipeline_spark.operators import dedup
 from f1_datalakehouse_pipeline_spark.operators.textstats import chunk_documents
-from f1_datalakehouse_pipeline_spark.operators.util import release_local_checkpoints
+from f1_datalakehouse_pipeline_spark.operators.util import release_local_checkpoints, spread
 from f1_datalakehouse_pipeline_spark.sources.shards import (
     append_training_shards,
     verify_training_shards,
@@ -346,15 +346,18 @@ def run_corpus_pipeline(
             rep.counts[key] = int(n) if n is not None else df.count()
         pending.clear()
 
+    # A one-file input is one partition: spread it first, so quality
+    # scoring and the PII scrub (the costliest row-local work) use every core.
+    docs = spread(docs, id_col)
     # the raw count rides the quality stage's materialization too
     raw_obs = Observation()
     docs = docs.observe(raw_obs, F.count(F.lit(1)).alias("n"))
     pending["raw"] = (raw_obs, docs)
-    # The local checkpoints this build makes and its stages read (the LSH
-    # pairs, the last connected_keepers round) are released with the stage
-    # caches, not left for the ContextCleaner to free after some later
-    # driver GC. RDD ids only grow, so the caller's own inputs are not
-    # touched.
+    # The local checkpoint this build makes and its stages read (the LSH
+    # pairs; the near-dup labels are driver-local and read none) is
+    # released with the stage caches, not left for the ContextCleaner to
+    # free after some later driver GC. RDD ids only grow, so the caller's
+    # own inputs are not touched.
     first_rdd_id = spark.sparkContext._jsc.sc().newRddId()
 
     try:
@@ -741,9 +744,13 @@ def run_corpus_pipeline_incremental(
             rep.counts[key] = int(n) if n is not None else df.count()
         pending.clear()
 
-    # same local-checkpoint release as the batch form: a long-lived ingest
-    # session runs one of these builds per micro-batch
+    # same local-checkpoint release as the batch form (the LSH pairs and the
+    # novelty probe's batch shingles): a long-lived ingest session runs one
+    # of these builds per micro-batch
     first_rdd_id = spark.sparkContext._jsc.sc().newRddId()
+    # same head spread as the batch form, after the token and drift scans
+    # (whole-batch sums, which gain nothing from it)
+    batch = spread(batch, id_col)
 
     try:
         if wap_checks:

@@ -1094,9 +1094,9 @@ def t_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_docs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # END-TO-END near-dup removal: MinHash-LSH pairs -> connected-component
-    # cluster resolution (pointer-jumping min-label propagation) -> keep only
-    # cluster keepers. The oracle reproduces the full chain in SQL, closing
-    # the transitive closure with a recursive CTE — so even the iterative
+    # cluster resolution (bounded driver-side min-label propagation) -> keep
+    # only cluster keepers. The oracle reproduces the full chain in SQL,
+    # closing the transitive closure with a recursive CTE — so even the
     # graph step is hash-verified, not just rows-only.
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
@@ -2512,6 +2512,7 @@ def tablestore_delete_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     and inserts one fresh key per priority class. The oracle expresses the
     same final state declaratively — if any write mode dropped, duplicated,
     or resurrected a row, the hash compare fails."""
+    import shutil
     import tempfile
 
     from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
@@ -2523,56 +2524,60 @@ def tablestore_delete_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("o_totalprice"),
         "o_orderpriority",
     )
-    # the temp warehouse must outlive this call: the returned DataFrame is
-    # lazy over the store's files (the driver collects it later)
-    store = TableStore(spark, tempfile.mkdtemp(prefix="f1spark-tsq-"))
-    store.overwrite(base, "orders_managed")
-    store.delete_where(F.col("o_orderkey") % 10 == 7, "orders_managed")
-    upserts = (
-        store.read("orders_managed")
-        .filter(F.col("o_orderkey") % 10 == 3)
-        .select(
+    # the result (the orders table, bounded by the input) is checkpointed
+    # before the temp warehouse it was read from is removed
+    root = tempfile.mkdtemp(prefix="f1spark-tsq-")
+    try:
+        store = TableStore(spark, root)
+        store.overwrite(base, "orders_managed")
+        store.delete_where(F.col("o_orderkey") % 10 == 7, "orders_managed")
+        upserts = (
+            store.read("orders_managed")
+            .filter(F.col("o_orderkey") % 10 == 3)
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                F.lit("U").alias("o_orderstatus"),
+                (F.col("o_totalprice") * 2).alias("o_totalprice"),
+                "o_orderpriority",
+                F.lit(False).alias("__del"),
+            )
+        )
+        tombstones = base.filter(F.col("o_orderkey") % 10 == 5).select(
             "o_orderkey",
             "o_custkey",
-            F.lit("U").alias("o_orderstatus"),
-            (F.col("o_totalprice") * 2).alias("o_totalprice"),
+            "o_orderstatus",
+            "o_totalprice",
             "o_orderpriority",
-            F.lit(False).alias("__del"),
+            F.lit(True).alias("__del"),
         )
-    )
-    tombstones = base.filter(F.col("o_orderkey") % 10 == 5).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderpriority",
-        F.lit(True).alias("__del"),
-    )
-    mx = base.agg(F.max("o_orderkey")).collect()[0][0]  # bounded: one long
-    inserts = (
-        base.select("o_orderpriority")
-        .distinct()
-        .select(
-            (
-                F.lit(mx + 1)
-                + F.substring("o_orderpriority", 1, 1).cast("long")
-            ).alias("o_orderkey"),
-            F.lit(0).cast("long").alias("o_custkey"),
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(0.0).alias("o_totalprice"),
-            "o_orderpriority",
-            F.lit(False).alias("__del"),
+        mx = base.agg(F.max("o_orderkey")).collect()[0][0]  # bounded: one long
+        inserts = (
+            base.select("o_orderpriority")
+            .distinct()
+            .select(
+                (
+                    F.lit(mx + 1)
+                    + F.substring("o_orderpriority", 1, 1).cast("long")
+                ).alias("o_orderkey"),
+                F.lit(0).cast("long").alias("o_custkey"),
+                F.lit("N").alias("o_orderstatus"),
+                F.lit(0.0).alias("o_totalprice"),
+                "o_orderpriority",
+                F.lit(False).alias("__del"),
+            )
         )
-    )
-    store.merge_upsert(
-        upserts.unionByName(tombstones).unionByName(inserts),
-        "orders_managed",
-        keys=["o_orderkey"],
-        delete_col="__del",
-    )
-    return store.read("orders_managed").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
-    )
+        store.merge_upsert(
+            upserts.unionByName(tombstones).unionByName(inserts),
+            "orders_managed",
+            keys=["o_orderkey"],
+            delete_col="__del",
+        )
+        return store.read("orders_managed").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root)
 
 
 _CDF_READ_SQL = """
@@ -2620,6 +2625,7 @@ def tablestore_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     change file fails the hash compare. File-vs-snapshot-diff equality on
     the same mutations is additionally unit-pinned in
     tests/test_tablestore_tx.py."""
+    import shutil
     import tempfile
 
     from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
@@ -2631,58 +2637,62 @@ def tablestore_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("o_totalprice"),
         "o_orderpriority",
     )
-    # the temp warehouse must outlive this call: the returned DataFrame is
-    # lazy over the store's change files (the driver collects it later)
-    store = TableStore(spark, tempfile.mkdtemp(prefix="f1spark-cdf-"))
-    store.overwrite(base, "orders_managed")
-    upserts = base.filter(F.col("o_orderkey") % 10 == 3).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * 2).alias("o_totalprice"),
-        "o_orderpriority",
-        F.lit(False).alias("__del"),
-    )
-    tombstones = base.filter(F.col("o_orderkey") % 10 == 5).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderpriority",
-        F.lit(True).alias("__del"),
-    )
-    mx = base.agg(F.max("o_orderkey")).collect()[0][0]  # bounded: one long
-    inserts = (
-        base.select("o_orderpriority")
-        .distinct()
-        .select(
-            (
-                F.lit(mx + 1)
-                + F.substring("o_orderpriority", 1, 1).cast("long")
-            ).alias("o_orderkey"),
-            F.lit(0).cast("long").alias("o_custkey"),
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(0.0).alias("o_totalprice"),
+    # the change rows (bounded by the merge batch) are checkpointed before
+    # the temp warehouse holding their files is removed
+    root = tempfile.mkdtemp(prefix="f1spark-cdf-")
+    try:
+        store = TableStore(spark, root)
+        store.overwrite(base, "orders_managed")
+        upserts = base.filter(F.col("o_orderkey") % 10 == 3).select(
+            "o_orderkey",
+            "o_custkey",
+            F.lit("U").alias("o_orderstatus"),
+            (F.col("o_totalprice") * 2).alias("o_totalprice"),
             "o_orderpriority",
             F.lit(False).alias("__del"),
         )
-    )
-    store.merge_upsert(
-        upserts.unionByName(tombstones).unionByName(inserts),
-        "orders_managed",
-        keys=["o_orderkey"],
-        delete_col="__del",
-    )
-    return store.table_changes(
-        "orders_managed", 1, 0, key_cols=["o_orderkey"]
-    ).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderpriority",
-        "_change_type",
-    )
+        tombstones = base.filter(F.col("o_orderkey") % 10 == 5).select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
+            "o_orderpriority",
+            F.lit(True).alias("__del"),
+        )
+        mx = base.agg(F.max("o_orderkey")).collect()[0][0]  # bounded: one long
+        inserts = (
+            base.select("o_orderpriority")
+            .distinct()
+            .select(
+                (
+                    F.lit(mx + 1)
+                    + F.substring("o_orderpriority", 1, 1).cast("long")
+                ).alias("o_orderkey"),
+                F.lit(0).cast("long").alias("o_custkey"),
+                F.lit("N").alias("o_orderstatus"),
+                F.lit(0.0).alias("o_totalprice"),
+                "o_orderpriority",
+                F.lit(False).alias("__del"),
+            )
+        )
+        store.merge_upsert(
+            upserts.unionByName(tombstones).unionByName(inserts),
+            "orders_managed",
+            keys=["o_orderkey"],
+            delete_col="__del",
+        )
+        return store.table_changes(
+            "orders_managed", 1, 0, key_cols=["o_orderkey"]
+        ).select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
+            "o_orderpriority",
+            "_change_type",
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root)
 
 
 # attach the LSH oracle (deterministic planes make it SQL-expressible)

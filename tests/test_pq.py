@@ -486,18 +486,17 @@ def test_fill_empty_cells_all_duplicate_sample_does_not_crash():
     assert all(any(np.array_equal(cent[c], x) for x in xs) for c in empties)
 
 
-def test_ivfpq_topk_prunes_unprobed_partitions_at_plan_time(spark, emb, l2_cent):
+def test_ivfpq_topk_prunes_unprobed_partitions_at_plan_time(spark, emb, l2_cent, tmp_path):
     """The 100 TB claim 'unprobed partitions are never read' is now a PLAN
     property, not prose: serving against a list_id-partitioned on-disk
     index puts the probed-list union into the scan's PartitionFilters
     (static pushdown — dynamic partition pruning can't fire off a literal
     probes relation), so planning lists only n_probe partitions."""
     import re
-    import tempfile
 
     rtbl = similarity.residualize(emb, l2_cent)
     books = similarity.pq_train(rtbl, n_codes=16, m=8)
-    idx_path = tempfile.mkdtemp(prefix="f1spark-ivfpq-") + "/idx"
+    idx_path = str(tmp_path / "idx")
     similarity.ivfpq_build(emb, l2_cent, books, residual=True).write.partitionBy(
         "list_id"
     ).parquet(idx_path)

@@ -171,6 +171,20 @@ def test_tablestore_delete_tombstone_is_rerunnable(spark, sf_dir):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_tablestore_queries_remove_their_temp_warehouse(spark, sf_dir, tmp_path, monkeypatch):
+    """The TableStore round-trip queries remove their temp warehouse before
+    they return, and their results stay readable afterwards because they
+    are checkpointed first."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    qs = registry.queries()
+    for name in ("tablestore_delete_tombstone", "tablestore_cdf_read"):
+        assert qs[name](spark, sf_dir).count() > 0, name
+    assert os.listdir(tmp_path) == []
+
+
 def test_pack_sequences_sharded_vs_single_shard(spark, sf_dir):
     """The sharded packer restricted to ONE shard must equal the unsharded
     (global-window) form — the documented single-shard special case of

@@ -211,21 +211,79 @@ def test_connected_keepers_long_chain_pointer_jumping(spark):
     assert len(labels) == 41 and set(labels.values()) == {0}
 
 
-def test_connected_keepers_recounts_when_metric_unavailable(spark, monkeypatch):
-    """An unreadable convergence metric must not count as convergence: the
-    round's change count is recounted on its checkpoint, so a 40-hop chain
-    still resolves to one keeper."""
-    from pyspark.sql import Observation
+def _bfs_keepers(edges):
+    """Reference cluster resolution: a breadth-first search from each
+    unvisited node, in ascending id order, labels that node's whole
+    component with it — the component's minimum id."""
+    from collections import deque
 
-    def unavailable(self):
-        raise RuntimeError("metric unavailable")
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    keeper = {}
+    for start in sorted(adj):
+        if start in keeper:
+            continue
+        keeper[start] = start
+        queue = deque([start])
+        while queue:
+            for v in adj[queue.popleft()]:
+                if v not in keeper:
+                    keeper[v] = start
+                    queue.append(v)
+    return keeper
 
-    monkeypatch.setattr(Observation, "get", property(unavailable))
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], ["doc_a", "doc_b"]
-    )
+
+def _seeded_pair_graph(seed):
+    """Several components of each shape on scattered ids: stars with the
+    centre on either side of each edge, long chains laid over shuffled ids
+    (so the minimum sits mid-chain), random trees with extra cycle edges,
+    plus repeated and reversed copies of some edges."""
+    import random
+
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(1, 2**40), 2000))
+    edges = []
+    for _ in range(3):
+        centre = next(ids)
+        for leaf in [next(ids) for _ in range(rng.randint(2, 30))]:
+            edges.append((centre, leaf) if rng.random() < 0.5 else (leaf, centre))
+    for _ in range(2):
+        chain = [next(ids) for _ in range(rng.randint(20, 120))]
+        edges += list(zip(chain, chain[1:]))
+    for _ in range(3):
+        nodes = [next(ids)]
+        for _ in range(rng.randint(1, 40)):
+            nodes.append(next(ids))
+            edges.append((rng.choice(nodes[:-1]), nodes[-1]))
+        edges += [tuple(rng.sample(nodes, 2)) for _ in range(len(nodes) // 4)]
+    copies = rng.sample(edges, len(edges) // 5)
+    edges += copies + [(b, a) for a, b in rng.sample(edges, len(edges) // 5)]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("seed", [None, 0, 1, 2, 3])
+def test_connected_keepers_matches_bfs_reference(spark, seed):
+    """The driver-side resolution labels every doc with the minimum id of
+    its component, exactly as an independent BFS does, on seeded graphs
+    mixing stars, long chains, cyclic trees, duplicate and reversed edges
+    (and on no pairs at all)."""
+    edges = [] if seed is None else _seeded_pair_graph(seed)
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     labels = {r.doc: r.keeper for r in dedup.connected_keepers(pairs).collect()}
-    assert len(labels) == 41 and set(labels.values()) == {0}
+    assert labels == _bfs_keepers(edges)
+
+
+def test_connected_keepers_refuses_oversized_pair_list(spark, monkeypatch):
+    """The pair collect is bounded: more than MAX_NEAR_DUP_EDGES pairs fail
+    loudly, naming the count, instead of being truncated or collected
+    whole to the driver."""
+    monkeypatch.setattr(dedup, "MAX_NEAR_DUP_EDGES", 2)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["doc_a", "doc_b"])
+    with pytest.raises(ValueError, match=r"more than 2 rows \(3 collected\)"):
+        dedup.connected_keepers(pairs)
 
 
 def test_minhash_lsh_df_cap_survives_boilerplate(spark):
@@ -1059,33 +1117,6 @@ def test_incremental_state_store_writes_are_sized(spark, tmp_path):
         assert len(files) == 1, (d, files)
 
 
-def test_connected_keepers_fused_probe_still_early_stops(spark):
-    """r12 opt: the convergence probe rides an observed metric on the
-    round's own checkpoint instead of a separate join+count action. The
-    decision must stay identical — for a shallow two-cluster graph the loop
-    must stop after TWO rounds (one that changes labels, one that proves
-    quiescence), not run to max_iterations. Counted via the per-round
-    localCheckpoint calls (1 for edges + 1 per round)."""
-    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
-
-    calls = {"n": 0}
-    orig = ClassicDF.localCheckpoint
-
-    def counting(self, *a, **k):
-        calls["n"] += 1
-        return orig(self, *a, **k)
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["doc_a", "doc_b"])
-    try:
-        ClassicDF.localCheckpoint = counting
-        labels = {r.doc: r.keeper for r in dedup.connected_keepers(pairs).collect()}
-    finally:
-        ClassicDF.localCheckpoint = orig
-    assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
-    # 1 edges checkpoint + 2 round checkpoints; max_iterations=10 would be 11
-    assert calls["n"] == 3, calls
-
-
 @pytest.mark.parametrize("shingle_buckets", [None, 8])
 def test_compact_novelty_index_preserves_probe(spark, tmp_path, shingle_buckets):
     """VERDICT r5 item 3: compaction must rewrite the per-batch index appends
@@ -1449,12 +1480,48 @@ def test_corpus_builds_do_not_accumulate_cached_rdds(spark, tmp_path):
     assert counts[2] <= counts[0], counts
 
 
+@pytest.mark.parametrize("incremental", [False, True])
+def test_corpus_build_spreads_one_file_input(spark, tmp_path, monkeypatch, incremental):
+    """A one-file corpus input is a single partition; both builds spread it
+    before the quality filter, so quality scoring and the PII scrub run on
+    defaultParallelism partitions. Checked on the quality stage, which is
+    what exact_dedup receives."""
+    from f1_datalakehouse_pipeline_spark.plans import corpus
+
+    words = [f"w{i}" for i in range(300)]
+    rows = [
+        (i, "the " + " ".join(words[(i * 13 + j * j) % 300] for j in range(30)))
+        for i in range(64)
+    ]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(src)
+    docs = spark.read.parquet(src)
+    assert docs.rdd.getNumPartitions() == 1
+
+    seen = []
+    exact_dedup = dedup.exact_dedup
+
+    def spy(df, id_col, content_col):
+        seen.append(df)
+        return exact_dedup(df, id_col, content_col)
+
+    monkeypatch.setattr(dedup, "exact_dedup", spy)
+    out = str(tmp_path / "out")
+    if incremental:
+        corpus.run_corpus_pipeline_incremental(
+            spark, docs, out, str(tmp_path / "state"), n_shards=2
+        )
+    else:
+        corpus.run_corpus_pipeline(spark, docs, out, n_shards=2)
+    n = spark.sparkContext.defaultParallelism
+    assert [df.rdd.getNumPartitions() for df in seen] == [n]
+
+
 def test_incremental_corpus_builds_release_local_checkpoints(spark, tmp_path):
     """Each incremental build releases the local checkpoints it made (the
-    LSH pairs, the novelty probe's batch shingles, the last
-    connected_keepers round) before it returns: with no driver GC in
-    between, three builds in one session never leave more persistent RDDs
-    than there were before each call."""
+    LSH pairs, the novelty probe's batch shingles) before it returns: with
+    no driver GC in between, three builds in one session never leave more
+    persistent RDDs than there were before each call."""
     from f1_datalakehouse_pipeline_spark.plans.corpus import (
         run_corpus_pipeline_incremental,
     )

@@ -106,11 +106,10 @@ def main() -> None:
         "a24_chisq_cells",
         "w21_top_paths",
         "a23_winsorize",
-        # r9 additions: residual IVFADC, write-time CDF read, bounded funnel
-        # (tablestore_cdf_read's returned plan is a scan of the change files
-        # the merge wrote — included anyway: the scan SHAPE is the claim)
+        # r9 additions: residual IVFADC, bounded funnel (tablestore_cdf_read
+        # is excluded like tablestore_delete_tombstone — its returned
+        # DataFrame is a localCheckpointed read of the change files)
         "sim_ivfpq_residual_topk",
-        "tablestore_cdf_read",
         "w22_funnel_windowed",
     ]
     for name in HEADLINE + extras:
