@@ -68,26 +68,6 @@ def quality_score(col: Column, stopwords: tuple[str, ...] = ("the", "a", "of", "
     return (len_ok + punct_ok + sw_ok) / F.lit(3.0)
 
 
-def word_shingles(col_name: str, k: int = 3) -> Column:
-    """Distinct k-word shingles of a document (the MinHash/Jaccard unit).
-
-    Takes a column NAME so the expression can reference it inside SQL lambdas.
-    The token array is bound to a lambda variable (``transform(array(toks),
-    ts -> ...)``) so tokenization runs ONCE per row — inlining it in the inner
-    lambda would re-split the text per shingle position (O(tokens²) per doc,
-    measured 10x slower at sf0.1), and a separate projection can be undone by
-    CollapseProject.
-    """
-    toks = f"filter(split(trim({col_name}), '\\\\s+'), t -> t != '')"
-    return F.array_distinct(
-        F.expr(
-            f"element_at(transform(array({toks}), ts -> "
-            f"transform(sequence(1, greatest(size(ts) - {k - 1}, 1)),"
-            f" i -> array_join(slice(ts, i, {k}), ' '))), 1)"
-        )
-    )
-
-
 def minhash_term(shingle_hash: Column, i: int) -> Column:
     """The i-th MinHash term for one shingle: (a_i * h + b_i) mod p."""
     return (F.lit(MINHASH_A[i]) * shingle_hash + F.lit(MINHASH_B[i])) % F.lit(MINHASH_P)
@@ -106,9 +86,10 @@ def shingle_hashes_from_tokens(col_name: str, k: int = 3) -> Column:
     """Distinct k-gram shingle hashes computed ARITHMETICALLY from per-token
     portable hashes: h(i) = (c1*h_i + c2*h_{i+1} + ... + h_{i+k-1}) mod 2^61-1.
 
-    One md5 per TOKEN (not per shingle) and zero string concatenation — the
-    hot-path form of word_shingles+portable_hash48 (measured ~35% faster at
-    sf0.1). Exactly reproducible in SQL with the same constants. Supports
+    One md5 per TOKEN (not per shingle) and zero string concatenation —
+    measured ~35% faster at sf0.1 than joining each shingle's words into a
+    string and hashing it with portable_hash48. Exactly reproducible in SQL
+    with the same constants. Supports
     k up to ``len(SHINGLE_C) + 1`` (k=8 covers the contamination-check
     window).
     """

@@ -17,9 +17,9 @@ mandate — these are first-class engine operators, not demos):
 - embedding_neardup_pairs: cosine near-duplicates over embedding vectors
   (delegates to operators/similarity.py primitives).
 - semantic_dedup_flags: SemDeDup-style embedding-space dedup — centroid
-  bucketing (three assignment tiers: literal / broadcast-table /
-  two-level-routed, chosen by k), within-cluster cosine ≥ eps, greedy
-  lowest-id keeper; optional within-cluster LSH banding for skewed
+  bucketing against caller-supplied centroids (two assignment tiers:
+  literal / broadcast-table, chosen by k), within-cluster cosine ≥ eps,
+  greedy lowest-id keeper; optional within-cluster LSH banding for skewed
   clusters and a persisted-assignment production mode.
 
 Pair lists become clusters in connected_keepers / apply_dedup, the one
@@ -336,214 +336,6 @@ def minhash_lsh_pairs(
     return pairs
 
 
-def _reclaim_shuffles(spark) -> None:
-    """Nudge the driver JVM's GC so ContextCleaner frees FINISHED stages'
-    shuffle files immediately. In one long local-mode lineage the shuffle
-    dependencies of completed jobs are only cleaned when the driver happens
-    to GC — without the nudge the banded 50M rung accumulated 64 GB of dead
-    shuffle files alongside the live job (measured r5) and survived with
-    1 GB to spare. No-op when the JVM handle is unavailable."""
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-
-
-def lsh_docs_table(scratch_dir: str) -> str:
-    """Catalog-table name of :func:`minhash_lsh_pairs_banded`'s bucketed
-    text staging for ``scratch_dir``. The returned pairs DataFrame reads
-    through this table lazily, so the table must outlive consumption;
-    callers own the scratch lifecycle and should ``DROP TABLE`` this name
-    when they delete the scratch dir (the table's data lives inside it)."""
-    import hashlib as _hashlib
-    import os as _os
-
-    digest = _hashlib.md5(_os.path.abspath(scratch_dir).encode()).hexdigest()[:12]
-    return f"lsh_docs_{digest}"
-
-
-def minhash_lsh_pairs_banded(
-    df: DataFrame,
-    id_col: str,
-    content_col: str,
-    scratch_dir: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    max_doc_frequency: int | None = None,
-    max_hot_literal: int = 1_000_000,
-) -> DataFrame:
-    """:func:`minhash_lsh_pairs` restructured for corpora whose one-shot run
-    exceeds the scratch-disk budget: same output pairs, peak disk bounded by
-    the CORPUS TEXT, never the shingle table.
-
-    The one-shot form's disk cost is the materialized shingle inverted index
-    (cache spill or staging): ~#tokens × 8 B of incompressible hash — at
-    50M docs that alone is >65 GB (measured, r5) and no staging order saves
-    it. This form never materializes shingles at all:
-
-    1. The (id, text) projection is staged once — compact parquet, text
-       dictionary-compresses; every later job re-reads it instead of
-       re-running upstream lineage.
-    2. The hot-shingle (df-cap) list comes from a groupBy(h) over
-       shingles computed ON THE FLY — count is map-side-combinable, so the
-       shuffle carries partial counts, not raw shingle rows; its scratch is
-       reclaimed when the job ends. The (by-definition small: only
-       shingles in >cap docs) list is collected — guarded by
-       ``max_hot_literal`` — and applied as a broadcast anti-join /
-       array_except literal downstream.
-    3. MinHash signatures are ONE groupBy(doc) of n_hashes min() aggregates
-       — also map-side-combinable (the shuffle carries one partial row per
-       (partition, doc), 16 longs wide) — staged as the ~50M-row wide table.
-    4. Candidate generation runs BAND-AT-A-TIME (bands are independent: a
-       pair is a candidate iff SOME band matches, so the union of per-band
-       self-joins equals the one-shot join), each band its own job over a
-       projection of the wide table, scratch reclaimed between bands.
-    5. Verification re-derives each candidate doc's shingle SET as an array
-       EXPRESSION over the staged text (map-side; the same per-doc set
-       `_shingle_table` explodes, minus the hot list via array_except) —
-       candidates join the text table on doc_a then doc_b, and Jaccard is
-       ``array_intersect`` arithmetic. Shingles for non-candidate docs are
-       never computed twice; nothing shingle-sized ever hits disk or a
-       shuffle. (At real-corpus dup rates candidates are small and AQE
-       broadcasts them, making the verify a map-only pass over the text.)
-
-    The returned DataFrame reads from ``scratch_dir`` lazily — consume it
-    (write/collect) before deleting the scratch. Callers own the scratch
-    lifecycle; re-invoking with the same dir overwrites the stages.
-    """
-    import os as _os
-
-    from f1_datalakehouse_pipeline_spark.functions.text import (
-        shingle_hashes_from_tokens,
-    )
-    from f1_datalakehouse_pipeline_spark.sources.bucketed import save_bucketed
-
-    spark = df.sparkSession
-    # The text staging is a BUCKETED+SORTED catalog table: the two verify
-    # joins below are keyed on single doc ids, so the corpus side plans
-    # neither Exchange nor Sort (measured: with plain parquet staging the
-    # verify job's two full-corpus sort spills ENOSPC'd the 50M rung even
-    # though every earlier stage fit).
-    docs_table = lsh_docs_table(scratch_dir)
-    spark.sql(f"DROP TABLE IF EXISTS {docs_table}")
-    save_bucketed(
-        df.select(F.col(id_col).alias("doc"), F.col(content_col).alias("__text")),
-        docs_table,
-        ["doc"],
-        32,
-        sort_cols=["doc"],
-        path=_os.path.join(scratch_dir, "docs"),
-    )
-    base = spark.table(docs_table)
-    _reclaim_shuffles(spark)
-
-    sh = (
-        base.select("doc", F.explode(shingle_hashes_from_tokens("__text", k)).alias("h"))
-        .filter(F.col("h").isNotNull())
-    )
-
-    hot_list: list[int] = []
-    if max_doc_frequency is not None:
-        hot_path = _os.path.join(scratch_dir, "hot_shingles")
-        (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_frequency)
-            .select("h")
-            .write.mode("overwrite")
-            .parquet(hot_path)
-        )
-        hot = spark.read.parquet(hot_path)
-        n_hot = hot.count()
-        if n_hot > max_hot_literal:
-            raise ValueError(
-                f"{n_hot} hot shingles exceed max_hot_literal={max_hot_literal}; "
-                "a df-cap this unselective caps most of the corpus — raise "
-                "max_doc_frequency or max_hot_literal"
-            )
-        hot_list = [r[0] for r in hot.collect()]  # bounded by the guard above
-        sh = sh.join(F.broadcast(hot), "h", "left_anti")
-        _reclaim_shuffles(spark)
-
-    terms = [F.min(minhash_term(F.col("h"), i)).alias(f"mh{i}") for i in range(n_hashes)]
-    wide_path = _os.path.join(scratch_dir, "wide_sigs")
-    sh.groupBy("doc").agg(*terms).write.mode("overwrite").parquet(wide_path)
-    wide = spark.read.parquet(wide_path)
-    _reclaim_shuffles(spark)
-
-    rows_per_band = n_hashes // bands
-    cand_path = _os.path.join(scratch_dir, "candidates")
-    for b in range(bands):
-        sig = F.xxhash64(
-            *[F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)]
-        )
-        one = wide.select("doc", sig.alias("band_sig"))
-        a_, b_ = one.alias("a"), one.alias("b")
-        (
-            a_.join(
-                b_,
-                (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .distinct()
-            .write.mode("overwrite" if b == 0 else "append")
-            .parquet(cand_path)
-        )
-    candidates = spark.read.parquet(cand_path).distinct()
-
-    def shingle_set(text_col_name: str):
-        s = F.filter(
-            shingle_hashes_from_tokens(text_col_name, k), lambda x: x.isNotNull()
-        )
-        if hot_list:
-            s = F.array_except(s, F.lit(hot_list).cast("array<bigint>"))
-        return s
-
-    # The only payload that crosses the one candidate-side shuffle (the
-    # doc_b hash for the second join) is TEXT, not the shingle array: text
-    # is smaller and lz4-compresses ~3-4x in shuffle, where the 48-bit hash
-    # arrays are incompressible (measured: carrying arrays doubled the
-    # verify job's sort spill and broke the 50M disk budget). Both sets are
-    # recomputed map-side AFTER the joins; codegen subexpression
-    # elimination evaluates each set expression once per row.
-    ta = base.select(F.col("doc").alias("doc_a"), F.col("__text").alias("__text_a"))
-    tb = base.select(F.col("doc").alias("doc_b"), F.col("__text").alias("__text_b"))
-    return (
-        candidates.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        # hoist each capped set into its OWN projection: the hot-list
-        # literal then appears twice in the plan (once per set), not once
-        # per use, and Catalyst keeps the projection boundary (non-cheap
-        # expressions referenced multiple times are not collapse-inlined),
-        # so each set is built once per row regardless of codegen CSE
-        .select(
-            "doc_a",
-            "doc_b",
-            shingle_set("__text_a").alias("__sa"),
-            shingle_set("__text_b").alias("__sb"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))).alias("inter"),
-            F.size("__sa").alias("n_a"),
-            F.size("__sb").alias("n_b"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def simhash_codes(df: DataFrame, id_col: str, content_col: str, n_bits: int = 48) -> DataFrame:
     """48-bit SimHash per document from token hashes.
 
@@ -597,7 +389,10 @@ def connected_keepers(pairs: DataFrame) -> DataFrame:
 
     More than ``MAX_NEAR_DUP_EDGES`` pairs raise ``ValueError`` instead of
     being truncated: past that the collect no longer fits a small driver
-    budget. The labels are a driver-local DataFrame and read no checkpoint.
+    budget. The labels are a driver-local DataFrame and read no checkpoint;
+    it is coalesced to at most ``defaultParallelism`` partitions, because a
+    large pandas frame arrives as one partition per Arrow batch (700 at
+    7M docs) and the anti-join in :func:`apply_dedup` would read them all.
     """
     import numpy as np
     import pandas as pd
@@ -630,9 +425,10 @@ def connected_keepers(pairs: DataFrame) -> DataFrame:
         lab = lab[lab]
         if np.array_equal(lab, prev):
             break
-    return pairs.sparkSession.createDataFrame(
+    spark = pairs.sparkSession
+    return spark.createDataFrame(
         pd.DataFrame({"doc": docs, "keeper": docs[lab]}), "doc long, keeper long"
-    )
+    ).coalesce(spark.sparkContext.defaultParallelism)
 
 
 def contamination_pairs(
@@ -884,10 +680,9 @@ def semantic_cluster_assign(
 ) -> DataFrame:
     """Assign each embedding to its max-cosine centroid (ties → lowest
     centroid id). Pure projection: the centroid matrix is a small literal
-    (trained out-of-band — ``similarity.kmeans_distributed`` for moderate
-    k, ``similarity.kmeans_hierarchical`` in the k ∝ N regime), so the
-    assignment is map-only — no shuffle, no UDF, and the sequential-fold
-    cosine is bit-reproducible in the DuckDB oracle.
+    that the caller supplies (every caller pins it, e.g. the first k
+    embeddings), so the assignment is map-only — no shuffle, no UDF, and
+    the sequential-fold cosine is bit-reproducible in the DuckDB oracle.
 
     Adds ``cluster_id`` (long) and ``centroid_cos`` (double). The argmax is
     computed as ``array_max`` over ``struct(cos, -cid)`` rows: struct
@@ -944,7 +739,7 @@ def semantic_cluster_assign_table(
     """Broadcast-join twin of :func:`semantic_cluster_assign` for LARGE k.
 
     The literal form bakes an O(k·dim) expression tree into the plan — fine
-    for the IVF/SemDeDup-at-local regime (k·dim ≲ 10⁴) but plan
+    for the SemDeDup-at-local regime (k·dim ≲ 10⁴) but plan
     serialization and Catalyst analysis cost grow linearly, so a 100 TB
     corpus at k ≈ N/cluster_size (easily k ≥ 10⁵) ships centroids as DATA
     instead: ``centroids_df`` is a k-row ``(cluster_id long, centroid
@@ -1025,143 +820,17 @@ def _guard_vec_conflict(id_col: str, vec_col: str):
     ).otherwise(F.col("_v"))
 
 
-def semantic_index_two_level(
-    fine_df: DataFrame,
-    coarse_centroids: list[list[float]],
-) -> DataFrame:
-    """Attach coarse routing ids to a fine-centroid table — the literal
-    assignment reused on the centroid table itself. Input ``(cluster_id,
-    centroid)``; output adds ``coarse_id`` (the fine centroid's own
-    argmax-cosine coarse cell). Train-time-only cost: k_fine × k_coarse
-    cosines over a k_fine-row table."""
-    tmp = fine_df.select(
-        F.col("cluster_id").cast("long").alias("_fid"),
-        F.col("centroid").cast("array<double>").alias("centroid"),
-    )
-    routed = semantic_cluster_assign(tmp, "_fid", "centroid", coarse_centroids)
-    return routed.select(
-        F.col("_fid").alias("cluster_id"),
-        "centroid",
-        F.col("cluster_id").alias("coarse_id"),
-    )
-
-
-def semantic_cluster_assign_two_level(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    indexed_fine_df: DataFrame,
-    coarse_centroids: list[list[float]],
-    nprobe: int = 1,
-) -> DataFrame:
-    """Two-level (IVF-style) centroid assignment — the O(n·k) escape hatch.
-
-    Brute assignment costs n·k cosines; with SemDeDup's k ∝ N regime that
-    trends quadratic in corpus size. The public fix (FAISS coarse
-    quantizer / inverted multi-index shape) is hierarchical routing: score
-    each vector against k_coarse ≈ √k coarse centroids (map-only literal
-    expression), take the top-``nprobe`` cells, and broadcast-join only the
-    fine centroids living in those cells (``indexed_fine_df`` from
-    :func:`semantic_index_two_level`). Cost per vector:
-    k_coarse + nprobe·(k/k_coarse) ≈ 2√k at nprobe=1 — at k = 10⁵ that is
-    ~160× fewer cosines than brute.
-
-    APPROXIMATE for nprobe < #cells, exactly like IVF probing: a vector
-    whose true nearest fine centroid lives outside its probed coarse cells
-    gets its best IN-probe centroid instead (equivalence at full nprobe is
-    tested). Coarse cells with no fine centroids are dropped from the
-    routing array at plan-build time, so every vector always lands in a
-    non-empty cell and no row is ever lost to an empty probe.
-
-    Output schema matches :func:`semantic_cluster_assign_table`, including
-    its duplicate-id precondition: conflicting vectors under one id raise at
-    execution time instead of silently collapsing to an arbitrary one.
-    """
-    from f1_datalakehouse_pipeline_spark.operators import similarity as sim
-
-    fine = indexed_fine_df.select(
-        F.col("cluster_id").cast("long").alias("_cid"),
-        F.col("centroid").cast("array<double>").alias("_cv"),
-        F.col("coarse_id").cast("long").alias("_coarse"),
-        # r11 (opt): fine-centroid norm once per centroid row on the
-        # broadcast side (see semantic_cluster_assign_table)
-        sim.norm(F.col("centroid").cast("array<double>")).alias("_ncv"),
-    )
-    # non-empty coarse cells only (bounded collect: ≤ k_coarse longs)
-    live = sorted(
-        r[0] for r in fine.select("_coarse").distinct().collect()
-    )
-    if not live:
-        raise ValueError("indexed_fine_df has no centroids")
-    nprobe = min(nprobe, len(live))
-
-    # r11 (opt): norm(_v) hoisted to a per-row column shared by the coarse
-    # routing scores AND the fine scoring after the probe join; coarse
-    # centroid norms fold at plan-build time (bit-equal, _centroid_norm).
-    v = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        sim.norm(F.col(vec_col).cast("array<double>")).alias("_nv"),
-    )
-    scores = F.array(
-        *[
-            F.struct(
-                (
-                    sim.dot(
-                        F.col("_v"),
-                        F.array(*[F.lit(float(x)) for x in coarse_centroids[cid]]),
-                    )
-                    / (F.col("_nv") * F.lit(_centroid_norm(coarse_centroids[cid])))
-                ).alias("cos"),
-                F.lit(-cid).cast("long").alias("neg_cid"),
-            )
-            for cid in live
-        ]
-    )
-    probes = F.slice(F.reverse(F.array_sort(scores)), 1, nprobe)
-    routed = v.select(
-        F.col(id_col),
-        F.col("_v"),
-        F.col("_nv"),
-        F.explode(F.transform(probes, lambda s: -s["neg_cid"])).alias("_coarse"),
-    )
-    scored = routed.join(F.broadcast(fine), "_coarse").select(
-        F.col(id_col),
-        F.col("_v"),
-        F.struct(
-            (sim.dot(F.col("_v"), F.col("_cv")) / (F.col("_nv") * F.col("_ncv"))).alias("cos"),
-            (-F.col("_cid")).alias("neg_cid"),
-        ).alias("_s"),
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max("_s").alias("_best"),
-            F.first("_v").alias("_v"),
-            (F.min("_v") != F.max("_v")).alias("_vec_conflict"),
-        )
-        .select(
-            F.col(id_col),
-            _guard_vec_conflict(id_col, vec_col).alias(vec_col),
-            (-F.col("_best.neg_cid")).alias("cluster_id"),
-            F.col("_best.cos").alias("centroid_cos"),
-        )
-    )
-
-
 def semantic_assignment(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     centroids: "list[list[float]] | DataFrame | None",
-    coarse_centroids: "list[list[float]] | None" = None,
-    nprobe: int = 1,
 ) -> DataFrame:
     """Resolve the centroid-assignment tier for the semantic-dedup family
     and return the normalized ``(id_col, _v array<double>, cluster_id)``
-    projection. The three tiers (literal map-only / broadcast-table /
-    IVF two-level) and the ``centroids=None`` pre-assigned passthrough are
-    exactly :func:`semantic_dedup_flags`'s dispatch, factored out so the
+    projection. The two tiers (literal map-only / broadcast-table) and the
+    ``centroids=None`` pre-assigned passthrough are exactly
+    :func:`semantic_dedup_flags`'s dispatch, factored out so the
     incremental corpus pipeline's history probe
     (:func:`semantic_history_hits`) routes batch vectors with the SAME
     rule that produced the persisted members' cluster ids."""
@@ -1170,15 +839,6 @@ def semantic_assignment(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"),
             F.col("cluster_id").cast("long").alias("cluster_id"),
         )
-    if coarse_centroids is not None:
-        if not isinstance(centroids, DataFrame):
-            raise ValueError(
-                "two-level assignment needs centroids as an indexed DataFrame "
-                "(semantic_index_two_level output), got a literal list"
-            )
-        return semantic_cluster_assign_two_level(
-            df, id_col, vec_col, centroids, coarse_centroids, nprobe
-        ).select(F.col(id_col), F.col(vec_col).alias("_v"), "cluster_id")
     if isinstance(centroids, DataFrame):
         return semantic_cluster_assign_table(df, id_col, vec_col, centroids).select(
             F.col(id_col), F.col(vec_col).alias("_v"), "cluster_id"
@@ -1271,8 +931,6 @@ def semantic_dedup_flags(
     vec_col: str,
     centroids: "list[list[float]] | DataFrame | None",
     eps: float,
-    coarse_centroids: "list[list[float]] | None" = None,
-    nprobe: int = 1,
     lsh_planes: "list[list[list[float]]] | None" = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540, public): cluster embeddings,
@@ -1299,14 +957,11 @@ def semantic_dedup_flags(
     banding; removed_lsh ⊆ removed_exact is property-tested, and a single
     empty band degenerates to the exact form bit-for-bit).
 
-    ``centroids`` is either a literal ``list[list[float]]`` (map-only
-    assignment, small k) or a ``(cluster_id, centroid)`` DataFrame
-    (broadcast-join assignment via :func:`semantic_cluster_assign_table`,
-    the large-k scale path); the two forms are equivalence-tested. When
-    ``coarse_centroids`` is also given (centroids must then be the indexed
-    DataFrame carrying ``coarse_id``), assignment routes hierarchically via
-    :func:`semantic_cluster_assign_two_level` — O(√k) per vector instead of
-    O(k), approximate below full ``nprobe``. ``centroids=None`` means ``df``
+    ``centroids`` are supplied by the caller: either a literal
+    ``list[list[float]]`` (map-only assignment, small k) or a
+    ``(cluster_id, centroid)`` DataFrame (broadcast-join assignment via
+    :func:`semantic_cluster_assign_table`, the large-k scale path); the two
+    forms are equivalence-tested. ``centroids=None`` means ``df``
     ALREADY carries ``cluster_id`` (a persisted assignment) — the
     production shape: the lazy form recomputes the assignment for each
     pair-join side, so at scale assign once, write to parquet, then flag
@@ -1314,10 +969,7 @@ def semantic_dedup_flags(
     """
     from f1_datalakehouse_pipeline_spark.operators import similarity as sim
 
-    asg = semantic_assignment(
-        df, id_col, vec_col, centroids,
-        coarse_centroids=coarse_centroids, nprobe=nprobe,
-    )
+    asg = semantic_assignment(df, id_col, vec_col, centroids)
     if lsh_planes is not None:
         if not lsh_planes:
             raise ValueError("lsh_planes must contain at least one band")

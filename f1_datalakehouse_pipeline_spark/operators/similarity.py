@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
+Every function a registry query uses here is a native Column expression or
+a DataFrame plan: no Python UDF, and every floating-point step is a
+fixed-order fold, so the DuckDB oracle reproduces those queries bit for
+bit. pq_encode alone runs numpy over Arrow batches: it is the independent
+reference that tests compare pq_encode_native against.
+
 - cosine columns built from native higher-order functions (zip_with +
-  aggregate): JVM-side, strictly sequential fold → bit-deterministic and
-  exactly reproducible in the DuckDB oracle.
+  aggregate): JVM-side, strictly sequential fold → bit-deterministic.
 - brute_force_topk: the exact baseline — broadcast the (small) query set,
   score every (query, candidate) pair map-side, take per-query top-k with a
   row_number window. No shuffle except the final per-query top-k.
-- lsh_bucketed_topk: the scale path — random-hyperplane signs bucket the
-  vectors; only same-bucket pairs are scored. At 100 TB the bucket join
-  replaces the cartesian scoring; recall is tunable via n_planes/probes.
-
-At real scale the brute-force scorer would move to a vectorized Pandas UDF
-over Arrow batches (numpy matmul per batch); the native-expression fold is
-kept as the oracle-matching reference implementation.
+- lsh_bucketed_topk: random-hyperplane signs bucket the vectors; only
+  same-bucket pairs are scored, so the bucket join replaces the cartesian
+  scoring; recall is tunable via the number of planes.
+- sq8_*: scalar 8-bit quantization (min/max per dimension, dequantized
+  scoring).
+- pq_* / ivfpq_residual_native: product quantization with a pinned
+  codebook — map-only encode, ADC top-k, and residual-encoded IVFADC with
+  coarse-list probing.
 
 The fold is also the FASTEST native form, not just the cleanest (measured
 r6, Spark 4.1, 2M rows × 64-dim): aggregate(zip_with(...)) 0.71 s vs a
@@ -166,632 +172,6 @@ def lsh_bucketed_topk(
     )
 
 
-def brute_force_topk_vectorized(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """The 100 TB scale path: numpy matmul per Arrow batch via mapInPandas.
-
-    The (small) query matrix is closed over and shipped once per task; each
-    Arrow batch of candidates scores against ALL queries in one BLAS call —
-    the Python boundary is paid per-batch, not per-pair. Result semantics
-    match brute_force_topk up to float associativity (matmul reorders sums),
-    hence this variant is NOT the oracle-matching one.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids[np.newaxis, :], n_c, axis=0).ravel(),
-                    "neighbor_id": np.repeat(c_ids, n_q),
-                    "cosine": sims.ravel(),
-                }
-            )
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
-
-
-def kmeans_distributed(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    iters: int = 5,
-    assign: str = "literal",
-) -> list[list[float]]:
-    """Spherical k-means trained FULLY DISTRIBUTED (Lloyd's iterations as
-    DataFrame aggregations) — the 100 TB trainer for the IVF quantizer.
-
-    Per iteration: every vector is assigned to its argmax-cosine centroid;
-    the centroid update is one ``posexplode → groupBy(list, dim) → avg``
-    shuffle whose output is exactly ``n_lists × dim`` rows — only that tiny
-    aggregate ever reaches the driver (re-normalization), regardless of
-    table size. Deterministic: initialization picks the ``n_lists`` vectors
-    with the smallest ``xxhash64(id)`` (seedless but stable), assignment
-    ties break to the first list. Empty clusters keep their previous
-    centroid.
-
-    ``assign="literal"`` (default) bakes centroids into the plan as literal
-    arrays — map-only, but the expression tree is O(n_lists·dim), so
-    Catalyst analysis cost caps practical n_lists at a few thousand.
-    ``assign="table"`` ships each iteration's centroids as a broadcast
-    ``(cid, centroid)`` DataFrame instead (same tiering rationale as
-    dedup.semantic_cluster_assign_table) — per-iteration cost gains one
-    map-combinable max(struct) aggregation, plan size becomes independent
-    of n_lists, and the driver round-trips n_lists × dim doubles between
-    iterations (51 MB at k=10⁵ · dim=64 — data, not expression). The two
-    modes are bit-equivalence-tested (same dot fold, same tie rule).
-    """
-    if assign not in ("literal", "table"):
-        raise ValueError(f"assign must be 'literal' or 'table', got {assign!r}")
-    v = embeddings.select(
-        F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-    )
-    nrm = F.greatest(norm(F.col("__v")), F.lit(1e-12))
-    v = v.select("__id", F.transform(F.col("__v"), lambda x: x / nrm).alias("__nv"))
-    init = v.orderBy(F.xxhash64(F.col("__id")), F.col("__id")).limit(n_lists).collect()
-    cent: list[list[float]] = [list(r["__nv"]) for r in init]
-    dim = len(cent[0])
-    spark = embeddings.sparkSession
-    for _ in range(iters):
-        if assign == "table":
-            cdf = spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cent)],
-                "__cid long, __cv array<double>",
-            )
-            assigned = (
-                v.join(F.broadcast(cdf))
-                .select(
-                    "__id",
-                    "__nv",
-                    F.struct(
-                        dot(F.col("__nv"), F.col("__cv")).alias("s"),
-                        (-F.col("__cid")).alias("nc"),
-                    ).alias("__p"),
-                )
-                .groupBy("__id")
-                .agg(F.max("__p").alias("__b"), F.first("__nv").alias("__nv"))
-                .select((-F.col("__b.nc")).cast("int").alias("__list"), "__nv")
-            )
-        else:
-            cent_cols = [F.array(*[F.lit(float(x)) for x in c]) for c in cent]
-            scores = F.array(*[dot(F.col("__nv"), cc) for cc in cent_cols])
-            am = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-            assigned = v.select(am.alias("__list"), "__nv")
-        sums = (
-            assigned.select(
-                "__list", F.posexplode("__nv").alias("__pos", "__x")
-            )
-            .groupBy("__list", "__pos")
-            .agg(F.avg("__x").alias("__m"))
-            .collect()
-        )
-        by_list: dict[int, list[float]] = {}
-        for r in sums:
-            by_list.setdefault(r["__list"], [0.0] * dim)[r["__pos"]] = r["__m"]
-        for j, mean in by_list.items():
-            n2 = max(sum(x * x for x in mean) ** 0.5, 1e-12)
-            cent[j] = [x / n2 for x in mean]
-    return cent
-
-
-def _allocate_fine_budget(counts: dict[int, int], n_lists: int) -> dict[int, int]:
-    """Population-proportional fine-codebook allocation for the hierarchical
-    trainer: largest-remainder rounding, clamped at each cell's
-    distinct-vector supply, floor of 1 per occupied cell (every cell must
-    stay probe-able), excess re-distributed.
-
-    Returns exactly ``min(n_lists, sum(counts))`` per-cell allocations when
-    feasible. Over-allocation can only come from the 1-per-cell floor on
-    skewed splits (cells with quota < 1); the trim loop takes centroids back
-    from cells that CAN yield — ``alloc > 1``, largest overshoot
-    ``alloc - quota`` first (ADVICE r7: the old trim maxed over ALL cells,
-    always selected an untouchable ``alloc == 1`` floor cell and broke
-    immediately, returning > ``n_lists`` centroids on skewed corpora)."""
-    n = max(1, sum(counts.values()))
-    quota = {c: n_lists * cnt / n for c, cnt in counts.items()}
-    alloc = {c: max(1, int(q)) for c, q in quota.items()}
-    alloc = {c: min(a, counts[c]) for c, a in alloc.items()}
-    while sum(alloc.values()) < n_lists:
-        room = [c for c in alloc if alloc[c] < counts[c]]
-        if not room:
-            break
-        c = max(room, key=lambda c: (quota[c] - alloc[c], counts[c], -c))
-        alloc[c] += 1
-    while sum(alloc.values()) > n_lists:
-        room = [c for c in alloc if alloc[c] > 1]
-        if not room:
-            # all cells at the floor: #occupied <= k_coarse <= n_lists, so
-            # this state implies sum == #cells <= n_lists — unreachable with
-            # the loop condition, kept as a defensive stop
-            break
-        c = max(room, key=lambda c: (alloc[c] - quota[c], -counts[c], c))
-        alloc[c] -= 1
-    return alloc
-
-
-def kmeans_hierarchical(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 1024,
-    coarse_train: str = "sample",
-    coarse_iters: int = 4,
-    fine_iters: int = 8,
-    sample_per_list: int = 32,
-    seed: int = 13,
-    prefilter: bool = True,
-) -> tuple[list[list[float]], list[list[float]]]:
-    """Two-level trainer for the SemDeDup k ∝ N regime; returns
-    ``(fine_centroids, coarse_centroids)``.
-
-    Why it exists (PERF_NOTES r6): at k = N/100 the two affordable trainers
-    both break down — driver-side sample training caps the sample at
-    ~2/centroid so dense regions collapse onto duplicate centroids
-    (13,957 of 50,000 lists live at 5M vectors, pair mass 3.6× the ideal
-    N·cluster/2 line), while FLAT distributed Lloyd's is O(N·k·dim) per
-    iteration (5M × 50K × 64 ≈ 1.6e13 multiplies — hours per sweep on 32
-    cores, and no partitioning saves a dense all-centroids argmax).
-
-    The hierarchical shape fixes both at once, using only machinery that
-    scales: a √k-list COARSE quantizer splits the corpus into ~√k cells
-    (``coarse_train="distributed"`` runs whole-corpus Lloyd's — affordable
-    because k_coarse = √k — else the bounded-sample trainer), each vector
-    is routed to its cell in ONE O(√k) map pass, and every cell then trains
-    its own fine sub-codebook with the PER-CELL numpy Lloyd's inside ONE
-    ``applyInPandas`` pass — embarrassingly parallel, Arrow-batched, one
-    shuffle on the cell key (the ``prefilter`` rank window clusters on the
-    same key, so capping the per-cell training sample BEFORE the Arrow
-    transfer adds no Exchange). The fine budget is allocated ∝ cell population
-    (largest-remainder rounding, clamped at the cell's distinct-vector
-    supply and re-distributed), which is exactly the fill guarantee the
-    flat sample trainer lacks: a cell holding 4% of the corpus gets 4% of
-    the codebook, and its trainer sees ``sample_per_list`` vectors per
-    centroid instead of 2. Total driver traffic: k×dim doubles (the
-    returned codebook) + √k cell counts — independent of corpus size.
-
-    Driver-residency boundary: the returned codebook is DELIBERATELY
-    driver-resident — k×dim float64 (k=50K, dim=64 ≈ 26 MB; k=1M,
-    dim=1024 ≈ 8 GB). That is not an accident of ``collect()``: every
-    assignment tier (literal / broadcast-table / two-level) must
-    broadcast the codebook to executors anyway, so this function's driver
-    budget is exactly ``k·dim·8`` bytes — size driver memory (or cap
-    ``n_lists``) accordingly at true 100 TB k ∝ N scale.
-
-    The output pairs naturally with ``dedup.semantic_index_two_level``:
-    fine centroids are born grouped under the same coarse geometry the
-    router probes.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    if coarse_train not in ("sample", "distributed"):
-        raise ValueError(
-            f"coarse_train must be 'sample' or 'distributed', got {coarse_train!r}"
-        )
-    n = embeddings.count()
-    if n == 0:
-        raise ValueError("cannot train on an empty embeddings table")
-    n_lists = min(n_lists, n)
-    k_coarse = max(1, min(int(math.isqrt(n_lists)) or 1, n_lists))
-    if coarse_train == "distributed":
-        # k_coarse = √k stays far below the literal-assignment ceiling
-        # (a few thousand lists), and literal mode is MAP-ONLY — table
-        # mode's per-iteration groupBy(__id) re-keys the whole corpus
-        # (measured at the 5M rung: ~30 min per Lloyd's stage vs minutes).
-        # Fall back to the broadcast-table tier only past the ceiling.
-        coarse = kmeans_distributed(
-            embeddings, id_col, vec_col,
-            n_lists=k_coarse, iters=coarse_iters,
-            assign="literal" if k_coarse <= 1024 else "table",
-        )
-    else:
-        coarse = ivf_train(
-            embeddings, id_col, vec_col, n_lists=k_coarse,
-            train_sample=max(4096, sample_per_list * k_coarse),
-            seed=seed, kmeans_iters=coarse_iters, train="sample",
-        )
-
-    v = embeddings.select(
-        F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-    )
-    nrm = F.greatest(norm(F.col("__v")), F.lit(1e-12))
-    v = v.select("__id", F.transform(F.col("__v"), lambda x: x / nrm).alias("__nv"))
-    # O(√k) literal argmax per vector — one map pass, k_coarse is small
-    scores = F.array(*[dot(F.col("__nv"), cc) for cc in _centroid_exprs(coarse)])
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-    # Persist the routed corpus so the coarse argmax projection runs ONCE:
-    # both consumers below (the cell-population collect and the fine-training
-    # applyInPandas pass) read the materialized assignment instead of each
-    # recomputing the full-corpus O(N·√k) routing (ADVICE r7).
-    routed = v.select(
-        F.col("__id"), F.col("__nv"), cell.alias("__cell")
-    ).persist()
-    assigned = routed
-
-    counts = {
-        r["__cell"]: r["cnt"]
-        for r in assigned.groupBy("__cell").agg(F.count("*").alias("cnt")).collect()
-    }
-    alloc = _allocate_fine_budget(counts, n_lists)
-
-    cap = {c: max(sample_per_list * a, 256) for c, a in alloc.items()}
-
-    if prefilter:
-        # Ship only each cell's training sample through the Python
-        # boundary: rank rows inside their cell by the SAME deterministic
-        # id hash the in-pandas trainer sorts by, and drop everything past
-        # the cell's cap BEFORE the Arrow transfer. The hash is built from
-        # ANSI-SAFE ops only (ADVICE r7: the old wraparound multiply threw
-        # ARITHMETIC_OVERFLOW under spark.sql.ansi.enabled=true — Spark 4's
-        # default, which only this repo's session helper pins off): mask to
-        # 31 bits, multiply by a 31-bit odd constant (product <= ~2^62,
-        # never overflows int64), fold the high bits back with xor. Java
-        # long and numpy int64 agree bit-for-bit on every op. The window
-        # and the group-by cluster on the same key, so this adds no extra
-        # Exchange; at the 5M/k=50K rung it cuts fine-pass Python traffic
-        # from N rows to Σ caps (~3×). train_cell still sorts and truncates
-        # internally (idempotent on the prefiltered set), so
-        # prefilter=False is bit-identical — the tested contract.
-        idl = F.col("__id").cast("long")
-        hash_col = (
-            (idl.bitwiseAND(F.lit(0x7FFFFFFF)) * F.lit(1640531527))
-            .bitwiseXOR(F.shiftright(idl, 31))
-            .bitwiseXOR(F.lit(seed).cast("long"))
-        )
-        cap_df = embeddings.sparkSession.createDataFrame(
-            [(c, m) for c, m in cap.items()], "__cell int, __cap int"
-        )
-        assigned = (
-            assigned.withColumn(
-                "__rk",
-                F.row_number().over(
-                    Window.partitionBy("__cell").orderBy(hash_col, F.col("__id"))
-                ),
-            )
-            .join(F.broadcast(cap_df), "__cell")
-            .filter(F.col("__rk") <= F.col("__cap"))
-            .drop("__rk", "__cap")
-        )
-
-    def train_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cell_id = int(key[0])
-        kc = alloc.get(cell_id, 0)
-        if kc <= 0:
-            return pd.DataFrame({"cell": [], "centroid": []})
-        x = np.stack(pdf["__nv"].to_numpy())
-        # deterministic subsample + init: order by the same ANSI-safe
-        # integer hash the prefilter ranks by (masked multiply + xor — no
-        # int64 overflow on either runtime), id tiebreak, so reruns and
-        # repartitions see the same training set
-        ids = pdf["__id"].to_numpy().astype(np.int64)
-        h = (
-            ((ids & np.int64(0x7FFFFFFF)) * np.int64(1640531527))
-            ^ (ids >> np.int64(31))
-            ^ np.int64(seed)
-        )
-        order = np.lexsort((ids, h))
-        x = x[order][: cap[cell_id]]
-        kc = min(kc, len(x))
-        cent = x[:kc].copy()
-        for _ in range(fine_iters):
-            assign = np.empty(len(x), dtype=np.int64)
-            block = max(1, min(len(x), (1 << 27) // max(len(cent), 1)))
-            for s in range(0, len(x), block):
-                assign[s : s + block] = np.argmax(x[s : s + block] @ cent.T, axis=1)
-            sums = np.zeros_like(cent)
-            cnts = np.zeros(len(cent), dtype=np.int64)
-            np.add.at(sums, assign, x)
-            np.add.at(cnts, assign, 1)
-            nz = cnts > 0
-            cent[nz] = sums[nz] / cnts[nz, None]
-            cent = cent / np.maximum(
-                np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
-            )
-        return pd.DataFrame(
-            {"cell": [cell_id] * len(cent), "centroid": [list(map(float, c)) for c in cent]}
-        )
-
-    try:
-        fine_rows = (
-            assigned.groupBy("__cell")
-            .applyInPandas(train_cell, schema="cell int, centroid array<double>")
-            .collect()
-        )
-    finally:
-        routed.unpersist()
-    fine = [list(r["centroid"]) for r in fine_rows]
-    return fine, coarse
-
-
-def ivf_train(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    train_sample: int = 2048,
-    seed: int = 13,
-    kmeans_iters: int = 5,
-    train: str = "sample",
-    metric: str = "dot",
-) -> list[list[float]]:
-    """Train the IVF coarse quantizer; returns ``n_lists`` unit centroids.
-
-    ``metric="dot"`` (default) is spherical k-means — unit centroids, argmax
-    dot assignment — matching the cosine-flavored IVF serve path.
-    ``metric="l2"`` (sample tier only) is plain Lloyd's in L2: no
-    normalization, argmin squared-distance assignment — the coarse
-    quantizer canonical residual IVFADC needs, since residuals are only
-    small when the assignment minimizes the same metric ADC scores in
-    (measured: dot-assigned residuals LOSE recall vs raw encoding; L2
-    residuals win — PERF_NOTES r9).
-
-    ``train="sample"`` (default) trains driver-side on a bounded sample
-    (numpy k-means on ≤ ``train_sample`` vectors — O(sample·dim·lists),
-    independent of table size). ``train="distributed"`` trains with
-    :func:`kmeans_distributed` — Lloyd's iterations as DataFrame
-    aggregations, so the quantizer sees the WHOLE corpus and only k×dim
-    centroid rows touch the driver; the 100 TB path for MODERATE k (its
-    per-iteration cost is O(N·k·dim) — at the SemDeDup k ∝ N regime that
-    is quadratic in N, so there use ``train="hierarchical"``:
-    :func:`kmeans_hierarchical`'s √k-cell split + per-cell parallel fine
-    training, O(N·√k·dim) total with population-proportional codebook
-    fill)."""
-    import numpy as np
-
-    if metric not in ("dot", "l2"):
-        raise ValueError(f"metric must be 'dot' or 'l2', got {metric!r}")
-    if metric == "l2" and train != "sample":
-        raise ValueError("metric='l2' is implemented for the sample tier only")
-    if train == "hierarchical":
-        fine, _coarse = kmeans_hierarchical(
-            embeddings, id_col, vec_col, n_lists=n_lists,
-            fine_iters=kmeans_iters, seed=seed,
-        )
-        return fine
-    if train == "distributed":
-        cent = np.array(
-            kmeans_distributed(
-                embeddings, id_col, vec_col, n_lists=n_lists, iters=kmeans_iters
-            ),
-            dtype=np.float64,
-        )
-    elif train == "sample":
-        sample = (
-            embeddings.select(vec_col)
-            .sample(fraction=1.0, seed=seed)
-            .limit(train_sample)
-            .collect()
-        )
-        x = np.array([r[0] for r in sample], dtype=np.float64)
-        if metric == "dot":
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        rng = np.random.RandomState(seed)
-        cent = x[rng.choice(len(x), size=min(n_lists, len(x)), replace=False)]
-        for _ in range(kmeans_iters):
-            # blocked argmax: a one-shot x @ cent.T is sample×lists doubles
-            # (40 GB at 100K×50K — the SemDeDup k ∝ N regime), so score in
-            # row blocks; same result, bounded memory
-            assign = np.empty(len(x), dtype=np.int64)
-            block = max(1, min(len(x), (1 << 27) // max(len(cent), 1)))
-            for s in range(0, len(x), block):
-                scores = x[s : s + block] @ cent.T
-                if metric == "l2":
-                    # argmin ||x-c||^2 = argmin(-2x.c + ||c||^2)
-                    assign[s : s + block] = np.argmin(
-                        -2.0 * scores + (cent**2).sum(axis=1)[None, :], axis=1
-                    )
-                else:
-                    assign[s : s + block] = np.argmax(scores, axis=1)
-            # vectorized per-centroid mean (a python loop over 50K centroids
-            # with a full-sample mask each would be quadratic-ish)
-            sums = np.zeros_like(cent)
-            counts = np.zeros(len(cent), dtype=np.int64)
-            np.add.at(sums, assign, x)
-            np.add.at(counts, assign, 1)
-            nz = counts > 0
-            cent[nz] = sums[nz] / counts[nz, None]
-            if metric == "dot":
-                cent = cent / np.maximum(
-                    np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
-                )
-    else:
-        raise ValueError(
-            f"train must be 'sample', 'distributed' or 'hierarchical', got {train!r}"
-        )
-    return [[float(v) for v in row] for row in cent]
-
-
-def _centroid_exprs(centroids: list[list[float]]) -> list[Column]:
-    return [F.array(*[F.lit(float(v)) for v in c]) for c in centroids]
-
-
-def _top_lists(vec: Column, centroids: list[list[float]], n: int) -> Column:
-    scores = F.array(*[dot(vec, c) for c in _centroid_exprs(centroids)])
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    pairs = F.zip_with(scores, idx, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-    return F.slice(F.reverse(F.array_sort(pairs)), 1, n)
-
-
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "native",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid's list: the IVF INDEX
-    BUILD. Returns ``(id, vector, list_id)`` — persist/write this once and
-    serve many query batches from it (:func:`ivf_query`): rebuilding the
-    assignment per query batch costs as much as one brute-force pass when
-    n_queries ≈ n_lists, which is exactly the mistake index amortization
-    exists to avoid (measured in tools/ann_stress.py).
-
-    ``method="native"``: pure codegen expressions (no Python boundary —
-    and exactly the assignment :func:`ivf_topk` has always used; ties pick
-    the higher list id). ``method="vectorized"``: Arrow-batched numpy
-    matmul against the (tiny) centroid matrix — one BLAS call per batch,
-    ~n_lists× less expression work per row; ties pick the lower list id.
-    Tie direction only matters for exactly-duplicated centroid scores."""
-    if method == "native":
-        return embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        ).withColumn("list_id", _top_lists(F.col("cv"), centroids, 1)[0]["i"])
-    if method != "vectorized":
-        raise ValueError(f"method must be 'native' or 'vectorized', got {method!r}")
-    import numpy as np
-    import pandas as pd
-
-    cent = np.array(centroids, dtype=np.float64)
-    out_schema = "neighbor_id long, cv array<double>, list_id int"
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            lists = np.argmax(c_mat @ cent.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "cv": list(c_mat),
-                    "list_id": lists,
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(assign, schema=out_schema)
-
-
-def ivf_write_index(assigned: DataFrame, path: str) -> None:
-    """Persist an IVF index PARTITIONED BY list id — the 100 TB layout: a
-    query batch probing ``n_probe`` of ``n_lists`` lists then reads only
-    that fraction of the index from storage. The probe side arrives as a
-    broadcast join on ``list_id``, so Spark's dynamic partition pruning
-    skips the unprobed list directories at scan time (plan shows a
-    ``dynamicpruning`` subquery on the partition filter — asserted by
-    test_ivf_disk_index_prunes_lists). Compute-bound local benches can't
-    show this win (tools/ann_stress.py discloses it); at storage scale the
-    scan reduction IS the operator."""
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(path)
-
-
-def ivf_read_index(spark, path: str) -> DataFrame:
-    """Read a persisted IVF index (list_id surfaces as partition column)."""
-    return spark.read.parquet(path)
-
-
-def ivf_query(
-    assigned: DataFrame,
-    centroids: list[list[float]],
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 3,
-) -> DataFrame:
-    """Serve one query batch from a prebuilt IVF index (``assigned`` from
-    :func:`ivf_assign`, typically persisted): each query probes its
-    ``n_probe`` nearest lists, candidates join on list id (broadcast query
-    side — small by contract), exact cosine re-rank on candidates only.
-    Per-batch cost ∝ corpus·n_probe/n_lists, independent of how many query
-    batches the index has already served."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        norm(_as_double(F.col(vec_col))).alias("_nq"),
-    ).withColumn(
-        "list_id",
-        F.explode(
-            F.transform(_top_lists(F.col("qv"), centroids, n_probe), lambda s: s["i"])
-        ),
-    )
-    # per-row norm precompute before the probe join (r11): candidate norms
-    # once per (row, probed list), query norms once per query — the pair
-    # score keeps the identical dot/(nq*nc) expression tree
-    cand = assigned.withColumn("_nc", norm(_as_double(F.col("cv"))))
-    scored = (
-        cand.join(F.broadcast(q), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("_nq") * F.col("_nc"))).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 3,
-    train_sample: int = 2048,
-    seed: int = 13,
-    kmeans_iters: int = 5,
-    train: str = "sample",
-) -> DataFrame:
-    """IVF-style approximate top-k: k-means coarse quantizer + probe lists —
-    the one-shot convenience form (:func:`ivf_train` → :func:`ivf_assign` →
-    :func:`ivf_query` composed). For repeated query batches, build the index
-    once with train+assign, persist it, and call :func:`ivf_query` per
-    batch: assignment is the expensive part and amortizes across batches.
-    Recall is tuned by ``n_probe``."""
-    centroids = ivf_train(
-        embeddings,
-        id_col,
-        vec_col,
-        n_lists=n_lists,
-        train_sample=train_sample,
-        seed=seed,
-        kmeans_iters=kmeans_iters,
-        train=train,
-    )
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col, method="native")
-    return ivf_query(
-        assigned, centroids, queries, id_col, vec_col, k=k, n_probe=n_probe
-    )
-
-
 # ---------------------------------------------------------------------------
 # Quantized vector search: SQ8 (scalar) and PQ (product quantization)
 # ---------------------------------------------------------------------------
@@ -808,14 +188,10 @@ def ivf_topk(
 #     candidates via ADC (asymmetric distance computation) — a per-query
 #     lookup table of m×n_codes partial distances, so a candidate costs m
 #     table adds instead of a dim-length dot product.
-# Both quantizers here come in two tiers, mirroring ivf_assign:
-#   - a NATIVE-expression tier whose arithmetic is a strictly sequential
-#     fold, bit-reproducible in the DuckDB oracle (codebook pinned to the
-#     first n_codes rows — the same deterministic stand-in for an
-#     out-of-band k-means that dedup_semantic's oracle uses);
-#   - a VECTORIZED Arrow/numpy tier (pq_train/pq_encode/pq_adc_topk) — the
-#     production path: k-means codebooks from a bounded driver-side sample,
-#     one argmin matmul per Arrow batch, codes stored as array<tinyint>.
+# Both quantizers here are native expressions whose arithmetic is a
+# strictly sequential fold, bit-reproducible in the DuckDB oracle. The PQ
+# codebook is pinned to the first n_codes rows (pq_codebook_pinned), so the
+# oracle derives the identical codebook from the table itself.
 
 
 def sq8_minmax(
@@ -920,9 +296,9 @@ def pq_codebook_pinned(
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Deterministic PQ codebook: codeword c of subspace s is the s-th
-    subvector of the c-th embedding (id < n_codes) — the bounded-collect
-    stand-in for pq_train's k-means, chosen so the DuckDB oracle can derive
-    the identical codebook from the table itself. Returns
+    subvector of the c-th embedding (id < n_codes) — a bounded collect,
+    chosen so the DuckDB oracle can derive the identical codebook from the
+    table itself. Returns
     codebooks[s][c] = list[dsub floats]."""
     rows = (
         embeddings.filter(F.col(id_col) < n_codes)
@@ -985,179 +361,18 @@ def pq_encode_native(
     )
 
 
-def pq_adc_topk_native(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """ADC top-k over PQ codes, native-expression tier: the full-precision
-    query meets each candidate only through its m code ids — distance is a
-    left-fold sum over subspaces of L2²(query_sub, codeword[code_s]), every
-    add in fixed order (oracle-reproducible). Candidates stream map-side
-    against the broadcast query set; the only shuffle is the top-k window.
-    (The vectorized tier precomputes the m×n_codes lookup table per query —
-    same math, LUT adds instead of dim-length folds.)"""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    # Codebook as broadcast DATA, not expression-tree literals — see
-    # pq_encode_native above for the rationale/measurement.
-    consts = F.broadcast(
-        encoded.sparkSession.createDataFrame(
-            [(codebooks,)], "cb array<array<array<double>>>"
-        )
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    per_sub = []
-    for s in range(m):
-        qsub = F.slice(F.col("qv"), s * dsub + 1, dsub)
-        cw = F.element_at(F.col("cb")[s], F.col("codes")[s] + 1)
-        per_sub.append(_l2sq(qsub, cw))
-    adc = F.aggregate(F.array(*per_sub), F.lit(0.0), lambda acc, x: acc + x)
-    scored = (
-        encoded.crossJoin(consts)
-        .join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", adc.alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
-
-
-def _fill_empty_cells(xs, cent, asg, empties, k) -> None:
-    """Re-seed every empty k-means cell from a DISTINCT donor point.
-
-    Donors are pooled from clusters in descending-size order, each cluster's
-    members ranked farthest-first against the UPDATED centroid (the caller's
-    pre-update distance matrix is stale once means move). Donors that sit
-    exactly ON their cluster centroid are skipped in the first pass — seeding
-    from them would mint a codeword duplicating that centroid (the
-    effective-code-count shrink this function exists to avoid); they are the
-    whole cluster only when the cluster is all-duplicate points. A second
-    pass relaxes that filter for degenerate samples (fewer distinct points
-    than cells), where duplicates are information-theoretically unavoidable.
-    Mutates ``cent`` in place."""
-    import numpy as np
-
-    counts = np.bincount(asg, minlength=k)
-    order = np.argsort(-counts, kind="stable")
-    pool: list[int] = []
-    for allow_zero_dist in (False, True):
-        for big in order:
-            if counts[big] < 2:
-                break  # descending order: only singleton/empty cells remain
-            cand = np.flatnonzero(asg == big)
-            dd = ((xs[cand] - cent[big][None, :]) ** 2).sum(axis=1)
-            if not allow_zero_dist:
-                cand, dd = cand[dd > 0], dd[dd > 0]
-            else:
-                cand, dd = cand[dd == 0], dd[dd == 0]
-                # one copy already lives on as the centroid; keep cand and
-                # dd the same length or the argsort below walks off the end
-                cand, dd = cand[1:], dd[1:]
-            pool.extend(cand[np.argsort(-dd, kind="stable")].tolist())
-            if len(pool) >= len(empties):
-                break
-        if len(pool) >= len(empties):
-            break
-    if len(pool) < len(empties):
-        # Pool exhaustion: the remaining cells get cent[asg[0]] — identical
-        # codewords, shrinking the effective code count this function exists
-        # to protect. Possible only on (near-)degenerate samples (fewer
-        # distinct points than cells); say so instead of silently minting
-        # duplicates (ADVICE r9).
-        import warnings
-
-        warnings.warn(
-            f"_fill_empty_cells: donor pool exhausted — {len(empties) - len(pool)} "
-            f"of {len(empties)} empty cells fall back to a duplicate codeword "
-            "(sample has fewer distinct points than cells); effective code "
-            "count shrinks accordingly",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    for j, c in enumerate(empties):
-        cent[c] = xs[pool[j]] if j < len(pool) else cent[asg[0]]
-
-
-def pq_train(
-    embeddings: DataFrame,
-    n_codes: int = 256,
-    m: int = 8,
-    vec_col: str = "embedding",
-    train_sample: int = 4096,
-    seed: int = 13,
-    iters: int = 10,
-) -> list[list[list[float]]]:
-    """Production PQ codebooks: per-subspace Lloyd's k-means on a bounded
-    deterministic sample (seeded hash order, ≤ train_sample rows collected —
-    the same driver-budget contract as ivf_train's sample tier; the
-    codebook itself is m·n_codes·dsub doubles, broadcast everywhere it is
-    used). Empty clusters re-seed to distinct farthest DATA POINTS pooled
-    from the largest clusters (size >= 2), so the codebook always fills;
-    codewords stay pairwise distinct whenever the sample carries enough
-    distinct values — duplicate-valued donors (or the pool-exhaustion
-    fallback on fully-degenerate samples) can still mint equal codewords,
-    which is information-theoretically unavoidable below the
-    distinct-value count."""
-    import numpy as np
-
-    sample = (
-        embeddings.select(_as_double(F.col(vec_col)).alias("v"))
-        .withColumn("__r", F.xxhash64(F.col("v").cast("string"), F.lit(seed)))
-        .orderBy("__r")
-        .limit(train_sample)
-        .collect()
-    )
-    x = np.array([r["v"] for r in sample], dtype=np.float64)
-    n, dim = x.shape
-    _check_pq_dims(dim, m)
-    dsub = dim // m
-    k = min(n_codes, n)
-    books = []
-    for s in range(m):
-        xs = x[:, s * dsub : (s + 1) * dsub]
-        rng = np.random.default_rng(seed + s)
-        cent = xs[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(iters):
-            d = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            asg = d.argmin(axis=1)
-            # re-seed empty cells AFTER the mean updates, each from a
-            # DISTINCT farthest point of the largest cluster — re-seeding
-            # every empty cell from the same frozen argmax would duplicate
-            # codewords and silently shrink the effective code count
-            empties = [c for c in range(k) if not (asg == c).any()]
-            for c in range(k):
-                mask = asg == c
-                if mask.any():
-                    cent[c] = xs[mask].mean(axis=0)
-            if empties:
-                _fill_empty_cells(xs, cent, asg, empties, k)
-        books.append([[float(v) for v in row] for row in cent])
-    return books
-
-
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized PQ encode: one (batch × n_codes) argmin matmul per
-    subspace per Arrow batch. Output (id, codes array<smallint>) — logically
-    m bytes of payload per vector (code ids < 256; Spark has no unsigned
-    8-bit type, and parquet dictionary+RLE encoding stores the smallint
-    column at ~1 B/code anyway), the 32× compression the index persists.
-    Ties pick the lowest code id (numpy argmin). Caveat vs
-    pq_encode_native: distances here use the expanded form
-    (−2x·c + ‖c‖², one BLAS call) whose rounding differs from the exact
+    """Vectorized PQ encode, kept as the independent reference that
+    tests/test_pq.py compares :func:`pq_encode_native` against: one
+    (batch × n_codes) argmin matmul per subspace per Arrow batch. Output
+    (id, codes array<smallint>). Ties pick the lowest code id (numpy
+    argmin). Caveat vs pq_encode_native: distances here use the expanded
+    form (−2x·c + ‖c‖², one BLAS call) whose rounding differs from the exact
     fold, so a pair of codewords EXACTLY equidistant from x in true L2 can
     break the other way — code parity with the native tier is exact on
     real-valued data (asserted on the test corpus) but not guaranteed on
@@ -1196,7 +411,7 @@ def pq_encode(
     return embeddings.select(id_col, vec_col).mapInPandas(encode, schema=out_schema)
 
 
-def pq_adc_topk(
+def pq_adc_topk_native(
     encoded: DataFrame,
     queries: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1204,55 +419,33 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Vectorized ADC: per task, build each query's m×n_codes lookup table
-    once (LUT[s][c] = L2²(q_sub_s, codeword_c)), then every candidate costs
-    m int-indexed adds — the classic IVFADC inner loop, here as one numpy
-    gather per (batch × query). Scores differ from the native tier only by
-    float summation order."""
-    import numpy as np
-    import pandas as pd
-
-    cent = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(cent)
-    dsub = cent[0].shape[1]
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # luts[q][s][c]
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    ((q[s * dsub : (s + 1) * dsub] - cent[s]) ** 2).sum(axis=1)
-                    for s in range(m)
-                ]
-            )
-            for q in q_mat
-        ]
+    """ADC top-k over PQ codes, native-expression tier: the full-precision
+    query meets each candidate only through its m code ids — distance is a
+    left-fold sum over subspaces of L2²(query_sub, codeword[code_s]), every
+    add in fixed order (oracle-reproducible). Candidates stream map-side
+    against the broadcast query set; the only shuffle is the top-k window."""
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
+    # Codebook as broadcast DATA, not expression-tree literals — see
+    # pq_encode_native above for the rationale/measurement.
+    consts = F.broadcast(
+        encoded.sparkSession.createDataFrame(
+            [(codebooks,)], "cb array<array<array<double>>>"
+        )
     )
-    out_schema = "query_id long, neighbor_id long, adc double"
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            n = len(pdf)
-            # gather: adc[q, i] = sum_s luts[q, s, codes[i, s]]
-            adc = np.zeros((len(q_ids), n), dtype=np.float64)
-            for s in range(m):
-                adc += luts[:, s, codes[:, s]]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, n),
-                    "neighbor_id": np.tile(c_ids, len(q_ids)),
-                    "adc": adc.ravel(),
-                }
-            )
-
-    scored = encoded.mapInPandas(score, schema=out_schema).filter(
-        F.col("query_id") != F.col("neighbor_id")
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    )
+    per_sub = []
+    for s in range(m):
+        qsub = F.slice(F.col("qv"), s * dsub + 1, dsub)
+        cw = F.element_at(F.col("cb")[s], F.col("codes")[s] + 1)
+        per_sub.append(_l2sq(qsub, cw))
+    adc = F.aggregate(F.array(*per_sub), F.lit(0.0), lambda acc, x: acc + x)
+    scored = (
+        encoded.crossJoin(consts)
+        .join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", adc.alias("adc"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
@@ -1286,12 +479,7 @@ def ivfpq_residual_native(
       tiny window — no driver-side argsort), keeps n_probe, and scores the
       probed candidates through Σ_s L2²((q − centroid[list])_sub_s,
       codeword[code_s]) — the per-(query, probed-list) LUT fold. The only
-      data shuffle is the final per-query top-k window.
-
-    The production twin (pq_train on residualize() output + Arrow-batched
-    ivfpq_build/ivfpq_topk with residual=True) carries the same math at
-    scale; this tier exists so the residual-encoding semantics themselves
-    sit on the driver's hash-compare gate."""
+      data shuffle is the final per-query top-k window."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     # r11 fold (VERDICT r9 item 6 / r10 addendum): centroids AND codebooks
@@ -1299,8 +487,8 @@ def ivfpq_residual_native(
     # (n_lists·dim + m·n_codes·dsub) literals folded into the expression
     # tree — identical fixed-order arithmetic (transform preserves element
     # order; _l2sq is the same fixed fold), a fraction of the
-    # whole-stage-codegen constant. Same shape as the landed pq_encode /
-    # pq_adc fold above.
+    # whole-stage-codegen constant. Same shape as the pq_encode_native /
+    # pq_adc_topk_native fold above.
     spark = embeddings.sparkSession
     consts = F.broadcast(
         spark.createDataFrame(
@@ -1364,306 +552,6 @@ def ivfpq_residual_native(
         per_sub.append(_l2sq(qsub, cw))
     adc = F.aggregate(F.array(*per_sub), F.lit(0.0), lambda acc, x: acc + x)
     scored = cand.select("query_id", "neighbor_id", adc.alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
-
-
-def ivfpq_topk_refined(
-    index: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 4,
-    refine: int = 50,
-    residual: bool = False,
-) -> DataFrame:
-    """Two-stage IVFADC serve with exact re-ranking (FAISS's
-    IndexRefineFlat pattern — the standard production shape): stage 1
-    shortlists ``refine`` candidates per query through the quantized index
-    (ivfpq_topk: probed lists, LUT gather-adds — never touches raw
-    vectors), stage 2 re-scores ONLY the shortlist against the raw vector
-    table in exact L2 and keeps the top ``k``. Compression does the
-    coarse work; exactness costs |queries|·refine raw-vector reads
-    instead of a full scan.
-
-    100 TB shape: the shortlist is tiny (queries × refine ids), so it
-    BROADCASTS into the raw-table join — one pruned scan with a hash
-    semi-join, no shuffle of the big side; the exact distance is the
-    fixed-order fold, so stage 2 is deterministic. With refine ≥ corpus
-    size AND n_probe ≥ n_lists the result equals the exact brute-force
-    top-k (asserted in tests) — candidates outside the probed lists can
-    never enter the shortlist, so refine alone does not buy exactness;
-    recall is monotone in ``refine`` at fixed n_probe by construction."""
-    shortlist = ivfpq_topk(
-        index, queries, centroids, codebooks,
-        id_col=id_col, vec_col=vec_col,
-        k=refine, n_probe=n_probe, residual=residual,
-    ).select("query_id", "neighbor_id")
-    cand = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).join(F.broadcast(shortlist), "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    scored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id", "neighbor_id", _l2sq(F.col("qv"), F.col("cv")).alias("d")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
-        F.col("rnk") <= k
-    )
-
-
-def residualize(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, list_id, embedding=x − centroid[list]) in one Arrow pass — the
-    residual table canonical IVFADC trains its PQ codebook on (Jégou et al.
-    TPAMI 2011 §III: quantizing the residual concentrates the codebook's
-    dynamic range near the origin instead of spreading it across the whole
-    space, which is where the recall-at-equal-code-budget win comes from).
-    Assignment is nearest-centroid in L2 — the SAME metric ADC scores in;
-    residuals are only small (and the recall win only materializes) when
-    the two metrics agree, so pair this with ivf_train(metric="l2").
-    Feed the output to pq_train for residual codebooks, then ivfpq_build/
-    ivfpq_topk with residual=True."""
-    import numpy as np
-    import pandas as pd
-
-    cent = np.array(centroids, dtype=np.float64)
-    cent_sq = (cent**2).sum(axis=1)
-    out_schema = f"{id_col} long, list_id int, {vec_col} array<double>"
-
-    def res(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            lists = np.argmin(-2.0 * (x @ cent.T) + cent_sq[None, :], axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    "list_id": lists.astype(np.int32),
-                    vec_col: list(x - cent[lists]),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(res, schema=out_schema)
-
-
-def ivfpq_build(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-) -> DataFrame:
-    """IVFADC index build in ONE Arrow pass: every vector gets its coarse
-    list id (argmax dot against the broadcast centroid matrix) AND its m PQ
-    codes (per-subspace argmin) in the same mapInPandas batch — no join
-    between the two halves, no second scan. Output
-    (neighbor_id, list_id, codes): ~(8 + 4 + m) bytes of index per vector
-    regardless of dim. Persist partitioned by list_id (ivf_write_index) and
-    the probe-side partition pruning story carries over unchanged.
-
-    ``residual=True`` is canonical IVFADC (Jégou et al. TPAMI 2011, the
-    FAISS METRIC_L2 IndexIVFPQ default): assignment flips to
-    nearest-centroid in L2 (the metric ADC scores in — dot-assigned
-    residuals measurably LOSE recall, see PERF_NOTES r9) and the PQ input
-    is ``x − centroid[list]`` — the assignment is already in hand in the
-    same batch, so the subtraction is free. Pair with ivf_train(metric=
-    "l2") centroids and codebooks trained on ``residualize(...)`` output,
-    serve with ``ivfpq_topk(..., residual=True)``. residual=False (raw x,
-    dot assignment) is kept as the cosine-flavored comparison tier."""
-    import numpy as np
-    import pandas as pd
-
-    cent = np.array(centroids, dtype=np.float64)
-    cent_sq = (cent**2).sum(axis=1)
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
-    out_schema = "neighbor_id long, list_id int, codes array<smallint>"
-
-    def build(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if x.shape[1] != m * dsub:
-                raise ValueError(
-                    f"vector dim {x.shape[1]} != m*dsub = {m}*{dsub} "
-                    "of the codebook — trailing dimensions would be dropped"
-                )
-            if residual:
-                lists = np.argmin(-2.0 * (x @ cent.T) + cent_sq[None, :], axis=1)
-            else:
-                lists = np.argmax(x @ cent.T, axis=1)
-            enc = x - cent[lists] if residual else x
-            codes = np.empty((len(pdf), m), dtype=np.int16)
-            for s in range(m):
-                xs = enc[:, s * dsub : (s + 1) * dsub]
-                d = -2.0 * (xs @ books[s].T) + (books[s] ** 2).sum(axis=1)[None, :]
-                codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "list_id": lists.astype(np.int32),
-                    "codes": list(codes),
-                }
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(build, schema=out_schema)
-
-
-# LUT broadcast variables created by ivfpq_topk, kept until released. The
-# returned DataFrame is lazy, so the function cannot unpersist its own
-# broadcast (tasks read it at materialization time); long-lived sessions
-# that serve repeatedly call release_lut_broadcasts() between batches or
-# executor/driver memory accumulates one LUT dict per serve call
-# (ADVICE r9). The registry deliberately keeps the Python handles alive:
-# GC'ing a pyspark Broadcast object does NOT unpersist the JVM-side blocks
-# (that memory accumulated regardless, pre-tracking) — the list just makes
-# the only real remedy, an explicit unpersist, possible. Appends are
-# GIL-atomic; callers releasing from one thread while another serves
-# should serialize externally (release drains EVERYTHING tracked).
-_LIVE_LUT_BROADCASTS: list = []
-
-
-def release_lut_broadcasts() -> int:
-    """Unpersist every LUT broadcast variable created by ``ivfpq_topk`` so
-    far and return how many were released. Call AFTER the served DataFrames
-    have been materialized (collected/written) — a released broadcast cannot
-    back new tasks, so re-executing a still-lazy serve plan after release
-    fails."""
-    n = 0
-    while _LIVE_LUT_BROADCASTS:
-        _LIVE_LUT_BROADCASTS.pop().unpersist(blocking=False)
-        n += 1
-    return n
-
-
-def ivfpq_topk(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 4,
-    residual: bool = False,
-) -> DataFrame:
-    """IVFADC serve (Jégou et al., TPAMI 2011, the FAISS default at this
-    scale): each query probes its n_probe nearest coarse lists (broadcast
-    join on list_id → candidates are corpus·n_probe/n_lists, and against a
-    list-partitioned on-disk index the unprobed partitions are never read),
-    then candidates are scored through a m×n_codes LUT — m gather-adds per
-    candidate, never a dim-length product. Smaller adc = closer (squared-L2
-    surrogate).
-
-    ``residual=True`` serves a residual-encoded index (ivfpq_build with
-    residual=True): the LUT is built per (query, probed list) from
-    ``q − centroid[list]`` — n_probe LUTs per query, still m×n_codes
-    doubles each. The LUT dict ships as a Spark BROADCAST variable, not
-    task-closure pickle, so a 10K-query batch serializes it once per
-    executor instead of once per task. Each call creates one broadcast that
-    outlives the (lazy) result; long-lived serving sessions call
-    ``release_lut_broadcasts()`` after materializing results, or memory
-    accumulates one LUT dict per call."""
-    import numpy as np
-    import pandas as pd
-
-    books = [np.array(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
-    cent = np.array(centroids, dtype=np.float64)
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = [int(r[0]) for r in q_rows]
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-
-    def lut_for(q: "np.ndarray") -> "np.ndarray":
-        return np.stack(
-            [((q[s * dsub : (s + 1) * dsub] - books[s]) ** 2).sum(axis=1) for s in range(m)]
-        )
-
-    spark = index.sparkSession
-    probe_rows = []
-    luts: dict = {}
-    cent_sq = (cent**2).sum(axis=1)
-    for qid, q in zip(q_ids, q_mat):
-        if residual:
-            # probe in L2, the metric the residual index was assigned in
-            top = np.argsort(-2.0 * (cent @ q) + cent_sq, kind="stable")[:n_probe]
-        else:
-            top = np.argsort(-(cent @ q), kind="stable")[:n_probe]
-        probe_rows += [(qid, int(l)) for l in top]
-        if residual:
-            # per probed list: LUT of the query's residual vs that list
-            for l in top:
-                luts[(qid, int(l))] = lut_for(q - cent[l])
-        else:
-            luts[qid] = lut_for(q)
-    probes = spark.createDataFrame(probe_rows, "query_id long, list_id int")
-    b_luts = spark.sparkContext.broadcast(luts)
-    _LIVE_LUT_BROADCASTS.append(b_luts)
-
-    # Static pushdown of the probed-list union: the probe set is known
-    # driver-side, so the scan gets a PartitionFilter (list_id IN ...) —
-    # against a list_id-partitioned on-disk index the unprobed partitions
-    # are pruned at PLANNING time, never listed or read (a literal probes
-    # relation carries no selective predicate, so Spark's dynamic partition
-    # pruning would not fire here; plan-pinned in tests/test_pq.py).
-    probed_all = sorted({l for _, l in probe_rows})
-    cands = index.filter(F.col("list_id").isin(probed_all)).join(
-        F.broadcast(probes), "list_id"
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    out_schema = "query_id long, neighbor_id long, adc double"
-
-    def score(batches):
-        lt = b_luts.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            adc = np.zeros(len(pdf), dtype=np.float64)
-            # group rows by (query[, list]) so each LUT gathers once per batch
-            keys = qids * (lists.max() + 1 if residual else 1) + (
-                lists if residual else 0
-            )
-            for kk in np.unique(keys):
-                mask = keys == kk
-                qid = int(qids[mask][0])
-                lut = lt[(qid, int(lists[mask][0]))] if residual else lt[qid]
-                c = codes[mask]
-                adc[mask] = sum(lut[s, c[:, s]] for s in range(m))
-            yield pd.DataFrame(
-                {
-                    "query_id": qids,
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "adc": adc,
-                }
-            )
-
-    scored = cands.select("query_id", "neighbor_id", "list_id", "codes").mapInPandas(
-        score, schema=out_schema
-    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
     )

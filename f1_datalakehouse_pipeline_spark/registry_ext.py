@@ -669,15 +669,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (operators/dedup.semantic_dedup_flags):
     centroid bucketing → within-cluster cosine ≥ eps → greedy-by-id keeper.
 
-    The oracle run pins the centroids to the first K embeddings (a bounded
-    8-row collect — the deterministic stand-in for an out-of-band k-means);
-    at scale the centroid matrix comes from similarity.kmeans_hierarchical
-    with k ≈ N / target_cluster_size (distributed √k-cell coarse split +
-    population-proportional per-cell fine training — the r7 rung's answer
-    to the sample trainer's codebook under-fill; FLAT distributed Lloyd's
-    is O(N·k·dim) per sweep and infeasible in this regime), and everything
-    downstream is unchanged: map-only assignment, cluster-keyed pair join,
-    anti-join.
+    The centroids are supplied by the caller; this query pins them to the
+    first K embeddings (a bounded 8-row collect), which the oracle derives
+    from the table itself. Downstream of the centroids: map-only
+    assignment, cluster-keyed pair join, anti-join.
 
     r6: runs the PERSISTED-assignment production shape (VERDICT r5 item 2):
     the assignment is computed ONCE and localCheckpointed, then flags come
@@ -4453,9 +4448,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 codegen fold), ADC a fixed-order fold — both bit-reproduced by the
     oracle, which
     derives the identical pinned codebook (first 16 rows' subvectors, the
-    dedup_semantic stand-in pattern) from the table itself. The production
-    tier (pq_train k-means + Arrow-vectorized pq_encode/pq_adc_topk) is
-    recall-gated in tests/test_pq.py."""
+    dedup_semantic stand-in pattern) from the table itself."""
     emb = load_table(spark, sf_dir, "embeddings")
     books = similarity.pq_codebook_pinned(emb, n_codes=_PQ_CODES, m=_PQ_M)
     encoded = similarity.pq_encode_native(emb, books)
@@ -4565,10 +4558,7 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned to the first 4 embeddings and the codebook to the first 16 (the
     sim_pq_adc_topk stand-in pattern) so DuckDB derives the identical index
     from the table itself. n_probe=2 of 4 lists: the oracle also verifies
-    the probe pruning (unprobed lists' vectors never scored). The
-    production twin — pq_train on residualize() output, Arrow-batched
-    ivfpq_build/ivfpq_topk with residual=True, broadcast LUTs — is
-    recall-gated against the raw tier in tests/test_pq.py."""
+    the probe pruning (unprobed lists' vectors never scored)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = [
         list(r[0])
@@ -5029,17 +5019,10 @@ def t_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.lit('</p><br/>&amp; <a href="#">tail&nbsp;link</a></div>'),
     )
-    no_tags = F.regexp_replace(raw, "<[^>]*>", " ")
-    decoded = no_tags
-    # '&amp;' decodes LAST: a source text containing the escaped entity
-    # '&amp;lt;' means the visible characters '&lt;', and amp-first order
-    # would double-decode it into '<'
-    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ('&quot;', '"'), ("&nbsp;", " "), ("&amp;", "&")):
-        decoded = F.replace(decoded, F.lit(ent), F.lit(ch))
     return d.select(
         "doc_id",
-        F.size(F.regexp_extract_all(raw, F.lit("<[^>]*>"), 0)).cast("long").alias("n_tags"),
-        F.trim(F.regexp_replace(decoded, "[ \t\n]+", " ")).alias("clean_text"),
+        html_tag_count(raw).alias("n_tags"),
+        html_strip(raw).alias("clean_text"),
     )
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import ast
 import importlib
 import json
+import re
 from pathlib import Path
 
 import fixtures_f1 as fx
@@ -232,6 +233,136 @@ def test_entry_point_from_imports_resolve():
                     )
     assert checked > 100
     assert not unresolved, "\n".join(unresolved)
+
+
+# Top-level package definitions that no entry point reaches, each kept for
+# the reason given. The walk below fails on any other unreached definition,
+# and on an entry here that is reached again or no longer exists.
+_UNREACHED_ALLOWED = {
+    "functions.f1.FASTEST_LAP_BONUS": "fastest_lap_bonus's constant (gold parity question)",
+    "functions.f1.FASTEST_LAP_MAX_POSITION": "fastest_lap_bonus's constant (gold parity question)",
+    "functions.f1.fastest_lap_bonus": "reference points rule; the gold oracle settles whether gold applies it",
+    "functions.text.decode_token_ids": "inverse of encode_token_ids; tests check the encoding round-trips",
+    "functions.zorder.rank_normalize": "z-order layout; keep-or-delete still open",
+    "functions.zorder.zorder_write": "z-order layout; keep-or-delete still open",
+    "operators.bpe._safe_batch": "BPE trainer; keep-or-delete still open",
+    "operators.bpe.bpe_train": "BPE trainer; keep-or-delete still open",
+    "operators.bpe.bpe_train_from_words": "BPE trainer; produced the pinned bpe_model_corpus merges",
+    "operators.bpe.py_bpe_encode": "pure-Python reference tests/test_bpe.py compares the encoder against",
+    "operators.bpe.py_bpe_train": "pure-Python reference tests/test_bpe.py compares the trainer against",
+    "operators.bpe.word_frequency_table": "BPE trainer input; keep-or-delete still open",
+    "operators.dedup.contamination_report": "per-document verdict over contamination_pairs; tests only",
+    "operators.dedup.minhash_signatures": "long-form MinHash signatures; no caller, not yet decided",
+    "operators.mixture.budgeted_mixture_naive": "window reference the bucketed mixture is tested against",
+    "operators.mixture.plan_mixture": "proportion-driven budget planner; keep-or-delete still open",
+    "operators.skew.salted_join": "skew-join operator; keep-or-delete still open",
+    "operators.similarity.pq_encode": "vectorized reference tests/test_pq.py compares pq_encode_native against",
+    "operators.textstats.encode_token_ids_with_table": "large-vocabulary twin of encode_token_ids; tests only",
+    "plans.corpus.corpus_drift_reference": "builds the drift reference a caller passes to the incremental build",
+    "plans.gold.transform_constructor_championship": "unwired gold transform, a parity question for the gold oracle",
+    "plans.gold.transform_lap_analytics": "unwired gold transform, a parity question for the gold oracle",
+    "plans.gold.weekend_biggest_mover": "unwired gold transform, a parity question for the gold oracle",
+    "plans.silver.CANONICAL_SESSION_TYPES": "names the session types silver keeps; no code reads it",
+    "quality.check_non_negative": "row-level check helper; tests only",
+    "quality.check_points_range": "row-level check helper; tests only",
+    "quality.check_position_range": "row-level check helper; tests only",
+    "quality.schema_diff": "schema comparison helper; tests only",
+    "sources.bronze.BRONZE_ENDPOINTS": "names the bronze endpoints; no reader uses it",
+    "sources.bucketed.read_bucketed": "reader twin of save_bucketed; tests only",
+    "sources.tables.compact": "OPTIMIZE analogue for a TableStore table; tests only",
+    "sources.testdata.register_testdata_views": "registers testdata temp views; no caller",
+}
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    """Every bare name, attribute and identifier-shaped word of a string
+    constant under ``node``, docstrings excepted: a ``getattr`` by name or a
+    monkeypatch target string counts as a reference."""
+    docstrings = {
+        id(n.body[0].value)
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docstrings:
+            names.update(_IDENT.findall(n.value))
+    return names
+
+
+def test_every_package_definition_is_reached_or_allowlisted():
+    """Walk names from the entry points: ``cli.main``, every ``@query``, every
+    ``plans/`` definition, ``bench.py``, ``__spark_entry__.py``, perfbench's
+    modules, ``tools/verify_local.py`` and ``tools/plan_report.py``, plus
+    whatever a package module runs at import. A name reaches every top-level
+    package definition of that name, whatever its module, so the walk can
+    over-count reach but never under-count it. Code nothing reaches fails
+    here unless ``_UNREACHED_ALLOWED`` names it with a reason."""
+    defs, roots, reached = {}, [], set()
+    for path in sorted((_REPO / _PKG).rglob("*.py")):
+        mod = ".".join(path.relative_to(_REPO / _PKG).with_suffix("").parts)
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                key = f"{mod}.{node.name}"
+                defs[key] = node
+                roots += node.decorator_list  # decorators and defaults run at import
+                if not isinstance(node, ast.ClassDef):
+                    roots += node.args.defaults + [d for d in node.args.kw_defaults if d]
+                is_query = any(
+                    isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                    for d in node.decorator_list
+                )
+                if is_query or key == "cli.main":
+                    reached.add(key)
+                if is_query or key == "cli.main" or mod.startswith("plans."):
+                    roots.append(node)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+                if "__all__" in names:
+                    continue
+                defs.update((f"{mod}.{n}", node) for n in names if not n.startswith("__"))
+                if node.value is not None:
+                    roots.append(node.value)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not (
+                isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+            ):
+                roots.append(node)
+    for path in [
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
+        _REPO / "tools" / "verify_local.py",
+        _REPO / "tools" / "plan_report.py",
+        *sorted((_REPO / "perfbench").glob("*.py")),
+    ]:
+        roots.append(ast.parse(path.read_text(), str(path)))
+
+    by_name: dict[str, list[str]] = {}
+    for key in defs:
+        by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
+    while roots:
+        for name in _referenced_names(roots.pop()):
+            for key in by_name.get(name, ()):
+                if key not in reached:
+                    reached.add(key)
+                    roots.append(defs[key])
+    unreached = set(defs) - reached
+    assert len(defs) > 400
+    assert not unreached - set(_UNREACHED_ALLOWED), (
+        "no entry point reaches: " + ", ".join(sorted(unreached - set(_UNREACHED_ALLOWED)))
+    )
+    assert not set(_UNREACHED_ALLOWED) - unreached, (
+        "allowlisted but reached or gone: "
+        + ", ".join(sorted(set(_UNREACHED_ALLOWED) - unreached))
+    )
 
 
 def test_no_code_names_a_fixed_checkout_path():

@@ -375,33 +375,6 @@ def test_scd2_splice_is_single_pass(spark, sf_dir):
     assert "Generate" in plan  # the explode emitting all branches at once
 
 
-def test_ivf_disk_index_prunes_lists(spark, tmp_path):
-    """Querying a list-partitioned on-disk IVF index must trigger dynamic
-    partition pruning: only the probed lists' directories are scanned (at
-    100 TB the scan reduction is the whole point of IVF)."""
-    import random
-
-    from f1_datalakehouse_pipeline_spark.operators import similarity
-
-    rng = random.Random(3)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(400)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    centroids = similarity.ivf_train(emb, n_lists=8)
-    idx_path = str(tmp_path / "ivf")
-    similarity.ivf_write_index(
-        similarity.ivf_assign(emb, centroids, method="vectorized"), idx_path
-    )
-    assigned = similarity.ivf_read_index(spark, idx_path)
-    q = similarity.ivf_query(
-        assigned, centroids, emb.filter("vec_id < 4"), k=3, n_probe=2
-    )
-    plan = plan_of(q)
-    assert "dynamicpruning" in plan.lower(), plan[:800]
-    # and the query still answers correctly-shaped results
-    out = q.collect()
-    assert out and all(r.rnk <= 3 for r in out)
-
-
 def test_novelty_probe_not_cartesian_and_no_history_self_join(spark, sf_dir):
     """The incremental novelty probe must be equi-joins only (band bucket +
     shingle hash) — no cartesian/nested-loop — and the history side must be

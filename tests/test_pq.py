@@ -1,14 +1,13 @@
 """Quantized vector search (SQ8 + PQ) and the r8 quality/outlier additions.
 
-The oracle-gated native tiers (sim_sq8_quantized_topk, sim_pq_adc_topk) are
-hash-verified by the driver; these tests pin what the oracle can't see:
-the production (k-means + Arrow) PQ tier's recall/compression contract,
-native-vs-vectorized parity, and the expectation battery's counting.
+The oracle-gated native tiers (sim_sq8_quantized_topk, sim_pq_adc_topk,
+sim_ivfpq_residual_topk) are hash-verified by the driver; these tests pin
+what the oracle can't see: the encoder's tie-break and dimension guard, the
+SQ8 error bound, and the expectation battery's counting.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,23 +18,6 @@ from f1_datalakehouse_pipeline_spark.operators import similarity
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb_np(emb):
-    rows = emb.orderBy("vec_id").collect()
-    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    x = np.array([r.embedding for r in rows], dtype=np.float64)
-    return ids, x
-
-
-def test_pq_train_shapes_and_determinism(emb):
-    b1 = similarity.pq_train(emb, n_codes=16, m=8)
-    b2 = similarity.pq_train(emb, n_codes=16, m=8)
-    assert len(b1) == 8
-    assert all(len(book) == 16 for book in b1)
-    assert all(len(cw) == 8 for book in b1 for cw in book)
-    assert b1 == b2  # seeded sample + seeded init → bit-identical codebooks
 
 
 def test_pq_encode_native_matches_vectorized(emb):
@@ -61,52 +43,6 @@ def test_pq_encode_tie_picks_lowest_code(spark):
     books_tied = [[[1.0, 2.0], [1.0, 2.0]]]
     (row,) = similarity.pq_encode_native(emb, books_tied).collect()
     assert list(row.codes) == [0]
-
-
-def test_pq_reconstruction_error_shrinks_with_codebook(emb, emb_np):
-    _, x = emb_np
-    mses = []
-    for n_codes in (8, 16, 32):
-        books = similarity.pq_train(emb, n_codes=n_codes, m=8)
-        cent = [np.array(b) for b in books]
-        codes = np.array(
-            [
-                r.codes
-                for r in similarity.pq_encode(emb, books).orderBy("neighbor_id").collect()
-            ]
-        )
-        recon = np.concatenate([cent[s][codes[:, s]] for s in range(8)], axis=1)
-        mses.append(float(((recon - x) ** 2).mean()))
-    assert mses[0] > mses[1] > mses[2]
-
-
-def test_pq_adc_recall_floor(emb, emb_np):
-    # Synthetic near-uniform vectors are ANN's worst case (distance
-    # concentration), so the floor is deliberately modest — but far above
-    # the random-guess 5/499 ≈ 1%. Measured r8: recall@5 = 0.32 at 32 codes
-    # vs 0.08 at 8 codes (seeded, deterministic).
-    ids, x = emb_np
-    q_idx = np.arange(5)
-
-    def exact_top(qi, k=5):
-        d = ((x - x[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        return set(ids[np.argsort(d, kind="stable")[:k]].tolist())
-
-    exact = {int(ids[i]): exact_top(i) for i in q_idx}
-    queries = emb.filter(F.col("vec_id") < 5)
-    recalls = {}
-    for n_codes in (8, 32):
-        books = similarity.pq_train(emb, n_codes=n_codes, m=8)
-        enc = similarity.pq_encode(emb, books)
-        got: dict[int, set] = {}
-        for r in similarity.pq_adc_topk(enc, queries, books, k=5).collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        recalls[n_codes] = float(
-            np.mean([len(got[q] & exact[q]) / 5 for q in exact])
-        )
-    assert recalls[32] >= 0.2
-    assert recalls[32] > recalls[8]
 
 
 def test_sq8_dequantize_within_half_step(emb):
@@ -177,78 +113,9 @@ def test_mad_outliers_flags_planted_spike(spark, sf_dir):
         assert ((o.value - o.med).abs() > 3.0 * o.mad).all()
 
 
-def test_ivfpq_build_one_pass_schema_and_fill(emb):
-    cent = similarity.ivf_train(emb, n_lists=8)
-    books = similarity.pq_train(emb, n_codes=16, m=8)
-    idx = similarity.ivfpq_build(emb, cent, books)
-    rows = idx.collect()
-    assert len(rows) == emb.count()
-    assert {len(r.codes) for r in rows} == {8}
-    assert all(0 <= c < 16 for r in rows for c in r.codes)
-    assert all(0 <= r.list_id < 8 for r in rows)
-    # codes must agree with the standalone encoder (same codebooks)
-    standalone = {
-        r.neighbor_id: list(r.codes) for r in similarity.pq_encode(emb, books).collect()
-    }
-    assert all(standalone[r.neighbor_id] == list(r.codes) for r in rows)
-
-
-def test_ivfpq_probed_recall_approaches_full_scan(emb, emb_np):
-    ids, x = emb_np
-    cent = similarity.ivf_train(emb, n_lists=8)
-    books = similarity.pq_train(emb, n_codes=32, m=8)
-    idx = similarity.ivfpq_build(emb, cent, books).cache()
-    queries = emb.filter(F.col("vec_id") < 5)
-
-    def exact_top(qi, k=5):
-        d = ((x - x[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        return set(ids[np.argsort(d, kind="stable")[:k]].tolist())
-
-    truth = {int(ids[i]): exact_top(i) for i in range(5)}
-
-    def recall(df) -> float:
-        got: dict[int, set] = {}
-        for r in df.collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return float(np.mean([len(got.get(k, set()) & v) / 5 for k, v in truth.items()]))
-
-    full = recall(similarity.pq_adc_topk(idx.select("neighbor_id", "codes"), queries, books, k=5))
-    probed_all = recall(similarity.ivfpq_topk(idx, queries, cent, books, k=5, n_probe=8))
-    probed_half = recall(similarity.ivfpq_topk(idx, queries, cent, books, k=5, n_probe=4))
-    # probing every list must reproduce the full ADC scan exactly
-    assert probed_all == full
-    # probing half the lists can only lose recall, never gain
-    assert probed_half <= probed_all
-    idx.unpersist()
-
-
-def test_ivfpq_probe_restricts_candidates(emb):
-    cent = similarity.ivf_train(emb, n_lists=8)
-    books = similarity.pq_train(emb, n_codes=16, m=8)
-    idx = similarity.ivfpq_build(emb, cent, books).cache()
-    queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.ivfpq_topk(idx, queries, cent, books, k=5, n_probe=1)
-    # with one probed list, every returned neighbor must live in a probed list
-    import numpy as np
-
-    cent_m = np.array(cent)
-    q_rows = queries.collect()
-    probed = {
-        int(r.vec_id): int(np.argsort(-(cent_m @ np.array(r.embedding, dtype=np.float64)), kind="stable")[0])
-        for r in q_rows
-    }
-    lists = {r.neighbor_id: r.list_id for r in idx.collect()}
-    for r in out.collect():
-        assert lists[r.neighbor_id] == probed[r.query_id]
-    idx.unpersist()
-
-
 def test_pq_rejects_untileable_dim(emb):
     with pytest.raises(ValueError, match="tile"):
         similarity.pq_codebook_pinned(emb, n_codes=8, m=7)  # 64 % 7 != 0
-    with pytest.raises(ValueError, match="tile"):
-        similarity.pq_train(emb, n_codes=8, m=7)
 
 
 def test_html_strip_decodes_amp_last(spark):
@@ -265,257 +132,6 @@ def test_html_strip_decodes_amp_last(spark):
     assert got == ["a &lt; b", "x < y & z"]
     tags = [r.t for r in df.select(html_tag_count(F.col("raw")).alias("t")).collect()]
     assert tags == [2, 0]
-
-
-def test_fill_empty_cells_distinct_donors_across_clusters():
-    """ADVICE r8: when empty cells outnumber the largest cluster's donors,
-    the re-seed must pool DISTINCT points from the next clusters instead of
-    wrapping modulo over one cluster (which duplicated codewords)."""
-    rng = np.random.default_rng(7)
-    xs = rng.normal(size=(10, 2))
-    k = 10
-    asg = np.array([0] * 4 + [1] * 3 + [2] * 3)
-    cent = np.zeros((k, 2))
-    for c in range(3):
-        cent[c] = xs[asg == c].mean(axis=0)
-    empties = list(range(3, 10))  # 7 empties > largest cluster (4 members)
-    similarity._fill_empty_cells(xs, cent, asg, empties, k)
-    new = cent[3:]
-    # every re-seeded codeword is a real data point...
-    assert all(any(np.array_equal(row, x) for x in xs) for row in new)
-    # ...and all 10 codewords are pairwise distinct (no modulo wrap)
-    assert len({tuple(row) for row in cent}) == k
-
-
-def test_fill_empty_cells_skips_duplicate_point_donors():
-    """An all-duplicate largest cluster contributes no first-pass donors —
-    its points sit ON the centroid, and seeding from them would mint
-    duplicate codewords. Donors must come from the spread cluster."""
-    a = np.array([5.0, 5.0])
-    spread = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 1.0]])
-    xs = np.vstack([np.tile(a, (6, 1)), spread])
-    k = 5
-    asg = np.array([0] * 6 + [1] * 4)
-    cent = np.zeros((k, 2))
-    cent[0] = a
-    cent[1] = spread.mean(axis=0)
-    empties = [2, 3, 4]
-    similarity._fill_empty_cells(xs, cent, asg, empties, k)
-    new = cent[2:]
-    assert len({tuple(row) for row in new}) == 3  # three distinct codewords
-    assert not any(np.array_equal(row, a) for row in new)
-    assert all(any(np.array_equal(row, s) for s in spread) for row in new)
-
-
-def test_pq_train_duplicate_heavy_sample_fills_codebook(spark):
-    """pq_train on a duplicate-heavy corpus (the realistic empty-cell
-    trigger: duplicate sample points seed duplicate initial centroids) still
-    returns a full, shape-correct codebook."""
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=(8, 8))
-    rows = [(int(i), [float(v) for v in base[i % 8] * (1 if i < 64 else 1e-3)]) for i in range(96)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    books = similarity.pq_train(df, n_codes=16, m=4, train_sample=96, iters=4)
-    assert len(books) == 4
-    assert all(len(b) == 16 and all(len(c) == 2 for c in b) for b in books)
-
-
-# ---------------------------------------------------------------------------
-# r9: canonical RESIDUAL IVFADC (Jégou et al. TPAMI 2011; FAISS METRIC_L2
-# IndexIVFPQ). The oracle-gated native tier is sim_ivfpq_residual_topk;
-# these pin the production (ivf_train(metric=l2) + pq_train-on-residuals +
-# Arrow build/serve) tier: encoder identity, the exactness ladder, the
-# recall-at-equal-code-budget win over raw encoding, and the MSE drop.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def l2_cent(emb):
-    return similarity.ivf_train(emb, n_lists=16, metric="l2")
-
-
-def test_ivfpq_residual_build_matches_standalone_encoder(emb, l2_cent):
-    """One-pass residual build == residualize() + standalone pq_encode:
-    same L2 list assignment, same codes on the subtracted vectors."""
-    rtbl = similarity.residualize(emb, l2_cent).cache()
-    books = similarity.pq_train(rtbl, n_codes=16, m=8)
-    idx = similarity.ivfpq_build(emb, l2_cent, books, residual=True)
-    got = {r.neighbor_id: (r.list_id, list(r.codes)) for r in idx.collect()}
-    want_lists = {r.vec_id: r.list_id for r in rtbl.collect()}
-    want_codes = {
-        r.neighbor_id: list(r.codes)
-        for r in similarity.pq_encode(rtbl, books, id_col="vec_id").collect()
-    }
-    assert len(got) == emb.count()
-    for vid, (lst, codes) in got.items():
-        assert lst == want_lists[vid]
-        assert codes == want_codes[vid]
-    rtbl.unpersist()
-
-
-def test_ivfpq_residual_full_probe_equals_full_adc(emb, emb_np, l2_cent):
-    """Exactness ladder, residual flavor: probing every list must equal the
-    full residual-ADC scan computed independently (numpy reference on the
-    collected index — per-candidate LUT of q − centroid[list])."""
-    ids, x = emb_np
-    cent = np.array(l2_cent)
-    rtbl = similarity.residualize(emb, l2_cent)
-    books = similarity.pq_train(rtbl, n_codes=16, m=8)
-    b = [np.array(bb) for bb in books]
-    idx = similarity.ivfpq_build(emb, l2_cent, books, residual=True).cache()
-    rows = idx.orderBy("neighbor_id").collect()
-    nid = np.array([r.neighbor_id for r in rows], dtype=np.int64)
-    lists = np.array([r.list_id for r in rows], dtype=np.int64)
-    codes = np.array([r.codes for r in rows], dtype=np.int64)
-    queries = emb.filter(F.col("vec_id") < 5)
-
-    got = {}
-    for r in similarity.ivfpq_topk(
-        idx, queries, l2_cent, books, k=5, n_probe=16, residual=True
-    ).collect():
-        got.setdefault(r.query_id, []).append((r.rnk, r.neighbor_id, r.adc))
-    for qrow in queries.collect():
-        qid, q = int(qrow.vec_id), np.array(qrow.embedding, dtype=np.float64)
-        adc = np.zeros(len(nid))
-        for l in np.unique(lists):
-            msk = lists == l
-            lut = np.stack(
-                [
-                    (((q - cent[l])[s * 8 : (s + 1) * 8] - b[s]) ** 2).sum(axis=1)
-                    for s in range(8)
-                ]
-            )
-            adc[msk] = sum(lut[s, codes[msk, s]] for s in range(8))
-        keep = nid != qid
-        order = np.lexsort((nid[keep], adc[keep]))[:5]
-        want = [(i + 1, int(nid[keep][j]), float(adc[keep][j])) for i, j in enumerate(order)]
-        assert sorted(got[qid]) == want, qid
-    idx.unpersist()
-
-
-def test_ivfpq_residual_recall_beats_raw_on_clustered_corpus(spark):
-    """THE canonical claim (VERDICT r8 item 2): at the same (m, n_codes)
-    budget, residual encoding recalls more than raw-x encoding. Clustered
-    corpus (16 tight clusters — the regime the TPAMI paper targets; on
-    near-uniform synthetic vectors the effect drowns in distance
-    concentration, measured and documented in PERF_NOTES r9). Deterministic
-    seeds end to end; measured raw=0.12, residual=0.17 recall@5."""
-    rng = np.random.default_rng(11)
-    centers = rng.normal(0, 1.0, size=(16, 64))
-    pts = np.vstack(
-        [centers[i % 16] + rng.normal(0, 0.2, size=(1, 64)) for i in range(1000)]
-    )
-    emb = spark.createDataFrame(
-        [(int(i), [float(v) for v in pts[i]]) for i in range(1000)],
-        "vec_id long, embedding array<double>",
-    ).cache()
-    emb.count()
-    cent = similarity.ivf_train(emb, n_lists=16, metric="l2")
-    queries = emb.filter(F.col("vec_id") < 20)
-    truth = {}
-    for qi in range(20):
-        d = ((pts - pts[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        truth[qi] = set(np.argsort(d, kind="stable")[:5].tolist())
-
-    def recall(df):
-        got: dict[int, set] = {}
-        for r in df.collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return float(np.mean([len(got.get(q, set()) & t) / 5 for q, t in truth.items()]))
-
-    braw = similarity.pq_train(emb, n_codes=16, m=8)
-    iraw = similarity.ivfpq_build(emb, cent, braw)
-    r_raw = recall(similarity.ivfpq_topk(iraw, queries, cent, braw, k=5, n_probe=4))
-    rtbl = similarity.residualize(emb, cent)
-    bres = similarity.pq_train(rtbl, n_codes=16, m=8)
-    ires = similarity.ivfpq_build(emb, cent, bres, residual=True)
-    r_res = recall(
-        similarity.ivfpq_topk(ires, queries, cent, bres, k=5, n_probe=4, residual=True)
-    )
-    assert r_res >= r_raw + 0.02, (r_raw, r_res)
-    emb.unpersist()
-
-
-def test_ivfpq_residual_reconstruction_mse_below_raw(emb, emb_np, l2_cent):
-    """Residual encoding's mechanical win: reconstruction MSE (the quantity
-    ADC error is bounded by) drops vs raw encoding at the same code budget —
-    on the real near-uniform embeddings table too, where recall@5 on 10
-    queries is too noisy to assert."""
-    _, x = emb_np
-    cent = np.array(l2_cent)
-
-    def mse(idx_df, books, residual):
-        b = [np.array(bb) for bb in books]
-        rows = idx_df.orderBy("neighbor_id").collect()
-        codes = np.array([r.codes for r in rows])
-        lists = np.array([r.list_id for r in rows])
-        recon = np.concatenate([b[s][codes[:, s]] for s in range(8)], axis=1)
-        if residual:
-            recon = recon + cent[lists]
-        return float(((recon - x) ** 2).mean())
-
-    braw = similarity.pq_train(emb, n_codes=16, m=8)
-    m_raw = mse(similarity.ivfpq_build(emb, l2_cent, braw), braw, False)
-    rtbl = similarity.residualize(emb, l2_cent)
-    bres = similarity.pq_train(rtbl, n_codes=16, m=8)
-    m_res = mse(similarity.ivfpq_build(emb, l2_cent, bres, residual=True), bres, True)
-    assert m_res < m_raw, (m_raw, m_res)
-
-
-def test_ivf_train_l2_metric_guards():
-    with pytest.raises(ValueError, match="metric"):
-        similarity.ivf_train(None, metric="cosine")
-    with pytest.raises(ValueError, match="sample tier"):
-        similarity.ivf_train(None, train="distributed", metric="l2")
-
-
-def test_fill_empty_cells_all_duplicate_sample_does_not_crash():
-    """Review r9: the degenerate all-duplicate sample (first pass finds no
-    dd>0 donors, second pass draws zero-distance copies) must FILL the
-    cells, not raise — cand and dd slices have to stay aligned."""
-    xs = np.tile(np.array([2.0, 2.0]), (4, 1))  # 4 identical points
-    k = 3
-    asg = np.array([0, 0, 0, 0])
-    cent = np.zeros((k, 2))
-    cent[0] = xs[0]
-    empties = [1, 2]
-    similarity._fill_empty_cells(xs, cent, asg, empties, k)
-    # duplicates are information-theoretically unavoidable here; the
-    # contract is only that every cell is seeded with a real value
-    assert all(any(np.array_equal(cent[c], x) for x in xs) for c in empties)
-
-
-def test_ivfpq_topk_prunes_unprobed_partitions_at_plan_time(spark, emb, l2_cent, tmp_path):
-    """The 100 TB claim 'unprobed partitions are never read' is now a PLAN
-    property, not prose: serving against a list_id-partitioned on-disk
-    index puts the probed-list union into the scan's PartitionFilters
-    (static pushdown — dynamic partition pruning can't fire off a literal
-    probes relation), so planning lists only n_probe partitions."""
-    import re
-
-    rtbl = similarity.residualize(emb, l2_cent)
-    books = similarity.pq_train(rtbl, n_codes=16, m=8)
-    idx_path = str(tmp_path / "idx")
-    similarity.ivfpq_build(emb, l2_cent, books, residual=True).write.partitionBy(
-        "list_id"
-    ).parquet(idx_path)
-    idx = spark.read.parquet(idx_path)
-    queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.ivfpq_topk(
-        idx, queries, l2_cent, books, k=5, n_probe=2, residual=True
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "list_id" in m.group(1), plan[:2000]
-    # and the result is identical to serving from the unpartitioned frame
-    unpart = similarity.ivfpq_build(emb, l2_cent, books, residual=True)
-    want = similarity.ivfpq_topk(
-        unpart, queries, l2_cent, books, k=5, n_probe=2, residual=True
-    )
-    got = {(r.query_id, r.rnk): r.neighbor_id for r in out.collect()}
-    exp = {(r.query_id, r.rnk): r.neighbor_id for r in want.collect()}
-    assert got == exp
 
 
 # ---------------------------------------------------------------------------
@@ -643,113 +259,3 @@ def test_robust_winsorize_sketch_tier_agrees_with_exact(events):
         i for i in exact if not exact[i][1] and not sketch[i][1]
     ]
     assert all(exact[i][0] == sketch[i][0] for i in interior)
-
-
-def test_ivfpq_refined_recall_and_full_refine_exactness(emb, emb_np, l2_cent):
-    """Two-stage serve (ADC shortlist → exact re-rank on raw vectors): the
-    exact stage recovers most of the quantization loss — measured on this
-    corpus 0.18 unrefined → 0.60/0.80 at refine=20/100 — monotone in the
-    shortlist size, and with refine ≥ corpus and every list probed the
-    result is BIT-EXACTLY the brute-force top-k (ordered ids compared
-    against an independent numpy reference)."""
-    ids, x = emb_np
-    rtbl = similarity.residualize(emb, l2_cent)
-    books = similarity.pq_train(rtbl, n_codes=16, m=8)
-    idx = similarity.ivfpq_build(emb, l2_cent, books, residual=True).cache()
-    queries = emb.filter(F.col("vec_id") < 10)
-    truth = {}
-    for i in range(10):
-        d = ((x - x[i]) ** 2).sum(axis=1)
-        d[i] = np.inf
-        truth[int(ids[i])] = set(ids[np.argsort(d, kind="stable")[:5]].tolist())
-
-    def recall(df):
-        got: dict[int, set] = {}
-        for r in df.collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return float(np.mean([len(got.get(q, set()) & t) / 5 for q, t in truth.items()]))
-
-    base = recall(
-        similarity.ivfpq_topk(idx, queries, l2_cent, books, k=5, n_probe=8, residual=True)
-    )
-    r20 = recall(
-        similarity.ivfpq_topk_refined(
-            idx, emb, queries, l2_cent, books, k=5, n_probe=8, refine=20, residual=True
-        )
-    )
-    r100 = recall(
-        similarity.ivfpq_topk_refined(
-            idx, emb, queries, l2_cent, books, k=5, n_probe=8, refine=100, residual=True
-        )
-    )
-    assert r20 >= base + 0.2, (base, r20)
-    assert r100 >= r20, (r20, r100)
-
-    full = similarity.ivfpq_topk_refined(
-        idx, emb, queries, l2_cent, books,
-        k=5, n_probe=16, refine=len(ids) + 1, residual=True,
-    )
-    got = {(r.query_id, r.rnk): r.neighbor_id for r in full.collect()}
-    for q in truth:
-        qi = int(np.where(ids == q)[0][0])
-        d = ((x - x[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        order = np.lexsort((ids, d))[:5]
-        assert [int(ids[j]) for j in order] == [got[(q, i + 1)] for i in range(5)], q
-    idx.unpersist()
-
-
-# ---------------------------------------------------------------------------
-# r10 ADVICE fixes: LUT-broadcast lifecycle + degenerate-sample warning.
-# ---------------------------------------------------------------------------
-
-
-def test_release_lut_broadcasts_frees_and_allows_reserve(emb, l2_cent):
-    """Every ivfpq_topk call creates one tracked LUT broadcast (ADVICE r9:
-    they used to accumulate forever). release_lut_broadcasts() after
-    materialization drops them all, and a fresh serve afterwards still
-    works (new call → new broadcast)."""
-    books = similarity.pq_train(similarity.residualize(emb, l2_cent), n_codes=16, m=8)
-    idx = similarity.ivfpq_build(emb, l2_cent, books, residual=True)
-    queries = emb.filter(F.col("vec_id") < 3)
-
-    similarity.release_lut_broadcasts()  # drain any prior test's leftovers
-    out1 = similarity.ivfpq_topk(
-        idx, queries, l2_cent, books, k=5, n_probe=2, residual=True
-    ).collect()
-    out2 = similarity.ivfpq_topk(
-        idx, queries, l2_cent, books, k=5, n_probe=2, residual=True
-    ).collect()
-    assert len(out1) and len(out2)
-    assert similarity.release_lut_broadcasts() == 2
-    assert similarity.release_lut_broadcasts() == 0  # idempotent when drained
-    # serving again after a release creates (and tracks) a fresh broadcast
-    out3 = similarity.ivfpq_topk(
-        idx, queries, l2_cent, books, k=5, n_probe=2, residual=True
-    ).collect()
-    assert {(r.query_id, r.rnk, r.neighbor_id) for r in out3} == {
-        (r.query_id, r.rnk, r.neighbor_id) for r in out1
-    }
-    assert similarity.release_lut_broadcasts() == 1
-
-
-def test_fill_empty_cells_warns_only_on_pool_exhaustion():
-    """The cent[asg[0]] fallback silently minted duplicate codewords
-    (ADVICE r9); it must now warn — and NOT warn when donors suffice."""
-    import warnings as _w
-
-    # degenerate: ONE distinct point, 4 cells → the duplicate-relaxation
-    # pass yields a single donor for 3 empties; 2 cells hit the fallback
-    xs = np.array([[0.0, 0.0], [0.0, 0.0]])
-    cent = np.array([[0.0, 0.0], [9.0, 9.0], [9.0, 9.0], [9.0, 9.0]])
-    asg = np.array([0, 0])
-    with pytest.warns(RuntimeWarning, match="donor pool exhausted"):
-        similarity._fill_empty_cells(xs, cent, asg, empties=[1, 2, 3], k=4)
-
-    # healthy: plenty of distinct donors → silence
-    xs = np.array([[0.0, 0.0], [0.5, 0.4], [1.0, 1.0], [2.0, 2.0], [3.0, 3.0]])
-    cent = np.array([[0.0, 0.0], [2.0, 2.0], [9.0, 9.0]])
-    asg = np.array([0, 0, 0, 1, 1])
-    with _w.catch_warnings():
-        _w.simplefilter("error", RuntimeWarning)
-        similarity._fill_empty_cells(xs, cent, asg, empties=[2], k=3)

@@ -103,23 +103,6 @@ def test_lsh_bucketed_recall(spark):
         assert sorted(x.rnk for x in rs) == list(range(1, len(rs) + 1))
 
 
-def test_vectorized_topk_matches_native(spark, sf_dir):
-    """Arrow/numpy scale path returns the same neighbors as the fold-based
-    oracle implementation (float assoc. differences can only flip exact
-    ties, which the id tie-break resolves identically)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    native = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.brute_force_topk(emb, queries, k=3).collect()
-    }
-    vec = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.brute_force_topk_vectorized(emb, queries, k=3).collect()
-    }
-    assert native == vec
-
-
 def test_connected_keepers_and_apply(spark):
     # clusters: {1,2,3} via chain 1-2, 2-3 ; {7,9}; 5 untouched
     pairs = spark.createDataFrame(
@@ -186,24 +169,9 @@ def test_df_cap_drops_boilerplate_pairs(spark):
     assert capped.count() == 0  # only boilerplate co-occurs → all pruned
 
 
-def test_ivf_topk_recall(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    exact = {
-        r.query_id: r.neighbor_id
-        for r in similarity.brute_force_topk(emb, queries, k=1).collect()
-    }
-    approx = similarity.ivf_topk(emb, queries, k=1, n_lists=8, n_probe=4)
-    got = {r.query_id: r.neighbor_id for r in approx.collect()}
-    assert set(got) == set(exact)  # every query answered
-    # with half the lists probed, most top-1 neighbors should be recovered
-    hits = sum(1 for q in exact if got.get(q) == exact[q])
-    assert hits >= len(exact) // 2, f"IVF recall too low: {hits}/{len(exact)}"
-
-
 def test_connected_keepers_long_chain_pointer_jumping(spark):
-    """A 40-hop path graph converges well inside max_iterations=10: pointer
-    jumping gives O(log diameter) rounds, not O(diameter)."""
+    """A 40-hop path graph resolves to one keeper: pointer jumping reaches
+    the fixed point in O(log diameter) rounds, not O(diameter)."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["doc_a", "doc_b"]
     )
@@ -284,6 +252,34 @@ def test_connected_keepers_refuses_oversized_pair_list(spark, monkeypatch):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], ["doc_a", "doc_b"])
     with pytest.raises(ValueError, match=r"more than 2 rows \(3 collected\)"):
         dedup.connected_keepers(pairs)
+
+
+def test_connected_keepers_result_spans_at_most_default_parallelism(spark):
+    """The (doc, keeper) labels come back on at most defaultParallelism
+    partitions however many Arrow batches carried them, so the anti-join in
+    apply_dedup never reads one tiny partition per batch (7M docs at the
+    default batch size made 700). Lowering the batch size and the
+    local-relation threshold takes 2,000 docs down the same many-batch
+    path."""
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10",
+        "spark.sql.execution.arrow.localRelationThreshold": "0",
+    }
+    saved = {key: spark.conf.get(key) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        pairs = spark.createDataFrame(
+            [(2 * i, 2 * i + 1) for i in range(1000)], "doc_a long, doc_b long"
+        )
+        labels = dedup.connected_keepers(pairs)
+        assert labels.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+        assert {(r.doc, r.keeper) for r in labels.collect()} == {
+            (d, d - d % 2) for d in range(2000)
+        }
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
 
 
 def test_minhash_lsh_df_cap_survives_boilerplate(spark):
@@ -406,202 +402,6 @@ def test_contamination_check_containment(spark):
     assert capped.count() == 0  # every gram of `base` is train-hot
 
 
-def test_ivf_distributed_kmeans_recall(spark, sf_dir):
-    """Distributed-trained IVF (Lloyd's as DataFrame aggregations) must
-    reach the same recall bar as the sampled trainer against brute force."""
-    from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    truth = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(emb, queries, k=5).collect()
-    }
-    approx = similarity.ivf_topk(
-        emb, queries, k=5, n_lists=8, n_probe=4,
-        kmeans_iters=3, train="distributed",
-    ).collect()
-    got = {(r.query_id, r.neighbor_id) for r in approx}
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.6, recall
-    # per-query sanity: contiguous ranks, no self matches
-    by_q = {}
-    for r in approx:
-        by_q.setdefault(r.query_id, []).append(r)
-        assert r.neighbor_id != r.query_id
-    for q, rs in by_q.items():
-        assert sorted(x.rnk for x in rs) == list(range(1, len(rs) + 1))
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="train"):
-        similarity.ivf_topk(emb, queries, train="bogus")
-
-
-def test_kmeans_distributed_centroids_unit_norm_and_deterministic(spark):
-    rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(4)]) for i in range(40)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    c1 = similarity.kmeans_distributed(emb, n_lists=4, iters=2)
-    c2 = similarity.kmeans_distributed(emb, n_lists=4, iters=2)
-    assert c1 == c2  # deterministic end to end
-    for c in c1:
-        n = sum(x * x for x in c) ** 0.5
-        assert abs(n - 1.0) < 1e-9
-
-
-def test_kmeans_hierarchical_fill_allocation_and_determinism(spark):
-    """The k ∝ N trainer (VERDICT r6 item 4): exactly n_lists unit
-    centroids, deterministic across runs, fine budget allocated ∝ coarse
-    cell population (largest-remainder, clamped at cell supply), and the
-    codebook actually COVERS a clustered corpus — every vector's argmax
-    centroid sits in its own blob, so all lists stay live where the
-    2-samples-per-centroid flat sample trainer is structurally starved."""
-    import random
-
-    rnd = random.Random(5)
-    # three well-separated blobs with lopsided populations 60/30/10
-    blobs = [([10.0, 0.0, 0.0, 0.0], 60), ([0.0, 10.0, 0.0, 0.0], 30),
-             ([0.0, 0.0, 10.0, 0.0], 10)]
-    rows = []
-    i = 0
-    for center, m in blobs:
-        for _ in range(m):
-            rows.append((i, [c + rnd.uniform(-0.5, 0.5) for c in center]))
-            i += 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    fine, coarse = similarity.kmeans_hierarchical(
-        emb, n_lists=10, coarse_train="sample", fine_iters=4
-    )
-    fine2, coarse2 = similarity.kmeans_hierarchical(
-        emb, n_lists=10, coarse_train="sample", fine_iters=4
-    )
-    assert (fine, coarse) == (fine2, coarse2)  # deterministic end to end
-    assert len(fine) == 10
-    for c in fine + coarse:
-        assert abs(sum(x * x for x in c) ** 0.5 - 1.0) < 1e-9
-
-    # coverage: every centroid belongs to exactly one blob direction, and
-    # the per-blob centroid counts track the 60/30/10 populations
-    per_blob = [0, 0, 0]
-    for c in fine:
-        axis = max(range(3), key=lambda d: abs(c[d]))
-        assert c[axis] > 0.9  # centroid points INTO one blob
-        per_blob[axis] += 1
-    assert per_blob[0] > per_blob[1] > per_blob[2] >= 1
-
-    # every list live under brute assignment (full fill on this corpus)
-    from f1_datalakehouse_pipeline_spark.operators import dedup as _dedup
-
-    fdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(fine)], "cluster_id long, centroid array<double>"
-    )
-    live = (
-        _dedup.semantic_cluster_assign_table(emb, "vec_id", "embedding", fdf)
-        .select("cluster_id").distinct().count()
-    )
-    assert live == 10
-
-    # n_lists > corpus clamps instead of fabricating centroids
-    tiny = spark.createDataFrame(rows[:4], ["vec_id", "embedding"])
-    fine_t, _ = similarity.kmeans_hierarchical(tiny, n_lists=16)
-    assert len(fine_t) <= 4
-
-    # ivf_train passthrough returns the same codebook
-    assert similarity.ivf_train(emb, n_lists=10, train="hierarchical", kmeans_iters=4) == fine
-
-
-def test_kmeans_hierarchical_prefilter_is_bit_identical(spark):
-    """The fine-training prefilter (per-cell rank window capping the Arrow
-    transfer) must be invisible: the in-pandas trainer sorts by the same
-    ANSI-safe integer hash (masked multiply + xor — Java long and numpy
-    int64 agree bit-for-bit, no overflow on either runtime) and truncates
-    to the same cap, so prefilter on/off yields the same codebook. Corpus
-    sized so the cap actually bites (cells > 256 rows with
-    sample_per_list=1)."""
-    import random
-
-    rnd = random.Random(9)
-    rows = []
-    i = 0
-    for center in ([20.0, 0.0, 0.0], [0.0, 20.0, 0.0]):
-        for _ in range(400):  # two cells of 400 > cap 256
-            rows.append((i, [c + rnd.uniform(-1, 1) for c in center]))
-            i += 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    kw = dict(n_lists=6, coarse_train="sample", fine_iters=3, sample_per_list=1)
-    on = similarity.kmeans_hierarchical(emb, prefilter=True, **kw)
-    off = similarity.kmeans_hierarchical(emb, prefilter=False, **kw)
-    assert on == off
-    assert len(on[0]) == 6
-
-
-def test_kmeans_hierarchical_prefilter_survives_ansi_mode(spark):
-    """ADVICE r7 (medium): the old prefilter rank hash multiplied raw int64
-    ids by a 64-bit constant and relied on silent wraparound — under
-    spark.sql.ansi.enabled=true (Spark 4's DEFAULT; only this repo's
-    session helper pins it off) that threw ARITHMETIC_OVERFLOW for any
-    id >= 2. The rebuilt hash uses only ANSI-safe ops (31-bit mask, 31-bit
-    odd-constant multiply bounded at ~2^62, xor fold), so the prefiltered
-    trainer must run AND stay bit-identical to prefilter=False with ANSI
-    enforcement on."""
-    import random
-
-    rnd = random.Random(31)
-    rows = [
-        (i, [c + rnd.uniform(-1, 1) for c in center])
-        for i, center in enumerate(
-            [[20.0, 0.0, 0.0]] * 300 + [[0.0, 20.0, 0.0]] * 300
-        )
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    kw = dict(n_lists=4, coarse_train="sample", fine_iters=2, sample_per_list=1)
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        on = similarity.kmeans_hierarchical(emb, prefilter=True, **kw)
-        off = similarity.kmeans_hierarchical(emb, prefilter=False, **kw)
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-    assert on == off
-    assert len(on[0]) == 4
-
-
-def test_allocate_fine_budget_skewed_floors_respect_budget():
-    """ADVICE r7 (low): on a skewed coarse split the max(1,...) quota floors
-    can push the total allocation past n_lists, and the old trim loop could
-    never decrement (it always selected an untouchable alloc==1 floor cell
-    and broke — verified: counts 998/1/1 with n_lists=10 returned 11
-    centroids). The fixed trim takes centroids back from alloc>1 cells, so
-    the codebook honors the documented n_lists budget exactly."""
-    from f1_datalakehouse_pipeline_spark.operators.similarity import (
-        _allocate_fine_budget,
-    )
-
-    # the exact ADVICE reproduction: two floor cells push the sum to 11
-    alloc = _allocate_fine_budget({0: 998, 1: 1, 2: 1}, n_lists=10)
-    assert sum(alloc.values()) == 10
-    assert alloc[1] == 1 and alloc[2] == 1  # floors untouched
-    assert alloc[0] == 8  # the big cell yields the overshoot
-
-    # heavier skew: many singleton cells, still exact
-    counts = {0: 10_000, **{c: 1 for c in range(1, 8)}}
-    alloc = _allocate_fine_budget(counts, n_lists=16)
-    assert sum(alloc.values()) == 16
-    assert all(alloc[c] == 1 for c in range(1, 8))
-
-    # no skew: proportional fill is exact and unchanged
-    alloc = _allocate_fine_budget({0: 600, 1: 300, 2: 100}, n_lists=10)
-    assert alloc == {0: 6, 1: 3, 2: 1}
-
-    # supply clamp: a cell can never get more centroids than vectors
-    alloc = _allocate_fine_budget({0: 2, 1: 500}, n_lists=10)
-    assert alloc[0] <= 2 and sum(alloc.values()) == 10
-
-    # infeasible budget (n_lists > supply) clamps to total supply
-    alloc = _allocate_fine_budget({0: 3, 1: 2}, n_lists=16)
-    assert sum(alloc.values()) == 5
-
-
 def test_exactly_once_batch_writer_skips_replayed_ids(spark, tmp_path):
     """A replayed batch id (foreachBatch at-least-once redelivery) must be
     skipped; new ids run; a FAILED upsert leaves no mark so the retry runs."""
@@ -659,34 +459,6 @@ def test_exactly_once_ledger_is_pruned_to_a_bounded_window(spark, tmp_path):
     wrapped(df, 59)                  # frontier replay still skipped
     wrapped(df, 50)                  # trailing-window replay still skipped
     assert calls == list(range(60))
-
-
-def test_ivf_prebuilt_index_matches_oneshot(spark):
-    """ivf_query over a prebuilt index (vectorized assignment) must return
-    the same neighbors as the one-shot ivf_topk (native assignment) — the
-    amortized path is a performance form, not a different algorithm."""
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    queries = emb.filter("vec_id < 8")
-
-    oneshot = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.ivf_topk(
-            emb, queries, k=5, n_lists=8, n_probe=8
-        ).collect()
-    }
-    centroids = similarity.ivf_train(emb, n_lists=8)
-    assigned = similarity.ivf_assign(emb, centroids, method="vectorized")
-    amortized = {
-        (r.query_id, r.rnk): r.neighbor_id
-        for r in similarity.ivf_query(
-            assigned, centroids, queries, k=5, n_probe=8
-        ).collect()
-    }
-    assert oneshot == amortized and len(oneshot) == 8 * 5
 
 
 def test_novelty_pairs_matches_cross_side_self_join(docs):
@@ -2377,51 +2149,6 @@ def test_corpus_ingest_stream_matches_batch_incremental(
     assert verify_training_shards(spark, s_out, "chunk_text").count() == 0
 
 
-def test_minhash_lsh_banded_equals_one_shot(spark, sf_dir, tmp_path):
-    """The disk-staged band-at-a-time LSH must return the SAME pair set
-    (ids and jaccard values) as the one-shot operator — bands are
-    independent for candidate generation, and verification is identical."""
-    from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    one = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.4, max_doc_frequency=1000
-        ).collect()
-    }
-    banded = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.minhash_lsh_pairs_banded(
-            docs, "doc_id", "text", str(tmp_path / "lsh_scratch"),
-            threshold=0.4, max_doc_frequency=1000,
-        ).collect()
-    }
-    assert one and banded == one
-
-    # with a LOW df-cap that actually triggers, the staged cap job must
-    # drop exactly the same hot shingles as the one-shot's _drop_hot_shingles
-    one_capped = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.2, max_doc_frequency=8
-        ).collect()
-    }
-    banded_capped = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.minhash_lsh_pairs_banded(
-            docs, "doc_id", "text", str(tmp_path / "lsh_scratch2"),
-            threshold=0.2, max_doc_frequency=8,
-        ).collect()
-    }
-    assert banded_capped == one_capped
-
-    for d in ("lsh_scratch", "lsh_scratch2"):
-        spark.sql(
-            f"DROP TABLE IF EXISTS {dedup.lsh_docs_table(str(tmp_path / d))}"
-        )
-
-
 def test_plan_mixture_realizes_target_proportions(spark):
     """plan_mixture derives budgets from proportions × measured mass: the
     realized per-domain token shares must match the normalized targets to
@@ -2729,7 +2456,7 @@ def test_centroid_norm_bit_equals_spark_fold(spark):
 
 
 def test_semantic_assign_table_duplicate_id_guard(spark):
-    """ADVICE r5: the table/two-level tiers aggregate per id, so duplicate-id
+    """ADVICE r5: the table tier aggregates per id, so duplicate-id
     rows with CONFLICTING vectors must raise loudly instead of silently
     collapsing to one arbitrary vector (the literal tier preserves every
     row, so a silent collapse would make the 'equivalence-tested' tiers
@@ -2755,71 +2482,6 @@ def test_semantic_assign_table_duplicate_id_guard(spark):
     rows = {r.vec_id: r.cluster_id for r in dedup.semantic_cluster_assign_table(
         benign, "vec_id", "embedding", cdf).collect()}
     assert rows == {1: 0, 2: 0}
-
-    idx = dedup.semantic_index_two_level(cdf, [[1.0, 0.0], [0.0, 1.0]])
-    with pytest.raises(SparkRuntimeException, match="CONFLICTING"):
-        dedup.semantic_cluster_assign_two_level(
-            conflicting, "vec_id", "embedding", idx, [[1.0, 0.0], [0.0, 1.0]],
-            nprobe=2,
-        ).collect()
-
-
-def test_semantic_two_level_full_probe_equals_exact(spark, sf_dir):
-    """With nprobe = #live coarse cells the hierarchical assignment scores
-    every fine centroid, so it must equal the exact table assignment
-    bit-for-bit; at nprobe=1 it must stay a valid assignment (every vector
-    assigned exactly once, to a real centroid) with high agreement."""
-    from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    fine = [list(r[0]) for r in emb.filter(F.col("vec_id") < 16).orderBy("vec_id")
-            .select(F.col("embedding").cast("array<double>")).collect()]
-    coarse = fine[::4]  # 4 coarse cells
-    fdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(fine)], ["cluster_id", "centroid"]
-    )
-    idx = dedup.semantic_index_two_level(fdf, coarse)
-
-    exact = {
-        r.vec_id: (r.cluster_id, r.centroid_cos)
-        for r in dedup.semantic_cluster_assign_table(emb, "vec_id", "embedding", fdf)
-        .collect()
-    }
-    full = {
-        r.vec_id: (r.cluster_id, r.centroid_cos)
-        for r in dedup.semantic_cluster_assign_two_level(
-            emb, "vec_id", "embedding", idx, coarse, nprobe=len(coarse)
-        ).collect()
-    }
-    assert full == exact
-
-    one = dedup.semantic_cluster_assign_two_level(
-        emb, "vec_id", "embedding", idx, coarse, nprobe=1
-    ).collect()
-    got = {r.vec_id: r.cluster_id for r in one}
-    assert len(got) == len(exact)                      # no row lost to routing
-    assert set(got.values()) <= set(range(len(fine)))  # real centroids only
-    agree = sum(1 for vid, cid in got.items() if cid == exact[vid][0])
-    assert agree / len(exact) > 0.5  # probing is approximate but not random
-
-
-def test_semantic_two_level_empty_cell_never_drops_rows(spark):
-    """A coarse cell that owns no fine centroid must be pruned from the
-    routing array: vectors nearest to the empty cell still land somewhere."""
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])],
-        ["vec_id", "embedding"],
-    )
-    # both fine centroids route to coarse cell 0; cell 1 ends up empty
-    fdf = spark.createDataFrame(
-        [(0, [1.0, 0.1]), (1, [1.0, -0.1])], ["cluster_id", "centroid"]
-    )
-    coarse = [[1.0, 0.0], [-1.0, 0.0]]
-    idx = dedup.semantic_index_two_level(fdf, coarse)
-    out = dedup.semantic_cluster_assign_two_level(
-        df, "vec_id", "embedding", idx, coarse, nprobe=1
-    )
-    assert out.count() == 3
 
 
 def test_semantic_dedup_lsh_banding_properties(spark, sf_dir):
@@ -3098,22 +2760,6 @@ def test_incremental_semantic_state_compaction_and_replay(
     r2 = run_corpus_pipeline_incremental(spark, batch(20, 21), out, state, **kw)
     assert r2.counts["after_exact_dedup"] == 1   # 20's text was never delivered
     assert r2.counts["after_semantic_dedup"] == 0
-
-
-def test_kmeans_table_assignment_equals_literal(spark, sf_dir):
-    """assign='table' (broadcast-centroid iterations, the large-k trainer)
-    must reproduce assign='literal' EXACTLY — same dot fold, same
-    ties-to-lowest-cid rule, so every iteration's assignments and therefore
-    every returned centroid are bit-identical; bogus mode raises."""
-    from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    lit_c = similarity.kmeans_distributed(emb, n_lists=6, iters=3)
-    tbl_c = similarity.kmeans_distributed(emb, n_lists=6, iters=3, assign="table")
-    assert lit_c == tbl_c
-
-    with pytest.raises(ValueError, match="assign"):
-        similarity.kmeans_distributed(emb, n_lists=2, iters=1, assign="bogus")
 
 
 @pytest.mark.slow

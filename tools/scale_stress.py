@@ -215,205 +215,19 @@ def scaled_embeddings(spark: SparkSession, sf_dir: str, factor: int) -> DataFram
     return spark.read.parquet(path)
 
 
-def planted_embeddings(
-    spark: SparkSession,
-    sf_dir: str,
-    factor: int,
-    n_queries: int = 10,
-    n_planted: int = 5,
-    n_distract: int = 50,
-    sigma_plant: float = 0.01,
-    seed: int = 13,
-) -> DataFrame:
-    """NON-DEGENERATE ANN recall corpus (VERDICT r9 item 2): factor× the
-    unit-norm embeddings table where the fill replicas are LARGE
-    deterministic perturbations re-normalized to the sphere (≈ random
-    directions — no near-twins), plus a driver-built planted neighborhood
-    per query vector: ``n_planted`` TRUE neighbors at element-wise Gaussian
-    distance ``sigma_plant`` (chord ≈ sqrt(dim)·sigma ≈ 0.08) and
-    ``n_distract`` DISTRACTORS at twice that distance (chord ≈ 0.16). The
-    distractors make the rung informative: the coarse+PQ stage easily
-    separates the ~0.1-chord neighborhood from the ~1.4-chord fill, but its
-    quantization error is larger than the 0.08-vs-0.16 gap, so the ADC
-    ordering INSIDE the neighborhood is scrambled — exactly the regime the
-    two-stage refine exists for, and recall@5 rises with the refine budget
-    as the exact re-rank sees more of the neighborhood. Exact-id recall is
-    meaningful here, unlike on scaled_embeddings whose ±0.024/element
-    replicas flood every shortlist with equally-near twins: the planted set
-    IS the top-k, and the rung asserts that against the distributed brute
-    pass rather than assuming it. Fill noise is hash-derived (xxhash64
-    Irwin-Hall-3), so the corpus is bit-reproducible without RNG state."""
-    import numpy as np
-
-    if factor >= 5000:
-        # fill ids are vec_id + rep·1_000_000; at rep ≥ 5000 they enter the
-        # planted (5e9+) id space and a colliding fill would score as a
-        # true hit — recall would silently overstate (same stride-overflow
-        # guard as scaled_events)
-        raise ValueError(
-            f"planted_embeddings: factor {factor} overflows the fill id "
-            "stride into the planted id space (max 4999)"
-        )
-    # cache key carries EVERY generation parameter INCLUDING the base
-    # table's directory: a parameter or sf-dir change must regenerate,
-    # never silently serve a corpus built under different ones
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        CACHE,
-        f"embeddings_planted_{sf_tag}_q{n_queries}_p{n_planted}_d{n_distract}"
-        f"_s{sigma_plant}_r{seed}_x{factor}",
+def first_k_centroids(emb: DataFrame, k: int) -> DataFrame:
+    """``(cluster_id, centroid)`` table of the first ``k`` embeddings by
+    ``vec_id`` — the centroids dedup_semantic pins, at any k."""
+    w = Window.orderBy("vec_id")
+    return emb.orderBy("vec_id").limit(k).select(
+        (F.row_number().over(w) - 1).cast("long").alias("cluster_id"),
+        F.col("embedding").cast("array<double>").alias("centroid"),
     )
-    if not os.path.isdir(path):
-        base = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        )
-        reps = spark.range(1, factor).select(F.col("id").alias("rep"))
-
-        def u(salt: int):
-            # per-(vector, replica, element) uniform in [0,1)
-            return lambda i: (
-                F.abs(
-                    F.xxhash64(
-                        F.col("vec_id"), F.col("rep"), i, F.lit(seed + salt * 7919)
-                    )
-                )
-                % 100000
-            ).cast("double") / 100000.0
-
-        u1, u2, u3 = u(1), u(2), u(3)
-        # Irwin-Hall(3) − 1.5 has std 0.5; scale to element std 0.6 — noise
-        # norm ≈ 0.6·8 ≫ 1, so the re-normalized fill points in an
-        # essentially independent direction (controlled, not a twin)
-        pert = F.transform(
-            F.col("embedding"),
-            lambda x, i: x + (u1(i) + u2(i) + u3(i) - F.lit(1.5)) * F.lit(1.2),
-        )
-        fill = (
-            base.crossJoin(reps)
-            .select(
-                (F.col("vec_id") + F.col("rep") * F.lit(1_000_000)).alias("vec_id"),
-                pert.alias("p"),
-            )
-            .select(
-                "vec_id",
-                F.transform(
-                    F.col("p"),
-                    lambda x: x
-                    / F.sqrt(
-                        F.aggregate(
-                            F.col("p"), F.lit(0.0), lambda acc, y: acc + y * y
-                        )
-                    ),
-                ).alias("embedding"),
-            )
-        )
-        rng = np.random.default_rng(seed)
-        rows = []
-        for r in base.filter(F.col("vec_id") < n_queries).orderBy("vec_id").collect():
-            q = np.array(r.embedding, dtype=np.float64)
-            for j in range(n_planted):
-                v = q + rng.normal(0.0, sigma_plant, q.shape)
-                v /= np.linalg.norm(v)
-                rows.append((int(5_000_000_000 + r.vec_id * 100 + j), v.tolist()))
-            for j in range(n_distract):
-                v = q + rng.normal(0.0, 2.0 * sigma_plant, q.shape)
-                v /= np.linalg.norm(v)
-                rows.append((int(6_000_000_000 + r.vec_id * 1000 + j), v.tolist()))
-        planted = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        base.unionByName(fill).unionByName(planted).repartition(
-            max(32, factor)
-        ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def planted_truth(n_queries: int = 10, n_planted: int = 5) -> dict[int, set[int]]:
-    """The ground-truth top-k id sets planted_embeddings guarantees."""
-    return {
-        qid: {5_000_000_000 + qid * 100 + j for j in range(n_planted)}
-        for qid in range(n_queries)
-    }
-
-
-def run_refine_recall_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
-    """Refined-serve recall ladder on the PLANTED corpus (VERDICT r9 item 2).
-
-    The twin-replicated --pq ladder cannot measure exact-id recall at scale
-    (shortlists flood with equally-near twins: 0.04 exact-id vs 1.0
-    base-identity at 1M — a measurement artifact). This rung answers the
-    open question on an honest corpus: what recall does the probed IVFADC
-    serve get at 1M vectors, and how much does the two-stage refine
-    (quantized shortlist → exact re-rank against the raw table) recover as
-    the refine budget grows."""
-    import numpy as np
-
-    from f1_datalakehouse_pipeline_spark.operators import similarity
-
-    corpus = planted_embeddings(spark, sf_dir, factor)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 10
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    r: dict = {"vectors": corpus.count()}
-    truth = planted_truth()
-
-    # confirm the planted sets ARE the exact top-5 (unit vectors: cosine
-    # order == L2 order), so every recall below is against real truth
-    t0 = time.perf_counter()
-    got: dict[int, set] = {}
-    for row in similarity.brute_force_topk_vectorized(corpus, queries, k=5).collect():
-        got.setdefault(row.query_id, set()).add(row.neighbor_id)
-    r["brute_sec"] = round(time.perf_counter() - t0, 2)
-    r["truth_is_planted"] = got == truth
-    if not r["truth_is_planted"]:  # fill landed nearer than a plant: say so
-        print(f"  WARNING planted-truth mismatch: {got} vs {truth}", flush=True)
-
-    def recall(df) -> float:
-        g: dict[int, set] = {}
-        for row in df.collect():
-            g.setdefault(row.query_id, set()).add(row.neighbor_id)
-        return round(
-            float(np.mean([len(g.get(k, set()) & v) / 5 for k, v in truth.items()])),
-            3,
-        )
-
-    t0 = time.perf_counter()
-    cent = similarity.ivf_train(corpus, n_lists=16, metric="l2")
-    books = similarity.pq_train(
-        similarity.residualize(corpus, cent), n_codes=256, m=8
-    )
-    r["train_sec"] = round(time.perf_counter() - t0, 2)
-    idx_path = os.path.join(CACHE, f"ivfpq_planted_x{factor}")
-    t0 = time.perf_counter()
-    similarity.ivfpq_build(corpus, cent, books, residual=True).write.partitionBy(
-        "list_id"
-    ).mode("overwrite").parquet(idx_path)
-    r["build_write_sec"] = round(time.perf_counter() - t0, 2)
-    idx = spark.read.parquet(idx_path)
-
-    for n_probe in (4, 8):
-        t0 = time.perf_counter()
-        out = similarity.ivfpq_topk(
-            idx, queries, cent, books, k=5, n_probe=n_probe, residual=True
-        )
-        r[f"probe{n_probe}_recall"] = recall(out)
-        r[f"probe{n_probe}_sec"] = round(time.perf_counter() - t0, 2)
-        similarity.release_lut_broadcasts()
-
-    for refine in (20, 100, 500):
-        t0 = time.perf_counter()
-        out = similarity.ivfpq_topk_refined(
-            idx, corpus, queries, cent, books,
-            k=5, n_probe=4, refine=refine, residual=True,
-        )
-        r[f"refine{refine}_recall"] = recall(out)
-        r[f"refine{refine}_sec"] = round(time.perf_counter() - t0, 2)
-        similarity.release_lut_broadcasts()
-    print(f"  {r}", flush=True)
-    return r
 
 
 def run_ann_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
-    """Brute-force vs vectorized vs LSH vs IVF over a scaled vector corpus:
-    wall time plus recall@5 of the approximate paths against brute truth."""
+    """Brute-force vs hyperplane-LSH top-k over a scaled vector corpus: wall
+    time plus recall@5 of the LSH path against brute truth."""
     from f1_datalakehouse_pipeline_spark.operators import similarity
     from f1_datalakehouse_pipeline_spark.registry_ext import _lsh_planes
 
@@ -431,30 +245,11 @@ def run_ann_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
     truth = {(x.query_id, x.neighbor_id) for x in truth_rows}
 
     t0 = time.perf_counter()
-    vec = similarity.brute_force_topk_vectorized(emb, queries, k=5)
-    r["vectorized_recall"] = recall(vec, truth)
-    r["vectorized_sec"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
     lsh = similarity.lsh_bucketed_topk(emb, queries, _lsh_planes(), k=5)
     r["lsh_recall"] = recall(lsh, truth)
     r["lsh_sec"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    ivf = similarity.ivf_topk(emb, queries, k=5)
-    r["ivf_recall"] = recall(ivf, truth)
-    r["ivf_sec"] = round(time.perf_counter() - t0, 2)
     print(f"  {r}", flush=True)
     return r
-
-
-def _du_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def scaled_events(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
@@ -670,204 +465,47 @@ def _run_with_events(spark, sf_dir, ev, fn):
         rx.load_table = real_load
 
 
-def run_pq_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
-    """Product-quantization rung: train/build walls, ON-DISK compression of
-    the IVFADC index vs the raw vectors, and recall@5 of (a) full-scan ADC
-    and (b) probed IVFADC against exact-L2 truth. The claim under test: the
-    index a 100 TB corpus actually stores is ~(8+4+m) B/vector instead of
-    dim·4 B, and probing n_probe/n_lists of it preserves most of the
-    full-scan ADC's recall."""
-    import numpy as np
-
-    from f1_datalakehouse_pipeline_spark.operators import similarity
-
-    emb = scaled_embeddings(spark, sf_dir, factor)
-    queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
-    r: dict = {"vectors": emb.count()}
-
-    q_rows = queries.collect()
-    q = np.array([row.embedding for row in q_rows], dtype=np.float64)
-    q_ids = [int(row.vec_id) for row in q_rows]
-    # wall baseline: the full-precision distributed brute scorer
-    t0 = time.perf_counter()
-    similarity.brute_force_topk_vectorized(emb, queries, k=5).collect()
-    r["brute_cos_sec"] = round(time.perf_counter() - t0, 2)
-    # recall truth must be EXACT L2 (ADC is an L2 surrogate; cosine order
-    # differs on unnormalized vectors) — computed driver-side from the full
-    # matrix, which bounds this rung at ~1M vectors; past that the truth
-    # itself would come from a distributed exact pass
-    ids_rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([row.vec_id for row in ids_rows], dtype=np.int64)
-    x = np.array([row.embedding for row in ids_rows], dtype=np.float64)
-    truth = {}
-    for qid, qv in zip(q_ids, q):
-        d = ((x - qv) ** 2).sum(axis=1)
-        d[ids == qid] = np.inf
-        truth[qid] = set(ids[np.argsort(d, kind="stable")[:5]].tolist())
-
-    # The ladder corpus is ~factor near-identical twins per base vector
-    # (scaled_embeddings perturbs by ≤0.024/element — far inside a 256-code
-    # PQ cell), so exact-id recall collapses as factor grows: ADC ties
-    # across a query's hundreds of twins and the id tiebreak picks
-    # different twins than exact L2 does. Report BOTH: exact-id recall
-    # (pessimistic under twin flooding) and base-identity recall (did the
-    # search surface a twin of the true neighbor — the semantic question).
-    def recalls(df) -> tuple[float, float]:
-        got: dict[int, set] = {}
-        for row in df.collect():
-            got.setdefault(row.query_id, set()).add(row.neighbor_id)
-        exact = float(
-            np.mean([len(got.get(k, set()) & v) / 5 for k, v in truth.items()])
-        )
-        base = float(
-            np.mean(
-                [
-                    len({g % 1_000_000 for g in got.get(k, set())}
-                        & {t % 1_000_000 for t in v})
-                    / max(len({t % 1_000_000 for t in v}), 1)
-                    for k, v in truth.items()
-                ]
-            )
-        )
-        return round(exact, 3), round(base, 3)
-
-    t0 = time.perf_counter()
-    books = similarity.pq_train(emb, n_codes=256, m=8)
-    r["pq_train_sec"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    cent = similarity.ivf_train(emb, n_lists=16)
-    r["ivf_train_sec"] = round(time.perf_counter() - t0, 2)
-
-    idx_path = os.path.join(CACHE, f"ivfpq_x{factor}")
-    raw_path = os.path.join(CACHE, f"embeddings_x{factor}")
-    t0 = time.perf_counter()
-    idx = similarity.ivfpq_build(emb, cent, books)
-    idx.write.partitionBy("list_id").mode("overwrite").parquet(idx_path)
-    r["build_write_sec"] = round(time.perf_counter() - t0, 2)
-    r["raw_bytes"] = _du_bytes(raw_path)
-    r["index_bytes"] = _du_bytes(idx_path)
-    r["compression_x"] = round(r["raw_bytes"] / max(r["index_bytes"], 1), 1)
-    idx = spark.read.parquet(idx_path)
-
-    t0 = time.perf_counter()
-    enc = idx.select("neighbor_id", "codes")
-    adc_full = similarity.pq_adc_topk(enc, queries, books, k=5)
-    r["adc_full_recall"], r["adc_full_recall_base"] = recalls(adc_full)
-    r["adc_full_sec"] = round(time.perf_counter() - t0, 2)
-
-    for n_probe in (2, 4, 8):
-        t0 = time.perf_counter()
-        out = similarity.ivfpq_topk(idx, queries, cent, books, k=5, n_probe=n_probe)
-        r[f"ivfpq_p{n_probe}_recall"], r[f"ivfpq_p{n_probe}_recall_base"] = recalls(out)
-        r[f"ivfpq_p{n_probe}_sec"] = round(time.perf_counter() - t0, 2)
-        similarity.release_lut_broadcasts()  # one LUT broadcast per serve
-
-    # r9: the canonical RESIDUAL tier (L2 coarse quantizer + PQ trained on
-    # residuals, Jégou et al. TPAMI 2011) at the SAME (m, n_codes) budget,
-    # against the same exact-L2 truth — the recall-at-equal-code-budget
-    # comparison the r8 verdict asked for, at every rung of the ladder.
-    t0 = time.perf_counter()
-    cent_l2 = similarity.ivf_train(emb, n_lists=16, metric="l2")
-    books_res = similarity.pq_train(
-        similarity.residualize(emb, cent_l2), n_codes=256, m=8
-    )
-    r["res_train_sec"] = round(time.perf_counter() - t0, 2)
-    res_path = os.path.join(CACHE, f"ivfpq_res_x{factor}")
-    t0 = time.perf_counter()
-    similarity.ivfpq_build(emb, cent_l2, books_res, residual=True).write.partitionBy(
-        "list_id"
-    ).mode("overwrite").parquet(res_path)
-    r["res_build_write_sec"] = round(time.perf_counter() - t0, 2)
-    r["res_index_bytes"] = _du_bytes(res_path)
-    idx_res = spark.read.parquet(res_path)
-    for n_probe in (2, 4, 8):
-        t0 = time.perf_counter()
-        out = similarity.ivfpq_topk(
-            idx_res, queries, cent_l2, books_res, k=5, n_probe=n_probe, residual=True
-        )
-        r[f"res_p{n_probe}_recall"], r[f"res_p{n_probe}_recall_base"] = recalls(out)
-        r[f"res_p{n_probe}_sec"] = round(time.perf_counter() - t0, 2)
-        similarity.release_lut_broadcasts()
-
-    # two-stage production serve: ADC shortlist → exact re-rank of refine
-    # candidates against the raw table (FAISS IndexRefineFlat shape) — the
-    # tier that recovers quantization loss at |queries|·refine raw reads
-    t0 = time.perf_counter()
-    out = similarity.ivfpq_topk_refined(
-        idx_res, emb, queries, cent_l2, books_res,
-        k=5, n_probe=4, refine=100, residual=True,
-    )
-    r["res_refined_recall"], r["res_refined_recall_base"] = recalls(out)
-    r["res_refined_sec"] = round(time.perf_counter() - t0, 2)
-    similarity.release_lut_broadcasts()
-    print(f"  {r}", flush=True)
-    return r
-
-
 def run_semantic_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
-    """SemDeDup at scale. Claims under test: (1) with k ∝ N (fixed target
+    """SemDeDup at scale. Claim under test: with k ∝ N (fixed target
     cluster size) the within-cluster pair mass is ~N·cluster_size/2 —
     LINEAR in corpus size, visible as near-flat sec-per-1k-vectors up the
-    ladder; (2) two-level routed assignment (O(√k) cosines/vector) tracks
-    the brute O(k) assignment's wall time down while flag output stays a
-    valid assignment. Fine/coarse centroids train driver-bounded
-    (ivf_train sample mode); everything measured is engine-side."""
-    import math
-
-    from f1_datalakehouse_pipeline_spark.operators import dedup, similarity
+    ladder. The centroids are pinned the way dedup_semantic pins them (the
+    first k embeddings) and assigned through the broadcast-table tier, the
+    large-k form; everything measured is engine-side."""
+    from f1_datalakehouse_pipeline_spark.operators import dedup
 
     emb = scaled_embeddings(spark, sf_dir, factor)
     n = emb.count()
     # k ∝ N at the SemDeDup paper's density (one centroid per ~100 vectors)
-    # — the regime where brute O(n·k) assignment trends quadratic and the
-    # two-level router has to carry the ladder (VERDICT r5 item 4)
     k = max(8, n // 100)
-    k_coarse = max(4, int(math.isqrt(k)))
-    r: dict = {"vectors": n, "k": k, "k_coarse": k_coarse}
+    r: dict = {"vectors": n, "k": k}
+    cents = first_k_centroids(emb, k)
 
     t0 = time.perf_counter()
-    fine = similarity.ivf_train(
-        emb, n_lists=k, train_sample=max(4096, 2 * k), train="sample"
-    )
-    coarse = similarity.ivf_train(
-        emb, n_lists=k_coarse, train_sample=4096, seed=29, train="sample"
-    )
-    fdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(fine)], "cluster_id long, centroid array<double>"
-    )
-    idx = dedup.semantic_index_two_level(fdf, coarse).cache()
-    idx.count()
-    r["train_sec"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    asg = dedup.semantic_cluster_assign_two_level(
-        emb, "vec_id", "embedding", idx, coarse, nprobe=1
-    )
+    asg = dedup.semantic_cluster_assign_table(emb, "vec_id", "embedding", cents)
     sizes = asg.groupBy("cluster_id").count()
     stats = sizes.agg(
         F.count("*"), F.max("count"), F.avg("count"), F.sum(F.col("count") * F.col("count"))
     ).collect()[0]
-    r["assign2l_sec"] = round(time.perf_counter() - t0, 2)
+    r["assign_sec"] = round(time.perf_counter() - t0, 2)
     r["live_clusters"] = stats[0]
     r["max_cluster"] = stats[1]
     r["avg_cluster"] = round(stats[2], 1)
     r["pair_mass"] = int(stats[3] // 2)
 
-    # lazy (unstaged) flags leg: the routed assignment recomputes once per
+    # lazy (unstaged) flags leg: the assignment recomputes once per
     # pair-join side — kept on the ladder as the anti-pattern's cost curve,
     # but skipped at the top rungs where its wall is pure already-measured
     # waste (the production shape below stages the assignment once)
     if n <= 2_500_000:
         t0 = time.perf_counter()
-        flags = dedup.semantic_dedup_flags(
-            emb, "vec_id", "embedding", idx, eps=0.95, coarse_centroids=coarse, nprobe=1
-        )
+        flags = dedup.semantic_dedup_flags(emb, "vec_id", "embedding", cents, eps=0.95)
         agg = flags.agg(
             F.count("*").alias("n"),
             F.sum((~F.col("kept")).cast("long")).alias("removed"),
         ).collect()[0]
         r["flags_sec"] = round(time.perf_counter() - t0, 2)
-        assert agg["n"] == n, (agg["n"], n)  # no row lost to routing
+        assert agg["n"] == n, (agg["n"], n)  # every row flagged once
         r["removed"] = agg["removed"]
         r["sec_per_1k_vectors"] = round(r["flags_sec"] / (n / 1000), 4)
     else:
@@ -905,154 +543,7 @@ def run_semantic_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
     r["removed_staged"] = removed_plain
     r["removed_banded"] = removed_banded
     r["banded_recall"] = round(removed_banded / max(removed_plain, 1), 4)
-
-    # brute O(n·k) assignment comparison where it is still affordable
-    if n * k <= 50_000_000:
-        t0 = time.perf_counter()
-        dedup.semantic_cluster_assign_table(emb, "vec_id", "embedding", fdf).agg(
-            F.count("*")
-        ).collect()
-        r["assign_brute_sec"] = round(time.perf_counter() - t0, 2)
-        # small-rung exactness anchor: the two-level router at FULL nprobe
-        # must flag identically to the brute table assignment — the ladder's
-        # upper rungs then stand on a mechanism proven exact where brute is
-        # affordable (nprobe=1 above is the documented approximate mode)
-        t0 = time.perf_counter()
-        exact_flags = dedup.semantic_dedup_flags(
-            emb, "vec_id", "embedding", fdf, eps=0.95
-        )
-        full_flags = dedup.semantic_dedup_flags(
-            emb, "vec_id", "embedding", idx, eps=0.95,
-            coarse_centroids=coarse, nprobe=k_coarse,
-        )
-        diff = (
-            exact_flags.exceptAll(full_flags).count()
-            + full_flags.exceptAll(exact_flags).count()
-        )
-        assert diff == 0, f"two-level@full-nprobe != brute flags ({diff} rows)"
-        r["fullprobe_equals_brute"] = True
-        r["equiv_check_sec"] = round(time.perf_counter() - t0, 2)
-    idx.unpersist()
     print(f"  {r}", flush=True)
-    return r
-
-
-def run_semantic_train_scale(
-    spark: SparkSession,
-    sf_dir: str,
-    factor: int,
-    flat_distributed: bool = False,
-    trainers: tuple[str, ...] = ("sample", "hierarchical"),
-) -> dict:
-    """Quantizer-training rung (VERDICT r6 item 4): the r6 ladder disclosed
-    that at k ∝ N the SAMPLE-trained codebook under-fills (13,957 of 50,000
-    lists live at 5M; pair mass ~3.6× the ideal N·cluster/2 line) because
-    the bounded sample affords ~2 vectors per centroid. This rung measures
-    the fix: for each trainer, train wall, live-list fill, max cluster and
-    pair mass under the SAME two-level routed assignment (nprobe=1) the
-    semantic ladder uses.
-
-    Trainers: ``sample`` (r6 baseline), ``hierarchical``
-    (:func:`similarity.kmeans_hierarchical` — distributed √k-cell coarse
-    split + per-cell parallel numpy fine training, population-proportional
-    allocation). FLAT distributed Lloyd's (``train="distributed"``) is
-    O(N·k·dim) PER ITERATION — at 2M vectors × 20K lists × 64 dims that is
-    2.6e12 multiplies per sweep through the HOF fold, hours on 32 cores —
-    so it is measured only when ``flat_distributed`` is set and the rung is
-    small enough (the crossover evidence), never at the top rungs.
-    """
-    import math
-
-    from f1_datalakehouse_pipeline_spark.operators import dedup, similarity
-
-    emb = scaled_embeddings(spark, sf_dir, factor).cache()
-    n = emb.count()
-    k = max(8, n // 100)
-    k_coarse = max(4, int(math.isqrt(k)))
-    ideal_cluster = n / k
-    r: dict = {
-        "vectors": n,
-        "k": k,
-        "k_coarse": k_coarse,
-        # every cluster at its ideal population: k * C(n/k, 2)
-        "pair_mass_ideal": int(k * (ideal_cluster * (ideal_cluster - 1) / 2)),
-        "trainers": {},
-    }
-
-    def measure(name: str, fine: list, coarse: list, train_sec: float) -> None:
-        fdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(fine)],
-            "cluster_id long, centroid array<double>",
-        )
-        idx = dedup.semantic_index_two_level(fdf, coarse).cache()
-        idx.count()
-        t0 = time.perf_counter()
-        asg = dedup.semantic_cluster_assign_two_level(
-            emb, "vec_id", "embedding", idx, coarse, nprobe=1
-        )
-        stats = (
-            asg.groupBy("cluster_id")
-            .count()
-            .agg(
-                F.count("*"),
-                F.max("count"),
-                F.sum(F.col("count") * F.col("count")),
-            )
-            .collect()[0]
-        )
-        leg = {
-            "train_sec": round(train_sec, 2),
-            "assign2l_sec": round(time.perf_counter() - t0, 2),
-            "live_lists": stats[0],
-            "fill_pct": round(100.0 * stats[0] / k, 1),
-            "max_cluster": stats[1],
-            # C(c,2) per cluster = (sum c^2 - sum c) / 2 — the SAME formula
-            # shape as pair_mass_ideal's k*C(n/k,2) (ADVICE r7: the old
-            # sum(c^2)//2 biased the ratio upward by ~n/2 pairs, ~1% at
-            # ideal cluster population 100)
-            "pair_mass": int((stats[2] - n) // 2),
-            "pair_mass_vs_ideal": round(
-                ((stats[2] - n) // 2) / max(r["pair_mass_ideal"], 1), 2
-            ),
-        }
-        idx.unpersist()
-        r["trainers"][name] = leg
-        print(f"  {name}: {leg}", flush=True)
-
-    if "sample" in trainers:
-        # r6 baseline: driver-side sample training (+ its own sampled coarse)
-        t0 = time.perf_counter()
-        fine_s = similarity.ivf_train(
-            emb, n_lists=k, train_sample=max(4096, 2 * k), train="sample"
-        )
-        coarse_s = similarity.ivf_train(
-            emb, n_lists=k_coarse, train_sample=4096, seed=29, train="sample"
-        )
-        measure("sample", fine_s, coarse_s, time.perf_counter() - t0)
-
-    if "hierarchical" in trainers:
-        # the k ∝ N answer: hierarchical (distributed coarse so the cell
-        # split sees the whole corpus; per-cell fine training in one pass)
-        t0 = time.perf_counter()
-        fine_h, coarse_h = similarity.kmeans_hierarchical(
-            emb, n_lists=k, coarse_train="distributed", coarse_iters=3
-        )
-        measure("hierarchical", fine_h, coarse_h, time.perf_counter() - t0)
-
-    if flat_distributed:
-        # assign="table" — the literal mode's O(k·dim) expression tree is
-        # un-analyzable at this k (similarity.kmeans_distributed docstring)
-        t0 = time.perf_counter()
-        fine_d = similarity.kmeans_distributed(
-            emb, n_lists=k, iters=3, assign="table"
-        )
-        coarse_d = similarity.ivf_train(
-            emb, n_lists=k_coarse, train_sample=4096, seed=29, train="sample"
-        )
-        measure("flat_distributed", fine_d, coarse_d, time.perf_counter() - t0)
-
-    emb.unpersist()
-    print(f"  {r['vectors']} vectors done", flush=True)
     return r
 
 
@@ -1063,7 +554,7 @@ def run_semantic_skew_scale(spark: SparkSession, sf_dir: str, factor: int) -> di
     divides each cluster's pair mass by ~2^planes per band; on the bounded
     ~200-doc clusters of the main rung it is pure overhead (measured), so
     this leg isolates where it actually pays."""
-    from f1_datalakehouse_pipeline_spark.operators import dedup, similarity
+    from f1_datalakehouse_pipeline_spark.operators import dedup
     from f1_datalakehouse_pipeline_spark.registry_ext import _lsh_planes
 
     emb = scaled_embeddings(spark, sf_dir, factor)
@@ -1071,7 +562,10 @@ def run_semantic_skew_scale(spark: SparkSession, sf_dir: str, factor: int) -> di
     k = 16
     r: dict = {"vectors": n, "k": k}
 
-    cents = similarity.ivf_train(emb, n_lists=k, train_sample=4096, train="sample")
+    cents = [
+        list(row.centroid)
+        for row in first_k_centroids(emb, k).orderBy("cluster_id").collect()
+    ]
     staged_path = os.path.join(CACHE, f"semantic_skew_asg_x{factor}")
     asg = dedup.semantic_cluster_assign(emb, "vec_id", "embedding", cents).select(
         "vec_id", "embedding", "cluster_id"
@@ -1145,14 +639,7 @@ def run_semantic_divergence_scale(
     mid = emb.agg(F.max("vec_id")).collect()[0][0] // 2
     r: dict = {"vectors": n, "k": k, "mid": mid, "eps": {}}
 
-    w = Window.orderBy("vec_id")
-    cent = (
-        emb.orderBy("vec_id").limit(k)
-        .select(
-            (F.row_number().over(w) - 1).cast("long").alias("cluster_id"),
-            F.col("embedding").cast("array<double>").alias("centroid"),
-        )
-    )
+    cent = first_k_centroids(emb, k)
     staged_path = os.path.join(CACHE, f"semantic_div_asg_x{factor}")
     dedup.semantic_cluster_assign_table(emb, "vec_id", "embedding", cent).select(
         "vec_id", F.col("embedding").alias("_v"), "cluster_id"
@@ -1391,63 +878,6 @@ def run_novelty_scale(spark: SparkSession, sf_dir: str, factor: int) -> dict:
     assert r["probe_bucketed_pairs"] == r["probe_pairs"], (
         "bucketed layout changed the pair count"
     )
-    print(f"  {r}", flush=True)
-    return r
-
-
-def run_lsh_banded_scale(
-    spark: SparkSession, sf_dir: str, factor: int, compare_oneshot: bool = True
-) -> dict:
-    """Disk-budgeted band-at-a-time LSH rung (VERDICT r4 item 4): run
-    `minhash_lsh_pairs_banded` at ``factor``× documents with a df-cap,
-    tracking peak disk consumption; at factors where the one-shot fits the
-    scratch budget (``compare_oneshot``), assert byte-identical pair
-    counts. The one-shot form ENOSPCs at factor 1000 (5M docs) on this
-    host's ~65 GB free (measured r5), so the invariant chains:
-    one-shot == banded at ≤500K docs, banded structural ratio (~×10 pairs
-    per ×10 docs, cluster-of-2 corpus) above."""
-    import shutil
-    import threading
-
-    docs = scaled_docs(spark, sf_dir, factor)
-    r: dict = {"docs": docs.count()}
-    peak = {"free_min_gb": float("inf")}
-    stop = {"v": False}
-
-    def monitor():
-        while not stop["v"]:
-            st = os.statvfs("/")
-            peak["free_min_gb"] = min(
-                peak["free_min_gb"], st.f_bavail * st.f_frsize / 2**30
-            )
-            time.sleep(2)
-
-    threading.Thread(target=monitor, daemon=True).start()
-    st = os.statvfs("/")
-    free0 = st.f_bavail * st.f_frsize / 2**30
-
-    scratch = os.path.join(CACHE, f"lsh_banded_scratch_x{factor}")
-    shutil.rmtree(scratch, ignore_errors=True)
-    r["banded_sec"], r["banded_pairs"] = timed(
-        "banded LSH (capped)",
-        lambda: dedup.minhash_lsh_pairs_banded(
-            docs, "doc_id", "text", scratch,
-            threshold=0.5, max_doc_frequency=1000,
-        ).count(),
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    stop["v"] = True
-    r["free_start_gb"] = round(free0, 1)
-    r["peak_disk_gb"] = round(free0 - peak["free_min_gb"], 1)
-
-    if compare_oneshot:
-        r["oneshot_sec"], r["oneshot_pairs"] = timed(
-            "one-shot LSH (capped)",
-            lambda: dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", threshold=0.5, max_doc_frequency=1000
-            ).count(),
-        )
-        assert r["oneshot_pairs"] == r["banded_pairs"], r
     print(f"  {r}", flush=True)
     return r
 
@@ -2246,22 +1676,16 @@ def main() -> None:
     ap.add_argument("--big", action="store_true", help="add factor 1000 (~5M docs)")
     ap.add_argument("--boilerplate", action="store_true")
     ap.add_argument("--facts", action="store_true", help="scale the lineitem fact side instead of documents")
-    ap.add_argument("--ann", action="store_true", help="scale the embeddings table and measure ANN variants")
-    ap.add_argument("--pq", action="store_true", help="IVFADC rung: PQ train/build walls, on-disk index compression vs raw vectors, full-scan ADC + probed recall@5 vs exact-L2 truth")
-    ap.add_argument("--refine-recall", action="store_true", help="refined-serve recall ladder on the PLANTED (non-twin) corpus: probed vs refine=20/100/500 exact-id recall@5 against asserted planted truth (also runs as part of --pq)")
+    ap.add_argument("--ann", action="store_true", help="scale the embeddings table: brute-force vs hyperplane-LSH top-k")
     ap.add_argument("--cdc", action="store_true", help="CDC cost-shape rung: fixed 10K-row change batch vs growing table — the file-served CDF read should stay FLAT while the snapshot-diff fallback grows")
     ap.add_argument("--funnel", action="store_true", help="behavioral-analytics rung: r8 funnel/cohort/transition/MAD/chisq queries on factor-scaled events + the textbook self-join funnel baseline")
     ap.add_argument("--pipeline", action="store_true", help="run the full F1 pipeline at ~2.5M lap rows")
     ap.add_argument("--novelty", action="store_true", help="measure incremental-probe amortization vs full self-join")
-    ap.add_argument("--semantic", action="store_true", help="SemDeDup rung: two-level routed assignment + within-cluster pair cost up the ladder")
+    ap.add_argument("--semantic", action="store_true", help="SemDeDup rung: pinned k = N/100 centroids, table assignment + within-cluster pair cost up the ladder")
     ap.add_argument("--semantic-skew", action="store_true", help="banding win on deliberately-giant clusters (k=16)")
     ap.add_argument("--semantic-divergence", action="store_true", help="chained-middle-member divergence of the incremental semantic gate vs one-shot, per eps (VERDICT r7 item 4)")
     ap.add_argument("--semantic-ingest", action="store_true", help="multi-batch semantic-state ladder: per-batch wall + semantic/ file growth with and without compaction folds (VERDICT r7 item 3)")
-    ap.add_argument("--semantic-train", action="store_true", help="quantizer-training rung: sample vs hierarchical codebook fill / pair mass / wall at k = N/100")
-    ap.add_argument("--flat-distributed", action="store_true", help="with --semantic-train: also time FLAT distributed Lloyd's (crossover evidence; only sane at small factors)")
-    ap.add_argument("--trainers", default="sample,hierarchical", help="with --semantic-train: comma list of trainers to run")
-    ap.add_argument("--lsh-banded", action="store_true", help="disk-budgeted band-at-a-time LSH rung (pair parity vs one-shot where it fits)")
-    ap.add_argument("--no-oneshot", action="store_true", help="skip the one-shot comparison leg (factors where it exceeds the disk budget)")
+    ap.add_argument("--no-oneshot", action="store_true", help="with --corpus-incremental: skip the one-shot comparison leg (factors where it exceeds the disk budget)")
     ap.add_argument("--corpus", action="store_true", help="run the full corpus pipeline (plans/corpus.py) at scale")
     ap.add_argument("--mixture", action="store_true", help="bucketed vs naive budgeted_mixture on a 90%%-one-domain corpus")
     ap.add_argument("--corpus-incremental", action="store_true", help="batch-at-a-time corpus ingestion: per-batch cost curve vs one-shot rebuild")
@@ -2297,24 +1721,6 @@ def main() -> None:
         for factor in factors:
             print(f"ann factor {factor}:", flush=True)
             results[str(factor)] = run_ann_scale(spark, args.sf_dir, factor)
-        print(json.dumps(results, indent=2))
-        return
-
-    if args.pq:
-        for factor in factors:
-            print(f"pq factor {factor}:", flush=True)
-            results[str(factor)] = run_pq_scale(spark, args.sf_dir, factor)
-            print(f"pq refine-recall (planted) factor {factor}:", flush=True)
-            results[str(factor)]["refine_ladder_planted"] = run_refine_recall_scale(
-                spark, args.sf_dir, factor
-            )
-        print(json.dumps(results, indent=2))
-        return
-
-    if args.refine_recall:
-        for factor in factors:
-            print(f"refine-recall factor {factor}:", flush=True)
-            results[str(factor)] = run_refine_recall_scale(spark, args.sf_dir, factor)
         print(json.dumps(results, indent=2))
         return
 
@@ -2379,17 +1785,6 @@ def main() -> None:
         print(json.dumps(results, indent=2))
         return
 
-    if args.semantic_train:
-        for factor in factors:
-            print(f"semantic-train factor {factor}:", flush=True)
-            results[str(factor)] = run_semantic_train_scale(
-                spark, args.sf_dir, factor,
-                flat_distributed=args.flat_distributed,
-                trainers=tuple(args.trainers.split(",")),
-            )
-        print(json.dumps(results, indent=2))
-        return
-
     if args.semantic:
         for factor in factors:
             print(f"semantic factor {factor}:", flush=True)
@@ -2401,15 +1796,6 @@ def main() -> None:
         for factor in factors:
             print(f"novelty factor {factor}:", flush=True)
             results[str(factor)] = run_novelty_scale(spark, args.sf_dir, factor)
-        print(json.dumps(results, indent=2))
-        return
-
-    if args.lsh_banded:
-        for factor in factors:
-            print(f"lsh-banded factor {factor}:", flush=True)
-            results[str(factor)] = run_lsh_banded_scale(
-                spark, args.sf_dir, factor, compare_oneshot=not args.no_oneshot
-            )
         print(json.dumps(results, indent=2))
         return
 
