@@ -40,7 +40,14 @@ RUNS = 3
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from f1_datalakehouse_pipeline_spark import get_spark, registry
+from f1_datalakehouse_pipeline_spark.sources.testdata import load_table
+
+# scaled inputs of the sf1 legs, built once and reused
+CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scale_cache")
 
 # Representative, heavier queries spanning scans, star joins, window stacks,
 # SCD2 build, top-k, and the dedup/text extensions.
@@ -62,6 +69,86 @@ HEADLINE = [
     "w_sessionize_events",
     "asof_purchase_to_view",
 ]
+
+
+def _salted_docs(
+    spark: SparkSession, base: DataFrame, factor: int, *keep: str
+) -> DataFrame:
+    """factor x ``base``'s documents, deterministic, near-dup clusters of 2:
+    replica ``rep`` offsets ``doc_id`` by ``rep * 1e6`` and salts every 3rd
+    word with ``rep // 2`` (no k=3 word shingle survives across salts); odd
+    replicas end in " zzvariant". ``keep`` names base columns carried as-is."""
+    # Parallelize the GENERATION side: the replica axis drives the row
+    # explosion, so partition it — with the default 1-partition range the
+    # whole factor-x corpus would be salted by a single task (measured:
+    # factor 10000 = 50M rows through one thread, tens of minutes).
+    reps = spark.range(factor).repartition(min(max(32, factor // 8), 512)).select(
+        F.col("id").alias("rep")
+    )
+    # broadcast the small DOC side explicitly: the streamed (partitioned)
+    # side must be the replica axis or Spark broadcasts the tiny range
+    # and the whole corpus generates in base's 1-2 input partitions
+    out = reps.crossJoin(F.broadcast(base))
+    salt = (F.col("rep") / 2).cast("long").cast("string")
+    words = F.split(F.col("text"), " ")
+    salted = F.concat_ws(
+        " ",
+        F.transform(
+            words,
+            lambda w, i: F.when(i % 3 == 0, F.concat(w, F.lit("q"), salt)).otherwise(w),
+        ),
+    )
+    text = F.when(F.col("rep") % 2 == 1, F.concat(salted, F.lit(" zzvariant"))).otherwise(salted)
+    return out.select(
+        (F.col("doc_id") + F.col("rep") * F.lit(1_000_000)).alias("doc_id"),
+        text.alias("text"),
+        *keep,
+    )
+
+
+def scaled_docs(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
+    """factor x the sf_dir documents table (doc_id, text), cached under
+    ``.scale_cache/``."""
+    path = os.path.join(CACHE, f"docs_x{factor}")
+    if not os.path.isdir(path):
+        base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        _salted_docs(spark, base, factor).repartition(max(32, factor // 8)).write.mode(
+            "overwrite"
+        ).parquet(path)
+    return spark.read.parquet(path)
+
+
+def sf_equiv_dir(spark: SparkSession, sf_dir: str, factor: int) -> str:
+    """Materialize a ``load_table``-compatible directory holding factor-x
+    ``documents`` and ``embeddings`` tables (base schema preserved), so
+    registry queries run UNCHANGED at a compute-bound scale — the bench's
+    sf1 heavy-extras leg (VERDICT r6 item 8): queries like dedup_semantic
+    and t_corpus_manifest are scheduler-bound at sf0.1, so regressions on
+    their COMPUTE must be judged at 10×. Documents are salted as in
+    :func:`scaled_docs`; each replica's embeddings get a small per-replica
+    offset. Cached under ``.scale_cache/`` like :func:`scaled_docs`."""
+    root = os.path.join(CACHE, f"sfdir_x{factor}")
+    docs_path = os.path.join(root, "documents.parquet")
+    if not os.path.isdir(docs_path):
+        base = load_table(spark, sf_dir, "documents")
+        _salted_docs(spark, base, factor, "lang", "source").withColumn(
+            "n_chars", F.length("text")
+        ).repartition(max(32, factor // 8)).write.mode("overwrite").parquet(docs_path)
+    emb_path = os.path.join(root, "embeddings.parquet")
+    if not os.path.isdir(emb_path):
+        base = load_table(spark, sf_dir, "embeddings")
+        reps = spark.range(factor).select(F.col("id").alias("rep"))
+        base.crossJoin(F.broadcast(reps)).select(
+            (F.col("vec_id") + F.col("rep") * F.lit(1_000_000)).alias("vec_id"),
+            F.transform(
+                F.col("embedding"),
+                lambda x, i: (
+                    x + (F.col("rep") % 7).cast("double") * 0.001 * (i % 5).cast("double")
+                ).cast("float"),
+            ).alias("embedding"),
+            "label",
+        ).repartition(max(32, factor)).write.mode("overwrite").parquet(emb_path)
+    return root
 
 
 def main() -> None:
@@ -149,7 +236,7 @@ def main() -> None:
     # Scale section (VERDICT r1 item 6): dedup at an sf1-equivalent document
     # count (10x the sf0.1 corpus, bounded dup-cluster structure). Reported
     # SEPARATELY from "value" so the headline total stays comparable round
-    # over round; tools/scale_stress.py holds the full 50K/500K/5M ladder.
+    # over round; PERF_NOTES.md holds the full 50K/500K/5M ladder.
     scale_sf1_dedup: dict | None = None
     scale_sf1_extras: dict | None = None
     scale_sf1_extras_spread: dict[str, list[float]] | None = None
@@ -159,7 +246,6 @@ def main() -> None:
         _mark("scale_sf1_dedup")
         try:
             from f1_datalakehouse_pipeline_spark.operators import dedup
-            from tools.scale_stress import scaled_docs
 
             docs = scaled_docs(spark, sf_dir, factor=10)
             scale: dict[str, float | int] = {"docs": docs.count()}
@@ -184,8 +270,6 @@ def main() -> None:
         # min/max spread (VERDICT r8 item 5).
         _mark("scale_sf1_extras")
         try:
-            from tools.scale_stress import sf_equiv_dir
-
             sf1_dir = sf_equiv_dir(spark, sf_dir, factor=10)
             spark.catalog.clearCache()
             leg: dict[str, float | int] = {}

@@ -1,4 +1,4 @@
-"""Distributed BPE (byte-pair-encoding) tokenizer training + encoding.
+"""BPE (byte-pair-encoding) subword encoding with a pinned merge list.
 
 The missing piece between the whitespace/vocab-id token surface
 (functions/text.encode_token_ids, VERDICT r4 item 8) and what an LLM
@@ -8,25 +8,10 @@ Spark-first and UDF-free — the merge operation itself is a native string
 identical to greedy left-to-right BPE (and bit-identical in DuckDB, so the
 encode path is oracle-testable).
 
-Why this shape scales to 100 TB:
+The merge lists are pinned (``bpe_model_corpus.MERGES_1K``; the tests
+learn theirs with the single-process :func:`py_bpe_train`), so the engine
+ships the encoder only:
 
-- **The trainer never iterates over the corpus.** Classic BPE operates on
-  the distinct-word frequency table (one corpus pass builds it; it is
-  vocabulary-sized, millions of rows, not corpus-sized). Every merge
-  iteration is a small aggregate job over that table plus a bounded
-  driver-side top-K collect — per-iteration cost is O(|distinct words|),
-  independent of corpus size.
-- **Provably-exact multi-merge passes.** A naive loop runs one Spark job
-  per merge (32K merges = 32K jobs). ``pairs_per_pass`` batches merges with
-  a safety rule that keeps the result EXACTLY equal to sequential BPE:
-  take candidates in BPE pick order (count desc, then pair lexicographic),
-  stop at the first candidate sharing a symbol with an earlier pick, then
-  trim trailing picks whose count ties the first excluded candidate.
-  Within such a batch (a) merges touch disjoint symbols so they commute and
-  never change each other's counts, and (b) every pair CREATED by a batch
-  merge has count <= some old non-batch pair <= the first excluded count <
-  every batch count — so sequential BPE would have picked exactly this
-  batch, in this order. (Property-tested: batched == one-at-a-time.)
 - **Encoding joins, it never re-derives.** ``bpe_word_table`` applies the
   learned merges once to the distinct-word table (chunked projections,
   lineage cut between chunks, never an unbounded expression tree);
@@ -60,8 +45,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from f1_datalakehouse_pipeline_spark.functions.text import tokens
 
 #: Symbol-frame separator. Any input word containing it would corrupt the
-#: frame, so the trainer and encoders FILTER such words out loudly (they do
-#: not silently mis-merge); U+001E is the ASCII record separator and does
+#: frame, so the word table and encoders FILTER such words out loudly (they
+#: do not silently mis-merge); U+001E is the ASCII record separator and does
 #: not occur in natural-language corpora.
 SEP = "\x1e"
 
@@ -114,7 +99,7 @@ def bpe_pieces_expr(word: Column, model: BpeModel) -> Column:
 
 
 # --------------------------------------------------------------------------
-# trainer
+# word table
 # --------------------------------------------------------------------------
 
 
@@ -127,134 +112,6 @@ def word_frequency_table(df: DataFrame, text_col: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def _safe_batch(
-    cand: list, pairs_per_pass: int, complete: bool
-) -> list[tuple[str, str]]:
-    """The exactness-preserving prefix of the candidate list (see module
-    docstring). ``cand`` rows are (a, b, c) in BPE pick order; ``complete``
-    means the list was NOT truncated by the collect limit (no pair with
-    count >= min_count exists beyond it)."""
-    batch: list[tuple[str, str]] = []
-    used: set[str] = set()
-    cut_count: int | None = None  # count of the first excluded candidate
-    for row in cand:
-        if len(batch) >= pairs_per_pass or row.a in used or row.b in used:
-            cut_count = row.c
-            break
-        batch.append((row.a, row.b))
-        used.add(row.a)
-        used.add(row.b)
-        # the composed symbol may already exist elsewhere; later candidates
-        # touching it would see their counts change — exclude them too.
-        used.add(row.a + row.b)
-    else:
-        # Whole collected list batched. If it was truncated, uncollected
-        # pairs (count <= the last collected count) stand in as the first
-        # excluded candidate; if complete, nothing was excluded at all.
-        cut_count = None if complete else cand[-1].c
-    if cut_count is not None:
-        # trim trailing picks that do not STRICTLY beat the first excluded
-        # count: sequential BPE could interleave ties with pairs created by
-        # earlier batch merges (created pairs never exceed cut_count).
-        while batch and cand[len(batch) - 1].c <= cut_count:
-            batch.pop()
-    return batch
-
-
-def bpe_train(
-    df: DataFrame,
-    text_col: str,
-    num_merges: int,
-    *,
-    pairs_per_pass: int = 64,
-    min_count: int = 2,
-    stats: dict | None = None,
-) -> BpeModel:
-    """Learn ``num_merges`` BPE merges from a corpus: one corpus pass for
-    the word-frequency table, then :func:`bpe_train_from_words`."""
-    return bpe_train_from_words(
-        word_frequency_table(df, text_col),
-        num_merges,
-        pairs_per_pass=pairs_per_pass,
-        min_count=min_count,
-        stats=stats,
-    )
-
-
-def bpe_train_from_words(
-    word_counts: DataFrame,
-    num_merges: int,
-    *,
-    pairs_per_pass: int = 64,
-    min_count: int = 2,
-    stats: dict | None = None,
-) -> BpeModel:
-    """Learn merges from a prebuilt (word, cnt) table — the form a 100 TB
-    pipeline actually trains from (the word-frequency table is computed
-    once, persisted, and shared across tokenizer experiments). Per pass:
-    ONE aggregate job over the vocabulary-sized table + a bounded top-K
-    collect (4*pairs_per_pass rows) + one chunked rewrite projection with
-    the lineage cut (``localCheckpoint``) so the plan never deepens across
-    passes. Identical to sequential BPE by the _safe_batch rule;
-    deterministic tie-break = (count desc, left symbol, right symbol).
-    ``stats`` (optional dict) receives {"passes", "n_words", "batch_sizes"}
-    for instrumentation — ``batch_sizes[i]`` is the number of merges pass i
-    batched, so the conflict-binding curve at large merge budgets is
-    measurable from ONE training run."""
-    words = word_counts.select("word", "cnt").withColumn(
-        "sym", _framed(F.col("word"))
-    )
-    words = words.localCheckpoint(eager=True)
-    if stats is not None:
-        stats["n_words"] = words.count()
-        stats["passes"] = 0
-        stats["batch_sizes"] = []
-    merges: list[tuple[str, str]] = []
-    while len(merges) < num_merges:
-        if stats is not None:
-            stats["passes"] += 1
-        ss = _unframed(F.col("sym"))
-        pairs = (
-            words.select(F.col("cnt"), ss.alias("ss"))
-            .filter(F.size("ss") >= 2)
-            .select(
-                "cnt",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(ss) - 1), "
-                        "i -> struct(ss[i - 1] AS a, ss[i] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        take = max(4 * pairs_per_pass, 16)
-        cand = (
-            pairs.filter(F.col("c") >= min_count)
-            .orderBy(F.desc("c"), "a", "b")
-            .limit(take)  # bounded collect: top-K candidates only
-            .collect()
-        )
-        if not cand:
-            break
-        batch = _safe_batch(
-            cand,
-            min(pairs_per_pass, num_merges - len(merges)),
-            complete=len(cand) < take,
-        )
-        if not batch:
-            # Degenerate safe prefix (e.g. the top two candidates tie and
-            # conflict): fall back to the single exact head pick.
-            batch = [(cand[0].a, cand[0].b)]
-        merges.extend(batch)
-        if stats is not None:
-            stats["batch_sizes"].append(len(batch))
-        words = words.withColumn("sym", _apply_merges(F.col("sym"), tuple(batch)))
-        words = words.localCheckpoint(eager=True)
-    return BpeModel(tuple(merges[:num_merges]))
 
 
 # --------------------------------------------------------------------------
@@ -382,8 +239,9 @@ def bpe_encode_with_table(
 def py_bpe_train(
     word_counts: dict[str, int], num_merges: int, min_count: int = 2
 ) -> list[tuple[str, str]]:
-    """Textbook sequential BPE on a word->count dict; the equivalence
-    oracle for bpe_train (same tie-break: count desc, then pair lexical)."""
+    """Textbook sequential BPE on a word->count dict (tie-break: count
+    desc, then pair lexical); the encoder tests learn their merges with
+    it."""
     syms = {w: list(w) for w in word_counts}
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):

@@ -199,33 +199,6 @@ def shingle_containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, content_col: str, k: int = 3, n_hashes: int = 16,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc, i, minhash) — the MinHash signature in long form.
-
-    Long form keeps the plan a single groupBy; banding pivots from here.
-    Pass a precomputed ``shingles`` table to share the scan with other stages.
-    """
-    sh = shingles if shingles is not None else _shingle_table(df, id_col, content_col, k)
-    terms = [
-        F.min(minhash_term(F.col("h"), i)).alias(f"mh{i}") for i in range(n_hashes)
-    ]
-    wide = sh.groupBy("doc").agg(*terms)
-    stacked = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("i"), F.col(f"mh{i}").alias("mh"))
-                for i in range(n_hashes)
-            ]
-        )
-    )
-    return wide.select("doc", stacked.alias("s")).select(
-        "doc", F.col("s.i").alias("i"), F.col("s.mh").alias("mh")
-    )
-
-
 def _band_signatures(sh: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """(doc, band, band_sig) banded MinHash signatures from a shingle
     inverted index ``sh(doc, h)``.
@@ -365,7 +338,6 @@ def simhash_codes(df: DataFrame, id_col: str, content_col: str, n_bits: int = 48
 __all__ = [
     "exact_dedup",
     "ngram_jaccard_pairs",
-    "minhash_signatures",
     "minhash_lsh_pairs",
     "simhash_codes",
     "MINHASH_A",

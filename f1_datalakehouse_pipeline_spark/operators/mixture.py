@@ -218,69 +218,3 @@ def repeat_mixture(
             )
         ).alias("copy_idx"),
     )
-
-
-def plan_mixture(
-    df: DataFrame,
-    id_col: str,
-    domain_col: str,
-    n_tokens_col: str,
-    proportions: dict[str, float],
-    total_tokens: int | None = None,
-    seed: str = "mix-1",
-    n_buckets: int = 4096,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Profile-driven mixture: derive each domain's token BUDGET from target
-    PROPORTIONS × the corpus's measured token mass, then run
-    :func:`budgeted_mixture` — the form mixture specs are actually written
-    in (DoReMi/Pile-style "30% web, 20% code…"), with the absolute budgets
-    computed, not hand-fed.
-
-    ``proportions`` are normalized to sum to 1 over the listed domains.
-    The largest total satisfying every proportion without upsampling is
-    ``T_max = min_d mass_d / p_d`` (the scarcest domain binds); the realized
-    total is ``min(total_tokens, T_max)`` — asking for more than T_max
-    CANNOT hit the targets (the binding domain would run dry), so the total
-    is clamped and the returned budgets disclose it. A listed domain with
-    zero corpus mass makes every positive target infeasible → ValueError.
-
-    The profile is one groupBy(domain).sum(tokens) — |domains| driver rows,
-    the same bounded-collect contract as the budget map itself. Realized
-    proportions match targets to within one boundary doc per domain
-    (prefix-cut semantics; property-tested).
-
-    Returns ``(admitted, budgets)`` — admitted is :func:`budgeted_mixture`
-    output; budgets is the derived domain→token map actually applied.
-    """
-    if not proportions:
-        raise ValueError("proportions must be non-empty")
-    if any(p < 0 for p in proportions.values()):
-        raise ValueError(f"negative proportion in {proportions}")
-    norm = sum(proportions.values())
-    if norm <= 0:
-        raise ValueError("proportions sum to zero")
-    target = {d: p / norm for d, p in proportions.items() if p > 0}
-
-    mass_rows = (
-        df.filter(F.col(n_tokens_col) > 0)
-        .filter(F.col(domain_col).isin(list(target)))
-        .groupBy(domain_col)
-        .agg(F.sum(F.col(n_tokens_col).cast("long")).alias("mass"))
-        .collect()
-    )
-    mass = {r[0]: int(r[1]) for r in mass_rows}
-    dry = [d for d in target if mass.get(d, 0) <= 0]
-    if dry:
-        raise ValueError(
-            f"domains with positive targets but no corpus tokens: {sorted(dry)}"
-        )
-    t_max = min(mass[d] / p for d, p in target.items())
-    total = min(float(total_tokens), t_max) if total_tokens is not None else t_max
-    budgets = {d: int(p * total) for d, p in target.items()}
-    return (
-        budgeted_mixture(
-            df, id_col, domain_col, n_tokens_col, budgets,
-            seed=seed, n_buckets=n_buckets,
-        ),
-        budgets,
-    )

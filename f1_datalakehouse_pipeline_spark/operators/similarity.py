@@ -288,6 +288,13 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
+def _argmin(dists: Column) -> Column:
+    """0-based index of the smallest element; ties pick the lowest index
+    (array_position finds the first exact min). Every nearest-codeword and
+    nearest-centroid assignment here goes through this one rule."""
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
 def pq_codebook_pinned(
     embeddings: DataFrame,
     n_codes: int = 16,
@@ -334,7 +341,7 @@ def pq_encode_native(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Map-only PQ encode in native expressions: per subspace, the argmin-L2
-    codeword (ties → lowest code id via array_position on the exact min).
+    codeword (ties → lowest code id, :func:`_argmin`).
     Output (id, codes array<int>) — the m-byte row a 100 TB index persists.
     One scan, zero shuffles, zero Python; the codebook rides along as a
     one-row broadcast relation (m·n_codes·dsub doubles)."""
@@ -355,7 +362,7 @@ def pq_encode_native(
     for s in range(m):
         sub = F.slice(v, s * dsub + 1, dsub)
         dists = F.transform(F.col("cb")[s], lambda cw: _l2sq(sub, cw))
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+        codes.append(_argmin(dists))
     return embeddings.crossJoin(consts).select(
         F.col(id_col).alias("neighbor_id"), F.array(*codes).alias("codes")
     )
@@ -470,7 +477,7 @@ def ivfpq_residual_native(
     oracle reproduces the hash exactly:
 
     - build: list_id = argmin fixed-order L2²(x, centroid_l) (ties → lowest
-      list id via array_position-on-min; nearest-centroid in the SAME
+      list id, :func:`_argmin`; nearest-centroid in the SAME
       metric ADC scores in — the property residual encoding's recall win
       rests on), codes[s] = argmin-L2 codeword of the RESIDUAL subvector
       (x − centroid[list])[s] — one map-only scan, zero Python, zero
@@ -500,7 +507,7 @@ def ivfpq_residual_native(
 
     def assign_and_residual(v: Column) -> tuple[Column, Column]:
         dists = F.transform(cent_arr, lambda c: _l2sq(v, c))
-        list_id = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+        list_id = _argmin(dists)
         res = F.zip_with(v, F.element_at(cent_arr, list_id + 1), lambda x, c: x - c)
         return list_id, res
 
@@ -517,7 +524,7 @@ def ivfpq_residual_native(
     for s in range(m):
         sub = F.slice(F.col("res"), s * dsub + 1, dsub)
         dists = F.transform(F.col("cb")[s], lambda cw: _l2sq(sub, cw))
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+        codes.append(_argmin(dists))
     index = enc.select("neighbor_id", "list_id", F.array(*codes).alias("codes"))
 
     # ---- probes: top-n_probe lists per query, fully declarative --------

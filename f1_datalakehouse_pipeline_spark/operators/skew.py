@@ -1,21 +1,17 @@
-"""Skew mitigation operators: salting for hot keys.
+"""Skew mitigation: salting for hot keys.
 
 AQE's skew-join split (enabled in session.py, reference conf
-f1_silver_to_gold_transform.py:97) handles most skew at runtime; these
-explicit forms are for the cases AQE can't fix:
+f1_silver_to_gold_transform.py:97) handles most skew at runtime; the
+explicit form is for the case AQE can't fix:
 
-- salted_join: a broadcast-sized dim is replicated n_salt times and the hot
-  fact key is sharded across salts, so one reducer never owns a whole hot
-  key. Use when the skewed side must shuffle (e.g. the dim is just above the
-  broadcast threshold, or the join feeds a co-partitioned downstream stage).
 - salted_aggregate: two-phase aggregation for algebraic functions —
   partial groupBy((keys, salt)) then final groupBy(keys). Spark's hash
   aggregate already does map-side partials; the explicit form matters for
   countDistinct-like pipelines and for bounding reducer-side state on
   pathological keys.
 
-Salts are deterministic (xxhash64 of the row's key columns + a spread
-column) so repeated runs produce identical plans and results.
+Salts are deterministic (xxhash64 of the row's columns) so repeated runs
+produce identical plans and results.
 """
 
 from __future__ import annotations
@@ -27,29 +23,6 @@ from pyspark.sql import functions as F
 
 _ALGEBRAIC = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
 _FINAL = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    n_salt: int = 8,
-    how: str = "inner",
-    spread_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Join a skewed fact to a small dim with the dim replicated per salt.
-
-    ``spread_cols`` (default: all non-key fact columns) feed the salt hash so
-    rows of one hot key scatter across salts.
-    """
-    on = list(on)
-    spread = list(spread_cols) if spread_cols else [c for c in skewed.columns if c not in on]
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in (on + spread)]), F.lit(n_salt))
-    left = skewed.withColumn("__salt", salt)
-    right = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-    return left.join(right, on + ["__salt"], how).drop("__salt")
 
 
 def salted_aggregate(

@@ -611,8 +611,8 @@ def run_corpus_pipeline_incremental(
     greedy-by-id rule removes a doc when ANY lower-id neighbor is within
     ``semantic_eps`` (even a neighbor that was itself removed), while the
     incremental probe sees only ADMITTED history members — a B2 doc whose
-    only eps-neighbor is a REJECTED B1 doc diverges. MEASURED (r8,
-    ``tools/scale_stress.py --semantic-divergence`` + PERF_NOTES r8): on
+    only eps-neighbor is a REJECTED B1 doc diverges. MEASURED (PERF_NOTES.md,
+    "r8 semantic-divergence measurement"): on
     the real embeddings the over-admission is 4–6.5% of the one-shot
     removal set where the stage bites (e.g. 9 of 165 removals at eps=0.3,
     sf0.001) and always one-sided — the incremental path never removes a
@@ -628,7 +628,8 @@ def run_corpus_pipeline_incremental(
     the cap in one view and not the other. Dropping a near-cap shingle
     perturbs borderline pairs' MinHash signatures, which shifts LSH
     candidate RECALL on short documents (measured at 500K docs: 0.24% of
-    delivered chunks, tools/scale_stress.py --corpus-incremental). This is
+    delivered chunks, PERF_NOTES.md "r5 incremental corpus ingestion
+    rung"). This is
     inherent to any streaming df statistic, not a defect of the staging:
     exact global df would require re-scanning the full corpus per batch,
     which is the cost this mode exists to avoid. The first call (no shard manifest yet) creates

@@ -46,8 +46,6 @@ from f1_datalakehouse_pipeline_spark.functions.names import normalize_grand_prix
 from f1_datalakehouse_pipeline_spark.operators.scd2 import scd2_from_observations
 from f1_datalakehouse_pipeline_spark.schemas import conform
 
-CANONICAL_SESSION_TYPES = ("qualifying", "race")
-
 
 def _with_audit(df: DataFrame) -> DataFrame:
     """created/updated audit columns (common.py:209-230)."""

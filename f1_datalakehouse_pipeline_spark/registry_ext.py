@@ -3080,8 +3080,8 @@ def _duck_corpus_manifest_sql(
     This is deliberately the INCREMENTAL contract, not the one-shot greedy
     rule: the two differ exactly on chained middle members (a one-shot
     removal caused by a vector that was itself rejected), measured on this
-    corpus at 5.5% of one-shot removals (eps=0.3, sf0.001 — PERF_NOTES r8,
-    tools/scale_stress.py --semantic-divergence), so the one-shot form
+    corpus at 5.5% of one-shot removals (eps=0.3, sf0.001 — PERF_NOTES.md,
+    "r8 semantic-divergence measurement"), so the one-shot form
     CANNOT be the hash oracle at any eps where the stage bites; the
     one-shot-equality side is t_corpus_manifest's job.
     """
@@ -3521,8 +3521,8 @@ def t_corpus_manifest_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract — a one-shot removal caused by a vector that was itself
     rejected), and on this corpus the divergence is REAL wherever the
     stage bites (measured: 9 of 165 one-shot removals at eps=0.3,
-    sf0.001 — the full eps curve is in PERF_NOTES r8 via
-    tools/scale_stress.py --semantic-divergence). So the hash gate here
+    sf0.001 — the full eps curve is in PERF_NOTES.md, "r8
+    semantic-divergence measurement"). So the hash gate here
     proves the persisted-member machinery implements its documented
     contract exactly — state partitions, fingerprint guard, cross-batch
     probe — while the one-shot-equality side stays t_corpus_manifest's
@@ -4795,8 +4795,9 @@ def w19_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     to every count, so the output is value-identical to the unfiltered
     form — the oracle keeps the unfiltered shape and hash-matches).
 
-    Form choice is MEASURED, not assumed (scale_stress --funnel + an
-    interleaved hot-cache A/B at 50M events): the window form reads
+    Form choice is MEASURED, not assumed (PERF_NOTES.md, "r8 late:
+    behavioral-analytics rung" — an interleaved hot-cache A/B at 50M
+    events): the window form reads
     3.0-3.5 s vs the per-stage aggregate/join form's 3.7-5.0 s. Two
     earlier single-run readings that showed the aggregate form ahead were
     order-confounded — the first-timed query pays the cold parquet read of

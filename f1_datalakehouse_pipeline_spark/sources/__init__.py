@@ -1,3 +1,3 @@
-from f1_datalakehouse_pipeline_spark.sources.testdata import TESTDATA_TABLES, load_table, register_testdata_views
+from f1_datalakehouse_pipeline_spark.sources.testdata import TESTDATA_TABLES, load_table
 
-__all__ = ["TESTDATA_TABLES", "load_table", "register_testdata_views"]
+__all__ = ["TESTDATA_TABLES", "load_table"]

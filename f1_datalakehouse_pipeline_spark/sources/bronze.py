@@ -15,7 +15,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BRONZE_ENDPOINTS = ("session_result", "drivers", "laps", "pit")
 PARTITIONS = ("year", "grand_prix", "session_type")
 
 

@@ -2,7 +2,6 @@
 write modes replacing the reference's Iceberg sinks (SURVEY §2.1 S6-S11).
 
 Write-mode parity:
-- append            ≙ writeTo().append()            (common.py:389-391)
 - overwrite         ≙ writeTo().overwrite()         (common.py:367-369)
   — transactional: the new table contents are written to a fresh versioned
   directory and published by an ATOMIC symlink swap (os.replace), matching
@@ -18,6 +17,11 @@ Write-mode parity:
   new version is published with the same atomic symlink swap. A crash at any
   point leaves the live table fully readable at its old version; the
   incremental one-GP rerun stays idempotent by construction (SURVEY §7.4.6).
+
+The reference appends in two places only, HISTORICAL laps per GP and the
+SCD2 update-then-append (common.py:389-391, 418-471). Here they are a
+partition overwrite and the SCD2 merge committed as one CAS ``overwrite``
+(plans/pipeline.py), so the store has no append.
 
 Commit protocol (per table):
 - every committed version dir carries a ``.committed`` sentinel written
@@ -79,9 +83,11 @@ class ConcurrentWriteError(RuntimeError):
 class TableStore:
     """A warehouse directory holding one partitioned-parquet dir per table.
 
-    The live path ``<root>/<table>`` is either a plain directory (legacy /
-    append-created layout) or a symlink to ``<root>/.versions/<table>/<id>``
-    after the first transactional overwrite.
+    The live path ``<root>/<table>`` is a symlink to
+    ``<root>/.versions/<table>/<id>``, swapped atomically by every commit.
+    A real directory at a live path was not written by this store: a
+    write to that table raises before it stages anything and leaves the
+    directory as it is.
     """
 
     #: unmarked (crash-orphaned) version dirs younger than this are left
@@ -100,10 +106,8 @@ class TableStore:
         # Absolutize AND resolve symlink components: _publish creates
         # symlinks whose target embeds the root (a relative root would make
         # the target resolve relative to the symlink's own directory), and
-        # publish_many's rollback compares realpath() outputs against paths
-        # built from this root — with a symlinked root component, abspath
-        # and realpath disagree and the plain-dir restore branch would be
-        # silently skipped (ADVICE r10).
+        # the version paths built from this root then equal the realpath()
+        # of a live link.
         self.root = os.path.realpath(os.path.abspath(root))
         # retention depth: current + this many predecessors survive GC.
         # The default keeps one generation (lazy reads against the prior
@@ -201,15 +205,26 @@ class TableStore:
         partial state. ``expected`` (the live target captured when the write
         started) makes the publish a compare-and-swap: if another writer
         committed in between, raise instead of silently overwriting their
-        commit. The only non-atomic case is the one-time migration of a
-        legacy real directory, which is moved aside first.
+        commit.
         """
         with self._publish_lock(table):
             self._check_cas(table, expected)
             self._swap_locked(table, version_dir)
 
+    def _check_live_path(self, table: str) -> None:
+        """Raise if the live path is a real directory: this store did not
+        write it, and no publish may replace it."""
+        live = self.path(table)
+        if os.path.isdir(live) and not os.path.islink(live):
+            raise RuntimeError(
+                f"{table}: {live} is a real directory, not a published "
+                "version; move it away before writing this table"
+            )
+
     def _check_cas(self, table: str, expected) -> None:
-        """CAS precondition (caller holds the publish lock)."""
+        """CAS precondition (caller holds the publish lock). A real
+        directory at the live path fails it too, before anything moves."""
+        self._check_live_path(table)
         current = self._current_target(table)
         if expected is not _UNSET and current != expected:
             raise ConcurrentWriteError(
@@ -241,17 +256,6 @@ class TableStore:
         if current and os.path.isdir(current) and not self._is_committed(current):
             open(os.path.join(current, _COMMIT_SENTINEL), "w").close()
         live = self.path(table)
-        if os.path.isdir(live) and not os.path.islink(live):
-            # one-time migration: preserve the old contents as a version
-            legacy = os.path.join(
-                self._version_root(table), f"legacy-{uuid.uuid4().hex[:8]}"
-            )
-            os.makedirs(os.path.dirname(legacy), exist_ok=True)
-            os.rename(live, legacy)
-            open(os.path.join(legacy, _COMMIT_SENTINEL), "w").close()
-            # the migration renamed the predecessor: the incoming version's
-            # parent is the legacy dir's NEW name
-            parent = os.path.basename(legacy)
         tmp_link = os.path.join(self.root, f".{table}.link.{uuid.uuid4().hex[:8]}")
         os.symlink(version_dir, tmp_link)
         os.replace(tmp_link, live)  # the commit point
@@ -301,9 +305,9 @@ class TableStore:
     def _parent_of(version_dir: str) -> str | None:
         """Basename of the version this one was committed over, as recorded
         in its sentinel. ``None`` = unknown: a pre-parent-stamp sentinel, a
-        heal-marked outgoing version, a legacy migration, or a first commit
-        — all of which predate (or can't know) the chain, so hole checks
-        treat None as 'assume adjacent' for backward compatibility."""
+        heal-marked outgoing version, or a first commit — all of which
+        predate (or can't know) the chain, so hole checks treat None as
+        'assume adjacent' for backward compatibility."""
         try:
             with open(os.path.join(version_dir, _COMMIT_SENTINEL)) as f:
                 s = f.read().strip()
@@ -388,23 +392,16 @@ class TableStore:
         instead of unbounded snapshot log). In-flight or crashed (unmarked)
         dirs are never listed, except the current version in the
         millisecond swap-to-sentinel window."""
-        live = self.path(table)
         vroot = self._version_root(table)
         if not os.path.isdir(vroot):
-            return [live] if os.path.isdir(live) else []
-        current = os.path.realpath(live)
+            return []
+        current = os.path.realpath(self.path(table))
         dirs = [
             os.path.join(vroot, d)
             for d in os.listdir(vroot)
             if self._is_committed(os.path.join(vroot, d))
             or os.path.realpath(os.path.join(vroot, d)) == current
         ]
-        # A still-PLAIN (append-created) live dir is the current version even
-        # once .versions/ exists (e.g. a failed first overwrite created the
-        # dir and left only an orphan): without this, a serving table would
-        # list zero versions (r10 review finding).
-        if os.path.isdir(live) and not os.path.islink(live):
-            dirs.append(live)
         # snapshot each mtime tolerantly: a superseded dir can be reaped by
         # a concurrent publish's GC between listdir and the sort — skip it,
         # never crash a pure read path (r10 review finding)
@@ -469,92 +466,28 @@ class TableStore:
             return conform(df, table, allow_missing=True)
         return self.spark.read.schema(ALL_SCHEMAS[table]).parquet(self.path(table))
 
-    def _writer(self, df: DataFrame, table: str, sort_by: list[str] | None = None):
-        out = conform(df, table)
-        if sort_by:
-            # cluster rows inside each file so parquet min/max statistics
-            # prune on these columns (the plain-parquet cousin of Z-ORDER;
-            # reference tunes Iceberg file layout, iceberg_manager.py:65-77)
-            out = out.sortWithinPartitions(*sort_by)
-        w = out.write.format("parquet")
+    def _writer(self, df: DataFrame, table: str):
+        w = conform(df, table).write.format("parquet")
         parts = PARTITION_SPECS.get(table, [])
         if parts:
             w = w.partitionBy(*parts)
         return w
 
-    def append(self, df: DataFrame, table: str) -> None:
-        """Append rows. On a VERSIONED table this stages a NEW version
-        (hardlink-graft of the current version's data files + the appended
-        rows) published under the usual CAS — appending through the live
-        symlink would mutate a published snapshot in place, invisible to
-        pinned readers, time travel, and table_changes (the rows would
-        belong to no commit; r10 review finding). No write-time change
-        files are emitted: append can duplicate merge keys, so keyed
-        labeling is undefined — ``table_changes`` falls back to the
-        snapshot diff, correct under both keyed and multiset semantics.
-        A plain (append-created, pre-transactional) table keeps the cheap
-        in-place append."""
-        live = self.path(table)
-        if not os.path.islink(live):
-            self._writer(df, table).mode("append").save(live)
-            return
-        expected = self._current_target(table)
-        version_dir = os.path.join(
-            self._version_root(table), f"v-{uuid.uuid4().hex[:12]}"
-        )
-        os.makedirs(version_dir, exist_ok=True)
-        try:
-            for dirpath, dirnames, filenames in os.walk(expected):
-                rel = os.path.relpath(dirpath, expected)
-                comps = tuple() if rel == "." else tuple(rel.split(os.sep))
-                if comps and comps[0].startswith(("_", ".")):
-                    # the old version's _changes/ describe ITS commit — never
-                    # carried forward (same rule as _graft_partitions)
-                    dirnames[:] = []
-                    continue
-                for fn in filenames:
-                    if fn.startswith(("_", ".")):
-                        continue  # _SUCCESS / .committed / sidecars
-                    os.makedirs(os.path.join(version_dir, rel), exist_ok=True)
-                    os.link(
-                        os.path.join(dirpath, fn), os.path.join(version_dir, rel, fn)
-                    )
-        except OSError as e:
-            # The walk runs WITHOUT the publish lock (grafting may take a
-            # while; the CAS at _publish is the serialization point): a
-            # concurrent publish whose GC reaps `expected` mid-walk must
-            # surface as the CAS contract's failure mode, not a raw
-            # FileNotFoundError (ADVICE r10). But ONLY that: translating a
-            # local failure (ENOSPC, EPERM, EMLINK) into the store's
-            # retryable signal would send an automated caller into a retry
-            # loop against a full disk (r11 review finding) — re-raise
-            # unless the prior image actually vanished.
-            import errno
-
-            if e.errno == errno.ENOENT or not os.path.isdir(expected):
-                raise ConcurrentWriteError(
-                    f"{table}: live version changed since append start "
-                    f"({expected} vanished mid-graft: {e}) — retry the append"
-                ) from e
-            raise
-        self._writer(df, table).mode("append").save(version_dir)
-        self._publish(table, version_dir, expected=expected)
-
-    def _stage_version(
-        self, df: DataFrame, table: str, sort_by: list[str] | None = None
-    ) -> str:
+    def _stage_version(self, df: DataFrame, table: str) -> str:
         """Write ``df`` (static mode) into a fresh unpublished version dir
         and return it — the staging step shared by overwrite, stage_many,
         and overwrite_partitions (ONE implementation of the protocol: a
         future staging change cannot silently skip one of the three commit
         paths; r10 review finding). Static even when the session default is
         dynamic, otherwise stale partitions would survive inside the fresh
-        version dir."""
+        version dir. A real directory at the live path fails here, before
+        the Spark job, so no write is wasted and no version dir is left."""
+        self._check_live_path(table)
         version_dir = os.path.join(
             self._version_root(table), f"v-{uuid.uuid4().hex[:12]}"
         )
         os.makedirs(os.path.dirname(version_dir), exist_ok=True)
-        self._writer(df, table, sort_by).option(
+        self._writer(df, table).option(
             "partitionOverwriteMode", "static"
         ).mode("overwrite").save(version_dir)
         return version_dir
@@ -563,8 +496,6 @@ class TableStore:
         self,
         df: DataFrame,
         table: str,
-        sort_by: list[str] | None = None,
-        cluster_by: list[str] | None = None,
         expected=_UNSET,
         changes: DataFrame | None = None,
         change_keys: list[str] | None = None,
@@ -573,12 +504,6 @@ class TableStore:
         swap. If the write job fails, no swap happens and the live table is
         untouched; the unmarked half-written staging dir is never listed as a
         version and is reaped by a later GC once past ``orphan_ttl_s``.
-
-        ``cluster_by``: Z-order the write on these (integer-valued) columns —
-        range-partition + sort on the Morton interleave key so EVERY listed
-        column gets tight per-file min/max stats (functions/zorder.py; the
-        plain-parquet OPTIMIZE ZORDER BY). Mutually exclusive with
-        ``sort_by`` (single-dimension clustering).
 
         ``changes``: write-time CDF rows (table columns + ``_change_type``)
         describing THIS commit's delta vs the version being replaced; they
@@ -594,30 +519,9 @@ class TableStore:
         key_cols MATCH — a mismatched reader silently getting the writer's
         labeling would diverge from the snapshot-diff contract (review
         finding, r9)."""
-        if cluster_by and sort_by:
-            # documented as mutually exclusive; silently applying both would
-            # re-sort every range partition by sort_by AFTER the Morton
-            # ordering, scrambling the Z-order layout the caller asked for
-            raise ValueError(
-                "overwrite(sort_by=..., cluster_by=...): mutually exclusive "
-                "— cluster_by IS a sort (on the Morton interleave key)"
-            )
-        if cluster_by:
-            from pyspark.sql import functions as F
-
-            from f1_datalakehouse_pipeline_spark.functions.zorder import morton_interleave
-
-            key = morton_interleave([F.col(c) for c in cluster_by])
-            n = max(2, self.spark.sparkContext.defaultParallelism)
-            df = (
-                df.withColumn("__z", key)
-                .repartitionByRange(n, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
         if expected is _UNSET:
             expected = self._current_target(table)
-        version_dir = self._stage_version(df, table, sort_by)
+        version_dir = self._stage_version(df, table)
         if changes is not None:
             self._write_changes(version_dir, changes, change_keys)
         self._publish(table, version_dir, expected=expected)
@@ -724,67 +628,6 @@ class TableStore:
                 to_roll = swapped + ([in_flight] if in_flight else [])
                 for table, vdir, prior in reversed(to_roll):
                     live = self.path(table)
-                    if prior is not None and prior == live:
-                        # the prior was a PLAIN (append-created) dir that
-                        # _swap_locked migrated into .versions/ as
-                        # legacy-<hex>; restoring `prior` verbatim would
-                        # create a self-looping symlink (live -> live) and
-                        # the table would read empty. Rename the migrated
-                        # dir back instead — the exact pre-batch state.
-                        vroot = self._version_root(table)
-                        legacy = sorted(
-                            (
-                                os.path.join(vroot, d)
-                                for d in os.listdir(vroot)
-                                if d.startswith("legacy-")
-                            ),
-                            key=os.path.getmtime,
-                        )
-                        unlinked = False
-                        try:
-                            os.unlink(live)  # drop the symlink to vdir
-                            unlinked = True
-                        except FileNotFoundError:
-                            # _swap_locked crashed after the one-time legacy
-                            # migration but BEFORE the symlink replace —
-                            # live is already absent and the rename below is
-                            # exactly the restore needed; sharing one try
-                            # with it stranded the data in
-                            # .versions/legacy-* (ADVICE r10)
-                            pass
-                        except OSError:
-                            # cannot modify the live path at all (EACCES,
-                            # EBUSY): leave the table AT the new version,
-                            # still committed — de-committing a version the
-                            # live symlink still points at would let GC reap
-                            # it under live's feet (r11 review finding).
-                            # Partial publish beats a dangling live path.
-                            continue
-                        restored = False
-                        if legacy:
-                            try:
-                                os.rename(legacy[-1], live)
-                                restored = True
-                            except OSError:
-                                pass
-                        if not restored:
-                            if unlinked:
-                                # the restore failed AFTER we dropped live:
-                                # re-point it at the new version rather than
-                                # leave no live path (its commit sentinel is
-                                # intact, so reads and GC stay coherent)
-                                try:
-                                    os.symlink(os.path.abspath(vdir), live)
-                                except OSError:
-                                    pass
-                            continue  # vdir stays committed — it may serve
-                        # prior image restored: NOW the aborted version can
-                        # safely become an unmarked orphan
-                        try:
-                            os.unlink(os.path.join(vdir, _COMMIT_SENTINEL))
-                        except OSError:
-                            pass
-                        continue
                     if prior is not None and not os.path.isdir(prior):
                         # the prior version was GC'd during this batch
                         # (keep_versions=0 edge): rolling back would point
@@ -1013,7 +856,6 @@ class TableStore:
         self,
         df: DataFrame,
         table: str,
-        sort_by: list[str] | None = None,
         expected=_UNSET,
         changes: DataFrame | None = None,
         change_keys: list[str] | None = None,
@@ -1040,12 +882,12 @@ class TableStore:
             expected = self._current_target(table)
         if expected is None:
             self.overwrite(
-                df, table, sort_by, expected=None,
+                df, table, expected=None,
                 changes=changes, change_keys=change_keys,
             )
             return
         depth = len(PARTITION_SPECS[table])
-        version_dir = self._stage_version(df, table, sort_by)
+        version_dir = self._stage_version(df, table)
         replaced = self._leaf_partitions(version_dir, depth)
         self._graft_partitions(expected, version_dir, depth, skip=replaced)
         if changes is not None:

@@ -60,9 +60,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast(TimestampType()))
     return df
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import ast
+import copy
 import importlib
 import json
 import re
@@ -235,42 +236,37 @@ def test_entry_point_from_imports_resolve():
     assert not unresolved, "\n".join(unresolved)
 
 
-# Top-level package definitions that no entry point reaches, each kept for
-# the reason given. The walk below fails on any other unreached definition,
-# and on an entry here that is reached again or no longer exists.
+# Package definitions (top level, or a method keyed ``module.Class.method``)
+# that no entry point reaches, each kept for the reason given. The walk below
+# fails on any other unreached definition, and on an entry here that is
+# reached again or no longer exists.
 _UNREACHED_ALLOWED = {
     "functions.f1.FASTEST_LAP_BONUS": "fastest_lap_bonus's constant (gold parity question)",
     "functions.f1.FASTEST_LAP_MAX_POSITION": "fastest_lap_bonus's constant (gold parity question)",
     "functions.f1.fastest_lap_bonus": "reference points rule; the gold oracle settles whether gold applies it",
     "functions.text.decode_token_ids": "inverse of encode_token_ids; tests check the encoding round-trips",
-    "functions.zorder.rank_normalize": "z-order layout; keep-or-delete still open",
-    "functions.zorder.zorder_write": "z-order layout; keep-or-delete still open",
-    "operators.bpe._safe_batch": "BPE trainer; keep-or-delete still open",
-    "operators.bpe.bpe_train": "BPE trainer; keep-or-delete still open",
-    "operators.bpe.bpe_train_from_words": "BPE trainer; produced the pinned bpe_model_corpus merges",
     "operators.bpe.py_bpe_encode": "pure-Python reference tests/test_bpe.py compares the encoder against",
-    "operators.bpe.py_bpe_train": "pure-Python reference tests/test_bpe.py compares the trainer against",
-    "operators.bpe.word_frequency_table": "BPE trainer input; keep-or-delete still open",
+    "operators.bpe.py_bpe_train": "sequential trainer tests/test_bpe.py learns the encoder tests' merges with",
+    "operators.bpe.word_frequency_table": "word counts tests/test_bpe.py trains its encoder-test merges from",
     "operators.dedup.contamination_report": "per-document verdict over contamination_pairs; tests only",
-    "operators.dedup.minhash_signatures": "long-form MinHash signatures; no caller, not yet decided",
     "operators.mixture.budgeted_mixture_naive": "window reference the bucketed mixture is tested against",
-    "operators.mixture.plan_mixture": "proportion-driven budget planner; keep-or-delete still open",
-    "operators.skew.salted_join": "skew-join operator; keep-or-delete still open",
     "operators.similarity.pq_encode": "vectorized reference tests/test_pq.py compares pq_encode_native against",
     "operators.textstats.encode_token_ids_with_table": "large-vocabulary twin of encode_token_ids; tests only",
     "plans.corpus.corpus_drift_reference": "builds the drift reference a caller passes to the incremental build",
     "plans.gold.transform_constructor_championship": "unwired gold transform, a parity question for the gold oracle",
     "plans.gold.transform_lap_analytics": "unwired gold transform, a parity question for the gold oracle",
     "plans.gold.weekend_biggest_mover": "unwired gold transform, a parity question for the gold oracle",
-    "plans.silver.CANONICAL_SESSION_TYPES": "names the session types silver keeps; no code reads it",
     "quality.check_non_negative": "row-level check helper; tests only",
     "quality.check_points_range": "row-level check helper; tests only",
     "quality.check_position_range": "row-level check helper; tests only",
     "quality.schema_diff": "schema comparison helper; tests only",
-    "sources.bronze.BRONZE_ENDPOINTS": "names the bronze endpoints; no reader uses it",
     "sources.bucketed.read_bucketed": "reader twin of save_bucketed; tests only",
+    "sources.tables.TableStore.commit_many": "cross-table commit; kept for the one-commit GP landing (ROADMAP direction 1)",
+    "sources.tables.TableStore.publish_many": "cross-table all-or-nothing publish; kept for the one-commit GP landing",
+    "sources.tables.TableStore.read_version": "time travel to a retained version; tests only",
+    "sources.tables.TableStore.stage_many": "cross-table staging for publish_many; kept for the one-commit GP landing",
+    "sources.tables.TableStore.vacuum": "VACUUM analogue: prune retained versions; tests only",
     "sources.tables.compact": "OPTIMIZE analogue for a TableStore table; tests only",
-    "sources.testdata.register_testdata_views": "registers testdata temp views; no caller",
 }
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -302,10 +298,12 @@ def test_every_package_definition_is_reached_or_allowlisted():
     """Walk names from the entry points: ``cli.main``, every ``@query``, every
     ``plans/`` definition, ``bench.py``, ``__spark_entry__.py``, perfbench's
     modules, ``tools/verify_local.py`` and ``tools/plan_report.py``, plus
-    whatever a package module runs at import. A name reaches every top-level
-    package definition of that name, whatever its module, so the walk can
-    over-count reach but never under-count it. Code nothing reaches fails
-    here unless ``_UNREACHED_ALLOWED`` names it with a reason."""
+    whatever a package module runs at import. Methods of package classes,
+    dunders excepted, are definitions of their own: reaching a class walks
+    its body without them. A name reaches every package definition of that
+    name, whatever its module or class, so the walk can over-count reach but
+    never under-count it. Code nothing reaches fails here unless
+    ``_UNREACHED_ALLOWED`` names it with a reason."""
     defs, roots, reached = {}, [], set()
     for path in sorted((_REPO / _PKG).rglob("*.py")):
         mod = ".".join(path.relative_to(_REPO / _PKG).with_suffix("").parts)
@@ -322,6 +320,22 @@ def test_every_package_definition_is_reached_or_allowlisted():
                 )
                 if is_query or key == "cli.main":
                     reached.add(key)
+                if isinstance(node, ast.ClassDef):
+                    shell = copy.copy(node)
+                    shell.body = []
+                    for item in node.body:
+                        if not isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)) or (
+                            item.name.startswith("__") and item.name.endswith("__")
+                        ):
+                            shell.body.append(item)
+                            continue
+                        method = f"{key}.{item.name}"
+                        defs[method] = item
+                        roots += item.decorator_list + item.args.defaults
+                        roots += [d for d in item.args.kw_defaults if d]
+                        if mod.startswith("plans."):
+                            reached.add(method)
+                    defs[key] = shell
                 if is_query or key == "cli.main" or mod.startswith("plans."):
                     roots.append(node)
             elif isinstance(node, (ast.Assign, ast.AnnAssign)):

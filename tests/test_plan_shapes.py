@@ -207,23 +207,6 @@ def test_conform_matches_column_api_projection(spark):
             assert new.collect() == old.collect(), table
 
 
-def test_tablestore_append(spark, tmp_path):
-    from f1_datalakehouse_pipeline_spark.sources.tables import TableStore
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    def mk(key):
-        base = spark.createDataFrame(
-            [(key, 2025, "monaco", 44, 12, 23.456)],
-            ["session_key", "year", "grand_prix_name", "driver_number", "lap_number", "pit_duration"],
-        )
-        from f1_datalakehouse_pipeline_spark.schemas import conform as _c
-
-        return _c(base, "pitstops_silver", allow_missing=True)
-    store.append(mk(1), "pitstops_silver")
-    store.append(mk(2), "pitstops_silver")
-    assert store.read("pitstops_silver").count() == 2
-
-
 def test_bucketed_join_plans_no_exchange(spark, tmp_path):
     """Tables bucketed on the join key must join WITHOUT a shuffle: the
     catalog's bucket spec satisfies the join's required distribution, so the

@@ -159,41 +159,6 @@ def test_time_parser_matches_reference_port(spark, strings):
         assert got[i] == want, (s, got[i], want)
 
 
-@settings(
-    max_examples=20,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(
-    pts=st.lists(
-        st.tuples(st.integers(0, 255), st.integers(0, 255)), min_size=1, max_size=30, unique=True
-    )
-)
-def test_morton_key_is_injective_and_monotone_per_axis(spark, pts):
-    from pyspark.sql import functions as F
-
-    from f1_datalakehouse_pipeline_spark.functions.zorder import morton_interleave
-
-    df = spark.createDataFrame(pts, ["x", "y"])
-    rows = df.select(
-        "x", "y", morton_interleave([F.col("x"), F.col("y")], bits=8).alias("z")
-    ).collect()
-    seen = {}
-    for r in rows:
-        # injective on the grid
-        assert (r.x, r.y) not in seen or seen[(r.x, r.y)] == r.z
-        seen[(r.x, r.y)] = r.z
-    assert len(set(seen.values())) == len(seen)
-    # monotone along each axis when the other coordinate is fixed
-    by_x = {}
-    for (x, y), z in seen.items():
-        by_x.setdefault(x, []).append((y, z))
-    for x, items in by_x.items():
-        items.sort()
-        zs = [z for _, z in items]
-        assert zs == sorted(zs)
-
-
 # (n_tokens per doc, chunk_tokens, overlap_tokens) — chunking must hold its
 # reconstruction/shape invariants for ANY document length and window config
 chunk_cases = st.tuples(

@@ -5,6 +5,7 @@ corrupts the live table and read-then-overwrite-same-table plans need no
 driver-side materialization."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,17 +99,33 @@ def test_read_then_overwrite_same_table_is_safe(spark, tmp_path):
     assert store.read("sessions_silver").count() == 24
 
 
-def test_legacy_plain_dir_migrates_on_first_overwrite(spark, tmp_path):
+def test_real_directory_at_live_path_makes_overwrite_raise(spark, tmp_path):
+    """A live path is always a symlink to a version: a real directory there
+    was not written by the store, so the publish raises, names the path and
+    leaves every file of that directory as it was. Both write paths fail
+    before their Spark job, so no staged version dir is left behind."""
     store = TableStore(spark, str(tmp_path / "wh"))
-    # append creates the legacy real-directory layout
-    store.append(_sessions(spark, 5), "sessions_silver")
-    assert not os.path.islink(store.path("sessions_silver"))
-    store.overwrite(_sessions(spark, 8), "sessions_silver")
-    assert os.path.islink(store.path("sessions_silver"))
-    assert store.read("sessions_silver").count() == 8
-    # appends keep working through the symlink
-    store.append(_sessions(spark, 3, gp="miami"), "sessions_silver")
-    assert store.read("sessions_silver").count() == 11
+    live = store.path("sessions_silver")
+    _sessions(spark, 5).write.parquet(live)
+    vroot = store._version_root("sessions_silver")
+
+    def snapshot():
+        files = {}
+        for d, _dirs, names in os.walk(live):
+            for f in names:
+                with open(os.path.join(d, f), "rb") as fh:
+                    files[os.path.join(d, f)] = fh.read()
+        return files
+
+    before = snapshot()
+    assert before
+    with pytest.raises(RuntimeError, match=re.escape(live)):
+        store.overwrite(_sessions(spark, 8), "sessions_silver")
+    with pytest.raises(RuntimeError, match=re.escape(live)):
+        store.overwrite_partitions(_sessions(spark, 8), "sessions_silver")
+    assert os.path.isdir(live) and not os.path.islink(live)
+    assert snapshot() == before
+    assert not os.path.exists(vroot) or not os.listdir(vroot)
 
 
 def test_time_travel_reads_previous_version(spark, tmp_path):
@@ -125,40 +142,6 @@ def test_time_travel_reads_previous_version(spark, tmp_path):
     # past the retention horizon -> loud failure, never silent wrong data
     with _pytest.raises(IndexError):
         store.read_version("sessions_silver", 5)
-
-
-def test_overwrite_cluster_by_zorders_the_write(spark, tmp_path):
-    """cluster_by routes the version write through the Morton range-sort:
-    data survives intact and both clustered columns get non-degenerate
-    per-file ranges (full z-order quality is covered in test_zorder)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    df = _sessions(spark, 2000).withColumn(
-        "meeting_key", (F.col("session_key") * 37 % 256).cast("long")
-    )
-    store.overwrite(df, "sessions_silver", cluster_by=["session_key", "meeting_key"])
-    out = store.read("sessions_silver")
-    assert out.count() == 2000
-    live = os.path.realpath(store.path("sessions_silver"))
-    files = glob.glob(f"{live}/**/*.parquet", recursive=True)
-    assert len(files) > 1  # range partitioning produced multiple files
-    # z-ranges are disjoint-ish: session_key per-file spans ≪ global range
-    spans = []
-    for f in files:
-        md = pq.read_metadata(f)
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == "session_key" and c.statistics is not None:
-                    lo = c.statistics.min if lo is None else min(lo, c.statistics.min)
-                    hi = c.statistics.max if hi is None else max(hi, c.statistics.max)
-        assert lo is not None
-        spans.append(hi - lo)
-    assert sum(spans) / len(spans) < 2000 * 0.8
 
 
 def test_merge_upsert_update_insert_persist(spark, tmp_path):
@@ -215,7 +198,7 @@ def test_orphaned_failed_write_never_shadows_committed_version(spark, tmp_path):
         store.overwrite(bad, "sessions_silver")
 
     # the orphan is invisible to time travel even before GC runs
-    assert all("legacy" in v or store._is_committed(v) for v in store.versions("sessions_silver"))
+    assert all(store._is_committed(v) for v in store.versions("sessions_silver"))
 
     store.overwrite(_sessions(spark, 20, gp="miami"), "sessions_silver")
     vs = store.versions("sessions_silver")
@@ -331,14 +314,16 @@ def test_compact_one_partition_leaves_other_partition_files_untouched(spark, tmp
     from f1_datalakehouse_pipeline_spark.sources.tables import compact
 
     store = TableStore(spark, str(tmp_path / "wh"))
-    # two appends -> at least 2 files per partition dir
-    for bump in (0, 1000):
-        batch = _sessions(spark, 10, gp="monaco").unionByName(
-            _sessions(spark, 6, gp="miami").withColumn(
-                "session_key", F.col("session_key") + 100
-            )
-        ).withColumn("session_key", F.col("session_key") + bump)
-        store.append(batch, "sessions_silver")
+    # one overwrite over two write tasks -> at least 2 files per partition dir
+    batch = _sessions(spark, 10, gp="monaco").unionByName(
+        _sessions(spark, 6, gp="miami").withColumn(
+            "session_key", F.col("session_key") + 100
+        )
+    )
+    both = batch.unionByName(
+        batch.withColumn("session_key", F.col("session_key") + 1000)
+    )
+    store.overwrite(both.repartition(2), "sessions_silver")
 
     live0 = os.path.realpath(store.path("sessions_silver"))
     monaco_files = [
@@ -371,33 +356,6 @@ def test_compact_one_partition_leaves_other_partition_files_untouched(spark, tmp
     out = store.read("sessions_silver")
     assert out.count() == 32
     assert out.filter(F.col("grand_prix_name") == "monaco").count() == 20
-
-
-def test_append_then_partition_overwrite_keeps_appended_data(spark, tmp_path):
-    """An append on a versioned table commits a NEW version (r10: the old
-    through-the-symlink append mutated a published snapshot in place); a
-    later transactional partition overwrite must carry the appended rows
-    into its version for every partition it does not replace."""
-    store = TableStore(spark, str(tmp_path / "wh"))
-    store.overwrite(_sessions(spark, 5, gp="monaco"), "sessions_silver")
-    # append a second partition through the symlink
-    store.append(
-        _sessions(spark, 4, gp="miami").withColumn(
-            "session_key", F.col("session_key") + 100
-        ),
-        "sessions_silver",
-    )
-    assert store.read("sessions_silver").count() == 9
-
-    store.overwrite_partitions(
-        _sessions(spark, 2, gp="monaco").withColumn(
-            "session_key", F.col("session_key") + 500
-        ),
-        "sessions_silver",
-    )
-    out = store.read("sessions_silver")
-    assert out.filter(F.col("grand_prix_name") == "monaco").count() == 2
-    assert out.filter(F.col("grand_prix_name") == "miami").count() == 4  # survived
 
 
 def test_history_and_vacuum(spark, tmp_path):
@@ -578,14 +536,13 @@ def test_merge_upsert_cas_snapshot_captured_at_read_time(spark, tmp_path):
         publishing overwrite — exactly the window the advice describes."""
 
         def overwrite(
-            self, df, table, sort_by=None, cluster_by=None, expected=_UNSET,
-            changes=None, change_keys=None,
+            self, df, table, expected=_UNSET, changes=None, change_keys=None,
         ):
             TableStore(self.spark, self.root).overwrite(
                 _sessions(self.spark, 9, gp="rival"), table
             )
             super().overwrite(
-                df, table, sort_by, cluster_by, expected=expected,
+                df, table, expected=expected,
                 changes=changes, change_keys=change_keys,
             )
 
@@ -610,14 +567,13 @@ def test_delete_where_cas_snapshot_captured_at_read_time(spark, tmp_path):
 
     class RacyStore(TableStore):
         def overwrite_partitions(
-            self, df, table, sort_by=None, expected=_UNSET, changes=None,
-            change_keys=None,
+            self, df, table, expected=_UNSET, changes=None, change_keys=None,
         ):
             TableStore(self.spark, self.root).overwrite(
                 _sessions(self.spark, 9, gp="rival"), table
             )
             super().overwrite_partitions(
-                df, table, sort_by, expected=expected,
+                df, table, expected=expected,
                 changes=changes, change_keys=change_keys,
             )
 
@@ -1704,220 +1660,3 @@ def test_publish_many_rolls_back_a_swap_that_crashed_after_its_commit_point(
         assert not store._is_committed(vdir), table
 
 
-def test_append_on_versioned_table_is_a_commit(spark, tmp_path):
-    """r10 review finding: the old append wrote THROUGH the live symlink
-    into the committed current version — mutating a published snapshot in
-    place, invisible to time travel and to every CDC tier. Append now
-    commits a NEW version (hardlink graft + appended rows, CAS-published):
-    the prior version is untouched, and table_changes serves the appended
-    rows as inserts via the snapshot-diff fallback."""
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    store.overwrite(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    v0 = store._current_target("sessions_silver")
-
-    store.append(_sess_mut(spark, [(3, "C"), (4, "D")]), "sessions_silver")
-
-    # the append is a COMMIT: new version, prior image untouched
-    assert store._current_target("sessions_silver") != v0
-    assert store.read("sessions_silver").count() == 4
-    assert store.read_version("sessions_silver", 1).count() == 2
-    assert len(store.versions("sessions_silver")) == 2
-    # …and CDC sees it (snapshot-diff tier: no change files for appends)
-    assert not os.path.isdir(os.path.join(
-        store._current_target("sessions_silver"), "_changes"
-    ))
-    got = {
-        (r.session_key, r._change_type)
-        for r in store.table_changes(
-            "sessions_silver", 1, 0, key_cols=["session_key"]
-        ).collect()
-    }
-    assert got == {(3, "insert"), (4, "insert")}
-    # append inherits the transactional contract: later commits proceed
-    store.overwrite(_sess_mut(spark, [(9, "Z")]), "sessions_silver")
-    assert store.read("sessions_silver").count() == 1
-
-
-def test_store_root_with_symlinked_component_rolls_back_plain_dir(spark, tmp_path):
-    """ADVICE r10: publish_many's plain-dir rollback detection compared a
-    realpath()ed prior against a path built from abspath(root). A warehouse
-    reached through a symlinked path component (a /data -> /mnt/disk shape)
-    made the two strings differ, silently skipping the legacy restore and
-    leaving the plain table at the aborted version. TableStore now
-    normalizes root with realpath, so the comparison is apples-to-apples."""
-    real_root = tmp_path / "wh_real"
-    real_root.mkdir()
-    link_root = tmp_path / "wh_link"
-    os.symlink(str(real_root), str(link_root))
-
-    store = TableStore(spark, str(link_root), keep_versions=5)
-    assert store.root == os.path.realpath(str(real_root))
-
-    # a PLAIN (append-created) table + a versioned one
-    store.append(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    store.overwrite(_results(spark, 7, gp="monaco"), "race_results_silver")
-    assert not os.path.islink(store.path("sessions_silver"))
-
-    # swap order is sorted: race_results_silver migrates+swaps... actually
-    # sessions_silver sorts AFTER race_results_silver, so crash on it after
-    # the plain table has fully swapped (migration + replace + sentinel)
-    staged = store.stage_many(
-        [
-            (_sess_mut(spark, [(9, "X")]), "sessions_silver"),
-            (_results(spark, 11, gp="miami"), "race_results_silver"),
-        ]
-    )
-    real_swap = store._swap_locked
-
-    def crashing_swap(table, vdir):
-        real_swap(table, vdir)
-        if table == "sessions_silver":
-            raise OSError("killed after the plain table swapped")
-
-    store._swap_locked = crashing_swap
-    try:
-        with pytest.raises(OSError, match="killed after the plain table"):
-            store.publish_many(staged)
-    finally:
-        del store._swap_locked
-
-    # the plain table is RESTORED as a plain dir with its prior rows
-    live = store.path("sessions_silver")
-    assert os.path.isdir(live) and not os.path.islink(live)
-    assert {
-        r.session_key for r in store.read("sessions_silver").collect()
-    } == {1, 2}
-    assert store.read("race_results_silver").count() == 7
-    for table, vdir, _ in staged:
-        assert not store._is_committed(vdir), table
-
-
-def test_rollback_restores_legacy_when_crash_precedes_symlink_replace(
-    spark, tmp_path
-):
-    """ADVICE r10: in the legacy-restore rollback branch, os.unlink(live)
-    and the legacy rename shared one try/except. A _swap_locked crash AFTER
-    the one-time migration rename but BEFORE the symlink replace leaves no
-    live path: the unlink's ENOENT then skipped the rename too, stranding
-    the table's only data in .versions/legacy-* with no live path at all.
-    The unlink now tolerates ENOENT on its own."""
-    import uuid as _uuid
-
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    store.append(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    live = store.path("sessions_silver")
-    assert os.path.isdir(live) and not os.path.islink(live)
-
-    staged = store.stage_many([(_sess_mut(spark, [(9, "X")]), "sessions_silver")])
-    real_swap = store._swap_locked
-
-    def crashing_swap(table, vdir):
-        # reproduce _swap_locked's exact crash state: migration rename done,
-        # symlink replace NOT reached
-        legacy = os.path.join(
-            store._version_root(table), f"legacy-{_uuid.uuid4().hex[:8]}"
-        )
-        os.makedirs(os.path.dirname(legacy), exist_ok=True)
-        os.rename(live, legacy)
-        open(os.path.join(legacy, ".committed"), "w").close()
-        raise OSError("killed between migration and replace")
-
-    store._swap_locked = crashing_swap
-    try:
-        with pytest.raises(OSError, match="killed between migration"):
-            store.publish_many(staged)
-    finally:
-        del store._swap_locked
-
-    # the table is NOT stranded: the legacy dir was renamed back to live
-    assert os.path.isdir(live) and not os.path.islink(live)
-    assert {
-        r.session_key for r in store.read("sessions_silver").collect()
-    } == {1, 2}
-
-
-def test_append_graft_race_surfaces_as_concurrent_write_error(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10: append()'s hardlink graft walks the expected live
-    version WITHOUT the publish lock; a concurrent publish whose GC reaps
-    that dir mid-walk surfaced as a raw FileNotFoundError from
-    os.walk/os.link instead of the ConcurrentWriteError the CAS contract
-    promises. The graft loop now re-raises OSError as the CAS failure."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ConcurrentWriteError
-
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    store.overwrite(_sess_mut(spark, [(1, "A")]), "sessions_silver")
-    assert os.path.islink(store.path("sessions_silver"))
-
-    def vanishing_link(src, dst, **kw):
-        raise FileNotFoundError(2, "reaped mid-walk", src)
-
-    monkeypatch.setattr(os, "link", vanishing_link)
-    with pytest.raises(ConcurrentWriteError, match="changed since append start"):
-        store.append(_sess_mut(spark, [(2, "B")]), "sessions_silver")
-
-
-def test_append_graft_local_failure_is_not_relabeled_concurrent(
-    spark, tmp_path, monkeypatch
-):
-    """r11 review finding: only a VANISHED prior image is the CAS failure
-    mode. A local fault mid-graft (ENOSPC, EPERM) with the expected dir
-    intact must propagate raw — relabeling it ConcurrentWriteError would
-    send an automated retry loop against a full disk."""
-    from f1_datalakehouse_pipeline_spark.sources.tables import ConcurrentWriteError
-
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    store.overwrite(_sess_mut(spark, [(1, "A")]), "sessions_silver")
-
-    def no_space(src, dst, **kw):
-        raise OSError(28, "No space left on device", dst)  # ENOSPC
-
-    monkeypatch.setattr(os, "link", no_space)
-    with pytest.raises(OSError) as ei:
-        store.append(_sess_mut(spark, [(2, "B")]), "sessions_silver")
-    assert not isinstance(ei.value, ConcurrentWriteError)
-    assert ei.value.errno == 28
-
-
-def test_rollback_unlink_failure_leaves_table_committed_at_new_version(
-    spark, tmp_path, monkeypatch
-):
-    """r11 review finding: when the plain-dir rollback cannot even drop the
-    live symlink (EACCES), it must NOT de-commit the version live still
-    points at — GC would reap it under live's feet, leaving a dangling
-    table. Partial publish (table stays at the new version, committed)
-    beats a dangling live path."""
-    store = TableStore(spark, str(tmp_path / "wh"), keep_versions=5)
-    store.append(_sess_mut(spark, [(1, "A"), (2, "B")]), "sessions_silver")
-    live = store.path("sessions_silver")
-
-    staged = store.stage_many([(_sess_mut(spark, [(9, "X")]), "sessions_silver")])
-    real_swap = store._swap_locked
-
-    def crash_after_swap(table, vdir):
-        real_swap(table, vdir)
-        raise OSError("killed after swap")
-
-    real_unlink = os.unlink
-
-    def deny_live_unlink(path, *a, **kw):
-        if os.path.abspath(path) == os.path.abspath(live):
-            raise PermissionError(13, "Operation not permitted", path)
-        return real_unlink(path, *a, **kw)
-
-    store._swap_locked = crash_after_swap
-    monkeypatch.setattr(os, "unlink", deny_live_unlink)
-    try:
-        with pytest.raises(OSError, match="killed after swap"):
-            store.publish_many(staged)
-    finally:
-        del store._swap_locked
-        monkeypatch.undo()
-
-    # the table still READS (at the new version) and its version is still
-    # committed — never a dangling live path or a de-committed live target
-    _, vdir, _ = staged[0]
-    assert os.path.realpath(live) == os.path.realpath(vdir)
-    assert store._is_committed(vdir)
-    assert {r.session_key for r in store.read("sessions_silver").collect()} == {9}

@@ -125,19 +125,6 @@ def test_end_to_end_minhash_dedup(docs):
     assert 4 in kept and 5 in kept
 
 
-def test_salted_join_matches_plain(spark):
-    from f1_datalakehouse_pipeline_spark.operators.skew import salted_join
-
-    # hot key: 90% of fact rows share key 1
-    fact = spark.createDataFrame(
-        [(1 if i % 10 else 2, i, float(i)) for i in range(200)], ["k", "rid", "v"]
-    )
-    dim = spark.createDataFrame([(1, "hot"), (2, "cold"), (3, "unused")], ["k", "label"])
-    salted = {(r.rid, r.label) for r in salted_join(fact, dim, ["k"], n_salt=4).collect()}
-    plain = {(r.rid, r.label) for r in fact.join(dim, "k").collect()}
-    assert salted == plain
-
-
 def test_salted_aggregate_matches_plain(spark):
     from f1_datalakehouse_pipeline_spark.operators.skew import salted_aggregate
 
@@ -937,7 +924,8 @@ def test_compact_novelty_index_preserves_probe(spark, tmp_path, shingle_buckets)
     assert stats["sizes"]["files_after"] == 1
     # bucketed layout: one file per NON-EMPTY bucket after compaction (this
     # tiny fixture has 3 docs → ≤3 non-empty buckets; the per-batch append
-    # growth the hook exists for is measured in tools/scale_stress.py)
+    # growth the hook exists for is measured in PERF_NOTES.md, "r6
+    # state-compaction rung")
     assert stats["shingles"]["files_after"] <= stats["shingles"]["files_before"]
     assert stats["shingles"]["files_after"] <= (shingle_buckets or 1) * 3
 
@@ -2149,61 +2137,6 @@ def test_corpus_ingest_stream_matches_batch_incremental(
     assert verify_training_shards(spark, s_out, "chunk_text").count() == 0
 
 
-def test_plan_mixture_realizes_target_proportions(spark):
-    """plan_mixture derives budgets from proportions × measured mass: the
-    realized per-domain token shares must match the normalized targets to
-    within one boundary doc per domain, the binding (scarcest) domain is
-    taken whole, and infeasible targets fail loudly."""
-    from f1_datalakehouse_pipeline_spark.operators.mixture import plan_mixture
-
-    rows = []
-    for i in range(1200):
-        dom = ["web", "code", "books"][i % 3]
-        rows.append((i, dom, 5 + (i * 13) % 17))
-    # make books scarce: keep only every 9th books doc (books ids are ≡2 mod 3)
-    rows = [r for r in rows if r[1] != "books" or r[0] % 27 == 2]
-    df = spark.createDataFrame(rows, ["doc_id", "source", "n_tokens"])
-
-    target = {"web": 0.5, "code": 0.3, "books": 0.2}
-    admitted, budgets = plan_mixture(df, "doc_id", "source", "n_tokens", target)
-    realized = {
-        r[0]: r[1]
-        for r in admitted.groupBy("source").agg(F.sum("n_tokens")).collect()
-    }
-    total = sum(realized.values())
-    max_doc = 5 + 16  # the largest n_tokens in the corpus
-    for dom, p in target.items():
-        # realized ≤ budget and within one boundary doc of it
-        assert realized[dom] <= budgets[dom]
-        assert budgets[dom] - realized[dom] <= max_doc
-        assert abs(realized[dom] / total - p) <= max_doc / total + 1e-9
-    # the scarce domain binds: its whole mass is (nearly) consumed
-    books_mass = sum(r[2] for r in rows if r[1] == "books")
-    assert books_mass - realized["books"] <= max_doc
-
-    # explicit total below T_max scales everything down proportionally
-    admitted2, budgets2 = plan_mixture(
-        df, "doc_id", "source", "n_tokens", target, total_tokens=total // 2
-    )
-    realized2 = {
-        r[0]: r[1]
-        for r in admitted2.groupBy("source").agg(F.sum("n_tokens")).collect()
-    }
-    for dom, p in target.items():
-        assert abs(realized2[dom] / (total // 2) - p) <= max_doc / (total // 2) + 1e-9
-
-    # a requested total beyond feasibility clamps to T_max (same budgets)
-    _, budgets3 = plan_mixture(
-        df, "doc_id", "source", "n_tokens", target, total_tokens=10**12
-    )
-    assert budgets3 == budgets
-
-    # infeasible: a listed domain with no tokens
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="no corpus tokens"):
-        plan_mixture(df, "doc_id", "source", "n_tokens", {"web": 0.5, "absent": 0.5})
-
-
 def test_token_id_encoding_roundtrip_and_table_equivalence(spark):
     """Token-id encoding (VERDICT r4 item 8): map-literal expression and
     broadcast-join table form agree token-for-token; decode(encode(x)) == x
@@ -2313,8 +2246,8 @@ def test_semantic_dedup_matches_numpy_brute_force(spark, sf_dir):
 
 def test_semantic_chained_middle_member_divergence_planted(spark):
     """Pin the documented chained-middle-member divergence (plans/corpus.py
-    equivalence contract; measured at scale by tools/scale_stress.py
-    --semantic-divergence) on a PLANTED minimal chain: unit vectors a(id 1),
+    equivalence contract; measured at scale in PERF_NOTES.md, "r8
+    semantic-divergence measurement") on a PLANTED minimal chain: unit vectors a(id 1),
     b(id 2) ∈ B1 and c(id 10) ∈ B2 in one cluster with cos(a,b) = cos(b,c)
     = 0.9 ≥ eps = 0.8 but cos(a,c) = 0.62 < eps. One-shot greedy removes b
     (via a) AND c (via the REJECTED b); the incremental contract removes b
